@@ -78,35 +78,42 @@ object Bench {
       .take(cap)
       .map(_._1)
 
+  /** One timed run: the elapsed seconds, or None when the run threw — a
+    * query that fails early must never be billed as a fast one. */
+  private[graft] def timed(name: String)(run: => Unit): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { run; Some((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      None
+    }
+  }
+
+  /** The repetition policy over a first reading `t1` and a re-run:
+    * "1" | "2" | "3" fixed reps; "auto" keeps t1 when it is at most
+    * `slowSec`, else takes a 2nd rep, and a 3rd only when the first two
+    * disagree by >30% (contention suspected). None as soon as any rep
+    * fails: a flaky query is failed, not its fastest successful rep. */
+  private[graft] def repTimes(mode: String, t1: Option[Double],
+      rerun: () => Option[Double], slowSec: Double): Option[Seq[Double]] =
+    t1.flatMap { first =>
+      def disagree(a: Double, b: Double) =
+        math.abs(a - b) / math.max(math.min(a, b), 1e-9) > 0.3
+      mode match {
+        case "1" => Some(Seq(first))
+        case "2" => rerun().map(Seq(first, _))
+        case "3" => for (t2 <- rerun(); t3 <- rerun()) yield Seq(first, t2, t3)
+        case _ if first <= slowSec => Some(Seq(first))
+        case _ => rerun().flatMap { t2 =>
+          if (disagree(first, t2)) rerun().map(Seq(first, t2, _))
+          else Some(Seq(first, t2))
+        }
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // r18: AQE advisory-size partition coalescing ON
-    // (parallelismFirst=false), with the advisory size PARAMETERIZED and
-    // defaulted to the bench's own data scale (guide §2.2: derive the
-    // partition count from the shuffle's bytes, not a core-count
-    // constant). Measured at sf0.1: advisory=64m collapses the CPU-heavy
-    // verify stages to 1 task and regresses them 1.3-2.2x (d05 5.0→10.9 s),
-    // while advisory=4m coalesces only the genuinely tiny exchanges
-    // (final sorts, label tables) and wins d03 5.5→3.8, d05 4.2→3.2,
-    // d20 5.1→4.3 with the wide stages untouched. 4m is the LOCAL
-    // default matched to sf0.1's MB-scale shuffles; a production
-    // deployment sets SPARK_GRAFT_ADVISORY_PARTITION=64m..256m so
-    // partitions land in the guide's 100 MB-1 GB band (see
-    // OPTIMIZATION_r18.md for the full A/B table).
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "4m"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Engine.session(graft.core.Engine.cpus)
     // warm-up: JIT + parquet footer caches + session init, so timings
     // reflect steady-state throughput rather than first-query setup
     graft.core.Tables.all.foreach { t =>
@@ -151,20 +158,13 @@ object Bench {
     // single-shot timing read as a plan regression (PERF.md documents per-query
     // swings of 4x with no code change). A query's intrinsic cost shows in
     // EVERY run; contention shows only in some — so slow readings are
-    // re-measured and the MINIMUM observed time is reported.
+    // re-measured (see repTimes) and the MINIMUM observed time is reported.
     //   SPARK_GRAFT_BENCH_REPS = "auto" (default) | "1" | "2" | "3"
-    // auto: 1 rep if t1 <= threshold (most queries); else a 2nd rep, and a 3rd
-    // only when the first two disagree by >30% (contention suspected).
     val repMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "auto")
     val slowThresholdSec = 0.8
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
+    type Query = (SparkSession, String) => org.apache.spark.sql.DataFrame
+    def once(name: String, fn: Query): Option[Double] =
+      timed(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
     // Re-runs must be COLD w.r.t. explicit caching or a memoized plan
     // (dedup collapse, ANN quantized store) reports a cache hit as its
     // cost. Cleared only BETWEEN reps of one query — the sweep-order
@@ -175,7 +175,7 @@ object Bench {
       graft.core.SessionMemo.clear(spark)
       spark.catalog.clearCache()
     }
-    def onceCold(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def onceCold(name: String, fn: Query): Option[Double] = {
       resetCaches()
       once(name, fn)
     }
@@ -225,42 +225,28 @@ object Bench {
       // r17: q90 pays the memoized bloom/column-index layout write once
       "q90_parquet_native_skip")
     val ingest = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    // a query that throws on ANY run is listed under "failed" and kept out
+    // of the totals, the repass and the smear pass
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => wanted.isEmpty || wanted(name) }
-      .map { case (name, fn) =>
+      .flatMap { case (name, fn) =>
         // ingest gets the same min-of-reps contention policy as probes
         // (one shot smears: a single host spike reads as a layout
         // regression); a 2nd rep always, a 3rd only on >30% disagreement
-        if (layoutQueries(name)) {
-          val i1 = onceCold(name, fn)
-          val i2 = onceCold(name, fn)
-          val lo = math.min(i1, i2)
-          ingest(name) =
-            if (math.abs(i1 - i2) / math.max(lo, 1e-9) > 0.3)
-              math.min(lo, onceCold(name, fn))
-            else lo
-        }
+        val ingested = !layoutQueries(name) ||
+          repTimes("auto", onceCold(name, fn), () => onceCold(name, fn),
+            slowSec = -1.0).map(ts => ingest(name) = ts.min).isDefined
         // layout reps keep the memoized store (probe-only timing);
         // everything else re-runs cold so a cache hit can't masquerade
         // as query cost
-        def rerun(): Double =
+        def rerun(): Option[Double] =
           if (layoutQueries(name)) once(name, fn) else onceCold(name, fn)
-        val t1 = once(name, fn)
-        val times = repMode match {
-          case "1" => Seq(t1)
-          case "2" => Seq(t1, rerun())
-          case "3" => Seq(t1, rerun(), rerun())
-          case _ => // auto
-            if (t1 <= slowThresholdSec) Seq(t1)
-            else {
-              val t2 = rerun()
-              val lo = math.min(t1, t2)
-              if (math.abs(t1 - t2) / math.max(lo, 1e-9) > 0.3)
-                Seq(t1, t2, rerun())
-              else Seq(t1, t2)
-            }
-        }
-        (name, times.min, times.length)
+        val times =
+          if (ingested) repTimes(repMode, once(name, fn), () => rerun(), slowThresholdSec)
+          else None
+        if (times.isEmpty) failed += name
+        times.map(ts => (name, ts.min, ts.length))
       }
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir)
       .map(_.group(1)).getOrElse("0")
@@ -284,14 +270,16 @@ object Bench {
     // figures are deliberately out of scope (the ingest loop already
     // min-of-reps across 2-3 cold runs back to back — a multi-minute
     // window there shows as a layout anomaly, not a silent probe bill).
-    val repassed: Map[String, Double] = candidates.map { name =>
+    def remeasure(names: Seq[String]): Map[String, Double] = names.flatMap { name =>
       val fn = SparkEntry.queries(name)
       val t =
-        if (layoutQueries(name)) { onceCold(name, fn); once(name, fn) }
-        else math.min(onceCold(name, fn), once(name, fn))
-      name -> t
+        if (layoutQueries(name)) onceCold(name, fn).flatMap(_ => once(name, fn))
+        else for (a <- onceCold(name, fn); b <- once(name, fn)) yield math.min(a, b)
+      if (t.isEmpty) failed += name
+      t.map(name -> _)
     }.toMap
-    val afterRepass = results.map { case (k, v, n) =>
+    val repassed = remeasure(candidates)
+    val afterRepass = results.filterNot(r => failed(r._1)).map { case (k, v, n) =>
       (k, math.min(v, repassed.getOrElse(k, v)), n)
     }
     // Whole-sweep smear pass (r18, VERDICT task 2): when the MEDIAN
@@ -306,17 +294,11 @@ object Bench {
     val preSmear = sweepSmear(baseline,
       afterRepass.map { case (k, v, _) => k -> v }.toMap)
     val smearRepassed: Map[String, Double] =
-      if (preSmear.exists(_ > 1.15)) {
-        smearCandidates(baseline,
-          afterRepass.map { case (k, v, _) => k -> v }.toMap).map { name =>
-          val fn = SparkEntry.queries(name)
-          val t =
-            if (layoutQueries(name)) { onceCold(name, fn); once(name, fn) }
-            else math.min(onceCold(name, fn), once(name, fn))
-          name -> t
-        }.toMap
-      } else Map.empty
-    val finalResults = afterRepass.map { case (k, v, n) =>
+      if (preSmear.exists(_ > 1.15))
+        remeasure(smearCandidates(baseline,
+          afterRepass.map { case (k, v, _) => k -> v }.toMap))
+      else Map.empty
+    val finalResults = afterRepass.filterNot(r => failed(r._1)).map { case (k, v, n) =>
       (k, math.min(v, smearRepassed.getOrElse(k, v)), n)
     }
     val postSmear = sweepSmear(baseline,
@@ -328,7 +310,7 @@ object Bench {
     // min-merge per key (ADVICE r18 item 3): a query re-run by BOTH the
     // >3x repass and the smear repass publishes its best re-measurement,
     // matching what the min-merged result actually used
-    val repassJson = (repassed.keySet ++ smearRepassed.keySet).toSeq.sorted
+    val repassJson = (repassed.keySet ++ smearRepassed.keySet -- failed).toSeq.sorted
       .map { k =>
         val v = math.min(repassed.getOrElse(k, Double.MaxValue),
           smearRepassed.getOrElse(k, Double.MaxValue))
@@ -338,7 +320,9 @@ object Bench {
       f""","sweep_smear":$p%.3f""" +
         postSmear.map(a => f""","sweep_smear_after":$a%.3f""").getOrElse("")
     }.getOrElse("")
+    val failedJson = failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = finalResults.map(_._2).sum
+    ingest --= failed
     val ing = ingest.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
     // "value" is steady-state probe cost (layout ingest split out since r10);
@@ -346,7 +330,7 @@ object Bench {
     // rounds, and "bench_schema":2 marks the semantics change explicitly.
     val totalWithIngest = total + ingest.values.sum
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","bench_schema":2,"total_with_ingest":$totalWithIngest%.3f,"queries":$qs,"reps":$reps,"repass":$repassJson,"ingest":$ing$smearJson,"sf":$sfNum}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","bench_schema":2,"total_with_ingest":$totalWithIngest%.3f,"queries":$qs,"reps":$reps,"repass":$repassJson,"failed":$failedJson,"ingest":$ing$smearJson,"sf":$sfNum}"""
     println(line)
     // the driver keeps only a tail of stdout, which truncates the
     // per-query map at 145 queries — persist the full line next to the

@@ -31,16 +31,4 @@ object GraftSqlShims {
     if (!exp.extraStrategies.contains(st))
       exp.extraStrategies = st +: exp.extraStrategies
   }
-
-  /** Register function builders on an EXISTING session (the extensions
-    * path only applies at session construction). */
-  def registerFunctions(
-      spark: SparkSession,
-      fns: Seq[(org.apache.spark.sql.catalyst.FunctionIdentifier,
-        org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-        Seq[Expression] => Expression)]): Unit =
-    fns.foreach { case (id, info, builder) =>
-      spark.asInstanceOf[classic.SparkSession].sessionState
-        .functionRegistry.registerFunction(id, info, builder)
-    }
 }

@@ -632,10 +632,13 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
       val nelems = q.get("array_length").map(_.toInt).getOrElse(1)
       val algo = q.get("algorithm").getOrElse("default")
       // deterministic, splittable uniform from (row, elem) — same on any
-      // cluster layout (splitmix-style integer mix via md5-free arithmetic)
+      // cluster layout (splitmix-style integer mix via md5-free arithmetic).
+      // The seed is reduced mod 2^31-1 before the * 69069 step, so the
+      // product fits a long at any nrows; for non-negative inputs the
+      // values equal those of the unreduced form.
       def u(row: Column, j: Column): Column = {
-        val h = pmod((row * 2654435761L + j * 40503L + 12345L) * 69069L +
-          1234567L, lit(2147483647L))
+        val seed = pmod(row * 2654435761L + j * 40503L + 12345L, lit(2147483647L))
+        val h = pmod(seed * 69069L + 1234567L, lit(2147483647L))
         h.cast("double") / 2147483647.0
       }
       val base = spark.range(1, nrows + 1).toDF("id_dim")

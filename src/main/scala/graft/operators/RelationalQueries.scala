@@ -2891,13 +2891,10 @@ object RelationalQueries {
     val restated = base.filter(col("month") === "1997-06")
       .withColumn("o_totalprice", col("o_totalprice") + 1024.0)
       .withColumn("o_orderstatus", lit("R"))
-    val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try restated.write.partitionBy("month").mode("overwrite").parquet(path)
-    finally prev match {
-      case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // per-write option, not the session-global conf: concurrent queries
+    // on the shared session must not see each other's overwrite mode
+    restated.write.partitionBy("month").mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(path)
     s.read.parquet(path)
       .groupBy("month")
       .agg(count(lit(1)).as("n"),

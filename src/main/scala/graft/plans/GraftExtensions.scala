@@ -6,11 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions hook: registers the engine's native expressions
   * as SQL functions, so plain `spark.sql` pipelines (and any BI layer on
-  * top) can call them without the Scala DSL:
-  *
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)   // or
-  *     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+  * top) can call them without the Scala DSL. `graft.core.Engine.session`
+  * installs it; another host sets
+  * `spark.sql.extensions=graft.plans.GraftExtensions`.
   *
   *   spark.sql("SELECT graft_dot(a, b), graft_simhash60(hs) FROM t")
   */
@@ -28,9 +26,7 @@ object GraftExtensions {
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
       "", "", "", "", "", "", "built-in")
 
-  /** (identifier, info, builder) triples — consumed by the extension
-    * injection AND registerable on an existing session via
-    * [[org.apache.spark.sql.GraftSqlShims.registerFunctions]]. */
+  /** (identifier, info, builder) triples for the extension injection. */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("graft_dot"),
       info("graft_dot", "graft_dot(a, b) - dot product of two array<double>"),

@@ -1,7 +1,5 @@
 package graft.service
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone server entry point:
   * `sbt "runMain graft.service.ServiceMain [port] [json|binary]"` — a
   * reference client workflow (connect, UD/EQ/RS over TCP) against a live
@@ -11,16 +9,7 @@ object ServiceMain {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(65000) // reference default
     val wire = args.lift(1).getOrElse("json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Engine.session(graft.core.Engine.cpus)
     val svc = new IoService(spark, port, wire)
     println(s"[graft] io-service ($wire wire) listening on ${svc.boundPort}")
     Thread.currentThread().join() // serve until killed

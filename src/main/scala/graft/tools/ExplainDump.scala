@@ -2,20 +2,19 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-/** Writes EXPLAIN.md: formatted physical plans of the headline queries,
-  * so plan quality (pushdown, broadcast, partial agg, codegen) is
-  * reviewable without running anything. */
+/** Writes formatted physical plans, so plan quality (pushdown, broadcast,
+  * partial agg, codegen) is reviewable without running anything.
+  *
+  *   runMain graft.tools.ExplainDump                      # EXPLAIN.md, headline queries
+  *   runMain graft.tools.ExplainDump <outFile> <query>... # named queries, one file
+  *
+  * Plans are of the `SPARK_GRAFT_SF_DIR` tables (default sf0.001) under
+  * the `Engine.session` posture; the before/after plan evidence under
+  * `plans/` is made with the second form. */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    val spark = graft.core.Engine.session(graft.core.Engine.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val picks = Seq(
       "q01_filter_project", "q03_agg_group", "q06_join_chain",
@@ -98,21 +97,22 @@ object ExplainDump {
       "m44_mp4_books", "m45_ogg_books", "m46_mkv_books",
       "m47_webp_books", "t38_kneser_ney", "m48_srt_books",
       "qn23_webdataset_tar", "m49_zip_books", "m50_pdf_books")
+    val outFile = args.headOption.getOrElse("EXPLAIN.md")
+    val names = if (args.length > 1) args.toSeq.tail else picks
     val sb = new StringBuilder
-    sb.append("# EXPLAIN — headline physical plans (generated by graft.tools.ExplainDump)\n\n")
+    sb.append("# EXPLAIN — physical plans (generated by graft.tools.ExplainDump)\n\n")
     sb.append("Things to look for: `PushedFilters`/`ReadSchema` on scans, ")
     sb.append("`BroadcastHashJoin` for dims, `partial_` aggregates, `*(n)` codegen stages.\n")
-    picks.foreach { name =>
-      graft.SparkEntry.queries.get(name).foreach { fn =>
-        val df = fn(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        sb.append(s"\n## $name\n\n```\n")
-        sb.append(plan).append("\n```\n")
-      }
+    val (known, unknown) = names.partition(graft.SparkEntry.queries.contains)
+    unknown.foreach(n => System.err.println(s"[explain] unknown query: $n"))
+    known.foreach { name =>
+      val plan = graft.SparkEntry.queries(name)(spark, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      sb.append(s"\n## $name\n\n```\n")
+      sb.append(plan).append("\n```\n")
     }
-    Files.writeString(Paths.get("EXPLAIN.md"), sb.toString)
-    println(s"[explain] wrote EXPLAIN.md (${picks.size} plans)")
+    Files.writeString(Paths.get(outFile), sb.toString)
+    println(s"[explain] wrote $outFile (${known.size} plans)")
     spark.stop()
   }
 }

@@ -85,6 +85,33 @@ class BenchRepassSpec extends AnyFunSuite {
     assert(Bench.smearCandidates(baseline, measured) == Seq("b"))
   }
 
+  test("a query that throws is a failure marker, never a fast time") {
+    assert(Bench.timed("boom")(throw new IllegalStateException("boom")).isEmpty)
+    assert(Bench.timed("ok")(()).exists(_ >= 0.0))
+    // a failed first reading is not re-run, and a failure on any re-run
+    // fails the query instead of keeping its fastest successful rep
+    var reruns = 0
+    val ok = () => { reruns += 1; Some(1.0) }
+    assert(Bench.repTimes("auto", None, ok, slowSec = 0.8).isEmpty)
+    assert(reruns == 0)
+    assert(Bench.repTimes("auto", Some(2.0), () => None, slowSec = 0.8).isEmpty)
+    assert(Bench.repTimes("3", Some(0.1), () => None, slowSec = 0.8).isEmpty)
+  }
+
+  test("auto reps: one fast reading, two agreeing slow ones, a third on disagreement") {
+    val runs = Iterator(1.1, 5.0, 1.0)
+    def next() = Some(runs.next())
+    assert(Bench.repTimes("auto", Some(0.5), () => next(), slowSec = 0.8)
+      .contains(Seq(0.5)))
+    assert(Bench.repTimes("auto", Some(1.0), () => next(), slowSec = 0.8)
+      .contains(Seq(1.0, 1.1)))
+    assert(Bench.repTimes("auto", Some(1.0), () => next(), slowSec = 0.8)
+      .contains(Seq(1.0, 5.0, 1.0)))
+    // the layout-ingest policy: always a 2nd rep
+    assert(Bench.repTimes("auto", Some(0.1), () => Some(0.1), slowSec = -1.0)
+      .contains(Seq(0.1, 0.1)))
+  }
+
   test("parseBenchLine recovers sf and the per-query map") {
     val line = """{"metric":"total","value":9.1,"unit":"sec","bench_schema":2,""" +
       """"queries":{"q01":0.123,"m27":1.643},"reps":{"m27":2},""" +

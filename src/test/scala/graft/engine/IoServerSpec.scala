@@ -46,6 +46,23 @@ class IoServerSpec extends SparkSpec {
     assert(m.length == 1) // 10-block avg of a 10-array = 1 element
   }
 
+  test("random_import past 50 400 rows does not overflow and keeps small-import values") {
+    val (_, s) = freshSession()
+    s.execute("operation=random_import;frag_name=big;nrows=60000;array_length=4;algorithm=default")
+    s.execute("operation=random_import;frag_name=small;nrows=100;array_length=4;algorithm=default")
+    def first100(frag: String) =
+      s.execute(s"operation=select;field=id_dim|measure;from=$frag;order=id_dim;limit=100")
+        .get.collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+    val small = first100("small")
+    assert(small.length == 100)
+    assert(first100("big") == small)
+    // the unreduced hash in plain long arithmetic (no overflow at row 1)
+    def unreduced(row: Long, j: Long): Double =
+      Math.floorMod((row * 2654435761L + j * 40503L + 12345L) * 69069L + 1234567L,
+        2147483647L).toDouble / 2147483647.0 * 1000.0
+    assert(small.head._2 == (1L to 4L).map(unreduced(1L, _)))
+  }
+
   test("random_import temperatures algorithm is deterministic") {
     val (_, s1) = freshSession()
     val (_, s2) = freshSession()

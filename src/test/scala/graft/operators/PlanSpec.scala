@@ -77,6 +77,7 @@ class PlanSpec extends SparkSpec {
     val wh = java.nio.file.Files.createTempDirectory("graft-wh").toFile.getAbsolutePath
     val s = spark
     import s.implicits._
+    val savedThreshold = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val a = (1L to 1000L).map(i => (i, i.toDouble)).toDF("id_dim", "m1")
@@ -91,7 +92,8 @@ class PlanSpec extends SparkSpec {
       assert(p.contains("SortMergeJoin"), s"expected sort-merge join:\n$p")
       assert(!p.contains("Exchange"), s"bucketed join must not shuffle:\n$p")
     } finally {
-      s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      savedThreshold.fold(s.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
+        s.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
       s.sql("DROP TABLE IF EXISTS frag_a")
       s.sql("DROP TABLE IF EXISTS frag_b")
     }

@@ -1,12 +1,10 @@
 package graft.plans
 
 import graft.SparkSpec
-import org.apache.spark.sql.GraftSqlShims
 
 class ExtensionsSpec extends SparkSpec {
 
   test("injected function builders resolve and evaluate through spark.sql") {
-    GraftSqlShims.registerFunctions(spark, GraftExtensions.functions)
     val r = spark.sql(
       """SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d,
          graft_sorted_intersect_size(array(1L, 3L, 5L), array(3L, 5L, 9L)) AS i,

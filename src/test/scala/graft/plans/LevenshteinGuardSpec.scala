@@ -6,9 +6,11 @@ import org.apache.spark.sql.catalyst.expressions.Levenshtein
 import org.apache.spark.sql.functions._
 
 /** The absolute-threshold edit-distance rewrite: length band first, then
-  * Spark's banded threshold DP. Soundness is checked against the
-  * un-rewritten predicate on data that exercises nulls, ties at the
-  * threshold, strict bounds, and mirrored comparison forms. */
+  * Spark's banded threshold DP. The shared session carries the rule
+  * through `GraftExtensions`. Soundness is checked against the
+  * un-rewritten predicate (the rule excluded from the optimizer) on data
+  * that exercises nulls, ties at the threshold, strict bounds, and
+  * mirrored comparison forms. */
 class LevenshteinGuardSpec extends SparkSpec {
 
   private def frame(): DataFrame = {
@@ -33,25 +35,30 @@ class LevenshteinGuardSpec extends SparkSpec {
     spark.read.parquet(d.toString)
   }
 
-  private def withRule[T](body: => T): T = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ LevenshteinGuard
+  private def levenshteins(df: DataFrame): Seq[Levenshtein] =
+    df.queryExecution.optimizedPlan.expressions.flatMap(_.collect {
+      case l: Levenshtein => l })
+
+  /** Runs `body` with the rewrite excluded from the optimizer. */
+  private def withoutRule[T](body: => T): T = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, LevenshteinGuard.ruleName)
     try body
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ eq LevenshteinGuard)
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("rewrites lev <= k to a length band plus the threshold DP form") {
-    withRule {
-      val df = scanned.filter(expr("levenshtein(a, b) <= 2"))
-      val opt = df.queryExecution.optimizedPlan
-      val levs = opt.expressions.flatMap(_.collect {
-        case l: Levenshtein => l })
-      assert(levs.nonEmpty && levs.forall(_.threshold.isDefined),
-        s"threshold form missing:\n$opt")
-      assert(opt.toString.contains("abs((length(a"),
-        s"length band missing:\n$opt")
-    }
+    val df = scanned.filter(expr("levenshtein(a, b) <= 2"))
+    val opt = df.queryExecution.optimizedPlan
+    val levs = levenshteins(df)
+    assert(levs.nonEmpty && levs.forall(_.threshold.isDefined),
+      s"threshold form missing:\n$opt")
+    assert(opt.toString.contains("abs((length(a"),
+      s"length band missing:\n$opt")
   }
 
   test("all four comparison forms keep the un-rewritten semantics") {
@@ -59,81 +66,55 @@ class LevenshteinGuardSpec extends SparkSpec {
       "levenshtein(a, b) <= 2", "levenshtein(a, b) < 3",
       "2 >= levenshtein(a, b)", "3 > levenshtein(a, b)",
       "levenshtein(a, b) <= 0")
-    val plain = preds.map(p =>
-      scanned.filter(expr(p)).collect().map(r =>
-        (Option(r.getString(0)), Option(r.getString(1)))).toSet)
-    withRule {
-      preds.zip(plain).foreach { case (p, expect) =>
-        val df = scanned.filter(expr(p))
-        // the rewrite must actually be in the executed predicate here
-        assert(df.queryExecution.optimizedPlan.expressions.exists(_.collect {
-          case l: Levenshtein if l.threshold.isDefined => l }.nonEmpty),
-          s"rule did not fire for: $p")
-        val got = df.collect().map(r =>
-          (Option(r.getString(0)), Option(r.getString(1)))).toSet
-        assert(got == expect, s"semantics changed for: $p")
-      }
+    def rows(df: DataFrame) = df.collect().map(r =>
+      (Option(r.getString(0)), Option(r.getString(1)))).toSet
+    val plain = withoutRule(preds.map { p =>
+      val df = scanned.filter(expr(p))
+      // the reference must really be the un-rewritten predicate
+      assert(levenshteins(df).forall(_.threshold.isEmpty),
+        s"reference was rewritten for: $p")
+      rows(df)
+    })
+    preds.zip(plain).foreach { case (p, expect) =>
+      val df = scanned.filter(expr(p))
+      // the rewrite must actually be in the executed predicate here
+      assert(levenshteins(df).exists(_.threshold.isDefined),
+        s"rule did not fire for: $p")
+      assert(rows(df) == expect, s"semantics changed for: $p")
     }
   }
 
   test("fires end-to-end through GraftExtensions injection (no manual rule list)") {
-    import org.apache.spark.sql.SparkSession
-    // a session built the production way — .withExtensions(GraftExtensions)
-    // — must apply the rewrite on a plain DataFrame with no
-    // experimental.extraOptimizations plumbing. getOrCreate reuses the
-    // shared SparkContext but needs the default session cleared to
-    // construct a fresh session that honors the extensions.
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    SparkSession.clearDefaultSession(); SparkSession.clearActiveSession()
-    try {
-      val s2 = SparkSession.builder().master("local[4]")
-        .withExtensions(new GraftExtensions)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      val d = java.nio.file.Files.createTempDirectory("graft_levext")
-      frame().write.mode("overwrite").parquet(d.toString)
-      val df = s2.read.parquet(d.toString)
-        .filter(expr("levenshtein(a, b) <= 2"))
-      val levs = df.queryExecution.optimizedPlan.expressions.flatMap(_.collect {
-        case l: Levenshtein => l })
-      assert(levs.nonEmpty && levs.forall(_.threshold.isDefined),
-        s"extension-injected rule did not fire:\n${df.queryExecution.optimizedPlan}")
-      // the injected SQL functions ride the same extension point
-      val dot = s2.sql(
-        "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
-        .collect()(0).getDouble(0)
-      assert(dot == 11.0)
-    } finally {
-      SparkSession.clearDefaultSession(); SparkSession.clearActiveSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
-    }
+    // the production session (Engine.session) applies the rewrite on a
+    // plain DataFrame with no experimental.extraOptimizations plumbing
+    assert(!spark.experimental.extraOptimizations.contains(LevenshteinGuard))
+    val df = scanned.filter(expr("levenshtein(a, b) <= 2"))
+    val levs = levenshteins(df)
+    assert(levs.nonEmpty && levs.forall(_.threshold.isDefined),
+      s"extension-injected rule did not fire:\n${df.queryExecution.optimizedPlan}")
+    // the injected SQL functions ride the same extension point
+    val dot = spark.sql(
+      "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
+      .collect()(0).getDouble(0)
+    assert(dot == 11.0)
   }
 
   test("non-deterministic arguments are left alone (no duplication)") {
-    withRule {
-      // rand() is non-deterministic: duplicating it into a length band
-      // would evaluate it twice with different values. The rule must
-      // not fire; the full-DP Levenshtein (threshold = None) survives.
-      val df = scanned
-        .filter(expr("levenshtein(concat(a, cast(rand(7) as string)), b) <= 2"))
-      val levs = df.queryExecution.optimizedPlan.expressions
-        .flatMap(_.collect { case l: Levenshtein => l })
-      assert(levs.nonEmpty && levs.forall(_.threshold.isEmpty),
-        s"rule fired on non-deterministic args:\n${df.queryExecution.optimizedPlan}")
-    }
+    // rand() is non-deterministic: duplicating it into a length band
+    // would evaluate it twice with different values. The rule must
+    // not fire; the full-DP Levenshtein (threshold = None) survives.
+    val df = scanned
+      .filter(expr("levenshtein(concat(a, cast(rand(7) as string)), b) <= 2"))
+    val levs = levenshteins(df)
+    assert(levs.nonEmpty && levs.forall(_.threshold.isEmpty),
+      s"rule fired on non-deterministic args:\n${df.queryExecution.optimizedPlan}")
   }
 
   test("negative or non-literal thresholds are left alone") {
-    withRule {
-      val neg = frame().filter(expr("levenshtein(a, b) < 0"))
-      assert(neg.collect().isEmpty)
-      val dyn = scanned.withColumn("k", length(col("b")))
-        .filter(expr("levenshtein(a, b) <= k"))
-      val levs = dyn.queryExecution.optimizedPlan.expressions
-        .flatMap(_.collect { case l: Levenshtein => l })
-      assert(levs.forall(_.threshold.isEmpty))
-    }
+    val neg = frame().filter(expr("levenshtein(a, b) < 0"))
+    assert(neg.collect().isEmpty)
+    val dyn = scanned.withColumn("k", length(col("b")))
+      .filter(expr("levenshtein(a, b) <= k"))
+    assert(levenshteins(dyn).forall(_.threshold.isEmpty))
   }
 }
