@@ -212,8 +212,11 @@ object ExprCompiler {
       case "oph_find" =>
         n(AP.oph_find(c(0), c(1), if (args.size > 2) c(2) else lit(0.0)))
       case "oph_reduce" =>
-        n(AP.oph_reduce(c(0), opName(arg(1)),
-          if (args.size > 2) c(2) else lit(Int.MaxValue)))
+        n(args.lift(2) match {
+          case None => AP.oph_reduce(c(0), opName(arg(1)))
+          case Some(NumL(bs)) if bs.isValidInt => AP.oph_reduce(c(0), opName(arg(1)), bs.toInt)
+          case Some(_) => AP.oph_reduce(c(0), opName(arg(1)), c(2))
+        })
       case "oph_reduce2" => n(AP.oph_reduce2(c(0), opName(arg(1)), c(2)))
       case "oph_reduce3" =>
         n(AP.oph_reduce3(c(0), opName(arg(1)),

@@ -24,6 +24,12 @@ object ArrayPrimitives {
   /** Empty double array with the right type (for guards). */
   private def emptyDoubles: Column = array().cast(DA)
 
+  /** `c` is already resolved (a DataFrame's own column) to array<double>. */
+  private def isDoubleArray(c: Column): Boolean = {
+    val e = graft.core.ColumnBridge.expression(c)
+    e.resolved && (e.dataType match { case ArrayType(DoubleType, _) => true; case _ => false })
+  }
+
   // ---------------------------------------------------------------------
   // Elementwise arithmetic  (oph_sum_array:329, oph_mul_array:237,
   // oph_div_array:73, oph_abs_array:1, oph_operation_array:253,
@@ -50,7 +56,11 @@ object ArrayPrimitives {
   def oph_operator_array(a: Column, b: Column, op: String): Column =
     oph_operation_array(a, b, op)
 
-  def oph_sum_array(a: Column, b: Column): Column = zip_with(a, b, _ + _)
+  /** Columns resolved to array<double> (the dialect's fragment columns) sum
+    * in the [[graft.plans.SumArrays]] kernel, with zip_with's values. */
+  def oph_sum_array(a: Column, b: Column): Column =
+    if (isDoubleArray(a) && isDoubleArray(b)) graft.plans.SumArrays(a, b)
+    else zip_with(a, b, _ + _)
   def oph_mul_array(a: Column, b: Column): Column = zip_with(a, b, _ * _)
   def oph_div_array(a: Column, b: Column): Column = zip_with(a, b, _ / _)
 
@@ -160,8 +170,12 @@ object ArrayPrimitives {
       transform(sequence(lit(0), nblocks - 1),
         i => blockReduce(slice(a, i * bs + 1, bs), op)))
   }
+  /** A literal block size runs sum and avg in the [[graft.plans.BlockReduce]]
+    * kernel, with the values of the form above. */
   def oph_reduce(a: Column, op: String, blockSize: Int = Int.MaxValue): Column =
-    oph_reduce(a, op, lit(blockSize))
+    if ((op == "sum" || op == "avg") && blockSize > 0)
+      graft.plans.BlockReduce(a, blockSize, avg = op == "avg")
+    else oph_reduce(a, op, lit(blockSize))
 
   /** oph_reduce2: same reduction family, block count given instead of
     * block size (the reference's "count" variant). */

@@ -23,6 +23,11 @@ class ArrayPrimitivesSpec extends SparkSpec {
     v.getDouble(0)
   }
 
+  /** Each row's array<double> result as raw bits (NaN and -0.0 compare exactly). */
+  private def arrayBits(df: org.apache.spark.sql.DataFrame, c: Column): Seq[Option[Seq[Option[Long]]]] =
+    df.select(c).collect().toSeq.map(r => Option(r.getSeq[Any](0)).map(_.map(
+      v => Option(v).map(d => java.lang.Double.doubleToRawLongBits(d.asInstanceOf[Double])))))
+
   test("elementwise: sum/mul scalar, abs, math") {
     assert(run(a => AP.oph_sum_scalar(a, 2.0)) == sample.map(_ + 2.0))
     assert(run(a => AP.oph_mul_scalar(a, -1.0)) == sample.map(_ * -1.0))
@@ -49,6 +54,47 @@ class ArrayPrimitivesSpec extends SparkSpec {
     assert(run(a => AP.oph_reduce(a, "max", 8)) == Seq(sample.max))
     assert(run(a => AP.oph_reduce2(a, "min", lit(2))) ==
       Seq(sample.take(4).min, sample.drop(4).min))
+  }
+
+  test("reduce sum/avg: the native kernel equals the HOF fold bit for bit") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val rows: Seq[Option[Seq[Option[Double]]]] =
+      Seq(None, Some(Nil), Some(Seq(Some(1.0), None, Some(2.0))),
+        Some(Seq(Some(Double.NaN), Some(-0.0), Some(1.0), Some(Double.PositiveInfinity)))) ++
+        Seq.fill(40)(Some(Seq.fill(rnd.nextInt(70))(
+          if (rnd.nextInt(50) == 0) None else Some(rnd.nextGaussian() * 100))))
+    val df = rows.toDF("a")
+    def bits(c: Column) = arrayBits(df, c)
+    for (op <- Seq("sum", "avg"); bs <- Seq(1, 3, 8, 64, Int.MaxValue)) {
+      val nat = AP.oph_reduce(col("a"), op, bs)
+      assert(df.select(nat).queryExecution.analyzed.expressions.exists(
+        _.exists(_.isInstanceOf[graft.plans.BlockReduce])))
+      assert(bits(nat) == bits(AP.oph_reduce(col("a"), op, lit(bs))), s"$op $bs")
+    }
+    // integer arrays widen per element, as the fold's 0.0 + x does
+    val ints = Seq(Seq(1, 2, 3, 4, 5)).toDF("a").select(
+      AP.oph_reduce(col("a"), "avg", 2), AP.oph_reduce(col("a"), "avg", lit(2))).head
+    assert(ints.getSeq[Double](0) == Seq(1.5, 3.5, 5.0))
+    assert(ints.getSeq[Double](0) == ints.getSeq[Double](1))
+  }
+
+  test("sum_array: resolved double arrays take the native kernel, same values as zip_with") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    def arr(): Option[Seq[Option[Double]]] =
+      if (rnd.nextInt(20) == 0) None
+      else Some(Seq.fill(rnd.nextInt(12))(
+        if (rnd.nextInt(15) == 0) None else Some(rnd.nextGaussian() * 100)))
+    val df = (Seq((Some(Seq(Some(Double.NaN), Some(-0.0))), Some(Seq(Some(1.0), Some(-0.0), Some(2.0))))) ++
+      Seq.fill(60)((arr(), arr()))).toDF("a", "b")
+    def uses(c: Column): Boolean = df.select(c).queryExecution.analyzed.expressions
+      .exists(_.exists(_.isInstanceOf[graft.plans.SumArrays]))
+    def bits(c: Column) = arrayBits(df, c)
+    val nat = AP.oph_sum_array(df("a"), df("b"))
+    assert(uses(nat))
+    assert(!uses(AP.oph_sum_array(col("a"), col("b"))))
+    assert(bits(nat) == bits(zip_with(col("a"), col("b"), _ + _)))
   }
 
   test("reshape: reverse/rotate/shift/padding/extend/interlace/sequence") {
