@@ -47,4 +47,29 @@ object Engine {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The session a micro-batch harness runs its stream on: a clone of `s`
+    * (its conf, `GraftExtensions` and execution listeners) with shuffle
+    * partitions at 4, so the caller's conf is never touched and two
+    * harnesses on one session plan independently. The harnesses run 2-4
+    * tiny batches; at 32-way shuffle every stateful operator loads and
+    * commits 32 state-store partitions per batch, a pure per-batch floor
+    * at harness data sizes (and the same knob a production job sets to
+    * match its state volume). 4 keeps real multi-partition semantics
+    * (exchanges, several store shards) at an 8x lower floor, and the
+    * collected results are partitioning-invariant, so oracle rows are
+    * unchanged. A query fixes its state width when it starts, from this
+    * session's conf.
+    *
+    * Spark carries no streaming listener to a clone, so the ones on `s`
+    * are copied over: a progress listener on the caller still sees every
+    * batch. Each call builds a new clone (Spark clones once more per
+    * stream start anyway), and each leaves one idle streaming listener
+    * bus behind: Spark never detaches a clone's bus from the shared one. */
+  def microBatchSession(s: SparkSession): SparkSession = {
+    val ms = org.apache.spark.sql.GraftSqlShims.cloneSession(s)
+    ms.conf.set("spark.sql.shuffle.partitions", "4")
+    s.streams.listListeners().foreach(ms.streams.addListener)
+    ms
+  }
 }

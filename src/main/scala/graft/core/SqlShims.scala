@@ -14,6 +14,11 @@ object GraftSqlShims {
   def sessionUUID(spark: SparkSession): String =
     spark.asInstanceOf[classic.SparkSession].sessionUUID
 
+  /** A child session: the parent's conf, extensions and execution
+    * listeners, then its own from here on (private[sql]). */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
   /** Wrap an analyzed/constructed logical plan as a DataFrame. */
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =

@@ -782,10 +782,10 @@ object DedupQueries {
     * the emitted first-seen-wins decisions must equal the batch answer
     * (min doc_id per content hash) — proving the incremental operator
     * converges to the same corpus as the offline pass. */
-  def d09_dedup_stream(s: SparkSession, dir: String): DataFrame =
-    StreamQueries.withMicroBatchParts(s) {
+  def d09_dedup_stream(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
+      graft.core.Engine.microBatchSession(s).sqlContext
     val docs = Tables.documents(s, dir).select("doc_id", "text")
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getString(1)))
@@ -793,23 +793,11 @@ object DedupQueries {
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     val out = graft.streaming.StreamingDedup.dedupExactStream(
       in.toDF().toDF("doc_id", "text"))
-    val q = out.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .format("memory").queryName("d09_stream_out").start()
-    try {
-      in.addData(docs.take(mid).toIndexedSeq)
-      q.processAllAvailable()
-      in.addData(docs.drop(mid).toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    // materialize the (small) decision set and release the sink table so
-    // session memory doesn't accumulate across a long query sweep
-    val result = s.table("d09_stream_out")
-      .select(col("doc_id"), col("kept"), col("dup_of")).collect().toIndexedSeq
-    val schema = s.table("d09_stream_out")
-      .select(col("doc_id"), col("kept"), col("dup_of")).schema
-    s.catalog.dropTempView("d09_stream_out")
-    s.createDataFrame(s.sparkContext.parallelize(result, 1), schema)
+    StreamQueries.drain(s, "d09_stream_out", out,
+      org.apache.spark.sql.streaming.OutputMode.Append, Seq(
+        () => in.addData(docs.take(mid).toIndexedSeq),
+        () => in.addData(docs.drop(mid).toIndexedSeq)))
+      .select(col("doc_id"), col("kept"), col("dup_of"))
       .orderBy("doc_id")
   }
 
@@ -821,50 +809,32 @@ object DedupQueries {
     * answer under real partitioned offsets; d09's oracle unchanged. The
     * production ingest shape: a landing directory + stateful dedup at
     * arrival time. */
-  def d13_dedup_stream_filesource(s: SparkSession, dir: String): DataFrame =
-    StreamQueries.withMicroBatchParts(s) {
+  def d13_dedup_stream_filesource(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val watchPath = java.nio.file.Files.createTempDirectory("graft_dsrc")
-    val watch = watchPath.toString
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     val hiRow = docs.agg(max("doc_id")).head()
     val half = if (hiRow.isNullAt(0)) 0L else hiRow.getLong(0) / 2
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val in = s.readStream.schema(schema).parquet(watch)
-    val out = graft.streaming.StreamingDedup.dedupExactStream(in)
-    val q = out.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .format("memory").queryName("d13_stream_out").start()
-    // the watched dir holds a full copy of the table — delete it on EVERY
-    // exit path (a failure mid-query must not leak it across a sweep)
-    try {
-      try {
-        // drops are hash-partitioned BY CONTENT so a dup group inside one
-        // drop never straddles part files: whatever subset of a drop's
-        // files a micro-batch captures, it holds whole groups, and the
-        // in-batch min-id tie-break keeps first-seen == batch min id even
-        // if the source splits a drop across micro-batches
-        // r19: drops staged + renamed in (see StreamQueries.stageDrop)
-        // so the polling source sees each drop as ONE micro-batch
-        // instead of picking up a half-written multi-file append
-        StreamQueries.stageDrop(
-          docs.filter(col("doc_id") <= half).repartition(4, col("text")),
-          watch, "d0")()
-        q.processAllAvailable()
-        StreamQueries.stageDrop(
-          docs.filter(col("doc_id") > half).repartition(4, col("text")),
-          watch, "d1")()
-        q.processAllAvailable()
-      } finally q.stop()
-      val result = s.table("d13_stream_out")
-        .select(col("doc_id"), col("kept"), col("dup_of")).collect().toIndexedSeq
-      val outSchema = s.table("d13_stream_out")
-        .select(col("doc_id"), col("kept"), col("dup_of")).schema
-      s.catalog.dropTempView("d13_stream_out")
-      s.createDataFrame(s.sparkContext.parallelize(result, 1), outSchema)
-        .orderBy("doc_id")
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(watchPath.toFile)
+    // the watched dir holds a full copy of the table: withWatchDir
+    // deletes it on EVERY exit path
+    StreamQueries.withWatchDir("graft_dsrc") { watch =>
+      val out = graft.streaming.StreamingDedup.dedupExactStream(
+        graft.core.Engine.microBatchSession(s).readStream.schema(schema)
+          .parquet(watch))
+      // drops are hash-partitioned BY CONTENT so a dup group inside one
+      // drop never straddles part files: whatever subset of a drop's
+      // files a micro-batch captures, it holds whole groups, and the
+      // in-batch min-id tie-break keeps first-seen == batch min id even
+      // if the source splits a drop across micro-batches (drops are
+      // staged + renamed in, see StreamQueries.stageDrop)
+      StreamQueries.drain(s, "d13_stream_out", out,
+        org.apache.spark.sql.streaming.OutputMode.Append, Seq(
+          StreamQueries.parquetDrop(watch, "d0",
+            docs.filter(col("doc_id") <= half).repartition(4, col("text"))),
+          StreamQueries.parquetDrop(watch, "d1",
+            docs.filter(col("doc_id") > half).repartition(4, col("text")))))
+    }.select(col("doc_id"), col("kept"), col("dup_of")).orderBy("doc_id")
   }
 
   /** d10 — the STREAMING LSH near-dup candidate operator under the
@@ -879,10 +849,10 @@ object DedupQueries {
     * quadratic in cluster size by definition, and this row is a
     * batch-boundary-invariance check, not a throughput claim — the
     * batch family (d03) covers the full corpus. */
-  def d10_dedup_stream_lsh(s: SparkSession, dir: String): DataFrame =
-    StreamQueries.withMicroBatchParts(s) {
+  def d10_dedup_stream_lsh(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
+      graft.core.Engine.microBatchSession(s).sqlContext
     val docs = Tables.documents(s, dir).select("doc_id", "text")
       .filter(col("doc_id") % 7 === 0)
       .orderBy("doc_id").collect()
@@ -892,22 +862,11 @@ object DedupQueries {
     val out = graft.streaming.StreamingDedup.nearDupCandidateStream(
       in.toDF().toDF("doc_id", "text"), k = 2 * minhashR(s, dir),
       minEst = 0.5)
-    val q = out.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .format("memory").queryName("d10_stream_out").start()
-    try {
-      in.addData(docs.take(mid).toIndexedSeq)
-      q.processAllAvailable()
-      in.addData(docs.drop(mid).toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    val result = s.table("d10_stream_out")
+    StreamQueries.drain(s, "d10_stream_out", out,
+      org.apache.spark.sql.streaming.OutputMode.Append, Seq(
+        () => in.addData(docs.take(mid).toIndexedSeq),
+        () => in.addData(docs.drop(mid).toIndexedSeq)))
       .select(col("doc_a"), col("doc_b"), col("est")).distinct()
-      .collect().toIndexedSeq
-    val schema = s.table("d10_stream_out")
-      .select(col("doc_a"), col("doc_b"), col("est")).schema
-    s.catalog.dropTempView("d10_stream_out")
-    s.createDataFrame(s.sparkContext.parallelize(result, 1), schema)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -1291,27 +1250,27 @@ object DedupQueries {
 
   /** d27 — BLOOM-FILTER dedup prefilter for delta-vs-corpus ingest (the
     * d16 shape at its 100 TB posture): before the delta batch pays the
-    * exact membership join against the corpus, a CONSTANT-SIZE filter
-    * screens it — three deterministic md5-derived bucket functions over
-    * a size-derived modulus m = 2·|corpus|+1, membership = all three
+    * exact membership join against the corpus, a bloom filter screens
+    * it — three deterministic md5-derived bucket functions over a
+    * size-derived modulus m = 2·|corpus|+1, membership = all three
     * buckets occupied. The filter side the join ships is the DISTINCT
-    * bucket set per hash (≤ m values no matter how large the corpus
-    * grows — that boundedness is the whole point: the broadcast stays
-    * flat while the corpus scales), bloom-positive rows alone pay the
-    * exact verify, and the op reports the audit arithmetic: true dups
-    * (exact, keyed on the 32-char head fingerprint — the URL/head
-    * surrogate crawl dedup actually keys on), bloom passes, false
-    * positives, and the measured FPR against the non-dup population.
+    * bucket set per hash: at most m values, about 0.79·|corpus| at this
+    * load factor, so it grows LINEARLY with the corpus rather than
+    * staying flat. Bloom-positive rows alone pay the exact verify, and
+    * the op reports the audit arithmetic: true dups (exact, keyed on
+    * the 32-char head fingerprint — the URL/head surrogate crawl dedup
+    * actually keys on), bloom passes, false positives, and the measured
+    * FPR against the non-dup population.
     * Bloom filters cannot produce false negatives, so
     * n_dup ≤ n_bloom_pass always — the oracle re-derives every count
     * including each hash's bucket occupancy.
     *
-    * Scale shape: three broadcast LEFT SEMI joins (filter side bounded
-    * by m) + one exact semi-join over ONLY the bloom-positive rows; at
-    * 100 TB the exact join's probe side shrinks from |delta| to
-    * |dups| + FPR·|delta|, which is the cost model that makes bloom
-    * prefilters standard in ingest dedup. No reference counterpart —
-    * the brief's deduplication lane. */
+    * Scale shape: three broadcast LEFT SEMI joins (filter side ≤ m, so
+    * the broadcast grows with the corpus) + one exact semi-join over
+    * ONLY the bloom-positive rows; at 100 TB the exact join's probe
+    * side shrinks from |delta| to |dups| + FPR·|delta|, which is the
+    * cost model that makes bloom prefilters standard in ingest dedup.
+    * No reference counterpart — the brief's deduplication lane. */
   def d27_bloom_prefilter(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.KeyAlgebra.ldiv
     val docs = Tables.documents(s, dir)

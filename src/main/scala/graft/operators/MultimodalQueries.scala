@@ -2976,8 +2976,7 @@ object MultimodalQueries {
     * by fingerprint so any file subset a batch captures holds whole
     * groups (the d13 argument), and cross-batch arrivals resolve
     * through the keyed store. */
-  def m33_stream_media_dedup(s: SparkSession, dir: String): DataFrame =
-    StreamQueries.withMicroBatchParts(s) {
+  def m33_stream_media_dedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
     def contentFp(id: Long): (Array[Byte], Long) = {
@@ -3008,11 +3007,11 @@ object MultimodalQueries {
       }).toDF("doc_id", "payload", "fphex")
     val hiRow = media.agg(max("doc_id")).head()
     val half = if (hiRow.isNullAt(0)) 0L else hiRow.getLong(0) / 2
-    val watchPath = java.nio.file.Files.createTempDirectory("graft_msrc")
-    val watch = watchPath.toString
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("payload", BinaryType)))
-    val in = s.readStream.schema(schema).parquet(watch)
+    StreamQueries.withWatchDir("graft_msrc") { watch =>
+    val in = graft.core.Engine.microBatchSession(s).readStream.schema(schema)
+      .parquet(watch)
     // decode INSIDE the stream: payload → pixels → dHash hex, then the
     // shared first-seen state keyed on it
     val fps = in.as[(Long, Array[Byte])]
@@ -3031,30 +3030,15 @@ object MultimodalQueries {
         (id, f"$fp%016x")
       }).toDF("doc_id", "text")
     val out = graft.streaming.StreamingDedup.dedupExactStream(fps)
-    val q = out.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .format("memory").queryName("m33_stream_out").start()
-    try {
-      try {
-        // r19: drops staged + renamed in (see StreamQueries.stageDrop)
-        // so the polling source sees each drop as ONE micro-batch
-        StreamQueries.stageDrop(
-          media.filter(col("doc_id") <= half).repartition(4, col("fphex"))
-            .select("doc_id", "payload"), watch, "m0")()
-        q.processAllAvailable()
-        StreamQueries.stageDrop(
-          media.filter(col("doc_id") > half).repartition(4, col("fphex"))
-            .select("doc_id", "payload"), watch, "m1")()
-        q.processAllAvailable()
-      } finally q.stop()
-      val result = s.table("m33_stream_out")
-        .select(col("doc_id"), col("kept"), col("dup_of")).collect().toIndexedSeq
-      val outSchema = s.table("m33_stream_out")
-        .select(col("doc_id"), col("kept"), col("dup_of")).schema
-      s.catalog.dropTempView("m33_stream_out")
-      s.createDataFrame(s.sparkContext.parallelize(result, 1), outSchema)
-        .orderBy("doc_id")
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(watchPath.toFile)
+    // r19: drops staged + renamed in (see StreamQueries.stageDrop)
+    // so the polling source sees each drop as ONE micro-batch
+    def drop(p: org.apache.spark.sql.Column, tag: String): () => Unit =
+      StreamQueries.parquetDrop(watch, tag, media.filter(p)
+        .repartition(4, col("fphex")).select("doc_id", "payload"))
+    StreamQueries.drain(s, "m33_stream_out", out,
+      org.apache.spark.sql.streaming.OutputMode.Append,
+      Seq(drop(col("doc_id") <= half, "m0"), drop(col("doc_id") > half, "m1")))
+    }.select(col("doc_id"), col("kept"), col("dup_of")).orderBy("doc_id")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

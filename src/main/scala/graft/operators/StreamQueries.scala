@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-import graft.core.Tables
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import graft.core.{Engine, Tables}
 import graft.functions.KeyAlgebra
 
 /** Streaming operators run under the batch oracle (like d09): the
@@ -13,70 +13,92 @@ import graft.functions.KeyAlgebra
   */
 object StreamQueries {
 
-  /** Landing-directory lifecycle shared by the file-source harnesses
-    * (q30/q39/q42): a temp watch dir created for the body and deleted on
-    * EVERY exit path — a failure mid-query must not leak a full events
-    * copy across a sweep. Results read lazily from OTHER paths (q39's MV
-    * store) survive; only the watch dir dies. */
-  /** Micro-batch harnesses run 2–4 tiny batches; at 32-way shuffle every
-    * stateful operator loads/commits 32 state-store partitions per batch
-    * — a pure per-batch floor at harness data sizes (and the same knob a
-    * production job sets to match its state volume). 4 keeps real
-    * multi-partition semantics (exchanges, multiple store shards) at an
-    * 8× lower floor; restored on every exit path, and the collected
-    * results are partitioning-invariant so oracle rows are unchanged. */
-  private[operators] def withMicroBatchParts[T](s: SparkSession)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try body
-    finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  /** Landing-directory lifecycle shared by every file-source harness: a
+    * temp root holding the watch dir, deleted on EVERY exit path, so a
+    * failure mid-query cannot leak a full events copy across a sweep.
+    * What a harness derives from the watch path as a sibling
+    * (`<watch>_ckpt`, `<watch>_out`, staged drops) lives under the same
+    * root and dies with it. Results read lazily from OTHER paths (q39's
+    * MV store) survive. */
+  private[operators] def withWatchDir[T](prefix: String)(body: String => T): T = {
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+    try body(java.nio.file.Files.createDirectory(root.resolve("watch")).toString)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
   }
 
-  private def withWatchDir[T](prefix: String)(body: String => T): T = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    try body(p.toString)
-    finally org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)
-  }
-
-  /** Stage a drop: executor-parallel parquet write into a fresh sibling
-    * temp dir, returning a closure that MOVES the part files into the
-    * watch dir (same filesystem → instant rename). r19 (guide §1/§2 —
-    * measured): the continuously-polling FileStreamSource lists the
-    * watch dir every ~10 ms, so a multi-file append written in place
-    * was routinely picked up HALF-DONE, splitting one intended drop
-    * into 2–3 micro-batches (q48's engine progress showed 6 data
-    * batches for 2 drops); at a ~0.7 s per-batch floor that is pure
-    * harness overhead. Staging + rename makes each drop appear
-    * (near-)atomically, one micro-batch per drop. Results are
-    * unchanged by construction: the same rows reach the stream in the
-    * same drop order, and every result set here was already invariant
-    * to the engine's internal batch split (the race outcome varied run
-    * to run before this change). */
-  private[operators] def stageDrop(d: DataFrame, watch: String,
-      tag: String): () => Unit = {
-    val stage = java.nio.file.Files.createTempDirectory(s"graft_stage_$tag")
-    d.write.mode("overwrite").parquet(stage.toString)
+  /** Stage a drop: `write` fills a fresh directory beside the watch dir,
+    * and the returned closure MOVES its data files (not `_SUCCESS` or
+    * `.crc` siblings) into the watch dir (same filesystem → instant
+    * rename). r19 (guide §1/§2 — measured): the continuously-polling
+    * FileStreamSource lists the watch dir every ~10 ms, so a multi-file
+    * append written in place was routinely picked up HALF-DONE,
+    * splitting one intended drop into 2–3 micro-batches (q48's engine
+    * progress showed 6 data batches for 2 drops); at a ~0.7 s per-batch
+    * floor that is pure harness overhead. Staging + rename makes each
+    * drop appear (near-)atomically, one micro-batch per drop. Results
+    * are unchanged by construction: the same rows reach the stream in
+    * the same drop order, and every result set here was already
+    * invariant to the engine's internal batch split (the race outcome
+    * varied run to run before this change). */
+  private[operators] def stageDrop(watch: String, tag: String)(
+      write: String => Unit): () => Unit = {
+    val dst = java.nio.file.Paths.get(watch)
+    val stage = java.nio.file.Files.createTempDirectory(dst.getParent, s"stage_$tag")
+    write(stage.toString)
     () => {
-      val dst = java.nio.file.Paths.get(watch)
-      val files = Option(stage.toFile.listFiles()).getOrElse(Array.empty)
-      files.filter(_.getName.endsWith(".parquet")).foreach { f =>
-        java.nio.file.Files.move(f.toPath, dst.resolve(s"$tag-${f.getName}"))
-      }
+      stage.toFile.listFiles()
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+        .foreach(f => java.nio.file.Files.move(f.toPath,
+          dst.resolve(s"$tag-${f.getName}"),
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE))
       org.apache.commons.io.FileUtils.deleteQuietly(stage.toFile)
     }
   }
 
-  /** Feed the watched dir one drop at a time: each drop is staged then
-    * renamed into place ([[stageDrop]]), discovered through the file
-    * log as ONE micro-batch (no maxFilesPerTrigger; the stream
-    * quiesces between drops), and the query is stopped on every exit
-    * path. */
-  private def feedDrops(q: org.apache.spark.sql.streaming.StreamingQuery,
-      watch: String, drops: Seq[DataFrame]): Unit =
-    try drops.zipWithIndex.foreach { case (d, i) =>
-      stageDrop(d.coalesce(4), watch, s"drop$i")()
-      q.processAllAvailable()
+  /** Deliver `d` into the watch dir as one staged parquet drop. */
+  private[operators] def parquetDrop(watch: String, tag: String,
+      d: DataFrame): () => Unit =
+    () => stageDrop(watch, tag)(d.write.mode("overwrite").parquet(_))()
+
+  /** The drops of one watch dir, in order, each written as 4 files. */
+  private def fileDrops(watch: String, drops: DataFrame*): Seq[() => Unit] =
+    drops.zipWithIndex.map { case (d, i) =>
+      parquetDrop(watch, s"drop$i", d.coalesce(4))
+    }
+
+  /** Run each delivery (a MemoryStream `addData` or a staged drop) into
+    * `q`, each followed by `processAllAvailable` — so a drop is
+    * discovered through the file log as ONE micro-batch (no
+    * maxFilesPerTrigger; the stream quiesces between deliveries) — then
+    * `inspect` the query. The query is stopped on every exit path. */
+  private[operators] def feed(q: StreamingQuery, deliveries: Seq[() => Unit],
+      inspect: StreamingQuery => Unit = _ => ()): Unit =
+    try {
+      deliveries.foreach { d => d(); q.processAllAvailable() }
+      inspect(q)
     } finally q.stop()
+
+  /** The one micro-batch driver: start `out` — a stream built on a
+    * [[graft.core.Engine.microBatchSession]] — into a memory sink named
+    * `name`, [[feed]] it, then collect the sink into a frame of the
+    * parent `s` and drop the sink view, so session memory doesn't
+    * accumulate across a long query sweep. */
+  private[operators] def drain(s: SparkSession, name: String, out: Dataset[_],
+      mode: OutputMode, deliveries: Seq[() => Unit],
+      inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
+    val ms = out.sparkSession
+    val q = out.writeStream.outputMode(mode).format("memory").queryName(name).start()
+    try {
+      feed(q, deliveries, inspect)
+      collected(s, ms.table(name))
+    } finally ms.catalog.dropTempView(name)
+  }
+
+  /** `df` materialized as a one-partition frame of `s`, so a harness
+    * result outlives its sink, watch dir and child session. */
+  private[operators] def collected(s: SparkSession, df: DataFrame): DataFrame =
+    s.createDataFrame(s.sparkContext.parallelize(df.collect().toIndexedSeq, 1),
+      df.schema)
 
   /** (min, max) of a long column — the one 2-value aggregate the driver
     * computes to place drop cut points and sentinels. */
@@ -90,10 +112,10 @@ object StreamQueries {
     * sentinel event advance the watermark past every real window, so
     * the closed-window stream equals the batch aggregation (q16's
     * shape). The sentinel's own (still-open) window is excluded. */
-  def q23_stream_window(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q23_stream_window(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
+      Engine.microBatchSession(s).sqlContext
     val rows = Tables.events(s, dir).select(col("ts"), col("value"))
       .orderBy("ts").collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
@@ -109,23 +131,11 @@ object StreamQueries {
         sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
       .select(unix_timestamp(col("win.start")).as("window_start"),
         col("n"), col("sum_value"))
-    val q = agg.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("q23_stream_out").start()
-    try {
-      in.addData(rows.take(mid).toIndexedSeq)
-      q.processAllAvailable()
-      in.addData((rows.drop(mid) :+ (sentinelNs, 0.0)).toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    // materialize the (small) window set and release the sink table so
-    // session memory doesn't accumulate across a long query sweep
     val sentinelHour = sentinelNs / 3600000000000L * 3600L
-    val closed = s.table("q23_stream_out")
+    drain(s, "q23_stream_out", agg, OutputMode.Append, Seq(
+      () => in.addData(rows.take(mid).toIndexedSeq),
+      () => in.addData((rows.drop(mid) :+ (sentinelNs, 0.0)).toIndexedSeq)))
       .filter(col("window_start") < sentinelHour)
-    val result = closed.collect().toIndexedSeq
-    val schema = closed.schema
-    s.catalog.dropTempView("q23_stream_out")
-    s.createDataFrame(s.sparkContext.parallelize(result, 1), schema)
       .orderBy("window_start")
   }
 
@@ -143,8 +153,7 @@ object StreamQueries {
     * This is THE operational property a 100 TB streaming deployment
     * leans on (executors and drivers die mid-day); the other streaming
     * harnesses all run a single uninterrupted query. */
-  def q72_stream_restart(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q72_stream_restart(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
     val ev = Tables.events(s, dir).select(col("ts").as("tns"), col("value"))
@@ -154,11 +163,12 @@ object StreamQueries {
     val sentinelNs = hi + (delaySec + 7200L) * 1000000000L
     val schema = StructType(Seq(
       StructField("tns", LongType), StructField("value", DoubleType)))
+    val ms = Engine.microBatchSession(s)
     withWatchDir("graft_restart") { watch =>
       val outDir = watch + "_out"
       val ckpt = watch + "_ckpt"
       def startQuery() =
-        s.readStream.schema(schema).parquet(watch)
+        ms.readStream.schema(schema).parquet(watch)
           .withColumn("ts",
             timestamp_micros(KeyAlgebra.ldiv(col("tns"), lit(1000L))))
           .withWatermark("ts", s"$delaySec seconds")
@@ -173,21 +183,20 @@ object StreamQueries {
           .option("checkpointLocation", ckpt)
           .start()
       // run #1: first half, then the process "dies"
-      feedDrops(startQuery(), watch, Seq(ev.filter(col("tns") <= splitTs)))
+      feed(startQuery(), fileDrops(watch, ev.filter(col("tns") <= splitTs)))
       // run #2: resumes offsets + state from the checkpoint; r19: the
       // sentinel rides the same drop (q23's pattern) — the restart
       // property is exercised by the run boundary, not the drop count,
       // and the closed-window set is identical
-      feedDrops(startQuery(), watch, Seq(ev.filter(col("tns") > splitTs)
+      feed(startQuery(), fileDrops(watch, ev.filter(col("tns") > splitTs)
         .unionByName(Seq((sentinelNs, 0.0)).toDF("tns", "value"))))
       val sentinelHour = sentinelNs / 3600000000000L * 3600L
-      s.read.schema(StructType(Seq(
+      collected(s, s.read.schema(StructType(Seq(
           StructField("window_start", LongType), StructField("n", LongType),
           StructField("sum_value", DoubleType))))
         .parquet(outDir)
-        .filter(col("window_start") < sentinelHour)
-        .orderBy("window_start")
-    }
+        .filter(col("window_start") < sentinelHour))
+    }.orderBy("window_start")
   }
 
   /** q83 — EXACTLY-ONCE sink under batch REDELIVERY: Structured
@@ -210,8 +219,7 @@ object StreamQueries {
     * At 100 TB: the marker protocol is O(1) metadata per micro-batch;
     * the skip costs one file stat. This is the q61 write-audit-publish
     * discipline applied at the micro-batch grain. */
-  def q83_stream_exactly_once(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q83_stream_exactly_once(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
     val ev = Tables.events(s, dir)
       .select(col("ts").as("tns"), col("event_type"), col("value"))
@@ -219,11 +227,12 @@ object StreamQueries {
     val splitTs = lo + (hi - lo) / 2
     val schema = StructType(Seq(StructField("tns", LongType),
       StructField("event_type", StringType), StructField("value", DoubleType)))
+    val ms = Engine.microBatchSession(s)
     withWatchDir("graft_e1x") { watch =>
       val outDir = new java.io.File(watch + "_out"); outDir.mkdirs()
       val ckpt = watch + "_ckpt"
       def startQuery() =
-        s.readStream.schema(schema).parquet(watch)
+        ms.readStream.schema(schema).parquet(watch)
           .writeStream
           .foreachBatch {
             (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
@@ -231,22 +240,21 @@ object StreamQueries {
           }
           .option("checkpointLocation", ckpt)
           .start()
-      feedDrops(startQuery(), watch, Seq(ev.filter(col("tns") <= splitTs)))
+      feed(startQuery(), fileDrops(watch, ev.filter(col("tns") <= splitTs)))
       // force the crash window: sink published, engine commit lost
       dropLatestCommit(ckpt)
-      feedDrops(startQuery(), watch, Seq(ev.filter(col("tns") > splitTs)))
+      feed(startQuery(), fileDrops(watch, ev.filter(col("tns") > splitTs)))
       // read ONLY published batches (marker present)
       val published = outDir.listFiles()
         .filter(f => f.isDirectory &&
           new java.io.File(outDir, f.getName + ".committed").exists())
         .map(_.getAbsolutePath)
-      s.read.schema(schema).parquet(published.toSeq: _*)
+      collected(s, s.read.schema(schema).parquet(published.toSeq: _*)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,6)")).cast("double")
-            .as("sum_value"))
-        .orderBy("event_type")
-    }
+            .as("sum_value")))
+    }.orderBy("event_type")
   }
 
   /** Simulate the crash window between sink-publish and engine-commit:
@@ -290,8 +298,7 @@ object StreamQueries {
     * writes of the events table itself). Must hash-match the same batch
     * oracle as q23. At scale this IS the production shape: a landing
     * directory on an object store, one micro-batch per arrival set. */
-  def q30_stream_filesource(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q30_stream_filesource(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
     val ev = Tables.events(s, dir).select(col("ts").as("tns"), col("value"))
@@ -305,8 +312,10 @@ object StreamQueries {
     val sentinelNs = hi + (delaySec + 7200L) * 1000000000L
     val schema = StructType(Seq(
       StructField("tns", LongType), StructField("value", DoubleType)))
+    val sentinelHour = sentinelNs / 3600000000000L * 3600L
     withWatchDir("graft_fsrc") { watch =>
-      val agg = s.readStream.schema(schema).parquet(watch)
+      val agg = Engine.microBatchSession(s).readStream.schema(schema)
+        .parquet(watch)
         .withColumn("ts", timestamp_micros(KeyAlgebra.ldiv(col("tns"), lit(1000L))))
         .withWatermark("ts", s"$delaySec seconds")
         .groupBy(window(col("ts"), "1 hour").as("win"))
@@ -314,25 +323,15 @@ object StreamQueries {
           sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
         .select(unix_timestamp(col("win.start")).as("window_start"),
           col("n"), col("sum_value"))
-      val q = agg.writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName("q30_stream_out").start()
       // r19: sentinel folded into the last data drop (q23's pattern) —
       // the watermark still passes every real window before the final
       // eviction batch, so the closed-window set is identical, and one
       // whole micro-batch round (data + eviction) is saved
-      feedDrops(q, watch, Seq(
+      drain(s, "q30_stream_out", agg, OutputMode.Append, fileDrops(watch,
         ev.filter(col("tns") <= splitTs),
         ev.filter(col("tns") > splitTs)
           .unionByName(Seq((sentinelNs, 0.0)).toDF("tns", "value"))))
-      val sentinelHour = sentinelNs / 3600000000000L * 3600L
-      val closed = s.table("q30_stream_out")
-        .filter(col("window_start") < sentinelHour)
-      val result = closed.collect().toIndexedSeq
-      val schemaOut = closed.schema
-      s.catalog.dropTempView("q30_stream_out")
-      s.createDataFrame(s.sparkContext.parallelize(result, 1), schemaOut)
-        .orderBy("window_start")
-    }
+    }.filter(col("window_start") < sentinelHour).orderBy("window_start")
   }
 
   /** As-of group handler shared by q26 (MemoryStream) and q45 (file
@@ -399,11 +398,11 @@ object StreamQueries {
     * micro-batch cannot change the answer. At scale the state is one
     * (long, double) per user — keyed state sharded by user_id, no
     * global ordering anywhere. */
-  def q26_stream_asof(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q26_stream_asof(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
+      Engine.microBatchSession(s).sqlContext
     val rows = Tables.events(s, dir)
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("event_id"), col("user_id"),
@@ -422,19 +421,9 @@ object StreamQueries {
         asofHandler)
       .toDF("event_id", "user_id", "ts", "value", "purchase_ts",
         "purchase_value")
-    val q = out.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("q26_stream_out").start()
-    try {
-      in.addData(rows.take(mid).toIndexedSeq)
-      q.processAllAvailable()
-      in.addData(rows.drop(mid).toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    val sink = s.table("q26_stream_out")
-    val result = sink.collect().toIndexedSeq
-    val schema = sink.schema
-    s.catalog.dropTempView("q26_stream_out")
-    s.createDataFrame(s.sparkContext.parallelize(result, 1), schema)
+    drain(s, "q26_stream_out", out, OutputMode.Append, Seq(
+      () => in.addData(rows.take(mid).toIndexedSeq),
+      () => in.addData(rows.drop(mid).toIndexedSeq)))
       .orderBy("event_id")
   }
 
@@ -447,11 +436,11 @@ object StreamQueries {
     * are bit-identical to the batch plan's decimal-sum cast at any
     * batch split. State per user is four longs — sharded by user_id,
     * nothing global. */
-  def q27_stream_sessionize(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q27_stream_sessionize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
+      Engine.microBatchSession(s).sqlContext
     val gapNs = 1800L * 1000000000L
     val rows = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("value"))
@@ -499,21 +488,10 @@ object StreamQueries {
           closed.iterator
       }
       .toDF("user_id", "session_id", "n_events", "sum_value")
-    val q = out.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("q27_stream_out").start()
-    try {
-      in.addData(rows.take(mid).toIndexedSeq)
-      q.processAllAvailable()
-      in.addData(rows.drop(mid).toIndexedSeq)
-      q.processAllAvailable()
-      in.addData(flushes.toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    val sink = s.table("q27_stream_out")
-    val result = sink.collect().toIndexedSeq
-    val schema = sink.schema
-    s.catalog.dropTempView("q27_stream_out")
-    s.createDataFrame(s.sparkContext.parallelize(result, 1), schema)
+    drain(s, "q27_stream_out", out, OutputMode.Append, Seq(
+      () => in.addData(rows.take(mid).toIndexedSeq),
+      () => in.addData(rows.drop(mid).toIndexedSeq),
+      () => in.addData(flushes.toIndexedSeq)))
       .orderBy("user_id", "session_id")
   }
 
@@ -523,11 +501,11 @@ object StreamQueries {
     * in O(k) per arrival, never the full history — and a final flush
     * tick emits the ranked winners, which must hash-match the batch
     * row_number oracle. State is O(users·k); sharded by user_id. */
-  def q28_stream_topk(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q28_stream_topk(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
+      Engine.microBatchSession(s).sqlContext
     val k = 3
     val rows = Tables.events(s, dir)
       .select(col("user_id"), col("event_id"), col("value"))
@@ -542,21 +520,10 @@ object StreamQueries {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         topkHandler(k))
       .toDF("user_id", "rank", "event_id", "value")
-    val q = out.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("q28_stream_out").start()
-    try {
-      in.addData(rows.take(mid).toIndexedSeq)
-      q.processAllAvailable()
-      in.addData(rows.drop(mid).toIndexedSeq)
-      q.processAllAvailable()
-      in.addData(flushes.toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    val sink = s.table("q28_stream_out")
-    val result = sink.collect().toIndexedSeq
-    val schema = sink.schema
-    s.catalog.dropTempView("q28_stream_out")
-    s.createDataFrame(s.sparkContext.parallelize(result, 1), schema)
+    drain(s, "q28_stream_out", out, OutputMode.Append, Seq(
+      () => in.addData(rows.take(mid).toIndexedSeq),
+      () => in.addData(rows.drop(mid).toIndexedSeq),
+      () => in.addData(flushes.toIndexedSeq)))
       .orderBy("user_id", "rank")
   }
 
@@ -570,12 +537,10 @@ object StreamQueries {
     * of join state, not the same batch); inner-join matches emit as
     * found, and the emitted pair set must hash-match the batch interval
     * join. */
-  def q31_stream_join(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s)(q31_stream_join0(s, dir))
-
-  private def q31_stream_join0(s: SparkSession, dir: String): DataFrame = {
+  def q31_stream_join(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
+      Engine.microBatchSession(s).sqlContext
     val ev = Tables.events(s, dir)
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("ts"), col("event_id"), col("user_id"), col("event_type"))
@@ -598,22 +563,12 @@ object StreamQueries {
         // floor(a−b) — the oracle differences epoch_us values)
         (KeyAlgebra.ldiv(col("ctns"), lit(1000L)) -
           KeyAlgebra.ldiv(col("ptns"), lit(1000L))).as("lag_us"))
-    val q = joined.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("q31_stream_out").start()
-    def feed(rows: Array[(Long, Long, Long, String)]): Unit = {
+    def both(rows: Array[(Long, Long, Long, String)]): () => Unit = () => {
       inC.addData(rows.collect { case (t, id, u, "click") => (t, id, u) }.toIndexedSeq)
       inP.addData(rows.collect { case (t, id, u, "purchase") => (t, id, u) }.toIndexedSeq)
-      q.processAllAvailable()
     }
-    try {
-      feed(ev.filter(_._1 <= splitNs))
-      feed(ev.filter(_._1 > splitNs))
-    } finally q.stop()
-    val sink = s.table("q31_stream_out")
-    val result = sink.collect().toIndexedSeq
-    val schema = sink.schema
-    s.catalog.dropTempView("q31_stream_out")
-    s.createDataFrame(s.sparkContext.parallelize(result, 1), schema)
+    drain(s, "q31_stream_out", joined, OutputMode.Append, Seq(
+      both(ev.filter(_._1 <= splitNs)), both(ev.filter(_._1 > splitNs))))
       .orderBy("click_id", "purchase_id")
   }
 
@@ -629,12 +584,10 @@ object StreamQueries {
     * BIGINT, not a nullable column pandas would widen to float64. At
     * scale this is the canonical "did the conversion happen" shape:
     * two-sided bounded state, sharded by user, evicted by watermark. */
-  def q44_stream_outer_join(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s)(q44_stream_outer_join0(s, dir))
-
-  private def q44_stream_outer_join0(s: SparkSession, dir: String): DataFrame = {
+  def q44_stream_outer_join(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
+      Engine.microBatchSession(s).sqlContext
     val ev = Tables.events(s, dir)
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("ts"), col("event_id"), col("user_id"), col("event_type"))
@@ -660,27 +613,19 @@ object StreamQueries {
         col("c_user").as("user_id"),
         coalesce(KeyAlgebra.ldiv(col("ctns"), lit(1000L)) -
           KeyAlgebra.ldiv(col("ptns"), lit(1000L)), lit(-1L)).as("lag_us"))
-    val q = joined.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("q44_stream_out").start()
-    def feed(rows: Seq[(Long, Long, Long, String)]): Unit = {
+    def both(rows: Seq[(Long, Long, Long, String)]): () => Unit = () => {
       inC.addData(rows.collect { case (t, id, u, "click") => (t, id, u) }.toIndexedSeq)
       inP.addData(rows.collect { case (t, id, u, "purchase") => (t, id, u) }.toIndexedSeq)
-      q.processAllAvailable()
     }
-    try {
-      feed(ev.filter(_._1 <= splitNs).toIndexedSeq)
+    drain(s, "q44_stream_out", joined, OutputMode.Append, Seq(
+      both(ev.filter(_._1 <= splitNs).toIndexedSeq),
       // both streams carry the sentinel so the SHARED watermark advances;
       // r19: folded into the second feed (q23's pattern) — the outer
       // rows still emit in the final eviction batch once the watermark
       // passes every real click, and one micro-batch round is saved
-      feed(ev.filter(_._1 > splitNs).toIndexedSeq ++
-        Seq((sentinelNs, -1L, -1L, "click"), (sentinelNs, -1L, -1L, "purchase")))
-    } finally q.stop()
-    val sink = s.table("q44_stream_out").filter(col("user_id") >= 0L)
-    val result = sink.collect().toIndexedSeq
-    val schema = sink.schema
-    s.catalog.dropTempView("q44_stream_out")
-    s.createDataFrame(s.sparkContext.parallelize(result, 1), schema)
+      both(ev.filter(_._1 > splitNs).toIndexedSeq ++
+        Seq((sentinelNs, -1L, -1L, "click"), (sentinelNs, -1L, -1L, "purchase")))))
+      .filter(col("user_id") >= 0L)
       .orderBy("click_id", "purchase_id")
   }
 
@@ -695,10 +640,10 @@ object StreamQueries {
     * anywhere. Complements d09/d10 (custom mapGroupsWithState dedup)
     * with the first-class engine API; re-deliveries stay inside the
     * watermark delay, which is exactly the API's contract. */
-  def q36_stream_dedup_watermark(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q36_stream_dedup_watermark(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
+      Engine.microBatchSession(s).sqlContext
     val rows = Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
       .orderBy("ts").collect()
@@ -714,22 +659,12 @@ object StreamQueries {
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       .select("event_id", "user_id", "value")
-    val q = deduped.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("q36_stream_out").start()
-    try {
-      in.addData((batch1 ++ batch1).toIndexedSeq) // in-batch double delivery
-      q.processAllAvailable()
-      in.addData((rows.drop(mid) ++ redeliver).toIndexedSeq) // cross-batch
-      q.processAllAvailable()
-    } finally q.stop()
-    val sink = s.table("q36_stream_out")
-    val out = sink.groupBy("user_id")
+    drain(s, "q36_stream_out", deduped, OutputMode.Append, Seq(
+      () => in.addData((batch1 ++ batch1).toIndexedSeq), // in-batch double delivery
+      () => in.addData((rows.drop(mid) ++ redeliver).toIndexedSeq))) // cross-batch
+      .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
-    val result = out.collect().toIndexedSeq
-    val schema = out.schema
-    s.catalog.dropTempView("q36_stream_out")
-    s.createDataFrame(s.sparkContext.parallelize(result, 1), schema)
       .orderBy("user_id")
   }
 
@@ -759,8 +694,7 @@ object StreamQueries {
     * state is partitioned by the engine across executors like any
     * shuffle — the chain adds no driver state and no extra sink
     * round-trip at 100 TB stream volume. */
-  def q89_stream_chained_stateful(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q89_stream_chained_stateful(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
     val ev = Tables.events(s, dir)
@@ -782,8 +716,11 @@ object StreamQueries {
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("tns", LongType),
       StructField("value", DoubleType)))
+    val sentinel = Seq((-1L, sentinelNs, 0.0)).toDF("event_id", "tns", "value")
+    val sentinelHour = sentinelNs / 3600000000000L * 3600L
     withWatchDir("graft_q89_src") { watch =>
-    val agg = s.readStream.schema(schema).parquet(watch)
+    val agg = Engine.microBatchSession(s).readStream.schema(schema)
+      .parquet(watch)
       .withColumn("ts",
         timestamp_micros(KeyAlgebra.ldiv(col("tns"), lit(1000L))))
       .withWatermark("ts", "1 hour")
@@ -794,26 +731,17 @@ object StreamQueries {
           .as("sum_value"))
       .select(unix_timestamp(col("win.start")).as("window_start"),
         col("n"), col("sum_value"))
-    val q = agg.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("q89_stream_out").start()
-    val sentinel = Seq((-1L, sentinelNs, 0.0)).toDF("event_id", "tns", "value")
-    feedDrops(q, watch, Seq(
+    drain(s, "q89_stream_out", agg, OutputMode.Append, fileDrops(watch,
       batch1.unionByName(redeliver), // in-batch duplicates
       ev.filter(col("tns") > cut).unionByName(redeliver) // cross-batch
-        .unionByName(sentinel)))
-    val nStateful = Option(q.lastProgress)
-      .map(_.stateOperators.length).getOrElse(0)
-    require(nStateful == 2,
-      s"expected 2 chained stateful operators in one query, got $nStateful")
-    val sentinelHour = sentinelNs / 3600000000000L * 3600L
-    val closed = s.table("q89_stream_out")
-      .filter(col("window_start") < sentinelHour)
-    val result = closed.collect().toIndexedSeq
-    val outSchema = closed.schema
-    s.catalog.dropTempView("q89_stream_out")
-    s.createDataFrame(s.sparkContext.parallelize(result, 1), outSchema)
-      .orderBy("window_start")
-    }
+        .unionByName(sentinel)),
+      inspect = { q =>
+        val nStateful = Option(q.lastProgress)
+          .map(_.stateOperators.length).getOrElse(0)
+        require(nStateful == 2,
+          s"expected 2 chained stateful operators in one query, got $nStateful")
+      })
+    }.filter(col("window_start") < sentinelHour).orderBy("window_start")
   }
 
   /** q91 — STREAMING WARC crawl ingest (qn20's front door as a
@@ -834,8 +762,7 @@ object StreamQueries {
     * only state is the 8-row running aggregate. At crawl scale the
     * Complete-mode ledger swaps for an update-mode sink keyed by shard
     * — the dataflow is identical. */
-  def q91_stream_warc_ingest(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q91_stream_warc_ingest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType, TimestampType}
     val docs = Tables.documents(s, dir)
@@ -844,41 +771,25 @@ object StreamQueries {
       val binSchema = StructType(Seq(
         StructField("path", StringType), StructField("modificationTime", TimestampType),
         StructField("length", LongType), StructField("content", BinaryType)))
-      val agg = s.readStream.format("binaryFile").schema(binSchema)
+      val agg = Engine.microBatchSession(s).readStream.format("binaryFile")
+        .schema(binSchema)
         .load(watch)
         .select(col("content")).as[Array[Byte]]
         .mapPartitions(_.flatMap(NetCDFQueries.warcGoodDocs))
         .toDF("doc_id", "html_len")
         .groupBy(pmod(col("doc_id"), lit(8L)).cast("long").as("shard"))
         .agg(count(lit(1)).as("n_good"), sum("html_len").as("html_bytes"))
-      val q = agg.writeStream.outputMode(OutputMode.Complete)
-        .format("memory").queryName("q91_stream_out").start()
       // shards are STAGED outside the watched directory and renamed in
-      // (same filesystem → atomic): the file source must never list a
-      // half-written shard — feedDrops gets this for free from the
-      // parquet commit protocol; raw binary writes need it by hand
-      def land(drop: DataFrame, prefix: String): Unit = {
-        val stage = java.nio.file.Files
-          .createTempDirectory(s"graft_q91_stage_$prefix").toString
-        try {
-          NetCDFQueries.writeWarcShards(drop.select(col("doc_id"),
-            col("doc_id"), col("lang"), col("source"), col("text")),
-            stage, prefix)
-          new java.io.File(stage).listFiles().foreach { f =>
-            java.nio.file.Files.move(f.toPath,
-              java.nio.file.Paths.get(watch, f.getName),
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          }
-        } finally org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(stage))
-        q.processAllAvailable()
-      }
-      try {
-        land(docs.filter(pmod(col("doc_id"), lit(2L)) === 0L), "drop1")
-        land(docs.filter(pmod(col("doc_id"), lit(2L)) === 1L), "drop2")
-      } finally q.stop()
-      val books = s.table("q91_stream_out")
-      val out = docs
+      // (see [[stageDrop]]): the file source must never list a
+      // half-written shard
+      def land(parity: Long, prefix: String): () => Unit = () =>
+        stageDrop(watch, prefix)(stage => NetCDFQueries.writeWarcShards(
+          docs.filter(pmod(col("doc_id"), lit(2L)) === parity).select(
+            col("doc_id"), col("doc_id"), col("lang"), col("source"),
+            col("text")), stage, prefix))()
+      val books = drain(s, "q91_stream_out", agg, OutputMode.Complete,
+        Seq(land(0L, "drop1"), land(1L, "drop2")))
+      docs
         .groupBy(pmod(col("doc_id"), lit(8L)).cast("long").as("shard"))
         .agg(count(lit(1)).as("n_docs"))
         .join(books, Seq("shard"), "left")
@@ -887,10 +798,6 @@ object StreamQueries {
           (col("n_docs") - coalesce(col("n_good"), lit(0L)))
             .as("n_quarantined"),
           coalesce(col("html_bytes"), lit(0L)).as("html_bytes"))
-      val result = out.collect().toIndexedSeq
-      val outSchema = out.schema
-      s.catalog.dropTempView("q91_stream_out")
-      s.createDataFrame(s.sparkContext.parallelize(result, 1), outSchema)
         .orderBy("shard")
     }
   }
@@ -919,8 +826,7 @@ object StreamQueries {
     * executor-parallel parquet append discovered through the file log.
     * No driver-side row injection anywhere: the driver only computes the
     * two cut points (a 2-value aggregate), never holds event rows. */
-  def q39_incremental_mv(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q39_incremental_mv(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
     // Path is scoped by (dir, applicationId, session UUID) — see
     // SessionMemo.pathTag: two JVMs (or two sessions in one JVM)
@@ -942,7 +848,8 @@ object StreamQueries {
       StructField("user_id", LongType), StructField("event_type", StringType),
       StructField("value", DoubleType)))
     withWatchDir("graft_q39_src") { watch =>
-    val q = s.readStream.schema(schema).parquet(watch)
+    val q = Engine.microBatchSession(s).readStream.schema(schema)
+      .parquet(watch)
       .writeStream.outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val sp = batch.sparkSession
@@ -976,11 +883,11 @@ object StreamQueries {
       .start()
     // the MV store must OUTLIVE this call (the returned frame reads it
     // lazily), so it is cleaned on re-entry, not here
-    feedDrops(q, watch, Seq(
+    feed(q, fileDrops(watch, Seq(
       col("tns") <= c1,
       col("tns") > c1 && col("tns") <= c2,
       col("tns") > c2).map(p =>
-      ev.filter(p).select("user_id", "event_type", "value")))
+      ev.filter(p).select("user_id", "event_type", "value")): _*))
     s.read.parquet(mvPath)
       .select(col("user_id"), col("event_type"), col("n_events"),
         col("sv").cast("double").as("sum_value"))
@@ -1001,8 +908,7 @@ object StreamQueries {
     * oracle exactly. At scale the state is one open session interval
     * per active user — sharded by user_id, merged and evicted by the
     * engine, no custom state code to get wrong. */
-  def q42_stream_session_window(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q42_stream_session_window(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
     val ev = Tables.events(s, dir)
@@ -1018,7 +924,8 @@ object StreamQueries {
       StructField("tns", LongType), StructField("user_id", LongType),
       StructField("value", DoubleType)))
     withWatchDir("graft_q42_src") { watch =>
-      val agg = s.readStream.schema(schema).parquet(watch)
+      val agg = Engine.microBatchSession(s).readStream.schema(schema)
+        .parquet(watch)
         .withColumn("tsm", timestamp_micros(KeyAlgebra.ldiv(col("tns"), lit(1000L))))
         .withWatermark("tsm", s"$delaySec seconds")
         .groupBy(col("user_id"), session_window(col("tsm"), "30 minutes").as("sw"))
@@ -1028,25 +935,18 @@ object StreamQueries {
           unix_micros(col("sw.start")).as("sess_start_us"),
           unix_micros(col("sw.end")).as("sess_end_us"),
           col("n_events"), col("sum_value"))
-      val q = agg.writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName("q42_stream_out").start()
       // r19: sentinel folded into the last data drop (q23's pattern) —
       // the delay covers the full span so nothing is late, the watermark
       // passes every real session end before the final eviction batch,
       // and one whole micro-batch round is saved
-      feedDrops(q, watch, Seq(
+      drain(s, "q42_stream_out", agg, OutputMode.Append, fileDrops(watch,
         ev.filter(col("tns") <= splitTs),
         ev.filter(col("tns") > splitTs).unionByName(
           Seq((sentinelNs, -1L, 0.0)).toDF("tns", "user_id", "value"))))
+    }
       // the sentinel's own session never closes (nothing advances the
       // watermark past it) and its user is excluded anyway
-      val closed = s.table("q42_stream_out").filter(col("user_id") >= 0L)
-      val result = closed.collect().toIndexedSeq
-      val schemaOut = closed.schema
-      s.catalog.dropTempView("q42_stream_out")
-      s.createDataFrame(s.sparkContext.parallelize(result, 1), schemaOut)
-        .orderBy("user_id", "sess_start_us")
-    }
+      .filter(col("user_id") >= 0L).orderBy("user_id", "sess_start_us")
   }
 
   /** q45 — q26's as-of enrichment fed by a REAL FileStreamSource: the
@@ -1058,8 +958,7 @@ object StreamQueries {
     * arbitrary; the handler's per-batch event-time re-sort absorbs it,
     * and the strict ts value boundary between drops keeps equal-ts runs
     * in one micro-batch. Must hash-match q24's batch ASOF oracle. */
-  def q45_asof_filesource(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q45_asof_filesource(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
@@ -1074,7 +973,8 @@ object StreamQueries {
       StructField("tsus", LongType), StructField("event_type", StringType),
       StructField("value", DoubleType)))
     withWatchDir("graft_q45_src") { watch =>
-      val out = s.readStream.schema(schema).parquet(watch)
+      val out = Engine.microBatchSession(s).readStream.schema(schema)
+        .parquet(watch)
         .toDF("_1", "_2", "_3", "_4", "_5")
         .as[(Long, Long, Long, String, Double)]
         .groupByKey(_._2)
@@ -1082,21 +982,13 @@ object StreamQueries {
           asofHandler)
         .toDF("event_id", "user_id", "ts", "value", "purchase_ts",
           "purchase_value")
-      val q = out.writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName("q45_stream_out").start()
       def drop(p: Column): DataFrame = ev.filter(p)
         .select(col("event_id"), col("user_id"),
           KeyAlgebra.ldiv(col("tns"), lit(1000L)).as("tsus"),
           col("event_type"), col("value"))
-      feedDrops(q, watch, Seq(
+      drain(s, "q45_stream_out", out, OutputMode.Append, fileDrops(watch,
         drop(col("tns") <= splitTs), drop(col("tns") > splitTs)))
-      val sink = s.table("q45_stream_out")
-      val result = sink.collect().toIndexedSeq
-      val schemaOut = sink.schema
-      s.catalog.dropTempView("q45_stream_out")
-      s.createDataFrame(s.sparkContext.parallelize(result, 1), schemaOut)
-        .orderBy("event_id")
-    }
+    }.orderBy("event_id")
   }
 
   /** q46 — q28's bounded-state top-k fed by a REAL FileStreamSource:
@@ -1105,8 +997,7 @@ object StreamQueries {
     * flush ticks never pass through the driver. Same handler as q28;
     * the bounded-insert comparator is a strict total order, so the
     * retained top-k is independent of file arrival order. */
-  def q46_topk_filesource(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q46_topk_filesource(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructField, StructType}
@@ -1119,30 +1010,55 @@ object StreamQueries {
       StructField("user_id", LongType), StructField("event_id", LongType),
       StructField("value", DoubleType), StructField("flush", BooleanType)))
     withWatchDir("graft_q46_src") { watch =>
-      val out = s.readStream.schema(schema).parquet(watch)
+      val out = Engine.microBatchSession(s).readStream.schema(schema)
+        .parquet(watch)
         .toDF("_1", "_2", "_3", "_4")
         .as[(Long, Long, Double, Boolean)]
         .groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
           topkHandler(k))
         .toDF("user_id", "rank", "event_id", "value")
-      val q = out.writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName("q46_stream_out").start()
       def dataDrop(p: Column): DataFrame = ev.filter(p)
         .withColumn("flush", lit(false))
       val flushDrop = ev.select("user_id").distinct()
         .select(col("user_id"), lit(-1L).as("event_id"),
           lit(0.0).as("value"), lit(true).as("flush"))
-      feedDrops(q, watch, Seq(
+      drain(s, "q46_stream_out", out, OutputMode.Append, fileDrops(watch,
         dataDrop(col("event_id") <= splitId),
         dataDrop(col("event_id") > splitId),
         flushDrop))
-      val sink = s.table("q46_stream_out")
-      val result = sink.collect().toIndexedSeq
-      val schemaOut = sink.schema
-      s.catalog.dropTempView("q46_stream_out")
-      s.createDataFrame(s.sparkContext.parallelize(result, 1), schemaOut)
-        .orderBy("user_id", "rank")
+    }.orderBy("user_id", "rank")
+  }
+
+  /** The deliveries of q47/q48: two drops split at `splitTs`, each the
+    * click rows of `ev` into `watchC` and its purchase rows into
+    * `watchP`, with an optional `sentinel` row (ts, -1, -1) on both sides
+    * of the second drop. Parquet resolves columns BY NAME at read, so
+    * each side carries its stream's schema names. Both sides are STAGED
+    * first and renamed in back-to-back (r19, see [[stageDrop]]): the
+    * in-place appends made the polling source pick up the click files
+    * before the purchase write finished, splitting every intended drop
+    * into 2-3 micro-batches. */
+  private def joinDrops(ev: DataFrame, splitTs: Long, watchC: String,
+      watchP: String, sentinel: Option[Long]): Seq[() => Unit] = {
+    val s = ev.sparkSession
+    import s.implicits._
+    def side(p: Column, typ: String, dst: String, tag: String,
+        last: Boolean, names: String*): () => Unit = {
+      val rows = ev.filter(p && col("event_type") === typ)
+        .select(col("tns").as(names(0)), col("event_id").as(names(1)),
+          col("user_id").as(names(2)))
+      val d = sentinel.filter(_ => last).fold(rows)(t =>
+        rows.unionByName(Seq((t, -1L, -1L)).toDF(names: _*)))
+      stageDrop(dst, tag)(d.write.mode("overwrite").parquet(_))
+    }
+    Seq(col("tns") <= splitTs, col("tns") > splitTs).zipWithIndex.map {
+      case (p, i) => () =>
+        val mvC = side(p, "click", watchC, s"c$i", i == 1,
+          "ctns", "click_id", "c_user")
+        val mvP = side(p, "purchase", watchP, s"p$i", i == 1,
+          "ptns", "purchase_id", "p_user")
+        mvC(); mvP()
     }
   }
 
@@ -1153,10 +1069,7 @@ object StreamQueries {
     * together. The strict ts value boundary between drops gives the
     * same cross-batch state reuse q31 proves; no driver row injection
     * anywhere. Must hash-match the batch interval join. */
-  def q47_join_filesource(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s)(q47_join_filesource0(s, dir))
-
-  private def q47_join_filesource0(s: SparkSession, dir: String): DataFrame = {
+  def q47_join_filesource(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val ev = Tables.events(s, dir)
       .filter(col("event_type").isin("click", "purchase"))
@@ -1170,12 +1083,13 @@ object StreamQueries {
     val pSchema = StructType(Seq(
       StructField("ptns", LongType), StructField("purchase_id", LongType),
       StructField("p_user", LongType)))
+    val ms = Engine.microBatchSession(s)
     withWatchDir("graft_q47_c") { watchC =>
       withWatchDir("graft_q47_p") { watchP =>
-        val clicks = s.readStream.schema(cSchema).parquet(watchC)
+        val clicks = ms.readStream.schema(cSchema).parquet(watchC)
           .withColumn("cts", timestamp_micros(KeyAlgebra.ldiv(col("ctns"), lit(1000L))))
           .withWatermark("cts", "0 seconds")
-        val purchases = s.readStream.schema(pSchema).parquet(watchP)
+        val purchases = ms.readStream.schema(pSchema).parquet(watchP)
           .withColumn("pts", timestamp_micros(KeyAlgebra.ldiv(col("ptns"), lit(1000L))))
           .withWatermark("pts", "0 seconds")
         val joined = clicks.join(purchases,
@@ -1184,38 +1098,10 @@ object StreamQueries {
             col("c_user").as("user_id"),
             (KeyAlgebra.ldiv(col("ctns"), lit(1000L)) -
               KeyAlgebra.ldiv(col("ptns"), lit(1000L))).as("lag_us"))
-        val q = joined.writeStream.outputMode(OutputMode.Append)
-          .format("memory").queryName("q47_stream_out").start()
-        // parquet resolves columns BY NAME at read: each side's drop
-        // must carry that side's stream schema names. Both sides are
-        // STAGED first and renamed in back-to-back (r19, see
-        // [[stageDrop]]): the in-place appends made the polling source
-        // pick up the click files before the purchase write finished,
-        // splitting every intended drop into 2-3 micro-batches.
-        def sideDrop(p: Column, typ: String, dst: String, tag: String,
-            names: Seq[String]): () => Unit =
-          stageDrop(ev.filter(p && col("event_type") === typ)
-            .select(col("tns").as(names(0)), col("event_id").as(names(1)),
-              col("user_id").as(names(2))), dst, tag)
-        try {
-          Seq(col("tns") <= splitTs, col("tns") > splitTs).zipWithIndex
-            .foreach { case (p, i) =>
-              val mvC = sideDrop(p, "click", watchC, s"c$i",
-                Seq("ctns", "click_id", "c_user"))
-              val mvP = sideDrop(p, "purchase", watchP, s"p$i",
-                Seq("ptns", "purchase_id", "p_user"))
-              mvC(); mvP()
-              q.processAllAvailable()
-            }
-        } finally q.stop()
-        val sink = s.table("q47_stream_out")
-        val result = sink.collect().toIndexedSeq
-        val schemaOut = sink.schema
-        s.catalog.dropTempView("q47_stream_out")
-        s.createDataFrame(s.sparkContext.parallelize(result, 1), schemaOut)
-          .orderBy("click_id", "purchase_id")
+        drain(s, "q47_stream_out", joined, OutputMode.Append,
+          joinDrops(ev, splitTs, watchC, watchP, None))
       }
-    }
+    }.orderBy("click_id", "purchase_id")
   }
 
   /** q48 — q44's stream-stream LEFT OUTER interval join from two real
@@ -1224,11 +1110,7 @@ object StreamQueries {
     * a far-future sentinel row dropped into EACH landing directory.
     * Nulls coalesce to −1 as in q44. No driver row injection beyond the
     * two 1-row sentinels (harness control, not event data). */
-  def q48_outer_join_filesource(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s)(q48_outer_join_filesource0(s, dir))
-
-  private def q48_outer_join_filesource0(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
+  def q48_outer_join_filesource(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val ev = Tables.events(s, dir)
       .filter(col("event_type").isin("click", "purchase"))
@@ -1243,12 +1125,13 @@ object StreamQueries {
     val pSchema = StructType(Seq(
       StructField("ptns", LongType), StructField("purchase_id", LongType),
       StructField("p_user", LongType)))
+    val ms = Engine.microBatchSession(s)
     withWatchDir("graft_q48_c") { watchC =>
       withWatchDir("graft_q48_p") { watchP =>
-        val clicks = s.readStream.schema(cSchema).parquet(watchC)
+        val clicks = ms.readStream.schema(cSchema).parquet(watchC)
           .withColumn("cts", timestamp_micros(KeyAlgebra.ldiv(col("ctns"), lit(1000L))))
           .withWatermark("cts", "0 seconds")
-        val purchases = s.readStream.schema(pSchema).parquet(watchP)
+        val purchases = ms.readStream.schema(pSchema).parquet(watchP)
           .withColumn("pts", timestamp_micros(KeyAlgebra.ldiv(col("ptns"), lit(1000L))))
           .withWatermark("pts", "0 seconds")
         val joined = clicks.join(purchases,
@@ -1259,58 +1142,15 @@ object StreamQueries {
             col("c_user").as("user_id"),
             coalesce(KeyAlgebra.ldiv(col("ctns"), lit(1000L)) -
               KeyAlgebra.ldiv(col("ptns"), lit(1000L)), lit(-1L)).as("lag_us"))
-        val q = joined.writeStream.outputMode(OutputMode.Append)
-          .format("memory").queryName("q48_stream_out").start()
-        // parquet resolves columns BY NAME at read: each side's drop
-        // must carry that side's stream schema names. Both sides are
-        // STAGED first and renamed in back-to-back (r19, see
-        // [[stageDrop]]): the in-place appends made the polling source
-        // pick up the click files before the purchase write finished,
-        // splitting every intended drop into 2-3 micro-batches.
-        def sideDrop(p: Column, typ: String, dst: String, tag: String,
-            names: Seq[String]): () => Unit =
-          stageDrop(ev.filter(p && col("event_type") === typ)
-            .select(col("tns").as(names(0)), col("event_id").as(names(1)),
-              col("user_id").as(names(2))), dst, tag)
         // both sources carry the sentinel so the SHARED watermark
         // advances past every real click's match window; r19: the
-        // sentinel rides the SECOND drop (q23's fold pattern) — the
-        // outer rows still all emit in the final eviction batch, and
-        // one whole micro-batch round is saved
-        def sentinelled(side: DataFrame, names: Seq[String]): DataFrame =
-          side.unionByName(Seq((sentinelNs, -1L, -1L))
-            .toDF(names(0), names(1), names(2)))
-        try {
-          Seq(col("tns") <= splitTs, col("tns") > splitTs).zipWithIndex
-            .foreach { case (p, i) =>
-              val cNames = Seq("ctns", "click_id", "c_user")
-              val pNames = Seq("ptns", "purchase_id", "p_user")
-              val mvC =
-                if (i == 0) sideDrop(p, "click", watchC, s"c$i", cNames)
-                else stageDrop(sentinelled(
-                  ev.filter(p && col("event_type") === "click")
-                    .select(col("tns").as(cNames(0)),
-                      col("event_id").as(cNames(1)),
-                      col("user_id").as(cNames(2))), cNames), watchC, s"c$i")
-              val mvP =
-                if (i == 0) sideDrop(p, "purchase", watchP, s"p$i", pNames)
-                else stageDrop(sentinelled(
-                  ev.filter(p && col("event_type") === "purchase")
-                    .select(col("tns").as(pNames(0)),
-                      col("event_id").as(pNames(1)),
-                      col("user_id").as(pNames(2))), pNames), watchP, s"p$i")
-              mvC(); mvP()
-              q.processAllAvailable()
-            }
-        } finally q.stop()
-        val sink = s.table("q48_stream_out").filter(col("user_id") >= 0L)
-        val result = sink.collect().toIndexedSeq
-        val schemaOut = sink.schema
-        s.catalog.dropTempView("q48_stream_out")
-        s.createDataFrame(s.sparkContext.parallelize(result, 1), schemaOut)
-          .orderBy("click_id", "purchase_id")
+        // sentinel rides the SECOND drop (q23's fold pattern) — the outer
+        // rows still all emit in the final eviction batch, and one whole
+        // micro-batch round is saved
+        drain(s, "q48_stream_out", joined, OutputMode.Append,
+          joinDrops(ev, splitTs, watchC, watchP, Some(sentinelNs)))
       }
-    }
+    }.filter(col("user_id") >= 0L).orderBy("click_id", "purchase_id")
   }
 
   /** q49 — q36's exactly-once dedup from a real FileStreamSource: drop 1
@@ -1322,8 +1162,7 @@ object StreamQueries {
     * re-delivery cut uses the drop-1 ceiling (splitTs), which bounds the
     * true drop-1 maximum from above, so every re-delivered row is at or
     * above the post-drop-1 watermark — never late. */
-  def q49_dedup_filesource(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q49_dedup_filesource(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("ts").as("tns"), col("user_id"),
@@ -1334,30 +1173,23 @@ object StreamQueries {
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("tns", LongType),
       StructField("user_id", LongType), StructField("value", DoubleType)))
+    val batch1 = ev.filter(col("tns") <= splitTs)
+    val redeliver = ev.filter(
+      col("tns") > splitTs - hourNs && col("tns") <= splitTs)
     withWatchDir("graft_q49_src") { watch =>
-      val deduped = s.readStream.schema(schema).parquet(watch)
+      val deduped = Engine.microBatchSession(s).readStream.schema(schema)
+        .parquet(watch)
         .withColumn("ts", timestamp_micros(KeyAlgebra.ldiv(col("tns"), lit(1000L))))
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
         .select("event_id", "user_id", "value")
-      val q = deduped.writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName("q49_stream_out").start()
-      val batch1 = ev.filter(col("tns") <= splitTs)
-      val redeliver = ev.filter(
-        col("tns") > splitTs - hourNs && col("tns") <= splitTs)
-      feedDrops(q, watch, Seq(
+      drain(s, "q49_stream_out", deduped, OutputMode.Append, fileDrops(watch,
         batch1.union(batch1), // in-batch double delivery
         ev.filter(col("tns") > splitTs).union(redeliver))) // cross-batch
-      val sink = s.table("q49_stream_out")
-      val out = sink.groupBy("user_id")
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
-      val result = out.collect().toIndexedSeq
-      val schemaOut = out.schema
-      s.catalog.dropTempView("q49_stream_out")
-      s.createDataFrame(s.sparkContext.parallelize(result, 1), schemaOut)
-        .orderBy("user_id")
-    }
+    }.groupBy("user_id")
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
+      .orderBy("user_id")
   }
 
   /** Per-user funnel milestone handler shared conceptually with q53's
@@ -1396,8 +1228,7 @@ object StreamQueries {
     * (milestones only ever get set), so the final per-user state is the
     * field-wise max over the sink rows; its stage histogram must
     * hash-match q53's batch oracle exactly. */
-  def q54_stream_funnel(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q54_stream_funnel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -1409,24 +1240,18 @@ object StreamQueries {
       StructField("user_id", LongType), StructField("event_type", StringType),
       StructField("tns", LongType)))
     withWatchDir("graft_q54_src") { watch =>
-      val out = s.readStream.schema(schema).parquet(watch)
+      val out = Engine.microBatchSession(s).readStream.schema(schema)
+        .parquet(watch)
         .toDF("_1", "_2", "_3")
         .as[(Long, String, Long)]
         .groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
           funnelHandler)
         .toDF("user_id", "t1", "t2", "t3")
-      val q = out.writeStream.outputMode(OutputMode.Update)
-        .format("memory").queryName("q54_stream_out").start()
-      feedDrops(q, watch, Seq(
+      drain(s, "q54_stream_out", out, OutputMode.Update, fileDrops(watch,
         ev.filter(col("tns") <= c1),
         ev.filter(col("tns") > c1 && col("tns") <= c2),
         ev.filter(col("tns") > c2)))
-      val sink = s.table("q54_stream_out")
-      val result = sink.collect().toIndexedSeq
-      val schemaOut = sink.schema
-      s.catalog.dropTempView("q54_stream_out")
-      s.createDataFrame(s.sparkContext.parallelize(result, 1), schemaOut)
         .groupBy("user_id")
         .agg(max("t1").as("t1"), max("t2").as("t2"), max("t3").as("t3"))
         .withColumn("stage",
@@ -1479,8 +1304,7 @@ object StreamQueries {
     * monotone in apply count so the sink fold is a per-key max —
     * nothing in the path holds more than |keys| state, the same bound a
     * production CDC materializer carries. */
-  def q64_cdc_upsert(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q64_cdc_upsert(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -1495,26 +1319,20 @@ object StreamQueries {
       StructField("event_type", StringType), StructField("tns", LongType),
       StructField("value_fp", LongType)))
     withWatchDir("graft_q64_src") { watch =>
-      val out = s.readStream.schema(schema).parquet(watch)
+      val out = Engine.microBatchSession(s).readStream.schema(schema)
+        .parquet(watch)
         .toDF("_1", "_2", "_3", "_4", "_5")
         .as[(Long, Long, String, Long, Long)]
         .groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
           cdcHandler)
         .toDF("user_id", "n_changes", "last_tns", "alive", "value_fp")
-      val q = out.writeStream.outputMode(OutputMode.Update)
-        .format("memory").queryName("q64_stream_out").start()
-      feedDrops(q, watch, Seq(
+      // n_changes is strictly increasing per key, so the latest state is
+      // the arg-max row; struct max gives it without a second shuffle
+      drain(s, "q64_stream_out", out, OutputMode.Update, fileDrops(watch,
         ev.filter(col("tns") <= c1),
         ev.filter(col("tns") > c1 && col("tns") <= c2),
         ev.filter(col("tns") > c2)))
-      val sink = s.table("q64_stream_out")
-      val result = sink.collect().toIndexedSeq
-      val schemaOut = sink.schema
-      s.catalog.dropTempView("q64_stream_out")
-      // n_changes is strictly increasing per key, so the latest state is
-      // the arg-max row; struct max gives it without a second shuffle
-      s.createDataFrame(s.sparkContext.parallelize(result, 1), schemaOut)
         .groupBy("user_id")
         .agg(max(struct(col("n_changes"), col("last_tns"), col("alive"),
           col("value_fp"))).as("st"))
@@ -1538,8 +1356,7 @@ object StreamQueries {
     * the SAME cell algebra as q55 ([[RelationalQueries.chi2FromCells]])
     * over reference ⟗ streamed counts — the incremental monitor must
     * converge to the batch statistic bit-for-bit (shared oracle). */
-  def q60_stream_drift(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q60_stream_drift(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.KeyAlgebra.ldiv
     import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
     val ev = Tables.events(s, dir).select("ts", "event_type", "value")
@@ -1555,19 +1372,14 @@ object StreamQueries {
     val schema = StructType(Seq(StructField("ts", LongType),
       StructField("event_type", StringType), StructField("value", DoubleType)))
     withWatchDir("graft_q60_src") { watch =>
-      val n2s = binned(s.readStream.schema(schema).parquet(watch))
+      val n2s = binned(Engine.microBatchSession(s).readStream.schema(schema)
+          .parquet(watch))
         .groupBy("event_type", "bin").agg(count(lit(1)).as("n2"))
-      val q = n2s.writeStream.outputMode(OutputMode.Complete)
-        .format("memory").queryName("q60_stream_out").start()
-      feedDrops(q, watch, Seq(
-        newEv.filter(col("ts") <= c1),
-        newEv.filter(col("ts") > c1 && col("ts") <= c2),
-        newEv.filter(col("ts") > c2)))
-      val sink = s.table("q60_stream_out")
-      val n2rows = sink.collect().toIndexedSeq
-      val n2schema = sink.schema
-      s.catalog.dropTempView("q60_stream_out")
-      val n2 = s.createDataFrame(s.sparkContext.parallelize(n2rows, 1), n2schema)
+      val n2 = drain(s, "q60_stream_out", n2s, OutputMode.Complete,
+        fileDrops(watch,
+          newEv.filter(col("ts") <= c1),
+          newEv.filter(col("ts") > c1 && col("ts") <= c2),
+          newEv.filter(col("ts") > c2)))
       // cell set = keys of either half (q55's single groupBy over the
       // whole stream produces exactly this union)
       val cells = ref.join(n2, Seq("event_type", "bin"), "full_outer")
@@ -1593,8 +1405,7 @@ object StreamQueries {
     * counts. At 100 TB the profile side broadcasts (or bucket-joins)
     * exactly as in batch; per-micro-batch cost is the stream slice, not
     * the dim build. */
-  def q67_stream_static_join(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q67_stream_static_join(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("ts").as("tns"), col("user_id"),
@@ -1607,22 +1418,16 @@ object StreamQueries {
       StructField("event_id", LongType), StructField("tns", LongType),
       StructField("user_id", LongType), StructField("value", DoubleType)))
     withWatchDir("graft_q67_src") { watch =>
-      val enriched = s.readStream.schema(schema).parquet(watch)
+      val enriched = Engine.microBatchSession(s).readStream.schema(schema)
+        .parquet(watch)
         .join(profile, "user_id")
         .select(col("user_id"), col("event_id"), col("value"),
           col("profile_cnt"))
-      val q = enriched.writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName("q67_stream_out").start()
-      feedDrops(q, watch, Seq(
+      drain(s, "q67_stream_out", enriched, OutputMode.Append, fileDrops(watch,
         ev.filter(col("tns") <= splitTs)
           .select("event_id", "tns", "user_id", "value"),
         ev.filter(col("tns") > splitTs)
           .select("event_id", "tns", "user_id", "value")))
-      val sunk = s.table("q67_stream_out")
-      val rows = sunk.collect().toIndexedSeq
-      val sunkSchema = sunk.schema
-      s.catalog.dropTempView("q67_stream_out")
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), sunkSchema)
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_events"),
           first("profile_cnt").as("profile_cnt"),
@@ -1648,11 +1453,11 @@ object StreamQueries {
     * micro-batch boundaries can't change decisions because the
     * recurrence depends only on event-time order, which the harness
     * (and a watermark in production) delivers per key. */
-  def q74_stream_rate_limit(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q74_stream_rate_limit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
+      Engine.microBatchSession(s).sqlContext
     val cap = 2L
     val period = 14400L * 1000000000L
     val rows = Tables.events(s, dir)
@@ -1684,19 +1489,9 @@ object StreamQueries {
           decisions.iterator
       }
       .toDF("user_id", "event_id", "admitted")
-    val q = out.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("q74_stream_out").start()
-    try {
-      in.addData(rows.take(mid).toIndexedSeq)
-      q.processAllAvailable()
-      in.addData(rows.drop(mid).toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    val sink = s.table("q74_stream_out")
-    val result = sink.collect().toIndexedSeq
-    val schema = sink.schema
-    s.catalog.dropTempView("q74_stream_out")
-    s.createDataFrame(s.sparkContext.parallelize(result, 1), schema)
+    drain(s, "q74_stream_out", out, OutputMode.Append, Seq(
+      () => in.addData(rows.take(mid).toIndexedSeq),
+      () => in.addData(rows.drop(mid).toIndexedSeq)))
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
         sum("admitted").as("n_admitted"),
@@ -1742,10 +1537,10 @@ object StreamQueries {
     * At 100 TB this ledger IS the data-loss audit: watermark drops are
     * silent by design, and fed − sink − in-flight is how a pipeline
     * proves its completeness SLO. */
-  def q80_stream_late_ledger(s: SparkSession, dir: String): DataFrame =
-    withMicroBatchParts(s) {
+  def q80_stream_late_ledger(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
+      Engine.microBatchSession(s).sqlContext
     val rows = Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("value")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -1766,39 +1561,31 @@ object StreamQueries {
         sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
       .select(unix_timestamp(col("win.start")).as("window_start"),
         col("n"), col("sum_value"))
-    val q = agg.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("q80_stream_out").start()
     var fed = 0L
     var stateDropped = 0L
     var inFlight = 0L
-    try {
-      in.addData(even.toIndexedSeq :+ ((anchor, 0.0)))
-      q.processAllAvailable()
-      in.addData(odd.toIndexedSeq ++ fresh)
-      q.processAllAvailable()
-      in.addData(Seq(sentinel))
-      q.processAllAvailable()
-      q.recentProgress.foreach { p =>
-        val om = p.observedMetrics
-        if (om.containsKey("q80_obs")) fed += om.get("q80_obs").getLong(0)
-        p.stateOperators.foreach(so =>
-          stateDropped += so.numRowsDroppedByWatermark)
-      }
-      inFlight = q.recentProgress.reverse
-        .find(_.stateOperators.nonEmpty)
-        .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)
-    } finally q.stop()
+    val all = drain(s, "q80_stream_out", agg, OutputMode.Append, Seq(
+      () => in.addData(even.toIndexedSeq :+ ((anchor, 0.0))),
+      () => in.addData(odd.toIndexedSeq ++ fresh),
+      () => in.addData(Seq(sentinel))),
+      inspect = { q =>
+        q.recentProgress.foreach { p =>
+          val om = p.observedMetrics
+          if (om.containsKey("q80_obs")) fed += om.get("q80_obs").getLong(0)
+          p.stateOperators.foreach(so =>
+            stateDropped += so.numRowsDroppedByWatermark)
+        }
+        inFlight = q.recentProgress.reverse
+          .find(_.stateOperators.nonEmpty)
+          .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)
+      })
     val sentinelHour = sentinel._1 / 3600000000000L * 3600L
-    val all = s.table("q80_stream_out").collect().toIndexedSeq
-    val schema = s.table("q80_stream_out").schema
-    s.catalog.dropTempView("q80_stream_out")
-    val emitted = all.map(_.getLong(1)).sum
+    val emitted = all.collect().map(_.getLong(1)).sum
     val lateRows = fed - emitted - inFlight
-    val result = all.filter(_.getLong(0) < sentinelHour)
     val ledger = Seq((-4L, fed, 0.0), (-3L, stateDropped, 0.0),
       (-2L, lateRows, 0.0), (-1L, inFlight, 0.0))
       .toDF("window_start", "n", "sum_value")
-    s.createDataFrame(s.sparkContext.parallelize(result, 1), schema)
+    all.filter(col("window_start") < sentinelHour)
       .unionByName(ledger)
       .orderBy("window_start")
   }

@@ -7,24 +7,37 @@ import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 
 /** One engine posture: every session in the program is built by
-  * `Engine.session`, and that session carries `GraftExtensions`. */
+  * `Engine.session` (or cloned by `Engine.microBatchSession`), only
+  * `Engine` sets session conf, and an Engine session carries
+  * `GraftExtensions`. */
 class EngineSpec extends SparkSpec {
+
+  private val root = Paths.get("src/main/scala")
+
+  /** The src/main files containing `needle`, relative to `root`. */
+  private def sites(needle: String): Set[String] = {
+    assert(Files.isDirectory(root), s"sources not found at ${root.toAbsolutePath}")
+    val walk = Files.walk(root)
+    try walk.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && Files.readString(p).contains(needle))
+      .map(p => root.relativize(p).toString)
+      .toSet
+    finally walk.close()
+  }
 
   test("Engine.scala is the only session builder site in src/main") {
     // spelled in parts so this spec is not itself a match
     val needle = Seq("SparkSession", "builder").mkString(".")
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"sources not found at ${root.toAbsolutePath}")
-    val engine = root.resolve("graft/core/Engine.scala")
-    val walk = Files.walk(root)
-    val sites =
-      try walk.iterator.asScala
-        .filter(p => p.toString.endsWith(".scala") && p != engine)
-        .filter(p => Files.readString(p).contains(needle))
-        .toList
-      finally walk.close()
-    assert(sites.isEmpty, s"sessions built outside Engine: ${sites.mkString(", ")}")
-    assert(Files.readString(engine).contains(needle))
+    assert(sites(needle) == Set("graft/core/Engine.scala"))
+  }
+
+  test("only Engine.scala sets session conf or clones a session in src/main") {
+    // a query that needs another setting runs on its own session
+    // (Engine.microBatchSession) or passes a per-operation option
+    assert(sites("conf.set(") == Set("graft/core/Engine.scala"))
+    assert(sites("conf.unset(").isEmpty)
+    assert(sites("cloneSession") ==
+      Set("graft/core/Engine.scala", "graft/core/SqlShims.scala"))
   }
 
   test("an Engine session resolves graft_dot through spark.sql") {
