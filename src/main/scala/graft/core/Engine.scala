@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 
 /** The one engine posture. Bench, Verify, the service, the tools and the
   * test session all build their Spark session here, so the oracle checks
@@ -48,6 +48,26 @@ object Engine {
     spark
   }
 
+  /** Fill the cache of an already-persisted `df` with one action and
+    * return its exact row count. The action runs on the cache entry's
+    * own batch RDD and sums `CachedBatch.numRows`, so nothing is planned
+    * beyond the cached plan. `count()` would fill the same blocks, but
+    * under AQE it runs the fill as a `TableCacheQueryStage` and then a
+    * partial-count shuffle stage and a final stage: three jobs and an
+    * extra physical plan. The blocks land at the persisted storage level
+    * and the relation's size and row-count stats are set, as the AQE
+    * fill sets them.
+    *
+    * `df` may have no cache entry: it was never persisted, or a
+    * concurrent `unpersist` of a same-plan DataFrame (they share one
+    * entry) removed it after `persist`. Then `count()` runs, which is the
+    * right count either way. */
+  def materialize(df: DataFrame): Long =
+    GraftSqlShims.cachedBatches(df) match {
+      case Some(batches) => batches.map(_.numRows.toLong).fold(0L)(_ + _)
+      case None => df.count()
+    }
+
   /** The session a micro-batch harness runs its stream on: a clone of `s`
     * (its conf, `GraftExtensions` and execution listeners) with shuffle
     * partitions at 4, so the caller's conf is never touched and two
@@ -67,7 +87,7 @@ object Engine {
     * stream start anyway), and each leaves one idle streaming listener
     * bus behind: Spark never detaches a clone's bus from the shared one. */
   def microBatchSession(s: SparkSession): SparkSession = {
-    val ms = org.apache.spark.sql.GraftSqlShims.cloneSession(s)
+    val ms = GraftSqlShims.cloneSession(s)
     ms.conf.set("spark.sql.shuffle.partitions", "4")
     s.streams.listListeners().foreach(ms.streams.addListener)
     ms

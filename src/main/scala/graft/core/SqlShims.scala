@@ -29,6 +29,16 @@ object GraftSqlShims {
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].logicalPlan
 
+  /** The batch RDD of `df`'s CacheManager entry, if `df` is persisted:
+    * computing it fills the entry's blocks at its storage level and its
+    * size and row-count stats (private[sql] cache builder). */
+  def cachedBatches(df: DataFrame):
+      Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.columnar.CachedBatch]] = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      .map(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers)
+  }
+
   /** Idempotently add a planner strategy to an EXISTING session. */
   def addStrategy(spark: SparkSession,
       st: org.apache.spark.sql.execution.SparkStrategy): Unit = {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Engine
 import graft.dialect.{ExprCompiler, ExprParser, QueryParser}
 import graft.dialect.QueryParser.ParsedQuery
 import graft.operators.SequentialId
@@ -80,8 +81,23 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
     fragZip -= ((db, name))
     df.unpersist()
   }
-  private[engine] def fragSize(db: String, name: String): Long = synchronized {
-    fragSizes.getOrElse((db, name), 0L)
+  /** Rows of a fragment (0 if absent). A fragment registered or swapped
+    * in without a size (-1) is counted on first use by filling its cache,
+    * which its first query would fill anyway, and the count is recorded
+    * unless the fragment was replaced meanwhile. The fill runs outside
+    * the catalog lock. */
+  private[engine] def fragSize(db: String, name: String): Long = {
+    val (known, df) = synchronized {
+      (fragSizes.getOrElse((db, name), 0L), frags.get((db, name)))
+    }
+    if (known >= 0) known
+    else df.fold(0L) { d =>
+      val n = Engine.materialize(d)
+      synchronized {
+        if (frags.get((db, name)).exists(_ eq d)) fragSizes((db, name)) = n
+      }
+      n
+    }
   }
   /** The fragment's STORED representation — compressed fragments keep
     * zlib blobs here; [[getFrag]] returns the inflated view. */
@@ -95,7 +111,8 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
     * analogue of `file_import` (oph_io_server_query_engine.c:617-648):
     * ingest is whatever `spark.read` can produce, keyed by an `id_dim`
     * column. Not persisted eagerly; the first dialect query that touches
-    * it pulls it through the session cache. */
+    * it pulls it through the session cache, and the first size query
+    * ([[fragSize]]) counts it. */
   def registerFragment(db: String, name: String, df: DataFrame,
                        persist: Boolean = true): Unit = {
     val d = if (persist) df.persist(StorageLevel.MEMORY_AND_DISK) else df
@@ -259,7 +276,7 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
           schema("measure").dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]
         val df = (if (zip) deflateMeasure(built) else built)
           .persist(StorageLevel.MEMORY_AND_DISK)
-        df.count()
+        Engine.materialize(df)
         server.putFrag(db, nm, df, pendingRows.size.toLong, compressed = zip)
         openFrag = None
         pendingRows.clear()
@@ -557,12 +574,11 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
     }
 
     private def runSelect(q: ParsedQuery, binds: Seq[Any]): DataFrame = {
-      // persist + count: the guard's materialization IS the result the
-      // caller pages over (previously the guard executed the full plan
-      // once and every fetch executed it again). The reference stores the
+      // persist + materialize: the guard's fill IS the result the caller
+      // pages over, so the plan runs once. The reference stores the
       // result set eagerly too (oph_io_server_query.c select path).
       val r = buildSelect(q, binds).persist(StorageLevel.MEMORY_AND_DISK)
-      if (r.count() > maxResultRows) {
+      if (Engine.materialize(r) > maxResultRows) {
         r.unpersist()
         throw new IllegalArgumentException(
           s"result exceeds maxResultRows=$maxResultRows")
@@ -581,7 +597,7 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
           .isInstanceOf[org.apache.spark.sql.types.ArrayType]
       val df = (if (zip) deflateMeasure(built) else built)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val n = df.count() // materialize (the reference stores eagerly)
+      val n = Engine.materialize(df) // the reference stores eagerly
       server.putFrag(db, nm, df, n, compressed = zip)
     }
 
@@ -610,7 +626,7 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
       val zip = isCompressed(q)
       val stored = if (zip) deflateMeasure(reduced) else reduced
       val df = stored.persist(StorageLevel.MEMORY_AND_DISK)
-      server.putFrag(db, nm, df, df.count(), compressed = zip)
+      server.putFrag(db, nm, df, Engine.materialize(df), compressed = zip)
     }
 
     // -- compressed=yes (oph_query_engine_language.h:82): the stored
@@ -662,7 +678,7 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
       val built = base.withColumn("measure", measure)
       val df = (if (zip) deflateMeasure(built) else built)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      df.count()
+      Engine.materialize(df)
       server.putFrag(db, nm, df, nrows, compressed = zip)
     }
 

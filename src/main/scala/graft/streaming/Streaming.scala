@@ -30,7 +30,7 @@ object Streaming {
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val b = batch.persist()
-        b.count()
+        graft.core.Engine.materialize(b)
         val merged = acc match {
           case Some(prev) => prev.unionByName(b)
           case None => b

@@ -8,8 +8,9 @@ import graft.SparkSpec
 
 /** One engine posture: every session in the program is built by
   * `Engine.session` (or cloned by `Engine.microBatchSession`), only
-  * `Engine` sets session conf, and an Engine session carries
-  * `GraftExtensions`. */
+  * `Engine` sets session conf, an Engine session carries
+  * `GraftExtensions`, and the engine fills stored results through
+  * `Engine.materialize`. */
 class EngineSpec extends SparkSpec {
 
   private val root = Paths.get("src/main/scala")
@@ -38,6 +39,17 @@ class EngineSpec extends SparkSpec {
     assert(sites("conf.unset(").isEmpty)
     assert(sites("cloneSession") ==
       Set("graft/core/Engine.scala", "graft/core/SqlShims.scala"))
+  }
+
+  test("stored wire results fill through Engine.materialize, not a count()") {
+    // spelled in parts so this spec is not itself a match
+    val count = Seq(".count", "()").mkString
+    assert(sites(count).intersect(
+      Set("graft/engine/IoServer.scala", "graft/streaming/Streaming.scala")).isEmpty)
+    assert(sites(Seq("cachedColumn", "Buffers").mkString) ==
+      Set("graft/core/SqlShims.scala"))
+    assert(sites(Seq("lookupCached", "Data").mkString) ==
+      Set("graft/core/SqlShims.scala"))
   }
 
   test("an Engine session resolves graft_dot through spark.sql") {

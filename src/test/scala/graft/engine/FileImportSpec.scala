@@ -154,6 +154,25 @@ class FileImportSpec extends SparkSpec {
       Seq("name", "ret", "dl", "type"))
   }
 
+  test("a registered fragment of unknown size counts its rows in the catalog totals") {
+    val srv = new IoServer(spark)
+    val ses = srv.newSession()
+    ses.execute("operation=random_import;frag_name=k9;nrows=9;array_length=1")
+    import spark.implicits._
+    srv.registerFragment("default", "reg2",
+      Seq((1L, Seq(1.0)), (2L, Seq(2.0))).toDF("id_dim", "measure"))
+    val total = ses.execute(
+      "operation=select;field=id_dim|tot_table_size;from=@tot_table_size").get.head()
+    assert(total.getLong(1) == 11L)
+    val size = ses.execute(
+      "operation=function;function_name=oph_size;function_args=reg2").get
+    assert(size.head().getLong(0) == 2L)
+    val tbls = ses.execute(
+      "operation=select;field=id_dim|db_name|frag_name|frag_size;" +
+        "from=@info_system_table").get.collect()
+    assert(tbls.exists(r => r.getString(2) == "reg2" && r.getLong(3) == 2L))
+  }
+
   test("compat mode enforces the reference's restrictions") {
     val srv = new IoServer(spark, compatStrict = true)
     val ses = srv.newSession()
