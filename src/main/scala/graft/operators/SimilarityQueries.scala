@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Engine, SessionMemo, Tables}
+import graft.functions.KeyAlgebra.ldiv
+import VectorIndex._
 
 /** Approximate-nearest-neighbor search over the embedding column.
   *
@@ -15,6 +17,10 @@ import graft.core.Tables
   * each query to its nearest centroid's bucket, and only that bucket is
   * scanned (nprobe=1). At 100 TB the buckets are the partition keys, so
   * a probe touches 1/k of the data.
+  *
+  * Every query here is a composition of [[VectorIndex]]: train the
+  * cells, probe, gather the probed cells, rank on the bounded heap,
+  * persist the index — each defined once there.
   *
   * On the `vec_id % 50` that recurs through this family: it is the
   * WORKLOAD definition ("queries = 2% of the corpus"), not an internal
@@ -35,135 +41,60 @@ object SimilarityQueries {
     Tables.embeddings(s, dir)
       .withColumn("a", col("embedding").cast("array<double>"))
 
-  /** Left-fold dot product via the native codegen expression
-    * ([[graft.plans.DotProduct]]) — identical evaluation order to
-    * DuckDB's list_reduce, so results are bit-exact across engines. */
-  private def dot(x: Column, y: Column): Column =
-    graft.plans.DotProduct(x, y)
-
-  private def norm(x: Column): Column = sqrt(dot(x, x))
+  /** [[emb]] with its norm `nrm`; zero-norm vectors have no cosine. */
+  private def normed(s: SparkSession, dir: String): DataFrame =
+    emb(s, dir).withColumn("nrm", norm(col("a"))).filter(col("nrm") > 0.0)
 
   /** s01 — brute-force cosine top-5 for query vectors (vec_id % 50 = 0),
     * rank by (sim desc, vec_id) with self excluded. */
   def s01_ann_bruteforce(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val base = emb(s, dir).withColumn("nrm", norm(col("a")))
-      .filter(col("nrm") > 0.0) // zero-norm vectors have no cosine
-    val qs = base.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("query_id"), col("a").as("qa"), col("nrm").as("qn"))
+    val base = normed(s, dir)
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("vec_id"))
-    base.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim", dot(col("qa"), col("a")) / (col("qn") * col("nrm")))
+    val ranked = pairs(base, asQueries(base, 50, col("nrm").as("qn")))
+      .withColumn("sim", cosine)
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("sim"))
-      .orderBy("query_id", "rank")
+    neighbors(ranked, "rank", col("sim"))
   }
 
   /** s02 — IVF (nprobe=1): centroid per label via exact fixed-point mean,
     * query → nearest centroid (L2², lowest label wins ties) → top-3
     * within that bucket by (L2² asc, vec_id). */
   def s02_ann_ivf(s: SparkSession, dir: String): DataFrame =
-    ivfTopk(s, dir, 50L)
-
-  /** s02's IVF ranking with a parameterized query-sample modulus —
-    * s02 pins the reference modulus 50; s13 passes its size-derived
-    * one so the eval's query sample stays constant-size at any scale. */
-  private def ivfTopk(s: SparkSession, dir: String,
-      modulus: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = emb(s, dir)
-      .withColumn("scaled", transform(col("a"), x => floor(x * 1e9).cast("long")))
-    val centroids = base.groupBy("label")
-      .agg(ArrayAggregates.ewSumLong(col("scaled")).as("ssum"),
-        count(lit(1)).as("cnt"))
-      .select(col("label").as("c_label"),
-        transform(col("ssum"),
-          v => v.cast("double") / col("cnt").cast("double") / 1e9).as("centroid"))
-    // r19: native codegen kernel (bit-exact vs the interpreted
-    // zip_with/aggregate fold it replaces — same per-element arithmetic,
-    // same left-fold order; see [[graft.plans.L2Distance]] and the s18
-    // family that already runs on it)
-    def l2(x: Column, y: Column): Column = graft.plans.L2Distance(x, y)
-    val qs = base.filter(col("vec_id") % modulus === 0)
-      .select(col("vec_id").as("query_id"), col("a").as("qa"))
-    val wAssign = Window.partitionBy("query_id")
-      .orderBy(col("cdist"), col("c_label"))
-    val assigned = qs.crossJoin(broadcast(centroids))
-      .withColumn("cdist", l2(col("qa"), col("centroid")))
-      .withColumn("crk", row_number().over(wAssign))
-      .filter(col("crk") === 1)
-      .select(col("query_id"), col("qa"), col("c_label").as("probe_label"))
-    val wTop = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    base.join(broadcast(assigned), col("label") === col("probe_label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("dist", l2(col("qa"), col("a")))
-      .withColumn("rank", row_number().over(wTop).cast("long"))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("probe_label"), col("rank"),
-        col("vec_id").as("neighbor_id"), col("dist"))
+    ivfTopk(s, dir, 50L, 1)
+      // the gathered row's own label is the probed cell (join key)
+      .select(col("query_id"), col("label").as("probe_label"),
+        col("rank"), col("vec_id").as("neighbor_id"), col("dist"))
       .orderBy("query_id", "rank")
+
+  /** In-query IVF top-3 over the label cells — s02/s03 pin the reference
+    * modulus 50; s13 passes its size-derived one so the eval's query
+    * sample stays constant-size at any scale. */
+  private def ivfTopk(s: SparkSession, dir: String, modulus: Long,
+      nprobe: Int): DataFrame = {
+    val base = emb(s, dir)
+    val probes = probe(asQueries(base, modulus), cells(base, "label"), nprobe)
+    nearest(gather(base, probes, "label")
+      .withColumn("dist", l2(col("qa"), col("a"))), "dist", 3)
   }
 
   /** s03 — multi-probe IVF (nprobe=3): probing the 3 nearest centroid
     * buckets recovers most of the recall single-probe IVF loses at the
     * bucket boundary, still touching only nprobe/k of the data. Top-3
     * across the union of probed buckets. */
-  def s03_ann_ivf_multiprobe(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = emb(s, dir)
-      .withColumn("scaled", transform(col("a"), x => floor(x * 1e9).cast("long")))
-    val centroids = base.groupBy("label")
-      .agg(ArrayAggregates.ewSumLong(col("scaled")).as("ssum"),
-        count(lit(1)).as("cnt"))
-      .select(col("label").as("c_label"),
-        transform(col("ssum"),
-          v => v.cast("double") / col("cnt").cast("double") / 1e9).as("centroid"))
-    // r19: native codegen kernel (bit-exact vs the interpreted
-    // zip_with/aggregate fold it replaces — same per-element arithmetic,
-    // same left-fold order; see [[graft.plans.L2Distance]] and the s18
-    // family that already runs on it)
-    def l2(x: Column, y: Column): Column = graft.plans.L2Distance(x, y)
-    val qs = base.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("query_id"), col("a").as("qa"))
-    val wAssign = Window.partitionBy("query_id")
-      .orderBy(col("cdist"), col("c_label"))
-    val probed = qs.crossJoin(broadcast(centroids))
-      .withColumn("cdist", l2(col("qa"), col("centroid")))
-      .withColumn("crk", row_number().over(wAssign))
-      .filter(col("crk") <= 3)
-      .select(col("query_id"), col("qa"), col("c_label").as("probe_label"))
-    val wTop = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    base.join(broadcast(probed), col("label") === col("probe_label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("dist", l2(col("qa"), col("a")))
-      .withColumn("rank", row_number().over(wTop).cast("long"))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("dist"))
-      .orderBy("query_id", "rank")
-  }
-
-  /** s04 — int8-quantized ANN: per-vector symmetric quantization
-    * (scale = max|x|/127, q = trunc(x/scale) ∈ [-127,127] — an 8×
-    * smaller vector store), cosine top-5 computed on the DEQUANTIZED
-    * vectors for both sides. Rank/tie rules as s01; zero-norm
-    * dequantized vectors (all components under one quantum) drop out of
-    * both sides. At 100 TB the int8 store is what actually ships to the
-    * executors; the scan shape is s01's broadcast-query stream. */
-  /** Plan memo: one quantized store per (session, dir) — s04 and s05
-    * share it (the same discipline as DedupQueries' collapse memo). */
+  def s03_ann_ivf_multiprobe(s: SparkSession, dir: String): DataFrame =
+    neighbors(ivfTopk(s, dir, 50L, 3), "rank", col("dist"))
 
   /** The shared int8-quantized vector store: original doubles + norms,
-    * the dequantized int8 view + its norms, cached and eagerly
-    * materialized ONCE — CollapseProject would otherwise inline the
-    * 64-element quantize transform into the dot product and re-run it
-    * per candidate PAIR instead of per vector. */
+    * the dequantized int8 view + its norms, persisted and eagerly
+    * materialized ONCE per (session, dir) — s04 and s05 share it.
+    * CollapseProject would otherwise inline the 64-element quantize
+    * transform into the dot product and re-run it per candidate PAIR
+    * instead of per vector. */
   private def quantizedStore(s: SparkSession, dir: String): DataFrame =
-    graft.core.SessionMemo.memoize(s, "ann:quantizedStore:" + dir) {
+    SessionMemo.memoize(s, "ann:quantizedStore:" + dir) {
       val df = emb(s, dir)
         .withColumn("nrm", norm(col("a")))
         .withColumn("amax", array_max(transform(col("a"), x => abs(x))))
@@ -174,28 +105,26 @@ object SimilarityQueries {
           x => (x / col("scale")).cast("long").cast("double") * col("scale")))
         .withColumn("dnrm", norm(col("da")))
         .select("vec_id", "a", "nrm", "da", "dnrm")
-        .cache()
-      df.count()
+        .persist()
+      Engine.materialize(df)
       df
     }
 
+  /** The quantized view of [[quantizedStore]] as (vec_id, a, nrm). */
+  private def dequantized(store: DataFrame): DataFrame =
+    store.select(col("vec_id"), col("da").as("a"), col("dnrm").as("nrm"))
+
+  /** s04 — int8-quantized ANN: per-vector symmetric quantization
+    * (scale = max|x|/127, q = trunc(x/scale) ∈ [-127,127] — an 8×
+    * smaller vector store), cosine top-5 computed on the DEQUANTIZED
+    * vectors for both sides. Rank/tie rules as s01; zero-norm
+    * dequantized vectors (all components under one quantum) drop out of
+    * both sides. At 100 TB the int8 store is what actually ships to the
+    * executors; the scan shape is s01's broadcast-query stream. */
   def s04_ann_quantized(s: SparkSession, dir: String): DataFrame = {
-    val base = quantizedStore(s, dir)
-      .filter(col("dnrm") > 0.0)
-      .select("vec_id", "da", "dnrm")
-    val qs = base.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("query_id"), col("da").as("qa"),
-        col("dnrm").as("qn"))
-    val sims = base.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim", dot(col("qa"), col("da")) / (col("qn") * col("dnrm")))
-      .select("query_id", "vec_id", "sim")
-    // heap-based top-k (TopKPerKey) — row_number-over-window semantics
-    // without the per-key sort
-    graft.plans.TopKPerKey(sims, Seq("query_id"), "sim", "vec_id", 5)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("sim"))
-      .orderBy("query_id", "rank")
+    val base = dequantized(quantizedStore(s, dir).filter(col("dnrm") > 0.0))
+    neighbors(topSim(base, asQueries(base, 50, col("nrm").as("qn")), 5),
+      "rank", col("sim"))
   }
 
   /** s05 — two-stage retrieval cascade: the int8-quantized metric
@@ -208,30 +137,15 @@ object SimilarityQueries {
   def s05_ann_rerank(s: SparkSession, dir: String): DataFrame = {
     val base = quantizedStore(s, dir)
       .filter(col("dnrm") > 0.0 && col("nrm") > 0.0)
-    val qs = base.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("query_id"),
-        col("da").as("qda"), col("dnrm").as("qdn"),
-        col("a").as("qa"), col("nrm").as("qn"))
-    // stage 1: quantized recall — keeps only (query_id, vec_id); the
-    // heap operator replaces the window sort (same rank semantics)
-    val simsq = base.select("vec_id", "da", "dnrm")
-      .crossJoin(broadcast(qs.select("query_id", "qda", "qdn")))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("simq", dot(col("qda"), col("da")) / (col("qdn") * col("dnrm")))
-      .select("query_id", "vec_id", "simq")
-    val cand = graft.plans.TopKPerKey(simsq, Seq("query_id"), "simq", "vec_id", 20)
-      .select("query_id", "vec_id")
-    // stage 2: exact rerank over the gathered candidates
-    val rerank = cand
-      .join(base.select(col("vec_id"), col("a"), col("nrm")), "vec_id")
-      .join(broadcast(qs.select("query_id", "qa", "qn")), "query_id")
-      .withColumn("sim", dot(col("qa"), col("a")) / (col("qn") * col("nrm")))
-      .select("query_id", "vec_id", "sim")
-    graft.plans.TopKPerKey(rerank, Seq("query_id"), "sim", "vec_id", 5)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("sim"))
-      .orderBy("query_id", "rank")
+    val q = dequantized(base)
+    cascade(candidates(q, asQueries(q, 50, col("nrm").as("qn")), 20), base)
   }
+
+  /** The exact stage shared by s05/s11: full-vector cosine over the
+    * candidates, top-5 as the s01 output. */
+  private def cascade(cand: DataFrame, base: DataFrame): DataFrame =
+    neighbors(rerank(cand, base.select("vec_id", "a", "nrm"),
+      asQueries(base, 50, col("nrm").as("qn")), cosine, 5), "rank", col("sim"))
 
   /** s06 — s01's brute-force top-5, planned through the custom
     * [[graft.plans.TopKPerKey]] whole-operator extension (LogicalPlan +
@@ -240,19 +154,9 @@ object SimilarityQueries {
     * memory instead of a full per-key sort. Same rank/tie semantics as
     * s01, so it shares s01's DuckDB oracle shape. */
   def s06_ann_topk_operator(s: SparkSession, dir: String): DataFrame = {
-    val base = emb(s, dir).withColumn("nrm", norm(col("a")))
-      .filter(col("nrm") > 0.0) // zero-norm guard, matching s01/s04/s05
-    val qs = base.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("query_id"), col("a").as("qa"),
-        col("nrm").as("qn"))
-    val sims = base.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim", dot(col("qa"), col("a")) / (col("qn") * col("nrm")))
-      .select("query_id", "vec_id", "sim")
-    graft.plans.TopKPerKey(sims, Seq("query_id"), "sim", "vec_id", 5)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("sim"))
-      .orderBy("query_id", "rank")
+    val base = normed(s, dir)
+    neighbors(topSim(base, asQueries(base, 50, col("nrm").as("qn")), 5),
+      "rank", col("sim"))
   }
 
   /** s10 — FILTERED vector search (hybrid search): top-5 cosine
@@ -269,20 +173,9 @@ object SimilarityQueries {
     * the allowed subset, which is what the oracle states. Queries come
     * from the FULL set — a query need not satisfy its own filter. */
   def s10_ann_filtered(s: SparkSession, dir: String): DataFrame = {
-    val base = emb(s, dir).withColumn("nrm", norm(col("a")))
-      .filter(col("nrm") > 0.0)
-    val qs = base.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("query_id"), col("a").as("qa"),
-        col("nrm").as("qn"))
-    val allowed = base.filter(col("label").between(2, 5))
-    val sims = allowed.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim", dot(col("qa"), col("a")) / (col("qn") * col("nrm")))
-      .select("query_id", "vec_id", "sim")
-    graft.plans.TopKPerKey(sims, Seq("query_id"), "sim", "vec_id", 5)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("sim"))
-      .orderBy("query_id", "rank")
+    val base = normed(s, dir)
+    neighbors(topSim(base.filter(col("label").between(2, 5)),
+      asQueries(base, 50, col("nrm").as("qn")), 5), "rank", col("sim"))
   }
 
   /** s07 — exact cosine RANGE search (every neighbor with sim ≥ θ, not
@@ -312,19 +205,14 @@ object SimilarityQueries {
     val blockNorms = (j: Column) =>
       sqrt(aggregate(slice(col("a"), j * 8 + 1, lit(8)), lit(0.0),
         (acc, x) => acc + x * x))
-    val base = emb(s, dir).withColumn("nrm", norm(col("a")))
-      .filter(col("nrm") > 0.0)
+    val base = normed(s, dir)
       .withColumn("bn", transform(sequence(lit(0), lit(7)), blockNorms))
-    val qs = base.filter(col("vec_id") % m === 0)
-      .select(col("vec_id").as("query_id"), col("a").as("qa"),
-        col("nrm").as("qn"), col("bn").as("qbn"))
-    base.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("query_id"))
+    pairs(base, asQueries(base, m, col("nrm").as("qn"), col("bn").as("qbn")))
       .withColumn("bound",
         aggregate(zip_with(col("qbn"), col("bn"), (p, q) => p * q),
           lit(0.0), _ + _) / (col("qn") * col("nrm")))
       .filter(col("bound") >= theta - 1e-9) // the 8-mult screen
-      .withColumn("sim", dot(col("qa"), col("a")) / (col("qn") * col("nrm")))
+      .withColumn("sim", cosine)
       .filter(col("sim") >= theta)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("sim"))
       .orderBy("query_id", "neighbor_id")
@@ -349,28 +237,9 @@ object SimilarityQueries {
       .withColumn("nrm", norm(col("a")))
       .withColumn("pnrm", norm(col("p")))
       .filter(col("nrm") > 0.0 && col("pnrm") > 0.0)
-    val qs = base.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("query_id"),
-        col("p").as("qp"), col("pnrm").as("qpn"),
-        col("a").as("qa"), col("nrm").as("qn"))
     // stage 1: 16-dim prefix cosine — 16 multiplies/candidate
-    val simsp = base.select("vec_id", "p", "pnrm")
-      .crossJoin(broadcast(qs.select("query_id", "qp", "qpn")))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("simp", dot(col("qp"), col("p")) / (col("qpn") * col("pnrm")))
-      .select("query_id", "vec_id", "simp")
-    val cand = graft.plans.TopKPerKey(simsp, Seq("query_id"), "simp", "vec_id", 20)
-      .select("query_id", "vec_id")
-    // stage 2: full-dim exact rerank over the gathered candidates
-    val rerank = cand
-      .join(base.select(col("vec_id"), col("a"), col("nrm")), "vec_id")
-      .join(broadcast(qs.select("query_id", "qa", "qn")), "query_id")
-      .withColumn("sim", dot(col("qa"), col("a")) / (col("qn") * col("nrm")))
-      .select("query_id", "vec_id", "sim")
-    graft.plans.TopKPerKey(rerank, Seq("query_id"), "sim", "vec_id", 5)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("sim"))
-      .orderBy("query_id", "rank")
+    val pre = base.select(col("vec_id"), col("p").as("a"), col("pnrm").as("nrm"))
+    cascade(candidates(pre, asQueries(pre, 50, col("nrm").as("qn")), 20), base)
   }
 
   /** s08 — product quantization (PQ) with asymmetric distance (Jégou
@@ -391,35 +260,39 @@ object SimilarityQueries {
     * index is 8 bytes/vector, and the ranking runs through the bounded
     * [[graft.plans.TopKPerKey]] heap operator. */
   def s08_ann_pq(s: SparkSession, dir: String): DataFrame = {
-    val (m8, k16, d8) = (8, 16, 8)
     val base = emb(s, dir).select("vec_id", "a")
-    val cb: Seq[Seq[Double]] = base.filter(col("vec_id") % 31 === 1)
-      .orderBy("vec_id").limit(k16).collect()
-      .map(_.getSeq[Double](1).toSeq).toSeq
-    require(cb.length == k16, s"codebook needs $k16 seeds, got ${cb.length}")
     // native PQ kernels ([[graft.plans.PQKernels]]): same arithmetic as
     // the HOF formulation (PQKernelSpec pins it), but three flat loops
     // instead of a ~4000-node expression tree — plan+codegen time was
     // the dominant cost of this query at bench scale
-    val cbFlat: Seq[Double] = cb.flatten
-    val coded = base
-      .withColumn("codes", graft.plans.PQEncode(col("a"), cbFlat))
-      .select("vec_id", "codes")
-    val qs = base.filter(col("vec_id") % 50 === 0)
-      .withColumn("qlut", graft.plans.PQLut(col("a"), cbFlat))
-      .select(col("vec_id").as("query_id"), col("qlut"))
-    val sims = coded.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc", graft.plans.PQAdc(col("qlut"), col("codes")))
-      // negate for the max-heap operator; +0.0 normalizes -0.0 so exact
-      // zero distances rank identically in both engines
-      .withColumn("nadc", -col("adc") + lit(0.0))
-      .select("query_id", "vec_id", "nadc")
-    graft.plans.TopKPerKey(sims, Seq("query_id"), "nadc", "vec_id", 5)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        floor(-col("nadc") * 1e6).cast("long").as("adc_fp"))
-      .orderBy("query_id", "rank")
+    val cb = seeds(base, "a", 1, 16).flatten
+    val coded = base.withColumn("codes", graft.plans.PQEncode(col("a"), cb))
+    val qs = asQueries(base, 50, graft.plans.PQLut(col("a"), cb).as("qlut"))
+    adcTop5(pairs(coded.select("vec_id", "codes"), qs.drop("qa")))
   }
+
+  /** ADC top-5 by (adc asc, vec_id) over PQ candidates — s08/s09. */
+  private def adcTop5(cand: DataFrame): DataFrame =
+    neighbors(nearest(cand.withColumn("adc",
+        graft.plans.PQAdc(col("qlut"), col("codes"))), "adc", 5),
+      "rank", fp(col("adc"), 1e6).as("adc_fp"))
+
+  /** Residual PQ codes against the label cells `cs` (s09, and s19's
+    * store): each vector's residual to its own cell's centroid, encoded
+    * with the codebook of the 16 seed residuals. Returns the coded rows
+    * (`r`, `codes`) and the flat codebook. */
+  private def pqCode(base: DataFrame, cs: Cells): (DataFrame, Seq[Double]) = {
+    val resid = base.withColumn("r", residual(col("a"), centroid(cs, col("label"))))
+    val cb = seeds(resid, "r", 1, 16).flatten
+    (resid.withColumn("codes", graft.plans.PQEncode(col("r"), cb)), cb)
+  }
+
+  /** nprobe=2 probes carrying each probed cell's query-residual LUT
+    * (`qlut`) — s09, s19 and s25 probe the IDENTICAL cells by
+    * construction. */
+  private def pqProbe(qs: DataFrame, cs: Cells, cb: Seq[Double]): DataFrame =
+    probe(qs, cs, 2).withColumn("qlut",
+      graft.plans.PQLut(residual(col("qa"), col("cent")), cb))
 
   /** s09 — IVF-PQ, the composition production ANN engines (FAISS
     * IndexIVFPQ) run at billion-vector scale: s02's coarse cells bound
@@ -441,55 +314,11 @@ object SimilarityQueries {
     * is 4 KB, and the scan cost per query is nprobe · |cell| · 8
     * lookups — the product of both compressions. */
   def s09_ann_ivf_pq(s: SparkSession, dir: String): DataFrame = {
-    val (m8, k16, d8) = (8, 16, 8)
     val base = emb(s, dir)
-      .withColumn("scaled", transform(col("a"), x => floor(x * 1e9).cast("long")))
-    val centroids = base.groupBy("label")
-      .agg(ArrayAggregates.ewSumLong(col("scaled")).as("ssum"),
-        count(lit(1)).as("cnt"))
-      .select(col("label").as("c_label"),
-        transform(col("ssum"),
-          v => v.cast("double") / col("cnt").cast("double") / 1e9).as("centroid"))
-    // r19: native codegen kernel (bit-exact vs the interpreted
-    // zip_with/aggregate fold it replaces — same per-element arithmetic,
-    // same left-fold order; see [[graft.plans.L2Distance]] and the s18
-    // family that already runs on it)
-    def l2(x: Column, y: Column): Column = graft.plans.L2Distance(x, y)
-    // residual vs the vector's own cell centroid
-    val resid = base.join(broadcast(centroids), col("label") === col("c_label"))
-      .select(col("vec_id"), col("label"),
-        zip_with(col("a"), col("centroid"), _ - _).as("r"))
-    // deterministic residual codebook: the 16 seed vectors' residuals
-    val cb: Seq[Seq[Double]] = resid.filter(col("vec_id") % 31 === 1)
-      .orderBy("vec_id").limit(k16).collect()
-      .map(_.getSeq[Double](2).toSeq).toSeq
-    require(cb.length == k16, s"codebook needs $k16 seeds, got ${cb.length}")
-    // native PQ kernels — same arithmetic as the HOF build (PQKernelSpec)
-    val cbFlat: Seq[Double] = cb.flatten
-    val coded = resid
-      .withColumn("codes", graft.plans.PQEncode(col("r"), cbFlat))
-      .select(col("vec_id"), col("label"), col("codes"))
-    // nprobe=2 cells per query, LUT from the query's residual IN THAT CELL
-    val qs = base.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("query_id"), col("a").as("qa"))
-    val wAssign = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cdist"), col("c_label"))
-    val probes = qs.crossJoin(broadcast(centroids))
-      .withColumn("cdist", l2(col("qa"), col("centroid")))
-      .withColumn("crk", row_number().over(wAssign))
-      .filter(col("crk") <= 2)
-      .withColumn("qr", zip_with(col("qa"), col("centroid"), _ - _))
-      .withColumn("qlut", graft.plans.PQLut(col("qr"), cbFlat))
-      .select(col("query_id"), col("c_label").as("probe_label"), col("qlut"))
-    val sims = coded.join(broadcast(probes), col("label") === col("probe_label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc", graft.plans.PQAdc(col("qlut"), col("codes")))
-      .withColumn("nadc", -col("adc") + lit(0.0))
-      .select("query_id", "vec_id", "nadc")
-    graft.plans.TopKPerKey(sims, Seq("query_id"), "nadc", "vec_id", 5)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        floor(-col("nadc") * 1e6).cast("long").as("adc_fp"))
-      .orderBy("query_id", "rank")
+    val cs = cells(base, "label")
+    val (coded, cb) = pqCode(base, cs)
+    adcTop5(gather(coded.select("vec_id", "label", "codes"),
+      pqProbe(asQueries(base, 50), cs, cb), "label"))
   }
 
   /** s12 — k-NN self-join: EVERY vector's top-3 in-cell neighbors by
@@ -521,45 +350,38 @@ object SimilarityQueries {
 
   def s12_knn_join(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val base = emb(s, dir).withColumn("nrm", norm(col("a")))
-      .filter(col("nrm") > 0.0)
-      .select("vec_id", "label", "a", "nrm")
-      .cache()
-    base.count() // eager fill: the self-join would race the cache
+    val base = normed(s, dir).select("vec_id", "label", "a", "nrm").persist()
+    Engine.materialize(base) // eager fill: the self-join would race the cache
     // per-label population → sub-cell count m (tiny: one row per label)
     val sizes = base.groupBy("label").agg(count(lit(1)).as("sz"))
       .withColumn("m", expr(s"(sz + ${SubCellCap - 1}) div $SubCellCap"))
     // deterministic sub-centroids for oversized labels only
     val w = Window.partitionBy("label").orderBy("vec_id")
-    val seeds = base.join(broadcast(sizes.filter(col("m") > 1)), "label")
+    val subSeeds = base.join(broadcast(sizes.filter(col("m") > 1)), "label")
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= col("m"))
       .select(col("label").as("s_label"),
         (col("rn") - 1).cast("long").as("sub_idx"), col("a").as("sv"))
     // assignment: squared-distance argmin over the label's seeds
-    // (left-fold double, sub_idx tie-break); unsplit labels → sub 0
-    val subAsg = base.join(broadcast(seeds), col("label") === col("s_label"))
-      .withColumn("dist2", aggregate(
-        zip_with(col("a"), col("sv"), (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x))
+    // (sub_idx tie-break); unsplit labels → sub 0
+    val subAsg = base.join(broadcast(subSeeds), col("label") === col("s_label"))
+      .withColumn("dist2", l2(col("a"), col("sv")))
       .groupBy("vec_id")
       .agg(min(struct(col("dist2"), col("sub_idx"))).as("ms"))
       .select(col("vec_id"), col("ms.sub_idx").as("sub"))
     // materialize the assigned cells once: the self-join references the
     // subtree twice and would re-run the seed window + assignment on
     // both sides (the d19 localCheckpoint-barrier lesson)
-    val cells = base.join(subAsg, Seq("vec_id"), "left")
+    val sub = base.join(subAsg, Seq("vec_id"), "left")
       .withColumn("sub", coalesce(col("sub"), lit(0L)))
       .localCheckpoint()
-    val pairs = cells.as("x").join(cells.as("y"),
+    val edges = sub.as("x").join(sub.as("y"),
         col("x.label") === col("y.label") && col("x.sub") === col("y.sub") &&
           col("x.vec_id") =!= col("y.vec_id"))
-      .select(col("x.vec_id").as("vec_id"),
-        col("y.vec_id").as("nbr"),
-        floor(dot(col("x.a"), col("y.a")) /
-          (col("x.nrm") * col("y.nrm")) * lit(1e9)).cast("long")
+      .select(col("x.vec_id").as("vec_id"), col("y.vec_id").as("nbr"),
+        fp(dot(col("x.a"), col("y.a")) / (col("x.nrm") * col("y.nrm")), 1e9)
           .as("cos_fp"))
-    graft.plans.TopKPerKey(pairs, Seq("vec_id"), "cos_fp", "nbr", 3)
+    best(edges, "cos_fp", 3, Seq("vec_id"), "nbr")
       .select(col("vec_id"), col("rank"), col("nbr").as("neighbor_id"),
         col("cos_fp"))
       .orderBy("vec_id", "rank")
@@ -587,15 +409,24 @@ object SimilarityQueries {
         col("x.u") === col("y.v") && col("x.v") === col("y.u") &&
           col("x.u") < col("x.v"))
       .select(col("x.u").as("u"), col("x.v").as("v"))
-    val lbl = graft.operators.GraphComponents.labels(mutual)
     val lab = Tables.embeddings(s, dir).select("vec_id")
-      .join(lbl, col("vec_id") === col("node"), "left")
+      .join(GraphComponents.labels(mutual), col("vec_id") === col("node"), "left")
       .select(col("vec_id"), coalesce(col("comp"), col("vec_id")).as("cluster"))
     lab.join(lab.groupBy("cluster").agg(count(lit(1)).as("n_members")),
         "cluster")
       .select("vec_id", "cluster", "n_members")
       .orderBy("vec_id")
   }
+
+  /** Exact L2² top-3 per query, the recall ground truth of s13/s17:
+    * one brute-force pass over the bounded query sample. */
+  private def truth(base: DataFrame, qs: DataFrame): DataFrame =
+    nearest(pairs(base, qs).withColumn("d2", l2(col("qa"), col("a"))), "d2", 3)
+      .select(col("query_id").as("eq"), col("vec_id").as("eid"))
+
+  /** The size-derived recall-eval query modulus max(50, n/100). */
+  private def evalModulus(base: DataFrame): Long =
+    math.max(50L, base.count() / 100L)
 
   /** s13 — ANN recall@k evaluation: the tuning loop every approximate
     * index ships with — exact L2 top-3 ground truth (one brute-force
@@ -615,27 +446,12 @@ object SimilarityQueries {
     * |queries| rows — the whole eval is one scan at 100 TB. The oracle
     * replays the modulus from count(*) like every AutoScale knob. */
   def s13_ann_recall(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.KeyAlgebra.ldiv
     val base = emb(s, dir)
-    val modulus = math.max(50L, base.count() / 100L)
-    // r19: native codegen kernel (bit-exact vs the interpreted
-    // zip_with/aggregate fold it replaces — same per-element arithmetic,
-    // same left-fold order; see [[graft.plans.L2Distance]] and the s18
-    // family that already runs on it)
-    def l2(x: Column, y: Column): Column = graft.plans.L2Distance(x, y)
-    val qs = base.filter(col("vec_id") % modulus === 0)
-      .select(col("vec_id").as("query_id"), col("a").as("qa"))
-    val w = Window.partitionBy("query_id").orderBy(col("d2"), col("vec_id"))
-    val exact = base.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("d2", l2(col("qa"), col("a")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
-      .select(col("query_id").as("eq"), col("vec_id").as("eid"))
-    val approx = ivfTopk(s, dir, modulus).select("query_id", "neighbor_id")
-    val perQuery = approx.join(exact,
-        col("query_id") === col("eq") && col("neighbor_id") === col("eid"),
+    val modulus = evalModulus(base)
+    val qs = asQueries(base, modulus)
+    val perQuery = ivfTopk(s, dir, modulus, 1)
+      .join(truth(base, qs),
+        col("query_id") === col("eq") && col("vec_id") === col("eid"),
         "left_semi")
       .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
     val all = qs.select("query_id")
@@ -675,35 +491,21 @@ object SimilarityQueries {
     * token-bag columns the same plan holds; only stage 2 widens. */
   def s14_maxsim_multivector(s: SparkSession, dir: String): DataFrame = {
     val T = 4
-    def sub(c: Column, t: Int): Column = slice(c, t * 16 + 1, 16)
-    def prep(df: DataFrame): DataFrame = {
-      val withSubs = (0 until T).foldLeft(df) { (d, t) =>
-        d.withColumn(s"t$t", sub(col("a"), t))
+    // every token vector must have a cosine: all sub-norms positive
+    val docs = (0 until T).foldLeft(emb(s, dir)) { (d, t) =>
+        d.withColumn(s"t$t", slice(col("a"), t * 16 + 1, 16))
           .withColumn(s"n$t", norm(col(s"t$t")))
       }
-      // every token vector must have a cosine: all sub-norms positive
-      withSubs.filter((0 until T).map(t => col(s"n$t") > 0.0).reduce(_ && _))
-    }
-    val docs = prep(emb(s, dir)).withColumn("nrm", norm(col("a")))
-    val qs = prep(emb(s, dir).filter(col("vec_id") % 50 === 0))
-      .withColumn("qn", norm(col("a")))
-      .select(col("vec_id").as("query_id") +: col("a").as("qa") +:
-        col("qn") +:
-        (0 until T).flatMap(t =>
-          Seq(col(s"t$t").as(s"qt$t"), col(s"n$t").as(s"qn$t"))): _*)
+      .filter((0 until T).map(t => col(s"n$t") > 0.0).reduce(_ && _))
+      .withColumn("nrm", norm(col("a")))
+    val qs = asQueries(docs, 50, col("nrm").as("qn") +: (0 until T).flatMap(t =>
+      Seq(col(s"t$t").as(s"qt$t"), col(s"n$t").as(s"qn$t"))): _*)
     // stage 1 — ColBERT-style candidate generation: ONE whole-vector
     // cosine per (doc, query) pair. The T² token-level interaction is
     // 16× the arithmetic; running it all-pairs was the r13 probe's
     // 169 s cliff at 10× data. Late-interaction systems gather a
     // candidate set with a single-vector scorer first, then rerank.
-    val sims1 = docs.select(col("vec_id"), col("a"), col("nrm"))
-      .crossJoin(broadcast(qs.select("query_id", "qa", "qn")))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim1", dot(col("qa"), col("a")) / (col("qn") * col("nrm")))
-      .select("query_id", "vec_id", "sim1")
-    val cand = graft.plans.TopKPerKey(sims1, Seq("query_id"), "sim1",
-        "vec_id", 20)
-      .select("query_id", "vec_id")
+    val cand = candidates(docs, qs, 20)
     // stage 2 — Σ_t max_j cos(q_t, d_j) on the C = 20 candidates only:
     // left-to-right sum of per-token maxima, mirrored exactly by the
     // oracle's greatest(...) + greatest(...)
@@ -712,16 +514,9 @@ object SimilarityQueries {
         dot(col(s"qt$t"), col(s"t$j")) / (col(s"qn$t") * col(s"n$j"))
       }: _*)
     }.reduceLeft(_ + _)
-    val rerank = cand
-      .join(docs.select(col("vec_id") +: (0 until T).flatMap(t =>
-        Seq(col(s"t$t"), col(s"n$t"))): _*), "vec_id")
-      .join(broadcast(qs.drop("qa", "qn")), "query_id")
-      .withColumn("sim", score)
-      .select("query_id", "vec_id", "sim")
-    graft.plans.TopKPerKey(rerank, Seq("query_id"), "sim", "vec_id", 5)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("sim"))
-      .orderBy("query_id", "rank")
+    neighbors(rerank(cand, docs.select(col("vec_id") +: (0 until T).flatMap(t =>
+        Seq(col(s"t$t"), col(s"n$t"))): _*), qs.drop("qa", "qn"), score, 5),
+      "rank", col("sim"))
   }
 
   /** s15 — HYBRID retrieval with reciprocal-rank fusion (the production
@@ -740,19 +535,13 @@ object SimilarityQueries {
     * negligible at any corpus size. At 100 TB the cost is the two arm
     * scans, unchanged from t16/s06. */
   def s15_hybrid_rrf(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.KeyAlgebra.ldiv
     val lex = TextQueries.t16_bm25_topk(s, dir)
       .select(col("q_id"), col("doc_id"), col("rank").as("lex_rank"))
-    val base = emb(s, dir).withColumn("nrm", norm(col("a")))
-      .filter(col("nrm") > 0.0)
+    val base = normed(s, dir)
     val qs = base.filter(col("vec_id") < 6)
-      .select(col("vec_id").as("q_id"), col("a").as("qa"), col("nrm").as("qn"))
-    val sims = base.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("sim", dot(col("qa"), col("a")) / (col("qn") * col("nrm")))
-      .select("q_id", "vec_id", "sim")
-    val vec = graft.plans.TopKPerKey(sims, Seq("q_id"), "sim", "vec_id", 10)
-      .select(col("q_id"), col("vec_id").as("doc_id"),
+      .select(col("vec_id").as("query_id"), col("a").as("qa"), col("nrm").as("qn"))
+    val vec = topSim(base, qs, 10)
+      .select(col("query_id").as("q_id"), col("vec_id").as("doc_id"),
         col("rank").as("vec_rank"))
     def rrf(r: Column): Column =
       when(r.isNull, 0L).otherwise(ldiv(lit(1000000L), lit(60L) + r))
@@ -761,7 +550,7 @@ object SimilarityQueries {
       .select(col("q_id"), col("doc_id"), col("rrf_fp"),
         coalesce(col("lex_rank"), lit(0L)).as("lex_rank"),
         coalesce(col("vec_rank"), lit(0L)).as("vec_rank"))
-    graft.plans.TopKPerKey(fused, Seq("q_id"), "rrf_fp", "doc_id", 10)
+    best(fused, "rrf_fp", 10, Seq("q_id"), "doc_id")
       .select("q_id", "rank", "doc_id", "rrf_fp", "lex_rank", "vec_rank")
       .orderBy("q_id", "rank")
   }
@@ -786,33 +575,18 @@ object SimilarityQueries {
     * the two quantizers A/B-test cleanly. */
   def s16_ann_binary_quant(s: SparkSession, dir: String): DataFrame = {
     val pows = lit(Array.tabulate(63)(1L << _))
-    val base = emb(s, dir).withColumn("nrm", norm(col("a")))
-      .filter(col("nrm") > 0.0)
+    val base = normed(s, dir)
       .withColumn("code", aggregate(
         zip_with(slice(col("a"), 1, 63), pows,
           (x, p) => when(x > 0.0, p).otherwise(0L)),
         lit(0L), (acc, x) => acc.bitwiseOR(x)))
-    val qs = base.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("query_id"), col("code").as("qcode"),
-        col("a").as("qa"), col("nrm").as("qn"))
-    val ham = base.select("vec_id", "code")
-      .crossJoin(broadcast(qs.select("query_id", "qcode")))
-      .filter(col("vec_id") =!= col("query_id"))
+    val qs = asQueries(base, 50, col("nrm").as("qn"), col("code").as("qcode"))
+    val ham = pairs(base.select("vec_id", "code"), qs.select("query_id", "qcode"))
       .select(col("query_id"), col("vec_id"),
-        (-bit_count(col("code").bitwiseXOR(col("qcode"))).cast("long"))
-          .as("negham"))
-    val cand = graft.plans.TopKPerKey(ham, Seq("query_id"), "negham",
-        "vec_id", 20)
-      .select("query_id", "vec_id")
-    val rerank = cand
-      .join(base.select(col("vec_id"), col("a"), col("nrm")), "vec_id")
-      .join(broadcast(qs.select("query_id", "qa", "qn")), "query_id")
-      .withColumn("sim", dot(col("qa"), col("a")) / (col("qn") * col("nrm")))
-      .select("query_id", "vec_id", "sim")
-    graft.plans.TopKPerKey(rerank, Seq("query_id"), "sim", "vec_id", 5)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("sim"))
-      .orderBy("query_id", "rank")
+        bit_count(col("code").bitwiseXOR(col("qcode"))).as("ham"))
+    val cand = nearest(ham, "ham", 20).select("query_id", "vec_id")
+    neighbors(rerank(cand, base.select("vec_id", "a", "nrm"),
+      qs.select("query_id", "qa", "qn"), cosine, 5), "rank", col("sim"))
   }
 
   /** s17 — IVF nprobe SWEEP: recall@3 at nprobe ∈ {1, 2, 4, 8} from
@@ -821,64 +595,27 @@ object SimilarityQueries {
     * is NESTED: the cells probed at nprobe = p are the first p of the
     * nprobe = 8 list, so one candidate gather tagged with each
     * candidate's CELL RANK answers every sweep point by thresholding —
-    * four windowed top-3s over the same bounded candidate frame instead
+    * four bounded-heap top-3s over the same candidate frame instead
     * of four index runs. Ground truth is s13's brute-force top-3 over
     * the same size-derived query sample.
     *
     * Scale shape: the sample is AutoScale-bounded (~100 queries at any
     * corpus size), candidates are sample × probed-cell volume (the
     * exact stage s13 already pays dominates), and everything after the
-    * gather is windowed over per-(query, nprobe) groups of ≤ probed
-    * cells × cell size. One scan at 100 TB, like s13. */
+    * gather is ranked per (query, nprobe) group of ≤ probed cells ×
+    * cell size. One scan at 100 TB, like s13. */
   def s17_nprobe_sweep(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.KeyAlgebra.ldiv
     import s.implicits._
     val base = emb(s, dir)
-    val modulus = math.max(50L, base.count() / 100L)
-    // r19: native codegen kernel (bit-exact vs the interpreted
-    // zip_with/aggregate fold it replaces — same per-element arithmetic,
-    // same left-fold order; see [[graft.plans.L2Distance]] and the s18
-    // family that already runs on it)
-    def l2(x: Column, y: Column): Column = graft.plans.L2Distance(x, y)
-    val scaled = base
-      .withColumn("scaled", transform(col("a"), x => floor(x * 1e9).cast("long")))
-    val centroids = scaled.groupBy("label")
-      .agg(ArrayAggregates.ewSumLong(col("scaled")).as("ssum"),
-        count(lit(1)).as("cnt"))
-      .select(col("label").as("c_label"),
-        transform(col("ssum"),
-          v => v.cast("double") / col("cnt").cast("double") / 1e9).as("centroid"))
-    val qs = base.filter(col("vec_id") % modulus === 0)
-      .select(col("vec_id").as("query_id"), col("a").as("qa"))
-    val wAssign = Window.partitionBy("query_id")
-      .orderBy(col("cdist"), col("c_label"))
-    val assigned = qs.crossJoin(broadcast(centroids))
-      .withColumn("cdist", l2(col("qa"), col("centroid")))
-      .withColumn("crk", row_number().over(wAssign))
-      .filter(col("crk") <= 8)
-      .select(col("query_id"), col("qa"), col("c_label").as("probe_label"),
-        col("crk"))
-    val cands = base.join(broadcast(assigned), col("label") === col("probe_label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("d2", l2(col("qa"), col("a")))
-      .select(col("query_id"), col("vec_id"), col("d2"), col("crk"))
-    val wTop = Window.partitionBy("query_id", "nprobe")
-      .orderBy(col("d2"), col("vec_id"))
-    val approx = cands
+    val qs = asQueries(base, evalModulus(base))
+    val cands = gather(base, probe(qs, cells(base, "label"), 8), "label")
+      .select(col("query_id"), col("vec_id"),
+        l2(col("qa"), col("a")).as("d2"), col("crk"))
       .withColumn("nprobe", explode(array(Seq(1, 2, 4, 8).map(lit): _*)))
       .filter(col("crk") <= col("nprobe"))
-      .withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= 3)
-    val wExact = Window.partitionBy("query_id").orderBy(col("d2"), col("vec_id"))
-    val exact = base.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("d2", l2(col("qa"), col("a")))
-      .withColumn("rk", row_number().over(wExact))
-      .filter(col("rk") <= 3)
-      .select(col("query_id").as("eq"), col("vec_id").as("eid"))
     val nq = qs.count()
-    val hits = approx.join(exact,
+    val hits = nearest(cands, "d2", 3, Seq("query_id", "nprobe"))
+      .join(truth(base, qs),
         col("query_id") === col("eq") && col("vec_id") === col("eid"),
         "left_semi")
       .groupBy("nprobe").agg(count(lit(1)).as("n_hits"))
@@ -891,6 +628,57 @@ object SimilarityQueries {
           lit(math.max(1L, nq * 3L))).as("recall_fp"))
       .orderBy("nprobe")
   }
+
+  /** The index rows of `df`: each vector with its nearest cell of `cs`. */
+  private def cellRows(df: DataFrame, cs: Cells): DataFrame =
+    df.withColumn("cell", assign(cs, col("a"))).select("vec_id", "label", "a", "cell")
+
+  /** The MEMOIZED generation-1 IVF build shared by s18 (delta-aware
+    * serve), s20 (merge), s21, s22 and s23: the size-derived delta
+    * modulus (counted once per build, not per serve), frozen
+    * fixed-point centroids over the indexed subset, nearest-cell
+    * assignment, cell-bucketed/sorted table. Returns
+    * (table, centroids, deltaMod). */
+  private def ivfBuild(s: SparkSession, dir: String): (String, Cells, Long) =
+    SessionMemo.memoize(s, "s18-ivf:" + dir) {
+      val base = emb(s, dir)
+      val deltaMod = math.max(97L, base.count() / 50L)
+      val indexed = base.filter(col("vec_id") % deltaMod =!= 1L)
+      val cs = cells(indexed, "label")
+      (persist(cellRows(indexed, cs), "cell", "s18_ivf", dir), cs, deltaMod)
+    }
+
+  /** Label-PARTITIONED twin of [[ivfBuild]]'s table (same rows, second
+    * layout): s22's narrow single-label serve reads THIS, so the label
+    * predicate becomes partition pruning instead of a full index scan —
+    * the q76 per-era pruning idiom applied to the vector index. At
+    * 100 TB the two layouts are the standard primary/secondary-index
+    * trade: one extra copy of the index buys label-pruned filtered
+    * serving. */
+  private def ivfByLabel(s: SparkSession, dir: String): String = {
+    val (t1, _, _) = ivfBuild(s, dir)
+    SessionMemo.memoize(s, "s22-bylabel:" + dir) {
+      persist(s.table(t1).select("vec_id", "a", "cell", "label"), "label",
+        "s22_bylabel", dir, partitioned = true)
+    }
+  }
+
+  /** s18's serve candidates: the nprobe=2 bucket-pruned index arm
+    * (from_delta 0) plus the brute-force delta side-scan (from_delta 1),
+    * both with their L2² `d2`, filtered by `keep`. */
+  private def deltaServe(idx: DataFrame, delta: DataFrame, qs: DataFrame,
+      cs: Cells, keep: Column = lit(true)): DataFrame = {
+    def arm(df: DataFrame, fromDelta: Long): DataFrame = df.filter(keep)
+      .select(col("query_id"), col("vec_id"),
+        l2(col("qa"), col("a")).as("d2"), lit(fromDelta).as("from_delta"))
+    arm(gather(idx, probe(qs, cs, 2), "cell"), 0L)
+      .unionByName(arm(pairs(delta, qs), 1L))
+  }
+
+  /** The L2² top-3 serve output: query_id, rk, neighbor_id, d2_fp, `cols`. */
+  private def serveTop3(cand: DataFrame, cols: Column*): DataFrame =
+    neighbors(nearest(cand, "d2", 3), "rk",
+      fp(col("d2"), 1e9).as("d2_fp") +: cols: _*)
 
   /** s18 — PERSISTED, reusable ANN index (round-14 verdict item 2):
     * every other s-query derives its IVF clustering in-query; real
@@ -923,128 +711,24 @@ object SimilarityQueries {
     *
     * At 100 TB: the build is one shuffle paid once per rebuild cadence;
     * per batch, work = probed cells × cell size + |delta| × |batch|,
-    * with the index scan reading ONLY probed buckets. No reference
-    * counterpart file — this is the brief's similarity-search lane. */
-  /** Native codegen squared-L2 (bit-exact vs the zip_with fold the
-    * oracle replays): serve paths evaluate batch × cell-size distances,
-    * and the interpreted HOF cost 58.7 s at the 26× probe (d25 lesson). */
-  private def l2n(x: Column, y: Column): Column = graft.plans.L2Distance(x, y)
-  private def litArr(a: Seq[Double]): Column = array(a.map(lit): _*)
-
-  /** Nearest-cell assignment as a narrow codegen map against literal
-    * centroids (ties to the lower cell id via the struct order). */
-  private def nearestCell(cents: Seq[(Int, Seq[Double])], v: Column): Column =
-    least(cents.map { case (l, c) =>
-      struct(l2n(v, litArr(c)).as("d"), lit(l).as("c")) }: _*).getField("c")
-
-  /** Top-2 probe cells for a query vector, same literal centroids. */
-  private def probeCells2(cents: Seq[(Int, Seq[Double])], v: Column): Column =
-    slice(array_sort(array(cents.map { case (l, c) =>
-      struct(l2n(v, litArr(c)).as("d"), lit(l).as("c")) }: _*)), 1, 2)
-
-  /** Top-2 probe cells CARRYING each cell's centroid — the variant the
-    * PQ paths need (the query residual derives from the probed cell).
-    * Shared by s19 and s25 so both probe the IDENTICAL cells by
-    * construction. */
-  private def probeCells2WithCent(cents: Seq[(Int, Seq[Double])],
-      v: Column): Column =
-    slice(array_sort(array(cents.map { case (l, c) =>
-      struct(l2n(v, litArr(c)).as("d"), lit(l).as("c"),
-        litArr(c).as("cent")) }: _*)), 1, 2)
-
-  /** The MEMOIZED generation-1 IVF build shared by s18 (delta-aware
-    * serve) and s20 (merge): frozen fixed-point centroids over the
-    * indexed subset, nearest-cell assignment, cell-bucketed/sorted
-    * table. Returns (table, centroids, deltaMod). */
-  private def ivfBuild(s: SparkSession,
-      dir: String): (String, Seq[(Int, Seq[Double])], Long) = {
-    val base = emb(s, dir)
-    val deltaMod = math.max(97L, base.count() / 50L)
-    val (tbl, cents) = graft.core.SessionMemo.memoize(s, "s18-ivf:" + dir) {
-      val tag = graft.core.SessionMemo.pathTag(s, dir)
-      val wh = new java.io.File(
-        System.getProperty("java.io.tmpdir"), s"graft_s18_wh_$tag")
-      val t = s"graft_s18_ivf_$tag"
-      val indexed = base.filter(col("vec_id") % deltaMod =!= 1L)
-      val scaled = indexed.withColumn("scaled",
-        transform(col("a"), x => floor(x * 1e9).cast("long")))
-      val cs = scaled.groupBy("label")
-        .agg(ArrayAggregates.ewSumLong(col("scaled")).as("ssum"),
-          count(lit(1)).as("cnt"))
-        .select(col("label"), transform(col("ssum"),
-          v => v.cast("double") / col("cnt").cast("double") / 1e9)
-          .as("centroid"))
-        .collect() // bounded: one row per IVF cell
-        .map(r => (r.getInt(0), r.getSeq[Double](1)))
-        .sortBy(_._1).toSeq
-      indexed.withColumn("cell", nearestCell(cs, col("a")))
-        .select("vec_id", "label", "a", "cell")
-        .repartition(8, col("cell"))
-        .write.bucketBy(8, "cell").sortBy("cell", "vec_id")
-        .option("path", new java.io.File(wh, "ivf").getAbsolutePath)
-        .mode("overwrite").saveAsTable(t)
-      (t, cs)
-    }
-    (tbl, cents, deltaMod)
-  }
-
-  /** Label-PARTITIONED twin of [[ivfBuild]]'s table (same rows, second
-    * layout): s22's narrow single-label serve reads THIS, so the label
-    * predicate becomes partition pruning instead of a full index scan —
-    * the q76 per-era pruning idiom applied to the vector index. At
-    * 100 TB the two layouts are the standard primary/secondary-index
-    * trade: one extra copy of the index buys label-pruned filtered
-    * serving. */
-  private def ivfByLabel(s: SparkSession, dir: String): String = {
-    val (t1, _, _) = ivfBuild(s, dir)
-    graft.core.SessionMemo.memoize(s, "s22-bylabel:" + dir) {
-      val tag = graft.core.SessionMemo.pathTag(s, dir)
-      val wh = new java.io.File(
-        System.getProperty("java.io.tmpdir"), s"graft_s22_wh_$tag")
-      val t = s"graft_s22_bylabel_$tag"
-      s.table(t1).select("vec_id", "a", "cell", "label")
-        .write.partitionBy("label")
-        .option("path", new java.io.File(wh, "bylabel").getAbsolutePath)
-        .mode("overwrite").saveAsTable(t)
-      t
-    }
-  }
-
+    * with the index scan reading ONLY probed buckets. Ranking is the
+    * bounded heap top-3 per query, never a window over the batch ×
+    * cell-size candidate volume. No reference counterpart file — this
+    * is the brief's similarity-search lane. */
   def s18_ann_persisted(s: SparkSession, dir: String): DataFrame = {
     val base = emb(s, dir)
-    def l2(x: Column, y: Column): Column = l2n(x, y)
-    val (tbl, cents, deltaMod) = ivfBuild(s, dir)
-    val qs = base.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("query_id"), col("a").as("qa"))
-    // nprobe=2 cell assignment, inline against the same literal centroids
-    val assigned = qs.withColumn("pc", explode(probeCells2(cents, col("qa"))))
-      .select(col("query_id"), col("qa"), col("pc.c").as("probe_cell"))
-    val probed = assigned.select("probe_cell").distinct()
-      .collect().map(_.getInt(0)).sorted // bounded by the cell count
-    val idx = s.table(tbl).filter(col("cell").isin(probed.toSeq: _*))
-    val fromIdx = idx.join(broadcast(assigned),
-        col("cell") === col("probe_cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        l2(col("qa"), col("a")).as("d2"), lit(0L).as("from_delta"))
-    val delta = base.filter(col("vec_id") % deltaMod === 1L)
-    val fromDelta = delta.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        l2(col("qa"), col("a")).as("d2"), lit(1L).as("from_delta"))
-    // bounded heap top-3 per query (TopKPerKey ranks by ord DESC, tie
-    // ASC — negate d2; exact negation is lossless for doubles), instead
-    // of a row_number window that would shuffle and sort the full
-    // batch × cell-size candidate volume
-    val cand = fromIdx.unionByName(fromDelta)
-      .withColumn("neg_d2", negate(col("d2")))
-    graft.plans.TopKPerKey(cand, Seq("query_id"), "neg_d2", "vec_id", 3)
-      .select(col("query_id"), col("rank").as("rk"),
-        col("vec_id").as("neighbor_id"),
-        floor(col("d2") * 1e9).cast("long").as("d2_fp"),
-        col("from_delta"))
-      .orderBy("query_id", "rk")
+    val (tbl, cs, deltaMod) = ivfBuild(s, dir)
+    serveTop3(deltaServe(s.table(tbl),
+      base.filter(col("vec_id") % deltaMod === 1L), asQueries(base, 50), cs),
+      col("from_delta"))
   }
+
+  /** The delta-free serve of s20/s23: nprobe=2 bucket-pruned gather
+    * over the persisted table `tbl` with its L2² `d2`. */
+  private def indexServe(s: SparkSession, dir: String, tbl: String,
+      cs: Cells): DataFrame =
+    gather(s.table(tbl), probe(asQueries(emb(s, dir), 50), cs, 2), "cell")
+      .withColumn("d2", l2(col("qa"), col("a")))
 
   /** s20 — INDEX MERGE, the LSM compaction step s18 implies: s18
     * serves vectors that arrived after the last rebuild from a
@@ -1070,40 +754,12 @@ object SimilarityQueries {
     * side-scan term. Builds on s18's memoized generation-1 (shared memo
     * — the sweep pays the build once for both). */
   def s20_ann_index_merge(s: SparkSession, dir: String): DataFrame = {
-    val base = emb(s, dir)
-    val (t1, cents, deltaMod) = ivfBuild(s, dir)
-    val t2 = graft.core.SessionMemo.memoize(s, "s20-merged:" + dir) {
-      val tag = graft.core.SessionMemo.pathTag(s, dir)
-      val wh = new java.io.File(
-        System.getProperty("java.io.tmpdir"), s"graft_s20_wh_$tag")
-      val t = s"graft_s20_ivf_$tag"
-      val delta = base.filter(col("vec_id") % deltaMod === 1L)
-        .withColumn("cell", nearestCell(cents, col("a")))
-        .select("vec_id", "label", "a", "cell")
-      s.table(t1).unionByName(delta)
-        .repartition(8, col("cell"))
-        .write.bucketBy(8, "cell").sortBy("cell", "vec_id")
-        .option("path", new java.io.File(wh, "ivf").getAbsolutePath)
-        .mode("overwrite").saveAsTable(t)
-      t
+    val (t1, cs, deltaMod) = ivfBuild(s, dir)
+    val t2 = SessionMemo.memoize(s, "s20-merged:" + dir) {
+      val delta = emb(s, dir).filter(col("vec_id") % deltaMod === 1L)
+      persist(s.table(t1).unionByName(cellRows(delta, cs)), "cell", "s20_ivf", dir)
     }
-    val qs = base.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("query_id"), col("a").as("qa"))
-    val assigned = qs.withColumn("pc", explode(probeCells2(cents, col("qa"))))
-      .select(col("query_id"), col("qa"), col("pc.c").as("probe_cell"))
-    val probed = assigned.select("probe_cell").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val idx = s.table(t2).filter(col("cell").isin(probed.toSeq: _*))
-    val cand = idx.join(broadcast(assigned),
-        col("cell") === col("probe_cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("d2", l2n(col("qa"), col("a")))
-      .withColumn("neg_d2", -col("d2") + lit(0.0))
-    graft.plans.TopKPerKey(cand, Seq("query_id"), "neg_d2", "vec_id", 3)
-      .select(col("query_id"), col("rank").as("rk"),
-        col("vec_id").as("neighbor_id"),
-        floor(col("d2") * 1e9).cast("long").as("d2_fp"))
-      .orderBy("query_id", "rk")
+    serveTop3(indexServe(s, dir, t2, cs))
   }
 
   /** s21 — TOMBSTONE DELETES on the persisted index, the third LSM
@@ -1130,38 +786,15 @@ object SimilarityQueries {
     * is the brief's similarity-search serving lane. */
   def s21_ann_tombstones(s: SparkSession, dir: String): DataFrame = {
     val base = emb(s, dir)
-    def l2(x: Column, y: Column): Column = l2n(x, y)
-    val (tbl, cents, deltaMod) = ivfBuild(s, dir)
+    val (tbl, cs, deltaMod) = ivfBuild(s, dir)
     val tomb = base.filter(col("vec_id") % 7 === 3).select("vec_id")
     def mask(df: DataFrame): DataFrame =
       df.join(broadcast(tomb), Seq("vec_id"), "left_anti")
-    val qs = mask(base).filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("query_id"), col("a").as("qa"))
-    val assigned = qs.withColumn("pc", explode(probeCells2(cents, col("qa"))))
-      .select(col("query_id"), col("qa"), col("pc.c").as("probe_cell"))
-    val probed = assigned.select("probe_cell").distinct()
-      .collect().map(_.getInt(0)).sorted // bounded by the cell count
-    // the index scan itself is UNMASKED (physical layout untouched);
-    // the tombstone anti-join gates what leaves the probed cells
-    val idx = mask(s.table(tbl).filter(col("cell").isin(probed.toSeq: _*)))
-    val fromIdx = idx.join(broadcast(assigned),
-        col("cell") === col("probe_cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        l2(col("qa"), col("a")).as("d2"), lit(0L).as("from_delta"))
-    val delta = mask(base.filter(col("vec_id") % deltaMod === 1L))
-    val fromDelta = delta.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        l2(col("qa"), col("a")).as("d2"), lit(1L).as("from_delta"))
-    val cand = fromIdx.unionByName(fromDelta)
-      .withColumn("neg_d2", negate(col("d2")))
-    graft.plans.TopKPerKey(cand, Seq("query_id"), "neg_d2", "vec_id", 3)
-      .select(col("query_id"), col("rank").as("rk"),
-        col("vec_id").as("neighbor_id"),
-        floor(col("d2") * 1e9).cast("long").as("d2_fp"),
-        col("from_delta"))
-      .orderBy("query_id", "rk")
+    // the index layout is untouched; the tombstone anti-join gates what
+    // leaves the probed cells
+    serveTop3(deltaServe(mask(s.table(tbl)),
+      mask(base.filter(col("vec_id") % deltaMod === 1L)),
+      asQueries(mask(base), 50), cs), col("from_delta"))
   }
 
   /** s22 — FILTERED serving on the persisted index with a
@@ -1188,76 +821,29 @@ object SimilarityQueries {
     * becomes partition pruning). The switch threshold here is the
     * filter CLASS; a deployment derives it from column statistics. */
   def s22_ann_filtered_serve(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.KeyAlgebra.ldiv
     val base = emb(s, dir)
-    def l2(x: Column, y: Column): Column = l2n(x, y)
-    val (tbl, cents, deltaMod) = ivfBuild(s, dir)
-    val qs = base.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("query_id"), col("a").as("qa"),
-        (col("vec_id") % 3).as("f"),
-        (ldiv(col("vec_id"), lit(50L)) % 8).cast("int").as("target"))
-    val broad = qs.filter(col("f") < 2).drop("target")
-    val narrow = qs.filter(col("f") === 2)
-    val assigned = broad
-      .withColumn("pc", explode(probeCells2(cents, col("qa"))))
-      .select(col("query_id"), col("qa"), col("f"),
-        col("pc.c").as("probe_cell"))
-    val probed = assigned.select("probe_cell").distinct()
-      .collect().map(_.getInt(0)).sorted // bounded by the cell count
+    val (tbl, cs, deltaMod) = ivfBuild(s, dir)
+    val qs = asQueries(base, 50, (col("vec_id") % 3).as("f"),
+      (ldiv(col("vec_id"), lit(50L)) % 8).cast("int").as("target"))
     val delta = base.filter(col("vec_id") % deltaMod === 1L)
-    val keep = col("vec_id") =!= col("query_id") &&
-      (col("f") === 0L || col("label") % 2 === 0)
-    val broadCand = s.table(tbl).filter(col("cell").isin(probed.toSeq: _*))
-      .join(broadcast(assigned), col("cell") === col("probe_cell"))
-      .filter(keep)
-      .select(col("query_id"), col("vec_id"),
-        l2(col("qa"), col("a")).as("d2"), lit("probed").as("path"))
-      .unionByName(delta.crossJoin(broadcast(broad)).filter(keep)
-        .select(col("query_id"), col("vec_id"),
-          l2(col("qa"), col("a")).as("d2"), lit("probed").as("path")))
+    val broad = deltaServe(s.table(tbl), delta,
+        qs.filter(col("f") < 2).drop("target"), cs,
+        col("f") === 0L || col("label") % 2 === 0)
+      .drop("from_delta").withColumn("path", lit("probed"))
     // narrow path: the label-partitioned index twin + a broadcast
     // EQUI-join on the partition column — dynamic partition pruning
     // reads only the queried labels' partitions (PlanSpec pins the
     // dynamicpruning expression on this scan), instead of streaming
     // the whole index past the predicate
-    def narrowJoin(src: DataFrame): DataFrame = src
-      .join(broadcast(narrow), col("label") === col("target"))
+    def narrow(src: DataFrame): DataFrame = src.select("vec_id", "label", "a")
+      .join(broadcast(qs.filter(col("f") === 2)), col("label") === col("target"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         l2(col("qa"), col("a")).as("d2"), lit("exact").as("path"))
-    val narrowCand = narrowJoin(
-        s.table(ivfByLabel(s, dir)).select("vec_id", "label", "a"))
-      .unionByName(narrowJoin(delta.select("vec_id", "label", "a")))
-    val cand = broadCand.unionByName(narrowCand)
-      .withColumn("neg_d2", negate(col("d2")))
-    graft.plans.TopKPerKey(cand, Seq("query_id"), "neg_d2", "vec_id", 3)
-      .select(col("query_id"), col("rank").as("rk"),
-        col("vec_id").as("neighbor_id"),
-        floor(col("d2") * 1e9).cast("long").as("d2_fp"),
-        col("path"))
-      .orderBy("query_id", "rk")
+    serveTop3(broad.unionByName(narrow(s.table(ivfByLabel(s, dir))))
+      .unionByName(narrow(delta)), col("path"))
   }
 
-  /** s19 — PERSISTED PQ-IVF serving with exact RERANK (the FAISS
-    * IVF-PQ + refine layout, persisted): s09 derives residual PQ codes
-    * in-query on every run; a serving deployment encodes ONCE and
-    * stores the 8-byte codes next to the full vectors in the
-    * cell-bucketed table (s18's layout idiom), then every query batch
-    * reads codes from the pruned buckets — at 100 TB the ADC scan
-    * touches 8 B/vector instead of 512 B, which is why PQ exists. The
-    * serve is the production two-stage shape: asymmetric-distance
-    * (per-query LUT against the shared residual codebook, native
-    * [[graft.plans.PQAdc]] kernel) gathers top-20 candidates per query
-    * from the probed cells, and ONLY those 20 pay the exact
-    * [[graft.plans.L2Distance]] rerank on the stored full vectors —
-    * the refine stage that converts quantized recall into exact final
-    * ranks. Output carries both distances, so the oracle pins the ADC
-    * ordering AND the reranked truth.
-    *
-    * Scale shape: index encode is one scan paid at build (memoized,
-    * reported under ingest); per batch, work = probed cells × 8-byte
-    * codes + 20·|batch| full-vector reranks; both top-k stages are
-    * bounded TopKPerKey heaps, no window over the candidate volume. */
   /** Atomic generation-pointer publish (the q61 write-audit-publish
     * idiom applied to the vector index): the pointer file names the
     * serving generation; a rebuild stages its table FULLY, audits it,
@@ -1304,40 +890,18 @@ object SimilarityQueries {
     val base = emb(s, dir)
     val (t1, _, deltaMod) = ivfBuild(s, dir)
     val (cents2, k2, ptrPath) =
-      graft.core.SessionMemo.memoize(s, "s23-gen2:" + dir) {
-        val tag = graft.core.SessionMemo.pathTag(s, dir)
-        val wh = new java.io.File(
-          System.getProperty("java.io.tmpdir"), s"graft_s23_wh_$tag")
+      SessionMemo.memoize(s, "s23-gen2:" + dir) {
+        val wh = home(s, dir, "s23_wh")
         wh.mkdirs()
         val ptr = new java.io.File(wh, "CURRENT")
         publishGeneration(ptr, t1) // the pre-rebuild serving state
         val n = base.count()
         val k = math.max(4, math.floor(math.sqrt(n.toDouble)).toInt / 2)
-        val seedRows = base.filter(col("vec_id") % 31 === 2)
-          .orderBy("vec_id").limit(k).select("a").collect()
-        require(seedRows.length == k, s"need $k quantizer seeds")
-        val seeds = seedRows.zipWithIndex
-          .map { case (r, i) => (i, r.getSeq[Double](0)) }.toSeq
+        val seeded = seeds(base, "a", 2, k).zipWithIndex.map(_.swap)
         // one Lloyd step: nearest-seed assignment, then the exact
         // fixed-point elementwise mean of each non-empty cell
-        val cs = base.withColumn("cell", nearestCell(seeds, col("a")))
-          .withColumn("scaled",
-            transform(col("a"), x => floor(x * 1e9).cast("long")))
-          .groupBy("cell")
-          .agg(ArrayAggregates.ewSumLong(col("scaled")).as("ssum"),
-            count(lit(1)).as("cnt"))
-          .select(col("cell"), transform(col("ssum"),
-            v => v.cast("double") / col("cnt").cast("double") / 1e9)
-            .as("centroid"))
-          .collect() // bounded: one row per cell, ≤ k
-          .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
-        val t = s"graft_s23_gen2_$tag"
-        base.withColumn("cell", nearestCell(cs, col("a")))
-          .select("vec_id", "label", "a", "cell")
-          .repartition(8, col("cell"))
-          .write.bucketBy(8, "cell").sortBy("cell", "vec_id")
-          .option("path", new java.io.File(wh, "gen2").getAbsolutePath)
-          .mode("overwrite").saveAsTable(t)
+        val cs = cells(base.withColumn("cell", assign(seeded, col("a"))), "cell")
+        val t = persist(cellRows(base, cs), "cell", "s23_gen2", dir)
         // audit BEFORE publish: gen-2 must hold every row the serving
         // state (gen-1 index + delta side-scan) holds
         val expected = s.table(t1).count() +
@@ -1350,101 +914,68 @@ object SimilarityQueries {
       }
     val tbl = currentGeneration(new java.io.File(ptrPath)).getOrElse(
       throw new IllegalStateException("no published index generation"))
-    val qs = base.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("query_id"), col("a").as("qa"))
-    val assigned = qs
-      .withColumn("pc", explode(probeCells2(cents2, col("qa"))))
-      .select(col("query_id"), col("qa"), col("pc.c").as("probe_cell"))
-    val probed = assigned.select("probe_cell").distinct()
-      .collect().map(_.getInt(0)).sorted // bounded by the cell count
-    val cand = s.table(tbl).filter(col("cell").isin(probed.toSeq: _*))
-      .join(broadcast(assigned), col("cell") === col("probe_cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("d2", l2n(col("qa"), col("a")))
-      .withColumn("neg_d2", negate(col("d2")))
-    graft.plans.TopKPerKey(cand, Seq("query_id"), "neg_d2", "vec_id", 3)
-      .select(col("query_id"), col("rank").as("rk"),
-        col("vec_id").as("neighbor_id"),
-        floor(col("d2") * 1e9).cast("long").as("d2_fp"),
-        lit(k2.toLong).as("n_cells"))
-      .orderBy("query_id", "rk")
+    serveTop3(indexServe(s, dir, tbl, cents2), lit(k2.toLong).as("n_cells"))
   }
 
   /** The memoized PQ-IVF store (table, label centroids, codebook) —
     * shared by s19's serve and s25's quantizer bake-off. */
-  private def pqStore(s: SparkSession,
-      dir: String): (String, Seq[(Int, Seq[Double])], Seq[Double]) = {
-    val k16 = 16
-    graft.core.SessionMemo.memoize(s, "s19-pqivf:" + dir) {
-        val tag = graft.core.SessionMemo.pathTag(s, dir)
-        val wh = new java.io.File(
-          System.getProperty("java.io.tmpdir"), s"graft_s19_wh_$tag")
-        val t = s"graft_s19_pq_$tag"
-        val base = emb(s, dir).withColumn("scaled",
-          transform(col("a"), x => floor(x * 1e9).cast("long")))
-        val centroids = base.groupBy("label")
-          .agg(ArrayAggregates.ewSumLong(col("scaled")).as("ssum"),
-            count(lit(1)).as("cnt"))
-          .select(col("label").as("c_label"), transform(col("ssum"),
-            v => v.cast("double") / col("cnt").cast("double") / 1e9)
-            .as("centroid"))
-        val resid = base.join(broadcast(centroids),
-            col("label") === col("c_label"))
-          .select(col("vec_id"), col("label"), col("a"),
-            zip_with(col("a"), col("centroid"), _ - _).as("r"))
-        // deterministic residual codebook: the 16 seed vectors (s09 rule)
-        val cb: Seq[Double] = resid.filter(col("vec_id") % 31 === 1)
-          .orderBy("vec_id").limit(k16).collect()
-          .flatMap(_.getSeq[Double](3)).toSeq
-        require(cb.length == k16 * 64, "codebook needs 16 seeds")
-        resid.withColumn("codes", graft.plans.PQEncode(col("r"), cb))
-          .select("vec_id", "label", "a", "codes")
-          .repartition(8, col("label"))
-          .write.bucketBy(8, "label").sortBy("label", "vec_id")
-          .option("path", new java.io.File(wh, "pq").getAbsolutePath)
-          .mode("overwrite").saveAsTable(t)
-        val cs = centroids.collect()
-          .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
-        (t, cs, cb)
-      }
+  private def pqStore(s: SparkSession, dir: String): (String, Cells, Seq[Double]) =
+    SessionMemo.memoize(s, "s19-pqivf:" + dir) {
+      val base = emb(s, dir)
+      val cs = cells(base, "label")
+      val (coded, cb) = pqCode(base, cs)
+      (persist(coded.select("vec_id", "label", "a", "codes"), "label", "s19_pq", dir),
+        cs, cb)
+    }
+
+  /** Quantized gather → top-20 by `adc` asc → exact L2² rerank of those
+    * 20 on the stored full vectors → top-5 with both distances (s19/s24). */
+  private def refine(cand: DataFrame, adc: Column): DataFrame =
+    neighbors(nearest(nearest(cand.withColumn("adc", adc), "adc", 20).drop("rank")
+        .withColumn("d2", l2(col("qa"), col("a"))), "d2", 5),
+      "rk", fp(col("d2"), 1e9).as("d2_fp"), fp(col("adc"), 1e6).as("adc_fp"))
+
+  /** s19 — PERSISTED PQ-IVF serving with exact RERANK (the FAISS
+    * IVF-PQ + refine layout, persisted): s09 derives residual PQ codes
+    * in-query on every run; a serving deployment encodes ONCE and
+    * stores the 8-byte codes next to the full vectors in the
+    * cell-bucketed table (s18's layout idiom), then every query batch
+    * reads codes from the pruned buckets — at 100 TB the ADC scan
+    * touches 8 B/vector instead of 512 B, which is why PQ exists. The
+    * serve is the production two-stage shape: asymmetric-distance
+    * (per-query LUT against the shared residual codebook, native
+    * [[graft.plans.PQAdc]] kernel) gathers top-20 candidates per query
+    * from the probed cells, and ONLY those 20 pay the exact
+    * [[graft.plans.L2Distance]] rerank on the stored full vectors —
+    * the refine stage that converts quantized recall into exact final
+    * ranks. Output carries both distances, so the oracle pins the ADC
+    * ordering AND the reranked truth.
+    *
+    * Scale shape: index encode is one scan paid at build (memoized,
+    * reported under ingest); per batch, work = probed cells × 8-byte
+    * codes + 20·|batch| full-vector reranks; both top-k stages are
+    * bounded TopKPerKey heaps, no window over the candidate volume. */
+  def s19_pq_persisted(s: SparkSession, dir: String): DataFrame = {
+    val (tbl, cs, cb) = pqStore(s, dir)
+    refine(gather(s.table(tbl), pqProbe(asQueries(emb(s, dir), 50), cs, cb), "label"),
+      graft.plans.PQAdc(col("qlut"), col("codes")))
   }
 
-  def s19_pq_persisted(s: SparkSession, dir: String): DataFrame = {
-    def l2(x: Column, y: Column): Column = graft.plans.L2Distance(x, y)
-    def litArr(a: Seq[Double]): Column = array(a.map(lit): _*)
-    val (tbl, cents, cbFlat) = pqStore(s, dir)
-    val qs = emb(s, dir).filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("query_id"), col("a").as("qa"))
-    // nprobe=2 cells per query; the sort struct carries the centroid so
-    // the query residual (and its LUT) derives from the probed cell
-    val probes = qs
-      .withColumn("pc", explode(probeCells2WithCent(cents, col("qa"))))
-      .select(col("query_id"), col("qa"),
-        col("pc.c").as("probe_label"),
-        graft.plans.PQLut(zip_with(col("qa"), col("pc.cent"), _ - _),
-          cbFlat).as("qlut"))
-    val probed = probes.select("probe_label").distinct()
-      .collect().map(_.getInt(0)).sorted // bounded by the cell count
-    val idx = s.table(tbl).filter(col("label").isin(probed.toSeq: _*))
-    val cands = idx.join(broadcast(probes),
-        col("label") === col("probe_label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc", graft.plans.PQAdc(col("qlut"), col("codes")))
-      .withColumn("nadc", -col("adc") + lit(0.0))
-    val top20 = graft.plans.TopKPerKey(cands,
-        Seq("query_id"), "nadc", "vec_id", 20)
-      .drop("rank", "nadc", "qlut", "codes")
-    // exact rerank on the stored full vectors — 20 rows per query
-    val reranked = top20
-      .withColumn("d2", l2(col("qa"), col("a")))
-      .withColumn("neg_d2", -col("d2") + lit(0.0))
-    graft.plans.TopKPerKey(reranked, Seq("query_id"), "neg_d2", "vec_id", 5)
-      .select(col("query_id"), col("rank").as("rk"),
-        col("vec_id").as("neighbor_id"),
-        floor(col("d2") * 1e9).cast("long").as("d2_fp"),
-        floor(col("adc") * 1e6).cast("long").as("adc_fp"))
-      .orderBy("query_id", "rk")
-  }
+  /** The memoized SQ8 store (table, label centroids, per-dim mins and
+    * scales) — shared by s24's serve and s25's quantizer bake-off. */
+  private def sqStore(s: SparkSession, dir: String)
+      : (String, Cells, Seq[Double], Seq[Double]) =
+    SessionMemo.memoize(s, "s24-sq8:" + dir) {
+      val base = emb(s, dir)
+      val mm = base.agg(
+        ArrayAggregates.ewMinDouble(col("a")).as("mins"),
+        ArrayAggregates.ewMaxDouble(col("a")).as("maxs")).head
+      val mn = mm.getSeq[Double](0)
+      val sc = mn.zip(mm.getSeq[Double](1)).map { case (lo, hi) => hi - lo }
+      val t = persist(base.withColumn("sq", graft.plans.Sq8Encode(col("a"), mn, sc))
+        .select("vec_id", "label", "a", "sq"), "label", "s24_sq", dir)
+      (t, cells(base, "label"), mn, sc)
+    }
 
   /** s24 — PERSISTED SQ8 serving with exact rerank, the third
     * quantization layout next to PQ (s19, 8 B/vector) and binary (s16,
@@ -1471,69 +1002,10 @@ object SimilarityQueries {
     * 20·|batch| full-vector reranks; both top-k stages are bounded
     * heaps. The quantizer state (128 doubles) ships as codegen
     * references, never a join. */
-  /** The memoized SQ8 store (table, label centroids, per-dim mins and
-    * scales) — shared by s24's serve and s25's quantizer bake-off. */
-  private def sqStore(s: SparkSession, dir: String)
-      : (String, Seq[(Int, Seq[Double])], Seq[Double], Seq[Double]) =
-    graft.core.SessionMemo.memoize(s, "s24-sq8:" + dir) {
-        val tag = graft.core.SessionMemo.pathTag(s, dir)
-        val wh = new java.io.File(
-          System.getProperty("java.io.tmpdir"), s"graft_s24_wh_$tag")
-        val t = s"graft_s24_sq_$tag"
-        val base = emb(s, dir)
-        val mm = base.agg(
-          ArrayAggregates.ewMinDouble(col("a")).as("mins"),
-          ArrayAggregates.ewMaxDouble(col("a")).as("maxs")).head
-        val mn = mm.getSeq[Double](0)
-        val sc = mn.zip(mm.getSeq[Double](1)).map { case (lo, hi) => hi - lo }
-        val centroids = base.withColumn("scaled",
-            transform(col("a"), x => floor(x * 1e9).cast("long")))
-          .groupBy("label")
-          .agg(ArrayAggregates.ewSumLong(col("scaled")).as("ssum"),
-            count(lit(1)).as("cnt"))
-          .select(col("label"), transform(col("ssum"),
-            v => v.cast("double") / col("cnt").cast("double") / 1e9)
-            .as("centroid"))
-        val cs = centroids.collect() // bounded: one row per cell
-          .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
-        base.withColumn("sq", graft.plans.Sq8Encode(col("a"), mn, sc))
-          .select("vec_id", "label", "a", "sq")
-          .repartition(8, col("label"))
-          .write.bucketBy(8, "label").sortBy("label", "vec_id")
-          .option("path", new java.io.File(wh, "sq").getAbsolutePath)
-          .mode("overwrite").saveAsTable(t)
-        (t, cs, mn, sc)
-      }
-
   def s24_sq8_persisted(s: SparkSession, dir: String): DataFrame = {
-    def l2(x: Column, y: Column): Column = graft.plans.L2Distance(x, y)
-    val (tbl, cents, mins, scales) = sqStore(s, dir)
-    val qs = emb(s, dir).filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("query_id"), col("a").as("qa"))
-    val assigned = qs
-      .withColumn("pc", explode(probeCells2(cents, col("qa"))))
-      .select(col("query_id"), col("qa"), col("pc.c").as("probe_label"))
-    val probed = assigned.select("probe_label").distinct()
-      .collect().map(_.getInt(0)).sorted // bounded by the cell count
-    val idx = s.table(tbl).filter(col("label").isin(probed.toSeq: _*))
-    val cands = idx.join(broadcast(assigned),
-        col("label") === col("probe_label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc", graft.plans.Sq8Adc(col("qa"), col("sq"), mins, scales))
-      .withColumn("nadc", -col("adc") + lit(0.0))
-    val top20 = graft.plans.TopKPerKey(cands,
-        Seq("query_id"), "nadc", "vec_id", 20)
-      .drop("rank", "nadc", "sq")
-    // exact rerank on the stored full vectors — 20 rows per query
-    val reranked = top20
-      .withColumn("d2", l2(col("qa"), col("a")))
-      .withColumn("neg_d2", -col("d2") + lit(0.0))
-    graft.plans.TopKPerKey(reranked, Seq("query_id"), "neg_d2", "vec_id", 5)
-      .select(col("query_id"), col("rank").as("rk"),
-        col("vec_id").as("neighbor_id"),
-        floor(col("d2") * 1e9).cast("long").as("d2_fp"),
-        floor(col("adc") * 1e6).cast("long").as("adc_fp"))
-      .orderBy("query_id", "rk")
+    val (tbl, cs, mins, scales) = sqStore(s, dir)
+    refine(gather(s.table(tbl), probe(asQueries(emb(s, dir), 50), cs, 2), "label"),
+      graft.plans.Sq8Adc(col("qa"), col("sq"), mins, scales))
   }
 
   /** s25 — QUANTIZER BAKE-OFF: recall@3 of the two persisted quantized
@@ -1555,35 +1027,16 @@ object SimilarityQueries {
     * the 3-rows-per-query sets for the hit join — cost tracks s19+s24
     * serves, no new shuffle class. */
   def s25_quantizer_recall(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.KeyAlgebra.ldiv
-    def l2(x: Column, y: Column): Column = graft.plans.L2Distance(x, y)
-    def litArr(a: Seq[Double]): Column = array(a.map(lit): _*)
-    val (pqTbl, cents, cbFlat) = pqStore(s, dir)
+    val (pqTbl, cs, cb) = pqStore(s, dir)
     val (sqTbl, _, mins, scales) = sqStore(s, dir)
-    val qs = emb(s, dir).filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("query_id"), col("a").as("qa"))
-    val probes = qs
-      .withColumn("pc", explode(probeCells2WithCent(cents, col("qa"))))
-      .select(col("query_id"), col("qa"),
-        col("pc.c").as("probe_label"),
-        graft.plans.PQLut(zip_with(col("qa"), col("pc.cent"), _ - _),
-          cbFlat).as("qlut"))
-    val probed = probes.select("probe_label").distinct()
-      .collect().map(_.getInt(0)).sorted // bounded by the cell count
-    def top3(cand: DataFrame, ord: Column): DataFrame =
-      graft.plans.TopKPerKey(cand.withColumn("neg", negate(ord)),
-          Seq("query_id"), "neg", "vec_id", 3)
-        .select("query_id", "vec_id")
-    val pqCand = s.table(pqTbl).filter(col("label").isin(probed.toSeq: _*))
-      .join(broadcast(probes), col("label") === col("probe_label"))
-      .filter(col("vec_id") =!= col("query_id"))
+    val qs = asQueries(emb(s, dir), 50)
+    val probes = pqProbe(qs, cs, cb)
+    def top3(cand: DataFrame, d: Column): DataFrame =
+      nearest(cand.withColumn("d", d), "d", 3).select("query_id", "vec_id")
+    val pqCand = gather(s.table(pqTbl), probes, "label")
     val exact3 = top3(pqCand, l2(col("qa"), col("a")))
     val pq3 = top3(pqCand, graft.plans.PQAdc(col("qlut"), col("codes")))
-    val sqCand = s.table(sqTbl).filter(col("label").isin(probed.toSeq: _*))
-      .join(broadcast(probes.drop("qlut")),
-        col("label") === col("probe_label"))
-      .filter(col("vec_id") =!= col("query_id"))
-    val sq3 = top3(sqCand,
+    val sq3 = top3(gather(s.table(sqTbl), probes.drop("qlut"), "label"),
       graft.plans.Sq8Adc(col("qa"), col("sq"), mins, scales))
     val nq = qs.count()
     def row(approx: DataFrame, name: String, bytes: Long): DataFrame =
