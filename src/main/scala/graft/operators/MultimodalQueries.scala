@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{aggregate, col, expr, lit, max, zip_with}
 
-import graft.core.Tables
-import graft.sources.{Aiff, Avi, Flac, Jpeg, MediaCodec, Mp4, Png, Tga, Tiff}
+import graft.core.Engine
+import graft.sources.{Aiff, Avi, Ebml, Flac, Gif, Jpeg, MediaCodec, Mp3, Mp4,
+  Ogg, Pdf, Png, Srt, Tga, Tiff, Webp, Zip}
+import MediaFrames._
 
 /** Multimodal-column operators for the training-data pipeline: media
   * payloads ride as opaque `binary` columns next to a typed metadata
@@ -21,12 +23,14 @@ import graft.sources.{Aiff, Avi, Flac, Jpeg, MediaCodec, Mp4, Png, Tga, Tiff}
   * container ships no media fixtures, each query ENCODES a payload
   * deterministically from the document bytes in one mapPartitions stage,
   * then DECODES it in a second stage that sees only the opaque binary
-  * column. The DuckDB oracle replays the feature arithmetic on the
-  * document bytes directly and never sees the container format — so a
-  * decoder that mis-handles BGR order, bottom-up rows, scanline padding,
-  * header grammar or chunk alignment fails the hash compare. (The
-  * encode→decode pair shares no index arithmetic: encoders write the
-  * spec layout, decoders re-derive geometry from the parsed header.)
+  * column; [[MediaFrames]] owns the document source, the synthesis
+  * convention and the shared feature kernels, and each query here is a
+  * composition of them. The DuckDB oracle replays the feature arithmetic
+  * on the document bytes directly and never sees the container format —
+  * so a decoder that mis-handles BGR order, bottom-up rows, scanline
+  * padding, header grammar or chunk alignment fails the hash compare.
+  * (The encode→decode pair shares no index arithmetic: encoders write
+  * the spec layout, decoders re-derive geometry from the parsed header.)
   *
   * At 100 TB the encode stage disappears (payloads arrive as stored
   * bytes) and the decode stage is the scan-parallel seam shown here: no
@@ -34,116 +38,26 @@ import graft.sources.{Aiff, Avi, Flac, Jpeg, MediaCodec, Mp4, Png, Tga, Tiff}
   */
 object MultimodalQueries {
 
-  final case class MediaRow(doc_id: Long, payload: Array[Byte],
-                            format: String)
   final case class MediaFeature(doc_id: Long, width: Int, height: Int,
                                 channels: Int, format: String,
                                 lum_sum: Long, mean_lum: Double)
 
-  /** Shared 32-wide PGM grid for m03/m04/m06: rows of document bytes,
-    * last byte repeated to pad the final row. An empty document maps to
-    * one all-zero row — h would otherwise be 0 and every decode-side
-    * pixel access would crash; all-zero pixels reproduce what the DuckDB
-    * oracles compute for empty text (ascii('') = 0 at every tap), so the
-    * guard is oracle-faithful, not just crash-proof. */
-  private def pgmGrid(id: Long, text: String): MediaRow = {
-    val bytes = text.getBytes("US-ASCII")
-    val len = bytes.length
-    val h = math.max(1, (len + 31) / 32)
-    val gray =
-      if (len == 0) new Array[Byte](32)
-      else Array.tabulate(32 * h)(i => bytes(math.min(i, len - 1)))
-    MediaRow(id, MediaCodec.encodePgm(32, h, gray), "pgm")
-  }
-
-  /** JPEG twin of [[pgmGrid]]: a 32-px-wide grayscale baseline JPEG
-    * whose 8×8 blocks (raster order, 4 per row, (len/32)%16+1 block
-    * rows) are flat values cycling through the document bytes, written
-    * with restart interval 3 so the production decode path crosses DC
-    * predictor resets. Flat blocks decode bit-exactly (see [[Jpeg]]),
-    * so the oracle replays pixel(x, y) = byte((4·(y/8) + x/8) mod len)
-    * with no JPEG knowledge; an empty document is one all-zero block
-    * row. m06/m11 route ODD doc_ids through this — half the corpus
-    * exercises the real lossy-format container end to end. */
-  private def jpegGrid(id: Long, text: String): MediaRow = {
-    val bytes = text.getBytes("US-ASCII")
-    val len = bytes.length
-    val hb = (len / 32) % 16 + 1
-    val vals = Array.tabulate(4 * hb)(k =>
-      if (len == 0) 0 else bytes(k % len) & 0xFF)
-    MediaRow(id, Jpeg.encodeGrayFlat(32, 8 * hb, vals, dri = 3), "jpeg")
-  }
-
-  /** m01 — image decode + feature extraction. Per document: an image
+  /** m01 — image decode + feature extraction. Per document an image
     * (w = len%64+1, h = len/64%64+1) encoded as BMP-24 / BMP-32 / PPM
     * (RGB channel bytes cycling through the document bytes) or as an
     * 8-bpp PALETTED BMP (grayscale color table; one document byte per
-    * pixel) by doc_id%4, then decoded by magic-byte sniffing; features
-    * are the decoded header geometry plus integer ITU-R BT.601 luma
-    * (77R+150G+29B — for the paletted grayscale path that is exactly
-    * 256·b per pixel, so the oracle stays integer-exact). */
-  /** The m01 container mix (BMP-24/BMP-32/PPM/paletted BMP-8 by
-    * doc_id%4, RGB bytes cycling through the document), shared by m01
-    * and m23. */
-  private def m01Media(s: SparkSession, dir: String)
-      : org.apache.spark.sql.Dataset[MediaRow] = {
-    import s.implicits._
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          // the oracle replays this arithmetic via ascii() code points, so
-          // the encode must see one byte per char: getBytes("US-ASCII")
-          // silently folds non-ASCII to '?' (63) and would diverge — fail
-          // loud instead of producing a wrong-but-plausible feature row
-          require(text.forall(_ < 128),
-            s"doc $id: non-ASCII char — pixel bytes would diverge from code points")
-          val bytes = text.getBytes("US-ASCII")
-          val len = bytes.length
-          // empty doc: deterministic 1x1 black image (w = 0%64+1 = 1 and
-          // h = 1 match the size formula; a zero pixel replaces the
-          // undefined bytes(k % 0) access)
-          val w = len % 64 + 1
-          val h = (len / 64) % 64 + 1
-          def rgb =
-            if (len == 0) new Array[Byte](3)
-            else Array.tabulate(w * h * 3)(k => bytes(k % len))
-          (id % 4) match {
-            case 0 => MediaRow(id, MediaCodec.encodeBmp24(w, h, rgb), "bmp24")
-            case 1 => MediaRow(id, MediaCodec.encodeBmp32(w, h, rgb), "bmp32")
-            case 2 => MediaRow(id, MediaCodec.encodePpm(w, h, rgb), "ppm")
-            case _ =>
-              val gray =
-                if (len == 0) new Array[Byte](1)
-                else Array.tabulate(w * h)(p => bytes(p % len))
-              MediaRow(id, MediaCodec.encodeBmp8(w, h, gray), "bmp8")
-          }
-        }
-      }
-  }
-
-  def m01_media_features(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = m01Media(s, dir)
-    media.mapPartitions { it =>
-      it.map { r =>
-        val img = MediaCodec.decodeImage(r.payload) // sniffed, not trusted
-        var lum = 0L
-        var p = 0
-        val n = img.width * img.height
-        while (p < n) {
-          lum += 77L * (img.pixels(3 * p) & 0xFF) +
-            150L * (img.pixels(3 * p + 1) & 0xFF) +
-            29L * (img.pixels(3 * p + 2) & 0xFF)
-          p += 1
-        }
-        MediaFeature(r.doc_id, img.width, img.height, img.channels, r.format,
-          lum, lum / (n * 256.0))
-      }
-    }.toDF()
-      .orderBy("doc_id")
-  }
+    * pixel) by doc_id%4 ([[MediaFrames.m01Mix]]), then decoded by
+    * magic-byte sniffing; features are the decoded header geometry plus
+    * integer ITU-R BT.601 luma (77R+150G+29B — for the paletted
+    * grayscale path that is exactly 256·b per pixel, so the oracle stays
+    * integer-exact). */
+  def m01_media_features(s: SparkSession, dir: String): DataFrame =
+    features(encode(docs(s, dir))(m01Mix)) { r =>
+      val img = MediaCodec.decodeImage(r.payload) // sniffed, not trusted
+      val lum = lumaSum(img)
+      MediaFeature(r.doc_id, img.width, img.height, img.channels, r.format,
+        lum, lum / (img.width * img.height * 256.0))
+    }
 
   final case class InterlaceFeature(doc_id: Long, width: Long, height: Long,
                                     luma_sum: Long, pos_hash: Long)
@@ -162,60 +76,25 @@ object MultimodalQueries {
     *
     * Scale shape: encode+decode+reduce in one scan pass, no shuffle. */
   def m24_png_interlaced(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          require(text.forall(_ < 128),
-            s"doc $id: non-ASCII char — pixel bytes would diverge from code points")
-          val bytes = text.getBytes("US-ASCII")
-          val len = bytes.length
-          val w = len % 64 + 1
-          val h = (len / 64) % 64 + 1
-          if (id % 2 == 0) {
-            val gray =
-              if (len == 0) new Array[Byte](1)
-              else Array.tabulate(w * h)(p => bytes(p % len))
-            MediaRow(id, Png.encodeAdam7(w, h, 1, gray), "png-i1")
-          } else {
-            val rgb =
-              if (len == 0) new Array[Byte](3)
-              else Array.tabulate(w * h * 3)(k => bytes(k % len))
-            MediaRow(id, Png.encodeAdam7(w, h, 3, rgb), "png-i3")
-          }
-        }
+    val media = encode(docs(s, dir)) { (id, b) =>
+      val img = cycling(b, if (id % 2 == 0) 1 else 3)
+      MediaRow(id, Png.encodeAdam7(img.width, img.height, img.channels,
+        img.pixels), s"png-i${img.channels}")
+    }
+    features(media) { r =>
+      val img = MediaCodec.decodeImage(r.payload)
+      var lum = 0L
+      var ph = 0L
+      var p = 0
+      while (p < img.width * img.height) {
+        val l = luma601(img, p)
+        lum += l
+        ph += l * (p % 97 + 1)
+        p += 1
       }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val img = MediaCodec.decodeImage(r.payload)
-        var lum = 0L
-        var ph = 0L
-        val n = img.width * img.height
-        var p = 0
-        if (img.channels == 3) {
-          while (p < n) {
-            val l = 77L * (img.pixels(3 * p) & 0xFF) +
-              150L * (img.pixels(3 * p + 1) & 0xFF) +
-              29L * (img.pixels(3 * p + 2) & 0xFF)
-            lum += l
-            ph += l * (p % 97 + 1)
-            p += 1
-          }
-        } else {
-          while (p < n) {
-            val l = 256L * (img.pixels(p) & 0xFF)
-            lum += l
-            ph += l * (p % 97 + 1)
-            p += 1
-          }
-        }
-        InterlaceFeature(r.doc_id, img.width.toLong, img.height.toLong,
-          lum, ph)
-      }
-    }.toDF()
-      .orderBy("doc_id")
+      InterlaceFeature(r.doc_id, img.width.toLong, img.height.toLong,
+        lum, ph)
+    }
   }
 
   final case class ColorStat(doc_id: Long, n_pixels: Long, dom_cell: Long,
@@ -233,88 +112,65 @@ object MultimodalQueries {
     *
     * Scale shape: decode + 64-cell histogram + argmax all inside one
     * mapPartitions pass; no shuffle beyond the output sort. */
-  def m23_dominant_color(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    m01Media(s, dir).mapPartitions { it =>
-      it.map { r =>
-        val img = MediaCodec.decodeImage(r.payload)
-        val hist = new Array[Long](64)
-        val n = img.width * img.height
-        var p = 0
-        while (p < n) {
-          val cell = ((img.pixels(3 * p) & 0xFF) >> 6) * 16 +
-            ((img.pixels(3 * p + 1) & 0xFF) >> 6) * 4 +
-            ((img.pixels(3 * p + 2) & 0xFF) >> 6)
-          hist(cell) += 1
-          p += 1
-        }
-        var dom = 0
-        var occ = 0L
-        var c = 0
-        while (c < 64) {
-          if (hist(c) > 0) occ += 1
-          if (hist(c) > hist(dom)) dom = c
-          c += 1
-        }
-        ColorStat(r.doc_id, n.toLong, dom.toLong, hist(dom), occ)
+  def m23_dominant_color(s: SparkSession, dir: String): DataFrame =
+    features(encode(docs(s, dir))(m01Mix)) { r =>
+      val img = MediaCodec.decodeImage(r.payload)
+      val hist = new Array[Long](64)
+      val n = img.width * img.height
+      var p = 0
+      while (p < n) {
+        val cell = ((img.pixels(3 * p) & 0xFF) >> 6) * 16 +
+          ((img.pixels(3 * p + 1) & 0xFF) >> 6) * 4 +
+          ((img.pixels(3 * p + 2) & 0xFF) >> 6)
+        hist(cell) += 1
+        p += 1
       }
-    }.toDF()
-      .orderBy("doc_id")
-  }
+      var dom = 0
+      var occ = 0L
+      var c = 0
+      while (c < 64) {
+        if (hist(c) > 0) occ += 1
+        if (hist(c) > hist(dom)) dom = c
+        c += 1
+      }
+      ColorStat(r.doc_id, n.toLong, dom.toLong, hist(dom), occ)
+    }
 
   final case class AudioFeature(doc_id: Long, sample_rate: Long,
                                 n_frames: Long, n_sampled: Long,
                                 amp_sum: Long, mean_amp: Double)
 
-  /** m02 — audio frame sampling: per document a mono PCM16 WAV (one
-    * sample per document byte, s = (b-96)*128), decoded through the RIFF
-    * chunk walk; frames of 32 samples, every 4th frame sampled, mean
-    * absolute amplitude pooled over the sampled frames. */
+  /** m02 — audio frame sampling: per document a mono PCM16 clip (one
+    * sample per document byte, s = (b-96)*128; odd ids FLAC, even WAV —
+    * [[MediaFrames.wavOrFlac]]), decoded through the container walk;
+    * frames of 32 samples, every 4th frame sampled, mean absolute
+    * amplitude pooled over the sampled frames. */
   def m02_frame_sample(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val frameLen = 32
     val stride = 4
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val bytes = text.getBytes("US-ASCII")
-          val samples = Array.tabulate(bytes.length)(i =>
-            (((bytes(i) & 0xFF) - 96) * 128).toShort)
-          // odd ids ship FLAC, even ids WAV — the m08 mixed-corpus seam
-          if (id % 2 == 1)
-            MediaRow(id, Flac.encode(8000, 1, samples), "flac")
-          else MediaRow(id, MediaCodec.encodeWav(8000, samples), "wav16")
+    features(encode(docs(s, dir))(wavOrFlac)) { r =>
+      val audio = MediaCodec.decodeAudio(r.payload)
+      val n = audio.samples.length
+      val nFrames = (n + frameLen - 1) / frameLen
+      var ampSum = 0L
+      var nsSamples = 0L
+      var nSampled = 0L
+      var f = 0
+      while (f < nFrames) {
+        val until = math.min(f * frameLen + frameLen, n)
+        var i = f * frameLen
+        while (i < until) {
+          ampSum += math.abs(audio.samples(i).toLong)
+          i += 1
         }
+        nsSamples += until - f * frameLen
+        nSampled += 1
+        f += stride
       }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val audio = MediaCodec.decodeAudio(r.payload)
-        val n = audio.samples.length
-        val nFrames = (n + frameLen - 1) / frameLen
-        var ampSum = 0L
-        var nsSamples = 0L
-        var nSampled = 0L
-        var f = 0
-        while (f < nFrames) {
-          val until = math.min(f * frameLen + frameLen, n)
-          var i = f * frameLen
-          while (i < until) {
-            ampSum += math.abs(audio.samples(i).toLong)
-            i += 1
-          }
-          nsSamples += until - f * frameLen
-          nSampled += 1
-          f += stride
-        }
-        AudioFeature(r.doc_id, audio.sampleRate.toLong, nFrames.toLong,
-          nSampled, ampSum, ampSum / nsSamples.toDouble)
-      }
-    }.toDF()
-      .orderBy("doc_id")
+      AudioFeature(r.doc_id, audio.sampleRate.toLong, nFrames.toLong,
+        nSampled, ampSum, ampSum / nsSamples.toDouble)
+    }
   }
-
 
   final case class ResampleRow(doc_id: Long, rate_in: Long, rate_out: Long,
                                n_in: Long, n_out: Long, amp_in: Long,
@@ -323,7 +179,7 @@ object MultimodalQueries {
   /** m16 — audio resampling (8 kHz → 16 kHz, exact 2× linear
     * interpolation): the sample-rate normalization every speech corpus
     * pays before a 16 kHz acoustic model sees it. The clip rides m02's
-    * real RIFF/WAVE encode→decode; upsampling inserts the midpoint
+    * real encode→decode; upsampling inserts the midpoint
     * between neighbors — out[2i] = s[i], out[2i+1] =
     * ⌊(s[i]+s[i+1])/2⌋ (floor division toward −∞ on the sum, the
     * convention both engines replay exactly), the final odd slot
@@ -336,81 +192,52 @@ object MultimodalQueries {
     * Scale shape: scan-parallel mapPartitions, one decoder + one O(n)
     * loop per clip, no shuffle before the output sort — 100 TB of
     * audio resamples at decode speed. */
-  def m16_audio_resample(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val bytes = text.getBytes("US-ASCII")
-          val samples = Array.tabulate(bytes.length)(i =>
-            (((bytes(i) & 0xFF) - 96) * 128).toShort)
-          // odd ids ship FLAC, even ids WAV (the m08 mixed-corpus seam):
-          // lossless either way, so the resample arithmetic and the
-          // oracle are container-blind
-          if (id % 2 == 1)
-            MediaRow(id, Flac.encode(8000, 1, samples), "flac")
-          else MediaRow(id, MediaCodec.encodeWav(8000, samples), "wav16")
-        }
+  def m16_audio_resample(s: SparkSession, dir: String): DataFrame =
+    features(encode(docs(s, dir))(wavOrFlac)) { r =>
+      val audio = MediaCodec.decodeAudio(r.payload)
+      val in = audio.samples
+      val n = in.length
+      val out = new Array[Int](2 * n)
+      var i = 0
+      while (i < n) {
+        out(2 * i) = in(i).toInt
+        out(2 * i + 1) =
+          if (i + 1 < n) Math.floorDiv(in(i).toInt + in(i + 1).toInt, 2)
+          else in(i).toInt
+        i += 1
       }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val audio = MediaCodec.decodeAudio(r.payload)
-        val in = audio.samples
-        val n = in.length
-        val out = new Array[Int](2 * n)
-        var i = 0
-        while (i < n) {
-          out(2 * i) = in(i).toInt
-          out(2 * i + 1) =
-            if (i + 1 < n) Math.floorDiv(in(i).toInt + in(i + 1).toInt, 2)
-            else in(i).toInt
-          i += 1
-        }
-        var ampIn = 0L; var ampOut = 0L
-        i = 0
-        while (i < n) { ampIn += math.abs(in(i).toLong); i += 1 }
-        i = 0
-        while (i < 2 * n) { ampOut += math.abs(out(i).toLong); i += 1 }
-        ResampleRow(r.doc_id, audio.sampleRate.toLong, 16000L, n.toLong,
-          2L * n, ampIn, ampOut,
-          if (n == 0) 0.0 else ampOut / (2.0 * n))
-      }
-    }.toDF()
-      .orderBy("doc_id")
-  }
+      var ampIn = 0L; var ampOut = 0L
+      i = 0
+      while (i < n) { ampIn += math.abs(in(i).toLong); i += 1 }
+      i = 0
+      while (i < 2 * n) { ampOut += math.abs(out(i).toLong); i += 1 }
+      ResampleRow(r.doc_id, audio.sampleRate.toLong, 16000L, n.toLong,
+        2L * n, ampIn, ampOut,
+        if (n == 0) 0.0 else ampOut / (2.0 * n))
+    }
 
   final case class ResizeSample(doc_id: Long, n_samples: Long,
                                 byte_sum: Long, mean_px: Double)
 
   /** m03 — resize plumbing over a REAL grayscale image: the document
     * bytes fill a W=32-wide PGM grid (H = ceil(len/32), padding
-    * replicates the last byte), the P5 header + raster is decoded back,
-    * and a nearest-neighbor 8×8 downsample pools the pixels — the index
-    * arithmetic of an image resize over actually-decoded pixels. */
-  def m03_resize_sample(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) => pgmGrid(id, text) })
-    media.mapPartitions { it =>
-      it.map { r =>
-        val img = MediaCodec.decodeImage(r.payload)
-        var sum = 0L
-        var k = 0
-        while (k < 64) {
-          val srcR = (k / 8) * img.height / 8
-          val srcC = (k % 8) * 4
-          sum += (img.pixels(srcR * img.width + srcC) & 0xFF).toLong
-          k += 1
-        }
-        ResizeSample(r.doc_id, 64L, sum, sum / 64.0)
+    * replicates the last byte — [[MediaFrames.pgmGrid]]), the P5
+    * header + raster is decoded back, and a nearest-neighbor 8×8
+    * downsample pools the pixels — the index arithmetic of an image
+    * resize over actually-decoded pixels. */
+  def m03_resize_sample(s: SparkSession, dir: String): DataFrame =
+    features(encode(docs(s, dir))(pgmGrid)) { r =>
+      val img = MediaCodec.decodeImage(r.payload)
+      var sum = 0L
+      var k = 0
+      while (k < 64) {
+        val srcR = (k / 8) * img.height / 8
+        val srcC = (k % 8) * 4
+        sum += (img.pixels(srcR * img.width + srcC) & 0xFF).toLong
+        k += 1
       }
-    }.toDF()
-      .orderBy("doc_id")
-  }
+      ResizeSample(r.doc_id, 64L, sum, sum / 64.0)
+    }
 
   final case class BilinearSample(doc_id: Long, n_out: Long,
                                   bl_sum: Long, mean_bl: Double)
@@ -423,38 +250,29 @@ object MultimodalQueries {
     * Same two-stage opaque-binary seam as m01–m03; at scale this is the
     * standard thumbnail/feature-pyramid pass — scan-parallel, one codec
     * per partition, no shuffle. */
-  def m04_resize_bilinear(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) => pgmGrid(id, text) })
-    media.mapPartitions { it =>
-      it.map { r =>
-        val img = MediaCodec.decodeImage(r.payload)
-        val (w, h) = (img.width, img.height)
-        def px(y: Int, x: Int): Long =
-          (img.pixels(y * w + x) & 0xFF).toLong
-        var sum = 0L
-        var k = 0
-        while (k < 64) {
-          val srn = (k / 8) * (h - 1) // align-corners: r*(H-1)/7
-          val scn = (k % 8) * (w - 1)
-          val qr = srn / 7; val fr = (srn % 7).toLong
-          val qc = scn / 7; val fc = (scn % 7).toLong
-          val qr1 = math.min(qr + 1, h - 1)
-          val qc1 = math.min(qc + 1, w - 1)
-          sum += (7 - fr) * (7 - fc) * px(qr, qc) +
-            (7 - fr) * fc * px(qr, qc1) +
-            fr * (7 - fc) * px(qr1, qc) +
-            fr * fc * px(qr1, qc1)
-          k += 1
-        }
-        BilinearSample(r.doc_id, 64L, sum, sum / (64 * 49.0))
+  def m04_resize_bilinear(s: SparkSession, dir: String): DataFrame =
+    features(encode(docs(s, dir))(pgmGrid)) { r =>
+      val img = MediaCodec.decodeImage(r.payload)
+      val (w, h) = (img.width, img.height)
+      def px(y: Int, x: Int): Long =
+        (img.pixels(y * w + x) & 0xFF).toLong
+      var sum = 0L
+      var k = 0
+      while (k < 64) {
+        val srn = (k / 8) * (h - 1) // align-corners: r*(H-1)/7
+        val scn = (k % 8) * (w - 1)
+        val qr = srn / 7; val fr = (srn % 7).toLong
+        val qc = scn / 7; val fc = (scn % 7).toLong
+        val qr1 = math.min(qr + 1, h - 1)
+        val qc1 = math.min(qc + 1, w - 1)
+        sum += (7 - fr) * (7 - fc) * px(qr, qc) +
+          (7 - fr) * fc * px(qr, qc1) +
+          fr * (7 - fc) * px(qr1, qc) +
+          fr * fc * px(qr1, qc1)
+        k += 1
       }
-    }.toDF()
-      .orderBy("doc_id")
-  }
+      BilinearSample(r.doc_id, 64L, sum, sum / (64 * 49.0))
+    }
 
   final case class AudioStats(doc_id: Long, n_samples: Long, zcr: Long,
                               energy: Long, peak: Long)
@@ -462,43 +280,14 @@ object MultimodalQueries {
   /** m05 — audio feature extraction over the decoded PCM stream (the
     * classic speech/music triage features, all exact integers so the
     * oracle replays them): zero-crossing count (strict sign flip across
-    * the 0 boundary), total energy Σs², and peak |s|. Same WAV payload
-    * as m02, same opaque-binary two-stage seam. */
-  def m05_audio_features(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val bytes = text.getBytes("US-ASCII")
-          val samples = Array.tabulate(bytes.length)(i =>
-            (((bytes(i) & 0xFF) - 96) * 128).toShort)
-          // odd ids ship FLAC, even ids WAV — the m08 mixed-corpus seam
-          if (id % 2 == 1)
-            MediaRow(id, Flac.encode(8000, 1, samples), "flac")
-          else MediaRow(id, MediaCodec.encodeWav(8000, samples), "wav16")
-        }
-      }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val a = MediaCodec.decodeAudio(r.payload).samples
-        var zcr = 0L
-        var energy = 0L
-        var peak = 0L
-        var i = 0
-        while (i < a.length) {
-          val v = a(i).toLong
-          energy += v * v
-          if (math.abs(v) > peak) peak = math.abs(v)
-          if (i > 0 && ((a(i - 1) < 0) != (v < 0))) zcr += 1
-          i += 1
-        }
-        AudioStats(r.doc_id, a.length.toLong, zcr, energy, peak)
-      }
-    }.toDF()
-      .orderBy("doc_id")
-  }
+    * the 0 boundary), total energy Σs², and peak |s|. Same payload as
+    * m02, same opaque-binary two-stage seam. */
+  def m05_audio_features(s: SparkSession, dir: String): DataFrame =
+    features(encode(docs(s, dir))(wavOrFlac)) { r =>
+      val a = MediaCodec.decodeAudio(r.payload).samples
+      val (zcr, energy, peak) = audioStats(a)
+      AudioStats(r.doc_id, a.length.toLong, zcr, energy, peak)
+    }
 
   /** m06 — perceptual image dedup via difference hash (dHash): each
     * document's PGM image (m04's grid) is nearest-sampled to a 9×8
@@ -509,53 +298,32 @@ object MultimodalQueries {
     * proposes candidates, Hamming distance ≤ 6 verifies. This is the
     * image-side twin of MinHash text dedup — the standard near-dup
     * scrub for a multimodal training corpus. ODD doc_ids ship their
-    * grid as a real baseline JPEG ([[jpegGrid]]) instead of PGM — the
-    * decode stage is format-blind (magic-byte sniff), so half the
-    * corpus drives the full T.81 chain.
+    * grid as a real baseline JPEG ([[MediaFrames.grayGrid]]) instead of
+    * PGM — the decode stage is format-blind (magic-byte sniff), so half
+    * the corpus drives the full T.81 chain.
     *
     * Scale shape: hash is one scan-parallel codec pass (8 B/image
     * index); the band join is an equi-join on 16-bit keys (bounded
     * buckets, same skew story as d03/d04); verify is two longs XOR +
     * popcount per candidate. */
   def m06_image_dhash(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        if (id % 2 == 1) jpegGrid(id, text) else pgmGrid(id, text) })
-    val hashed = media.mapPartitions { it =>
-      it.map { r =>
-        val img = MediaCodec.decodeImage(r.payload)
-        val (w, h) = (img.width, img.height)
-        def g(rr: Int, cc: Int): Int = {
-          val y = rr * (h - 1) / 7
-          val x = cc * (w - 1) / 8
-          img.pixels(y * w + x) & 0xFF
-        }
-        var hash = 0L
-        var b = 0
-        while (b < 63) {
-          if (g(b / 8, b % 8) > g(b / 8, b % 8 + 1)) hash |= 1L << b
-          b += 1
-        }
-        (r.doc_id, hash)
+    val hashed = rows(encode(docs(s, dir))(grayGrid), "doc_id", "dhash") { r =>
+      val img = MediaCodec.decodeImage(r.payload)
+      val (w, h) = (img.width, img.height)
+      def g(rr: Int, cc: Int): Int = {
+        val y = rr * (h - 1) / 7
+        val x = cc * (w - 1) / 8
+        img.pixels(y * w + x) & 0xFF
       }
-    }.toDF("doc_id", "dhash")
-    val bands = hashed.select(col("doc_id"), col("dhash"), explode(
-        array((0 until 4).map(b => struct(lit(b).as("b"),
-          shiftright(col("dhash"), 16 * b).bitwiseAND(65535L).as("key"))): _*))
-        .as("bk"))
-      .select(col("doc_id"), col("dhash"), col("bk.b"), col("bk.key"))
-    bands.as("x").join(bands.as("y"),
-        col("x.b") === col("y.b") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        bit_count(col("x.dhash").bitwiseXOR(col("y.dhash"))).cast("long")
-          .as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= 6)
-      .orderBy("doc_a", "doc_b")
+      var hash = 0L
+      var b = 0
+      while (b < 63) {
+        if (g(b / 8, b % 8) > g(b / 8, b % 8 + 1)) hash |= 1L << b
+        b += 1
+      }
+      (r.doc_id, hash)
+    }
+    hammingPairs(hashed, "dhash", 4, 6).orderBy("doc_a", "doc_b")
   }
 
   /** m21 — block-mean perceptual hash (the public block-mean-value
@@ -577,48 +345,27 @@ object MultimodalQueries {
     * 8 B/image; the band join is an equi-join on 16-bit keys with the
     * d03/d04 bounded-bucket skew story; verify is XOR + popcount. */
   def m21_block_phash(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        if (id % 2 == 1) jpegGrid(id, text) else pgmGrid(id, text) })
-    val hashed = media.mapPartitions { it =>
-      it.map { r =>
-        val img = MediaCodec.decodeImage(r.payload)
-        val (w, h) = (img.width, img.height)
-        val grid = Array.tabulate(256) { k =>
-          val y = (k / 16) * (h - 1) / 15
-          val x = (k % 16) * (w - 1) / 15
-          img.pixels(y * w + x) & 0xFF
-        }
-        val sums = Array.tabulate(64) { b =>
-          val r0 = 2 * (b / 8); val c0 = 2 * (b % 8)
-          grid(r0 * 16 + c0) + grid(r0 * 16 + c0 + 1) +
-            grid((r0 + 1) * 16 + c0) + grid((r0 + 1) * 16 + c0 + 1)
-        }
-        val sorted = sums.clone(); java.util.Arrays.sort(sorted)
-        val med = sorted(31) // lower median of the 64 block sums
-        var hash = 0L
-        var b = 0
-        while (b < 63) { if (sums(b) > med) hash |= 1L << b; b += 1 }
-        (r.doc_id, hash)
+    val hashed = rows(encode(docs(s, dir))(grayGrid), "doc_id", "ph") { r =>
+      val img = MediaCodec.decodeImage(r.payload)
+      val (w, h) = (img.width, img.height)
+      val grid = Array.tabulate(256) { k =>
+        val y = (k / 16) * (h - 1) / 15
+        val x = (k % 16) * (w - 1) / 15
+        img.pixels(y * w + x) & 0xFF
       }
-    }.toDF("doc_id", "ph")
-    val bands = hashed.select(col("doc_id"), col("ph"), explode(
-        array((0 until 4).map(b => struct(lit(b).as("b"),
-          shiftright(col("ph"), 16 * b).bitwiseAND(65535L).as("key"))): _*))
-        .as("bk"))
-      .select(col("doc_id"), col("ph"), col("bk.b"), col("bk.key"))
-    bands.as("x").join(bands.as("y"),
-        col("x.b") === col("y.b") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        bit_count(col("x.ph").bitwiseXOR(col("y.ph"))).cast("long")
-          .as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= 6)
-      .orderBy("doc_a", "doc_b")
+      val sums = Array.tabulate(64) { b =>
+        val r0 = 2 * (b / 8); val c0 = 2 * (b % 8)
+        grid(r0 * 16 + c0) + grid(r0 * 16 + c0 + 1) +
+          grid((r0 + 1) * 16 + c0) + grid((r0 + 1) * 16 + c0 + 1)
+      }
+      val sorted = sums.clone(); java.util.Arrays.sort(sorted)
+      val med = sorted(31) // lower median of the 64 block sums
+      var hash = 0L
+      var b = 0
+      while (b < 63) { if (sums(b) > med) hash |= 1L << b; b += 1 }
+      (r.doc_id, hash)
+    }
+    hammingPairs(hashed, "ph", 4, 6).orderBy("doc_a", "doc_b")
   }
 
   final case class TiffMeta(doc_id: Long, width: Long, height: Long,
@@ -630,7 +377,7 @@ object MultimodalQueries {
     * whose header is TYPED METADATA (tag, type, count,
     * inline-value-or-offset) rather than a fixed struct, so decoding it
     * is precisely the "opaque binary column + typed metadata" seam this
-    * family exists to exercise. Each document's [[pgmGrid]]-convention
+    * family exists to exercise. Each document's [[MediaFrames.grid32]]
     * pixels ship as a multi-strip uncompressed gray TIFF — EVEN doc_ids
     * little-endian ("II"), ODD big-endian ("MM"), so both byte orders
     * decode on every run; images taller than 4 rows force the strip
@@ -641,29 +388,14 @@ object MultimodalQueries {
     *
     * Scale shape: encode+decode+reduce ride the scan — one pass, no
     * shuffle beyond the final orderBy. */
-  def m22_tiff_metadata(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        val bytes = text.getBytes("US-ASCII")
-        val len = bytes.length
-        val h = math.max(1, (len + 31) / 32)
-        val gray =
-          if (len == 0) new Array[Byte](32)
-          else Array.tabulate(32 * h)(i => bytes(math.min(i, len - 1)))
-        val payload = Tiff.encodeGray(32, h, gray, bigEndian = id % 2 == 1)
-        val d = Tiff.decode(payload)
-        var luma = 0L
-        d.image.pixels.foreach(p => luma += (p & 0xFF))
-        TiffMeta(id, d.image.width.toLong, d.image.height.toLong,
-          d.nStrips.toLong, d.nTags.toLong, if (d.bigEndian) 2L else 1L,
-          luma)
-      })
-      .toDF()
-      .orderBy("doc_id")
-  }
+  def m22_tiff_metadata(s: SparkSession, dir: String): DataFrame =
+    features(docs(s, dir)) { case (id, b) =>
+      val (h, gray) = grid32(b)
+      val d = Tiff.decode(Tiff.encodeGray(32, h, gray, bigEndian = id % 2 == 1))
+      TiffMeta(id, d.image.width.toLong, d.image.height.toLong,
+        d.nStrips.toLong, d.nTags.toLong, if (d.bigEndian) 2L else 1L,
+        byteSum(d.image.pixels))
+    }
 
   final case class VideoFeature(doc_id: Long, n_frames: Long, luma0: Long,
                                 motion: Long)
@@ -671,7 +403,8 @@ object MultimodalQueries {
   /** m07 — VIDEO-shaped multimodal pass: each document becomes a
     * multi-frame motion-PGM container (2–7 self-describing 4×4 P5
     * frames, frame f pixel p = byte (f + 3p) mod len — temporally
-    * shifting content, so inter-frame deltas are non-trivial), decoded
+    * shifting content, so inter-frame deltas are non-trivial;
+    * [[MediaFrames.pgmClip]]), decoded
     * through the REAL sequential container walk
     * ([[MediaCodec.decodePgmFrames]]), and reduced to the two classic
     * video triage features: first-frame luma and total motion
@@ -681,45 +414,15 @@ object MultimodalQueries {
     * same two-stage opaque-binary seam, scan-parallel, no shuffle. An
     * empty document maps to all-zero frames (the m03/m04/m06 guard
     * convention: ascii('') = 0 on the oracle side). */
-  def m07_video_motion(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        val bytes = text.getBytes("US-ASCII")
-        val len = bytes.length
-        val f = len % 6 + 2
-        val payload = (0 until f).map { fr =>
-          val gray = Array.tabulate(16)(p =>
-            if (len == 0) 0.toByte else bytes((fr + 3 * p) % len))
-          MediaCodec.encodePgm(4, 4, gray)
-        }.reduce(_ ++ _)
-        MediaRow(id, payload, "mpgm")
-      })
-    media.mapPartitions(_.map { r =>
-      val frames = MediaCodec.decodePgmFrames(r.payload)
-      var luma0 = 0L
-      frames.head.pixels.foreach(b => luma0 += (b & 0xFF))
-      var motion = 0L
-      var f = 1
-      while (f < frames.length) {
-        val a = frames(f - 1).pixels
-        val b = frames(f).pixels
-        var p = 0
-        while (p < b.length) {
-          motion += math.abs((b(p) & 0xFF) - (a(p) & 0xFF))
-          p += 1
-        }
-        f += 1
-      }
-      VideoFeature(r.doc_id, frames.length.toLong, luma0, motion)
-    }).toDF()
-      .orderBy("doc_id")
-  }
+  def m07_video_motion(s: SparkSession, dir: String): DataFrame =
+    features(encode(docs(s, dir))(pgmClip(_, _, shots = false))) { r =>
+      val frames = MediaCodec.decodePgmFrames(r.payload).map(_.pixels)
+      VideoFeature(r.doc_id, frames.length.toLong, byteSum(frames.head),
+        sads(frames).sum)
+    }
 
   /** m08 — audio near-dup scrub via energy-delta fingerprints (the
-    * Haitsma-Kalker shape): each document's WAV (m05's synthesis) is
+    * Haitsma-Kalker shape): each document's clip (m05's synthesis) is
     * cut into 33 equal-duration segments — duration-relative, so the
     * fingerprint is length-invariant like a real audio fingerprint is
     * tempo-robust — and each of the 32 segment transitions contributes
@@ -732,23 +435,9 @@ object MultimodalQueries {
     * of index per clip); the band join is bounded-bucket (16-bit keys)
     * with the d03/d04 skew story; verify is XOR + popcount. */
   def m08_audio_fingerprint(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .filter(_._2.length >= 33) // need one sample per segment
-      .mapPartitions(_.map { case (id, text) =>
-        val bytes = text.getBytes("US-ASCII")
-        val samples = Array.tabulate(bytes.length)(i =>
-          (((bytes(i) & 0xFF) - 96) * 128).toShort)
-        // odd ids ship FLAC ([[graft.sources.Flac]]), even ids WAV: the
-        // decode stage sniffs magic bytes, and FLAC is lossless so the
-        // fingerprint arithmetic — and the oracle — see identical PCM
-        if (id % 2 == 1)
-          MediaRow(id, graft.sources.Flac.encode(8000, 1, samples), "flac")
-        else MediaRow(id, MediaCodec.encodeWav(8000, samples), "wav16")
-      })
-    val fps = media.mapPartitions(_.map { r =>
+    // need one sample per segment
+    val media = encode(docs(s, dir).filter(_._2.length >= 33))(wavOrFlac)
+    val fps = rows(media, "doc_id", "fp") { r =>
       val a = MediaCodec.decodeAudio(r.payload).samples
       val len = a.length
       val es = Array.tabulate(33) { f =>
@@ -762,21 +451,8 @@ object MultimodalQueries {
       var b = 0
       while (b < 32) { if (es(b + 1) > es(b)) fp |= 1L << b; b += 1 }
       (r.doc_id, fp)
-    }).toDF("doc_id", "fp")
-    val bands = fps.select(col("doc_id"), col("fp"), explode(
-        array((0 until 2).map(b => struct(lit(b).as("b"),
-          shiftright(col("fp"), 16 * b).bitwiseAND(65535L).as("key"))): _*))
-        .as("bk"))
-      .select(col("doc_id"), col("fp"), col("bk.b"), col("bk.key"))
-    bands.as("x").join(bands.as("y"),
-        col("x.b") === col("y.b") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        bit_count(col("x.fp").bitwiseXOR(col("y.fp"))).cast("long")
-          .as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= 4)
-      .orderBy("doc_a", "doc_b")
+    }
+    hammingPairs(fps, "fp", 2, 4).orderBy("doc_a", "doc_b")
   }
 
   final case class PatchRow(doc_id: Long, band: Long, pcol: Long,
@@ -795,42 +471,37 @@ object MultimodalQueries {
     * Scale shape: two scan-parallel mapPartitions stages (encode |
     * decode+patch), fan-out ≤ 4·⌈h/8⌉ rows per image, no shuffle before
     * the output sort — identical posture to m01–m08. */
-  def m09_vit_patches(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) => pgmGrid(id, text) })
-    media.mapPartitions { it =>
-      it.flatMap { r =>
-        val img = MediaCodec.decodeImage(r.payload)
-        val (w, h) = (img.width, img.height)
-        for {
-          band <- 0 until (h + 7) / 8
-          pcol <- 0 until w / 8
-        } yield {
-          val rows = math.min(8, h - band * 8)
-          var sum = 0L
-          var sq = 0L
-          var rr = 0
-          while (rr < rows) {
-            var cc = 0
-            while (cc < 8) {
-              val v = (img.pixels((band * 8 + rr) * w + pcol * 8 + cc) & 0xFF).toLong
-              sum += v
-              sq += v * v
-              cc += 1
-            }
-            rr += 1
+  def m09_vit_patches(s: SparkSession, dir: String): DataFrame =
+    encode(docs(s, dir))(pgmGrid).mapPartitions(_.flatMap { r =>
+      val img = MediaCodec.decodeImage(r.payload)
+      val (w, h) = (img.width, img.height)
+      for {
+        band <- 0 until (h + 7) / 8
+        pcol <- 0 until w / 8
+      } yield {
+        val rows = math.min(8, h - band * 8)
+        var sum = 0L
+        var sq = 0L
+        var rr = 0
+        while (rr < rows) {
+          var cc = 0
+          while (cc < 8) {
+            val v = (img.pixels((band * 8 + rr) * w + pcol * 8 + cc) & 0xFF).toLong
+            sum += v
+            sq += v * v
+            cc += 1
           }
-          PatchRow(r.doc_id, band.toLong, pcol.toLong, rows * 8L, sum, sq)
+          rr += 1
         }
+        PatchRow(r.doc_id, band.toLong, pcol.toLong, rows * 8L, sum, sq)
       }
-    }.toDF().orderBy("doc_id", "band", "pcol")
-  }
+    })(Encoders.product[PatchRow]).toDF().orderBy("doc_id", "band", "pcol")
 
   final case class RowSig(pair_id: Long, sx: Long, sy: Long, sxx: Long,
                           syy: Long, sxy: Long)
+
+  private val SsimC1 = 6L * 32 * 32 // ≈ (0.01·255)²·n², n = 32
+  private val SsimC2 = 58L * 32 * 32 // ≈ (0.03·255)²·n²
 
   /** m10 — structural similarity (SSIM family) between consecutive doc
     * images, in EXACT integer arithmetic: the luminance/contrast/
@@ -846,26 +517,17 @@ object MultimodalQueries {
     *
     * Scale shape: one shuffle join on the successor key (both sides
     * partitioned by pair_id), decode scan-parallel on each side. */
-  private val SsimC1 = 6L * 32 * 32 // ≈ (0.01·255)²·n², n = 32
-  private val SsimC2 = 58L * 32 * 32 // ≈ (0.03·255)²·n²
-
   def m10_patch_ssim(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val c1 = SsimC1
     val c2 = SsimC2
-    def row0(payload: Array[Byte]): Array[Long] = {
-      val img = MediaCodec.decodeImage(payload)
-      Array.tabulate(32)(i => (img.pixels(i) & 0xFF).toLong)
-    }
-    val sides = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        val px = row0(pgmGrid(id, text).payload)
+    val sides = rows(docs(s, dir), "pair_id", "side", "s1", "s2", "px") {
+      case (id, b) =>
+        val img = MediaCodec.decodeImage(pgmGrid(id, b).payload)
+        val px = Array.tabulate(32)(i => (img.pixels(i) & 0xFF).toLong)
         // side 0 = even doc (left), side 1 = odd doc (right of pair id-1)
         val pid = if (id % 2 == 0) id else id - 1
         (pid, id % 2, px.sum, px.map(v => v * v).sum, px)
-      }).toDF("pair_id", "side", "s1", "s2", "px")
+    }
     sides.filter(col("side") === 0).as("x")
       .join(sides.filter(col("side") === 1).as("y"), "pair_id")
       .select(col("pair_id"), col("x.s1").as("sx"), col("y.s1").as("sy"),
@@ -895,53 +557,43 @@ object MultimodalQueries {
     * or contrast < 16 — a solid or one-tone image fails both ways).
     *
     * The payload is the m03 PGM grid (even doc_ids) or its baseline
-    * JPEG twin ([[jpegGrid]], odd doc_ids) encoded + decoded through
-    * the real from-spec codecs behind the same magic-byte sniff; the
-    * DuckDB oracle replays the histogram on the document code points
+    * JPEG twin (odd doc_ids, [[MediaFrames.grayGrid]]) encoded + decoded
+    * through the real from-spec codecs behind the same magic-byte sniff;
+    * the DuckDB oracle replays the histogram on the document code points
     * and never sees either container — a decoder that mangled the
     * raster would shift bins and fail the hash.
     *
     * Scale shape: scan-parallel mapPartitions (one decoder per
     * partition, one 32-long histogram per row, no shuffle before the
     * output sort) — 100 TB of images run at decode speed. */
-  def m11_histogram_gate(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        if (id % 2 == 1) jpegGrid(id, text) else pgmGrid(id, text) })
-    media.mapPartitions { it =>
-      it.map { r =>
-        val img = MediaCodec.decodeImage(r.payload)
-        val n = img.width * img.height
-        val hist = new Array[Long](32)
-        var mn = 255
-        var mx = 0
-        var p = 0
-        while (p < n) {
-          val v = img.pixels(p) & 0xFF
-          hist(v / 8) += 1
-          if (v < mn) mn = v
-          if (v > mx) mx = v
-          p += 1
-        }
-        var used = 0L
-        var dom = 0L
-        var b = 0
-        while (b < 32) {
-          if (hist(b) > 0) used += 1
-          if (hist(b) > dom) dom = hist(b)
-          b += 1
-        }
-        val contrast = (mx - mn).toLong
-        val domShare = dom * 1000000L / n
-        HistGate(r.doc_id, n.toLong, contrast, used, domShare,
-          if (domShare >= 750000L || contrast < 16L) 0L else 1L)
+  def m11_histogram_gate(s: SparkSession, dir: String): DataFrame =
+    features(encode(docs(s, dir))(grayGrid)) { r =>
+      val img = MediaCodec.decodeImage(r.payload)
+      val n = img.width * img.height
+      val hist = new Array[Long](32)
+      var mn = 255
+      var mx = 0
+      var p = 0
+      while (p < n) {
+        val v = img.pixels(p) & 0xFF
+        hist(v / 8) += 1
+        if (v < mn) mn = v
+        if (v > mx) mx = v
+        p += 1
       }
-    }.toDF()
-      .orderBy("doc_id")
-  }
+      var used = 0L
+      var dom = 0L
+      var b = 0
+      while (b < 32) {
+        if (hist(b) > 0) used += 1
+        if (hist(b) > dom) dom = hist(b)
+        b += 1
+      }
+      val contrast = (mx - mn).toLong
+      val domShare = dom * 1000000L / n
+      HistGate(r.doc_id, n.toLong, contrast, used, domShare,
+        if (domShare >= 750000L || contrast < 16L) 0L else 1L)
+    }
 
   final case class JpegFeature(doc_id: Long, width: Int, height: Int,
                                channels: Int, format: String,
@@ -967,41 +619,20 @@ object MultimodalQueries {
     * fixtures; at 100 TB payloads arrive as stored bytes), no shuffle
     * before the output sort, one decoder instance per partition. */
   def m14_jpeg_features(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          require(text.forall(_ < 128),
-            s"doc $id: non-ASCII char — pixel bytes would diverge from code points")
-          val bytes = text.getBytes("US-ASCII")
-          val len = bytes.length
-          val w = 16 * (len % 4 + 1)
-          val h = 16 * ((len / 4) % 4 + 1)
-          val vals = Array.tabulate((w / 8) * (h / 8))(k =>
-            if (len == 0) 0 else bytes(k % len) & 0xFF)
-          MediaRow(id, Jpeg.encodeColor420Flat(w, h, vals, 128, 128, dri = 2),
-            "jpeg")
-        }
-      }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val img = MediaCodec.decodeImage(r.payload) // sniffed, not trusted
-        var lum = 0L
-        var p = 0
-        val n = img.width * img.height
-        while (p < n) {
-          lum += 77L * (img.pixels(3 * p) & 0xFF) +
-            150L * (img.pixels(3 * p + 1) & 0xFF) +
-            29L * (img.pixels(3 * p + 2) & 0xFF)
-          p += 1
-        }
-        JpegFeature(r.doc_id, img.width, img.height, img.channels, r.format,
-          (img.width / 8).toLong * (img.height / 8), lum, lum / (n * 256.0))
-      }
-    }.toDF()
-      .orderBy("doc_id")
+    val media = encode(docs(s, dir)) { (id, b) =>
+      val w = 16 * (b.length % 4 + 1)
+      val h = 16 * ((b.length / 4) % 4 + 1)
+      val vals = Array.tabulate((w / 8) * (h / 8))(tap(b, _))
+      MediaRow(id, Jpeg.encodeColor420Flat(w, h, vals, 128, 128, dri = 2),
+        "jpeg")
+    }
+    features(media) { r =>
+      val img = MediaCodec.decodeImage(r.payload) // sniffed, not trusted
+      val lum = lumaSum(img)
+      JpegFeature(r.doc_id, img.width, img.height, img.channels, r.format,
+        (img.width / 8).toLong * (img.height / 8), lum,
+        lum / (img.width * img.height * 256.0))
+    }
   }
 
   /** m15 — PNG decode + feature extraction: the LOSSLESS real-world
@@ -1018,54 +649,18 @@ object MultimodalQueries {
     * Scale shape: identical to m01/m14 — two scan-parallel
     * mapPartitions stages, no shuffle before the output sort. */
   def m15_png_features(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          require(text.forall(_ < 128),
-            s"doc $id: non-ASCII char — pixel bytes would diverge from code points")
-          val bytes = text.getBytes("US-ASCII")
-          val len = bytes.length
-          val w = len % 64 + 1
-          val h = (len / 64) % 64 + 1
-          if (id % 2 == 0) {
-            val rgb =
-              if (len == 0) new Array[Byte](3)
-              else Array.tabulate(w * h * 3)(k => bytes(k % len))
-            MediaRow(id, Png.encode(w, h, 3, rgb), "png-rgb")
-          } else {
-            val gray =
-              if (len == 0) new Array[Byte](1)
-              else Array.tabulate(w * h)(p => bytes(p % len))
-            MediaRow(id, Png.encode(w, h, 1, gray), "png-gray")
-          }
-        }
-      }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val img = MediaCodec.decodeImage(r.payload) // sniffed, not trusted
-        var lum = 0L
-        var p = 0
-        val n = img.width * img.height
-        if (img.channels == 3) {
-          while (p < n) {
-            lum += 77L * (img.pixels(3 * p) & 0xFF) +
-              150L * (img.pixels(3 * p + 1) & 0xFF) +
-              29L * (img.pixels(3 * p + 2) & 0xFF)
-            p += 1
-          }
-        } else {
-          while (p < n) { lum += 256L * (img.pixels(p) & 0xFF); p += 1 }
-        }
-        MediaFeature(r.doc_id, img.width, img.height, img.channels, r.format,
-          lum, lum / (n * 256.0))
-      }
-    }.toDF()
-      .orderBy("doc_id")
+    val media = encode(docs(s, dir)) { (id, b) =>
+      val img = cycling(b, if (id % 2 == 0) 3 else 1)
+      MediaRow(id, Png.encode(img.width, img.height, img.channels,
+        img.pixels), if (img.channels == 3) "png-rgb" else "png-gray")
+    }
+    features(media) { r =>
+      val img = MediaCodec.decodeImage(r.payload) // sniffed, not trusted
+      val lum = lumaSum(img)
+      MediaFeature(r.doc_id, img.width, img.height, img.channels, r.format,
+        lum, lum / (img.width * img.height * 256.0))
+    }
   }
-
 
   final case class Png16Feature(doc_id: Long, width: Int, height: Int,
                                 channels: Int, format: String, s_sum: Long,
@@ -1090,48 +685,31 @@ object MultimodalQueries {
     * Scale shape: identical to m15 — two scan-parallel mapPartitions
     * stages, no shuffle before the output sort. */
   def m34_png16_features(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          require(text.forall(_ < 128),
-            s"doc $id: non-ASCII char — sample bytes would diverge")
-          val b = text.getBytes("US-ASCII")
-          val len = b.length
-          val w = len % 48 + 1
-          val h = (len / 48) % 32 + 1
-          val ch = if (id % 2 == 0) 1 else 3
-          val samples = Array.tabulate(w * h * ch)(k =>
-            if (len == 0) 0
-            else 256 * (b(k % len) & 0xFF) + (b((k * 7 + 3) % len) & 0xFF))
-          MediaRow(id, Png.encode16(w, h, ch, samples),
-            if (ch == 1) "png16-gray" else "png16-rgb")
-        }
+    val media = encode(docs(s, dir)) { (id, b) =>
+      val w = b.length % 48 + 1
+      val h = (b.length / 48) % 32 + 1
+      val ch = if (id % 2 == 0) 1 else 3
+      val samples = Array.tabulate(w * h * ch)(k =>
+        256 * tap(b, k) + tap(b, k * 7 + 3))
+      MediaRow(id, Png.encode16(w, h, ch, samples),
+        if (ch == 1) "png16-gray" else "png16-rgb")
+    }
+    features(media) { r =>
+      val img = Png.decode16(r.payload)
+      val img8 = MediaCodec.decodeImage(r.payload) // sniffed 16->8 route
+      var sSum = 0L; var sW = 0L
+      var mn = Long.MaxValue; var mx = Long.MinValue
+      var k = 0
+      while (k < img.samples.length) {
+        val v = img.samples(k).toLong
+        sSum += v; sW += v * (k + 1)
+        if (v < mn) mn = v
+        if (v > mx) mx = v
+        k += 1
       }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val img = Png.decode16(r.payload)
-        val img8 = MediaCodec.decodeImage(r.payload) // sniffed 16->8 route
-        var sSum = 0L; var sW = 0L
-        var mn = Long.MaxValue; var mx = Long.MinValue
-        var k = 0
-        while (k < img.samples.length) {
-          val v = img.samples(k).toLong
-          sSum += v; sW += v * (k + 1)
-          if (v < mn) mn = v
-          if (v > mx) mx = v
-          k += 1
-        }
-        var h8 = 0L
-        k = 0
-        while (k < img8.pixels.length) { h8 += img8.pixels(k) & 0xFF; k += 1 }
-        Png16Feature(r.doc_id, img.width, img.height, img.channels, r.format,
-          sSum, sW, mn, mx, h8)
-      }
-    }.toDF()
-      .orderBy("doc_id")
+      Png16Feature(r.doc_id, img.width, img.height, img.channels, r.format,
+        sSum, sW, mn, mx, byteSum(img8.pixels))
+    }
   }
 
   final case class AdpcmFeature(doc_id: Long, n_samples: Long, s_sum: Long,
@@ -1191,41 +769,18 @@ object MultimodalQueries {
     * Scale shape: identical to m05 — two scan-parallel mapPartitions
     * stages, no shuffle before the output sort. */
   def m35_adpcm_features(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          require(text.forall(_ < 128),
-            s"doc $id: non-ASCII char — nibble stream would diverge")
-          val b = text.getBytes("US-ASCII")
-          val len = b.length
-          val pred = if (len == 0) 0 else ((b(0) & 0xFF) - 64) * 256
-          val idx = if (len == 0) 0 else (b(1 % len) & 0xFF) % 89
-          val nibbles = Array.tabulate(64)(k =>
-            if (len == 0) 0 else (b((5 * k + 1) % len) & 0xFF) % 16)
-          MediaRow(id, wavImaBlock(8000, pred, idx, nibbles), "ima-adpcm")
-        }
-      }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val au = MediaCodec.decodeAudio(r.payload) // sniffed, not trusted
-        var sum = 0L; var abs = 0L
-        var mn = Long.MaxValue; var mx = Long.MinValue
-        var k = 0
-        while (k < au.samples.length) {
-          val v = au.samples(k).toLong
-          sum += v; abs += math.abs(v)
-          if (v < mn) mn = v
-          if (v > mx) mx = v
-          k += 1
-        }
-        AdpcmFeature(r.doc_id, au.samples.length.toLong, sum, abs,
-          au.samples.last.toLong, mn, mx)
-      }
-    }.toDF()
-      .orderBy("doc_id")
+    val media = encode(docs(s, dir)) { (id, b) =>
+      val pred = if (b.isEmpty) 0 else (tap(b, 0) - 64) * 256
+      val nibbles = Array.tabulate(64)(k => tap(b, 5 * k + 1) % 16)
+      MediaRow(id, wavImaBlock(8000, pred, tap(b, 1) % 89, nibbles),
+        "ima-adpcm")
+    }
+    features(media) { r =>
+      val au = MediaCodec.decodeAudio(r.payload) // sniffed, not trusted
+      val (sum, abs, mn, mx) = sampleStats(au.samples)
+      AdpcmFeature(r.doc_id, au.samples.length.toLong, sum, abs,
+        au.samples.last.toLong, mn, mx)
+    }
   }
 
   private val ImaStepSql =
@@ -1361,47 +916,30 @@ object MultimodalQueries {
     * Scale shape: identical to m35 — two scan-parallel mapPartitions
     * stages, no shuffle before the output sort. */
   def m36_adpcm_stereo(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          require(text.forall(_ < 128),
-            s"doc $id: non-ASCII char — nibble stream would diverge")
-          val b = text.getBytes("US-ASCII")
-          val len = b.length
-          def at(i: Int): Int = if (len == 0) 0 else b(i % len) & 0xFF
-          val predL = if (len == 0) 0 else (at(0) - 64) * 256
-          val idxL = if (len == 0) 0 else at(1) % 89
-          val predR = if (len == 0) 0 else (at(2) - 64) * 256
-          val idxR = if (len == 0) 0 else at(3) % 89
-          val nibL = Array.tabulate(64)(k => at(3 * k + 2) % 16)
-          val nibR = Array.tabulate(64)(k => at(5 * k + 4) % 16)
-          MediaRow(id, wavImaStereo(8000, predL, idxL, predR, idxR,
-            nibL, nibR), "ima-adpcm-st")
-        }
+    val media = encode(docs(s, dir)) { (id, b) =>
+      def pred(i: Int): Int = if (b.isEmpty) 0 else (tap(b, i) - 64) * 256
+      val nibL = Array.tabulate(64)(k => tap(b, 3 * k + 2) % 16)
+      val nibR = Array.tabulate(64)(k => tap(b, 5 * k + 4) % 16)
+      MediaRow(id, wavImaStereo(8000, pred(0), tap(b, 1) % 89, pred(2),
+        tap(b, 3) % 89, nibL, nibR), "ima-adpcm-st")
+    }
+    features(media) { r =>
+      val au = MediaCodec.decodeAudio(r.payload)
+      require(au.channels == 2, s"doc ${r.doc_id}: expected stereo")
+      var lSum = 0L; var rSum = 0L
+      var mn = Long.MaxValue; var mx = Long.MinValue
+      var k = 0
+      while (k < au.samples.length) {
+        val v = au.samples(k).toLong
+        if (k % 2 == 0) lSum += v else rSum += v
+        if (v < mn) mn = v
+        if (v > mx) mx = v
+        k += 1
       }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val au = MediaCodec.decodeAudio(r.payload)
-        require(au.channels == 2, s"doc ${r.doc_id}: expected stereo")
-        var lSum = 0L; var rSum = 0L
-        var mn = Long.MaxValue; var mx = Long.MinValue
-        var k = 0
-        while (k < au.samples.length) {
-          val v = au.samples(k).toLong
-          if (k % 2 == 0) lSum += v else rSum += v
-          if (v < mn) mn = v
-          if (v > mx) mx = v
-          k += 1
-        }
-        StereoAdpcmFeature(r.doc_id, au.samples.length.toLong, lSum, rSum,
-          au.samples(au.samples.length - 2).toLong,
-          au.samples(au.samples.length - 1).toLong, mn, mx)
-      }
-    }.toDF()
-      .orderBy("doc_id")
+      StereoAdpcmFeature(r.doc_id, au.samples.length.toLong, lSum, rSum,
+        au.samples(au.samples.length - 2).toLong,
+        au.samples(au.samples.length - 1).toLong, mn, mx)
+    }
   }
 
   final case class ApngFeature(doc_id: Long, width: Int, height: Int,
@@ -1426,52 +964,29 @@ object MultimodalQueries {
     * Scale shape: identical to m15 — two scan-parallel mapPartitions
     * stages, no shuffle before the output sort. */
   def m37_apng_features(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          require(text.forall(_ < 128),
-            s"doc $id: non-ASCII char — pixel bytes would diverge")
-          val b = text.getBytes("US-ASCII")
-          val len = b.length
-          def at(i: Int): Int = if (len == 0) 0 else b(i % len) & 0xFF
-          val w = len % 24 + 2
-          val h = (len / 24) % 16 + 2
-          val (fw1, fh1) = (math.max(1, w / 2), math.max(1, h / 2))
-          val (fw2, fh2) = (math.max(1, w / 3), math.max(1, h / 3))
-          val (x1, y1) = (len % (w - fw1 + 1), (len / 3) % (h - fh1 + 1))
-          val (x2, y2) = ((len / 5) % (w - fw2 + 1), (len / 7) % (h - fh2 + 1))
-          val base = Array.tabulate(w * h)(p => at(p).toByte)
-          val p1 = Array.tabulate(fw1 * fh1)(k => at(2 * k + 1).toByte)
-          val p2 = Array.tabulate(fw2 * fh2)(k => at(3 * k + 2).toByte)
-          MediaRow(id, Png.encodeApng(w, h, 1, Seq(
-            Png.ApngFrame(0, 0, w, h, base),
-            Png.ApngFrame(x1, y1, fw1, fh1, p1),
-            Png.ApngFrame(x2, y2, fw2, fh2, p2))), "apng")
-        }
-      }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val (plays, frames) = Png.decodeApng(r.payload)
-        require(frames.length == 3, s"doc ${r.doc_id}: expected 3 frames")
-        def sum(i: Int): Long = {
-          var acc = 0L
-          val px = frames(i).pixels
-          var k = 0
-          while (k < px.length) { acc += px(k) & 0xFF; k += 1 }
-          acc
-        }
-        var w2 = 0L
-        val last = frames(2).pixels
-        var k = 0
-        while (k < last.length) { w2 += (last(k) & 0xFF).toLong * (k + 1); k += 1 }
-        ApngFeature(r.doc_id, frames(0).width, frames(0).height, 3L,
-          plays.toLong, sum(0), sum(1), sum(2), w2)
-      }
-    }.toDF()
-      .orderBy("doc_id")
+    val media = encode(docs(s, dir)) { (id, b) =>
+      val len = b.length
+      val w = len % 24 + 2
+      val h = (len / 24) % 16 + 2
+      val (fw1, fh1) = (math.max(1, w / 2), math.max(1, h / 2))
+      val (fw2, fh2) = (math.max(1, w / 3), math.max(1, h / 3))
+      val (x1, y1) = (len % (w - fw1 + 1), (len / 3) % (h - fh1 + 1))
+      val (x2, y2) = ((len / 5) % (w - fw2 + 1), (len / 7) % (h - fh2 + 1))
+      val base = Array.tabulate(w * h)(p => tap(b, p).toByte)
+      val p1 = Array.tabulate(fw1 * fh1)(k => tap(b, 2 * k + 1).toByte)
+      val p2 = Array.tabulate(fw2 * fh2)(k => tap(b, 3 * k + 2).toByte)
+      MediaRow(id, Png.encodeApng(w, h, 1, Seq(
+        Png.ApngFrame(0, 0, w, h, base),
+        Png.ApngFrame(x1, y1, fw1, fh1, p1),
+        Png.ApngFrame(x2, y2, fw2, fh2, p2))), "apng")
+    }
+    features(media) { r =>
+      val (plays, frames) = Png.decodeApng(r.payload)
+      require(frames.length == 3, s"doc ${r.doc_id}: expected 3 frames")
+      def sum(i: Int): Long = byteSum(frames(i).pixels)
+      ApngFeature(r.doc_id, frames(0).width, frames(0).height, 3L,
+        plays.toLong, sum(0), sum(1), sum(2), pixelStats(frames(2).pixels)._2)
+    }
   }
 
   final case class G711Feature(doc_id: Long, codec: String, n_samples: Long,
@@ -1495,42 +1010,17 @@ object MultimodalQueries {
     * sort; one bad payload costs one row, the m31 quarantine posture
     * applies unchanged at 100 TB. */
   def m38_g711_features(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          require(text.forall(_ < 128),
-            s"doc $id: non-ASCII char — code bytes would diverge")
-          val b = text.getBytes("US-ASCII")
-          val len = b.length
-          val codes = Array.tabulate(64) { k =>
-            val v = if (len == 0) 0 else b((3 * k + 2) % len) & 0xFF
-            ((v * 7 + k) % 256).toByte
-          }
-          MediaRow(id, MediaCodec.encodeWavG711(8000, codes,
-            aLaw = id % 2 == 1), if (id % 2 == 1) "alaw" else "ulaw")
-        }
-      }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val au = MediaCodec.decodeAudio(r.payload) // sniffed, not trusted
-        var sum = 0L; var abs = 0L
-        var mn = Long.MaxValue; var mx = Long.MinValue
-        var k = 0
-        while (k < au.samples.length) {
-          val v = au.samples(k).toLong
-          sum += v; abs += math.abs(v)
-          if (v < mn) mn = v
-          if (v > mx) mx = v
-          k += 1
-        }
-        G711Feature(r.doc_id, r.format, au.samples.length.toLong, sum, abs,
-          au.samples.last.toLong, mn, mx)
-      }
-    }.toDF()
-      .orderBy("doc_id")
+    val media = encode(docs(s, dir)) { (id, b) =>
+      val codes = Array.tabulate(64)(k => ((tap(b, 3 * k + 2) * 7 + k) % 256).toByte)
+      MediaRow(id, MediaCodec.encodeWavG711(8000, codes,
+        aLaw = id % 2 == 1), if (id % 2 == 1) "alaw" else "ulaw")
+    }
+    features(media) { r =>
+      val au = MediaCodec.decodeAudio(r.payload) // sniffed, not trusted
+      val (sum, abs, mn, mx) = sampleStats(au.samples)
+      G711Feature(r.doc_id, r.format, au.samples.length.toLong, sum, abs,
+        au.samples.last.toLong, mn, mx)
+    }
   }
 
   final case class ExifFeature(doc_id: Long, orientation: Long,
@@ -1556,42 +1046,21 @@ object MultimodalQueries {
     * Scale shape: the m35/m38 two-stage scan-parallel shape; the remap
     * is one in-executor pass over the raster. */
   def m39_exif_orientation(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          require(text.forall(_ < 128),
-            s"doc $id: non-ASCII char — pixel bytes would diverge")
-          val b = text.getBytes("US-ASCII")
-          val len = b.length
-          val hb = (len / 32) % 16 + 1 // 1..16 block rows of 32×8
-          val vals = Array.tabulate(4 * hb)(k =>
-            64 + (if (len == 0) 0 else (b((2 * k + 1) % len) & 0xFF) % 128))
-          val o = (id % 8 + 1).toInt
-          MediaRow(id, Jpeg.spliceApp1(
-            Jpeg.encodeGrayFlat(32, 8 * hb, vals, dri = 2),
-            Jpeg.encodeApp1Exif(o)), "jpeg-exif")
-        }
-      }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val img = MediaCodec.decodeImage(r.payload) // APP1 skipped by decode
-        val o = Jpeg.exifOrientation(r.payload) // ...but read by the walk
-        val up = MediaCodec.applyOrientation(img, o)
-        var sum = 0L; var wsum = 0L
-        var i = 0
-        while (i < up.pixels.length) {
-          val v = (up.pixels(i) & 0xFF).toLong
-          sum += v; wsum += v * (i + 1)
-          i += 1
-        }
-        ExifFeature(r.doc_id, o.toLong, up.width, up.height, sum, wsum,
-          (up.pixels(0) & 0xFF).toLong)
-      }
-    }.toDF()
-      .orderBy("doc_id")
+    val media = encode(docs(s, dir)) { (id, b) =>
+      val hb = (b.length / 32) % 16 + 1 // 1..16 block rows of 32×8
+      val vals = Array.tabulate(4 * hb)(k => 64 + tap(b, 2 * k + 1) % 128)
+      MediaRow(id, Jpeg.spliceApp1(
+        Jpeg.encodeGrayFlat(32, 8 * hb, vals, dri = 2),
+        Jpeg.encodeApp1Exif((id % 8 + 1).toInt)), "jpeg-exif")
+    }
+    features(media) { r =>
+      val img = MediaCodec.decodeImage(r.payload) // APP1 skipped by decode
+      val o = Jpeg.exifOrientation(r.payload) // ...but read by the walk
+      val up = MediaCodec.applyOrientation(img, o)
+      val (sum, wsum, _, _) = pixelStats(up.pixels)
+      ExifFeature(r.doc_id, o.toLong, up.width, up.height, sum, wsum,
+        (up.pixels(0) & 0xFF).toLong)
+    }
   }
 
   final case class TgaFeature(doc_id: Long, codec: String, width: Int,
@@ -1611,45 +1080,20 @@ object MultimodalQueries {
     *
     * Scale shape: the m35/m38 two-stage scan-parallel shape. */
   def m40_tga_features(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          require(text.forall(_ < 128),
-            s"doc $id: non-ASCII char — pixel bytes would diverge")
-          val b = text.getBytes("US-ASCII")
-          val len = b.length
-          val w = len % 24 + 2
-          val h = (len / 24) % 12 + 2
-          val rgb = Array.tabulate(w * h * 3) { k =>
-            val v = if (len == 0) 0 else b((5 * k + 7) % len) & 0xFF
-            ((v * 3 + k) % 256).toByte
-          }
-          val rle = id % 2 == 1
-          MediaRow(id, Tga.encode(w, h, rgb, rle = rle, topDown = rle),
-            if (rle) "tga-rle" else "tga-raw")
-        }
-      }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val img = MediaCodec.decodeImage(r.payload) // sniffed, not trusted
-        var sum = 0L; var wsum = 0L
-        var mn = Long.MaxValue; var mx = Long.MinValue
-        var i = 0
-        while (i < img.pixels.length) {
-          val v = (img.pixels(i) & 0xFF).toLong
-          sum += v; wsum += v * (i + 1)
-          if (v < mn) mn = v
-          if (v > mx) mx = v
-          i += 1
-        }
-        TgaFeature(r.doc_id, r.format, img.width, img.height, sum, wsum,
-          mn, mx)
-      }
-    }.toDF()
-      .orderBy("doc_id")
+    val media = encode(docs(s, dir)) { (id, b) =>
+      val w = b.length % 24 + 2
+      val h = (b.length / 24) % 12 + 2
+      val rgb = Array.tabulate(w * h * 3)(k => ((tap(b, 5 * k + 7) * 3 + k) % 256).toByte)
+      val rle = id % 2 == 1
+      MediaRow(id, Tga.encode(w, h, rgb, rle = rle, topDown = rle),
+        if (rle) "tga-rle" else "tga-raw")
+    }
+    features(media) { r =>
+      val img = MediaCodec.decodeImage(r.payload) // sniffed, not trusted
+      val (sum, wsum, mn, mx) = pixelStats(img.pixels)
+      TgaFeature(r.doc_id, r.format, img.width, img.height, sum, wsum,
+        mn, mx)
+    }
   }
 
   /** m41 — COMPRESSED TIFF decode (LZW ch. 13, PackBits §9, horizontal
@@ -1667,70 +1111,31 @@ object MultimodalQueries {
     * Scale shape: two scan-parallel mapPartitions stages, zero shuffle
     * before the output sort — decode cost rides the document scan. */
   def m41_tiff_compressed(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          require(text.forall(_ < 128),
-            s"doc $id: non-ASCII char — pixel bytes would diverge")
-          val b = text.getBytes("US-ASCII")
-          val len = b.length
-          val w = len % 20 + 3
-          val h = (len / 20) % 10 + 3
-          val gray = Array.tabulate(w * h) { k =>
-            val v = if (len == 0) 0 else b((3 * k + 5) % len) & 0xFF
-            ((v * 5 + k) % 256).toByte
-          }
-          val (comp, pred, codec) = (id % 3).toInt match {
-            case 0 => (5, 2, "lzw-pred")
-            case 1 => (5, 1, "lzw")
-            case _ => (32773, 1, "packbits")
-          }
-          MediaRow(id,
-            Tiff.encodeGrayC(w, h, gray, bigEndian = id % 2 == 0, comp, pred),
-            codec)
-        }
+    val media = encode(docs(s, dir)) { (id, b) =>
+      val w = b.length % 20 + 3
+      val h = (b.length / 20) % 10 + 3
+      val gray = Array.tabulate(w * h)(k => ((tap(b, 3 * k + 5) * 5 + k) % 256).toByte)
+      val (comp, pred, codec) = (id % 3).toInt match {
+        case 0 => (5, 2, "lzw-pred")
+        case 1 => (5, 1, "lzw")
+        case _ => (32773, 1, "packbits")
       }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val d = Tiff.decode(r.payload)
-        var sum = 0L; var wsum = 0L
-        var mn = Long.MaxValue; var mx = Long.MinValue
-        var i = 0
-        while (i < d.image.pixels.length) {
-          val v = (d.image.pixels(i) & 0xFF).toLong
-          sum += v; wsum += v * (i + 1)
-          if (v < mn) mn = v
-          if (v > mx) mx = v
-          i += 1
-        }
-        TgaFeature(r.doc_id, r.format, d.image.width, d.image.height,
-          sum, wsum, mn, mx)
-      }
-    }.toDF()
-      .orderBy("doc_id")
+      MediaRow(id,
+        Tiff.encodeGrayC(w, h, gray, bigEndian = id % 2 == 0, comp, pred),
+        codec)
+    }
+    features(media) { r =>
+      val d = Tiff.decode(r.payload)
+      val (sum, wsum, mn, mx) = pixelStats(d.image.pixels)
+      TgaFeature(r.doc_id, r.format, d.image.width, d.image.height,
+        sum, wsum, mn, mx)
+    }
   }
 
   final case class AiffStats(doc_id: Long, codec: String, sample_rate: Long,
                              n_samples: Long, zcr: Long, energy: Long,
                              peak: Long)
 
-  /** m42 — AIFF / AIFF-C audio (the big-endian IFF sibling of WAV that
-    * scientific and broadcast archives ship): per document a
-    * deterministic 16-bit signal is containerized as plain AIFF
-    * (big-endian PCM, mono) or AIFF-C 'sowt' (little-endian PCM,
-    * stereo-interleaved) by doc_id, with the sample rate cycling
-    * 8000/22050/44100 so the COMM chunk's 80-bit EXTENDED-float rate
-    * field — the format's one exotic scalar — is decoded on every row
-    * and pinned by the oracle (a wrong exponent bias or mantissa shift
-    * shifts every rate). Decode runs the real chunk walk (FORM type,
-    * FVER skip, COMM, SSND offset) through [[MediaCodec.decodeAudio]]'s
-    * magic sniff; features are the m05 trio over the decoded samples.
-    *
-    * Scale shape: two scan-parallel mapPartitions stages, zero shuffle
-    * before the output sort (the m05/m38 audio idiom). */
   /** m43 — MP3 container BOOKS without decode (ID3v2 skip + MPEG-1
     * Layer III frame-header walk, [[graft.sources.Mp3]]): the
     * audio-corpus bookkeeping pass — frame counts, exact-integer
@@ -1746,23 +1151,15 @@ object MultimodalQueries {
     *
     * Scale shape: pure per-row byte work, scan-parallel, no shuffle
     * before the output sort (the media-family shape). */
-  def m43_mp3_books(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.Mp3
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val nf = 30 + (id % 50).toInt
-          val sr = (id % 3).toInt
-          val frames = (0 until nf).map(j =>
-            (1 + ((id + j) % 14).toInt, sr, (id + j) % 2 == 1))
-          val b = Mp3.parse(Mp3.encode(40 + (id % 60).toInt, frames))
-          (id, b.nFrames, b.durationUs, b.nBytes)
-        }
-      }
-      .toDF("doc_id", "n_frames", "duration_us", "n_bytes")
-      .orderBy("doc_id")
-  }
+  def m43_mp3_books(s: SparkSession, dir: String): DataFrame =
+    features(ids(s, dir), "doc_id", "n_frames", "duration_us", "n_bytes") { id =>
+      val nf = 30 + (id % 50).toInt
+      val sr = (id % 3).toInt
+      val frames = (0 until nf).map(j =>
+        (1 + ((id + j) % 14).toInt, sr, (id + j) % 2 == 1))
+      val b = Mp3.parse(Mp3.encode(40 + (id % 60).toInt, frames))
+      (id, b.nFrames, b.durationUs, b.nBytes)
+    }
 
   /** m44 — ISO-BMFF / MP4 container books without decode (from-spec box
     * walk, [[graft.sources.Mp4]], ISO/IEC 14496-12 §4.2): box counts,
@@ -1778,28 +1175,21 @@ object MultimodalQueries {
     *
     * Scale shape: pure per-row byte work, scan-parallel, no shuffle
     * before the output sort (the media-family shape). */
-  def m44_mp4_books(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val ts = (id % 3) match {
-            case 0 => 600L; case 1 => 1000L; case _ => 90000L
-          }
-          val dur = 1000L + id % 100000L
-          val nt = 1 + (id % 3).toInt
-          val fp = if (id % 4 == 0) (id % 50).toInt else -1
-          val mp = 100 + (id % 900).toInt
-          val mm = if (id % 5 == 0) 1 else if (id % 7 == 0) 2 else 0
-          val b = Mp4.parse(Mp4.encode(ts, dur, nt, fp, mp, mm))
-          (id, b.nBoxes, b.timescale, b.durationMs, b.nVideo, b.nAudio,
-            b.mdatBytes, b.nBytes)
-        }
+  def m44_mp4_books(s: SparkSession, dir: String): DataFrame =
+    features(ids(s, dir), "doc_id", "n_boxes", "timescale", "duration_ms",
+        "n_video", "n_audio", "mdat_bytes", "n_bytes") { id =>
+      val ts = (id % 3) match {
+        case 0 => 600L; case 1 => 1000L; case _ => 90000L
       }
-      .toDF("doc_id", "n_boxes", "timescale", "duration_ms", "n_video",
-        "n_audio", "mdat_bytes", "n_bytes")
-      .orderBy("doc_id")
-  }
+      val dur = 1000L + id % 100000L
+      val nt = 1 + (id % 3).toInt
+      val fp = if (id % 4 == 0) (id % 50).toInt else -1
+      val mp = 100 + (id % 900).toInt
+      val mm = if (id % 5 == 0) 1 else if (id % 7 == 0) 2 else 0
+      val b = Mp4.parse(Mp4.encode(ts, dur, nt, fp, mp, mm))
+      (id, b.nBoxes, b.timescale, b.durationMs, b.nVideo, b.nAudio,
+        b.mdatBytes, b.nBytes)
+    }
 
   /** m45 — Ogg container books without decode (from-spec page walk,
     * [[graft.sources.Ogg]], RFC 3533): page/packet counts, final
@@ -1816,27 +1206,19 @@ object MultimodalQueries {
     *
     * Scale shape: pure per-row byte work, scan-parallel, no shuffle
     * before the output sort (the media-family shape). */
-  def m45_ogg_books(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.Ogg
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val np = 2 + (id % 5).toInt
-          val g = 1 + id % 100
-          val pages = (0 until np).map { j =>
-            val k = 1 + ((id + j) % 3).toInt
-            Ogg.Page((j + 1) * g * 48L,
-              (0 until k).map(i => 20 + ((id + 13L * j + 7L * i) % 290).toInt))
-          }
-          val b = Ogg.parse(Ogg.encode(id, pages, span = id % 4 == 0))
-          (id, b.nPages, b.nPackets, b.lastGranule, b.payloadBytes, b.nBytes)
-        }
+  def m45_ogg_books(s: SparkSession, dir: String): DataFrame =
+    features(ids(s, dir), "doc_id", "n_pages", "n_packets", "last_granule",
+        "payload_bytes", "n_bytes") { id =>
+      val np = 2 + (id % 5).toInt
+      val g = 1 + id % 100
+      val pages = (0 until np).map { j =>
+        val k = 1 + ((id + j) % 3).toInt
+        Ogg.Page((j + 1) * g * 48L,
+          (0 until k).map(i => 20 + ((id + 13L * j + 7L * i) % 290).toInt))
       }
-      .toDF("doc_id", "n_pages", "n_packets", "last_granule",
-        "payload_bytes", "n_bytes")
-      .orderBy("doc_id")
-  }
+      val b = Ogg.parse(Ogg.encode(id, pages, span = id % 4 == 0))
+      (id, b.nPages, b.nPackets, b.lastGranule, b.payloadBytes, b.nBytes)
+    }
 
   /** m46 — Matroska / EBML container books without decode (from-spec
     * varint walk, [[graft.sources.Ebml]], RFC 8794): element / cluster
@@ -1851,28 +1233,20 @@ object MultimodalQueries {
     *
     * Scale shape: pure per-row byte work, scan-parallel, no shuffle
     * before the output sort (the media-family shape). */
-  def m46_mkv_books(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.Ebml
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val nc = 1 + (id % 4).toInt
-          val tsu = 10 + id % 90
-          val clusters = (0 until nc).map { c =>
-            val nb = 1 + ((id + c) % 3).toInt
-            Ebml.Cluster(c * tsu,
-              (0 until nb).map(b => 10 + ((id + 17L * c + 5L * b) % 120).toInt))
-          }
-          val books = Ebml.parse(Ebml.encode(clusters, id % 3 == 0))
-          (id, books.nElements, books.nClusters, books.nBlocks,
-            books.lastClusterTs, books.blockBytes, books.nBytes)
-        }
+  def m46_mkv_books(s: SparkSession, dir: String): DataFrame =
+    features(ids(s, dir), "doc_id", "n_elements", "n_clusters", "n_blocks",
+        "last_cluster_ts", "block_bytes", "n_bytes") { id =>
+      val nc = 1 + (id % 4).toInt
+      val tsu = 10 + id % 90
+      val clusters = (0 until nc).map { c =>
+        val nb = 1 + ((id + c) % 3).toInt
+        Ebml.Cluster(c * tsu,
+          (0 until nb).map(b => 10 + ((id + 17L * c + 5L * b) % 120).toInt))
       }
-      .toDF("doc_id", "n_elements", "n_clusters", "n_blocks",
-        "last_cluster_ts", "block_bytes", "n_bytes")
-      .orderBy("doc_id")
-  }
+      val books = Ebml.parse(Ebml.encode(clusters, id % 3 == 0))
+      (id, books.nElements, books.nClusters, books.nBlocks,
+        books.lastClusterTs, books.blockBytes, books.nBytes)
+    }
 
   /** m47 — WebP container books without decode (from-spec RIFF/chunk
     * walk, [[graft.sources.Webp]], RFC 9649 + the RFC 6386 key-frame
@@ -1889,26 +1263,18 @@ object MultimodalQueries {
     *
     * Scale shape: pure per-row byte work, scan-parallel, no shuffle
     * before the output sort (the media-family shape). */
-  def m47_webp_books(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.Webp
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val v = (id % 3).toInt
-          val w = 16 + (id % 300).toInt
-          val h = 16 + (id % 200).toInt
-          val nf = 2 + (id % 3).toInt
-          val b = Webp.parse(Webp.encode(v, w, h, id % 2 == 1, nf,
-            f => ((id + 3L * f) % 7).toInt))
-          (id, b.variant, b.width, b.height, b.hasAlpha, b.nChunks,
-            b.nFrames, b.nBytes)
-        }
-      }
-      .toDF("doc_id", "variant", "width", "height", "has_alpha",
-        "n_chunks", "n_frames", "n_bytes")
-      .orderBy("doc_id")
-  }
+  def m47_webp_books(s: SparkSession, dir: String): DataFrame =
+    features(ids(s, dir), "doc_id", "variant", "width", "height",
+        "has_alpha", "n_chunks", "n_frames", "n_bytes") { id =>
+      val v = (id % 3).toInt
+      val w = 16 + (id % 300).toInt
+      val h = 16 + (id % 200).toInt
+      val nf = 2 + (id % 3).toInt
+      val b = Webp.parse(Webp.encode(v, w, h, id % 2 == 1, nf,
+        f => ((id + 3L * f) % 7).toInt))
+      (id, b.variant, b.width, b.height, b.hasAlpha, b.nChunks,
+        b.nFrames, b.nBytes)
+    }
 
   /** m48 — SRT subtitle/caption books (from-spec cue walk,
     * [[graft.sources.Srt]]): cue counts, exact-integer duration
@@ -1926,27 +1292,19 @@ object MultimodalQueries {
     *
     * Scale shape: pure per-row string work, scan-parallel, no shuffle
     * before the output sort (the media-family shape). */
-  def m48_srt_books(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.Srt
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val nc = 2 + (id % 5).toInt
-          val cues = (0 until nc).map { i =>
-            val ls = Seq(s"cue $id $i") ++
-              (if ((id + i) % 2 == 0) Seq("line two") else Nil)
-            Srt.Cue(i * (2000L + id % 1000), 500L + (id + 31L * i) % 2500,
-              ls, malformTiming = i == 0 && id % 6 == 0)
-          }
-          val b = Srt.parse(Srt.encode(cues))
-          (id, b.nCues, b.nBad, b.totalDurMs, b.nChars, b.nBytes)
-        }
+  def m48_srt_books(s: SparkSession, dir: String): DataFrame =
+    features(ids(s, dir), "doc_id", "n_cues", "n_bad", "total_dur_ms",
+        "n_chars", "n_bytes") { id =>
+      val nc = 2 + (id % 5).toInt
+      val cues = (0 until nc).map { i =>
+        val ls = Seq(s"cue $id $i") ++
+          (if ((id + i) % 2 == 0) Seq("line two") else Nil)
+        Srt.Cue(i * (2000L + id % 1000), 500L + (id + 31L * i) % 2500,
+          ls, malformTiming = i == 0 && id % 6 == 0)
       }
-      .toDF("doc_id", "n_cues", "n_bad", "total_dur_ms", "n_chars",
-        "n_bytes")
-      .orderBy("doc_id")
-  }
+      val b = Srt.parse(Srt.encode(cues))
+      (id, b.nCues, b.nBad, b.totalDurMs, b.nChars, b.nBytes)
+    }
 
   /** m49 — ZIP archive books (from-spec central-directory walk,
     * [[graft.sources.Zip]], PKWARE APPNOTE): the epub/docx/jar front
@@ -1964,29 +1322,18 @@ object MultimodalQueries {
     *
     * Scale shape: pure per-row byte work, scan-parallel, no shuffle
     * before the output sort (the media-family shape). */
-  def m49_zip_books(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.Zip
-    Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          require(text.forall(_ < 128),
-            s"doc $id: non-ASCII char — entry bytes would diverge from chars")
-          val bin = Array.tabulate(50 + (id % 200).toInt)(i =>
-            ((i * 11 + id) & 0xFF).toByte)
-          val buf = Zip.encode(Seq(
-            Zip.Entry(s"doc$id.txt", text.getBytes("US-ASCII"),
-              breakCrc = id % 31 == 0),
-            Zip.Entry(s"doc$id.bin", bin)))
-          val ms = Zip.walk(buf)
-          (id, ms.length.toLong, ms.map(_.size).sum,
-            ms.count(!_.crcOk).toLong, buf.length.toLong)
-        }
-      }
-      .toDF("doc_id", "n_entries", "payload_bytes", "n_crc_bad", "n_bytes")
-      .orderBy("doc_id")
-  }
+  def m49_zip_books(s: SparkSession, dir: String): DataFrame =
+    features(docs(s, dir), "doc_id", "n_entries", "payload_bytes",
+        "n_crc_bad", "n_bytes") { case (id, text) =>
+      val bin = Array.tabulate(50 + (id % 200).toInt)(i =>
+        ((i * 11 + id) & 0xFF).toByte)
+      val buf = Zip.encode(Seq(
+        Zip.Entry(s"doc$id.txt", text, breakCrc = id % 31 == 0),
+        Zip.Entry(s"doc$id.bin", bin)))
+      val ms = Zip.walk(buf)
+      (id, ms.length.toLong, ms.map(_.size).sum,
+        ms.count(!_.crcOk).toLong, buf.length.toLong)
+    }
 
   /** m50 — PDF skeleton books (from-spec end-first walk,
     * [[graft.sources.Pdf]], ISO 32000-1 file structure): the
@@ -2002,70 +1349,51 @@ object MultimodalQueries {
     *
     * Scale shape: pure per-row byte work, scan-parallel, no shuffle
     * before the output sort (the media-family shape). */
-  def m50_pdf_books(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.Pdf
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val b = Pdf.parse(Pdf.encode(4 + (id % 3).toInt, 2 + (id % 4).toInt,
-            20 + (id % 150).toInt, id, breakEntry2 = id % 23 == 0))
-          (id, b.versionMinor, b.nObjects, b.nXrefBad, b.streamBytes,
-            b.nBytes)
-        }
-      }
-      .toDF("doc_id", "version_minor", "n_objects", "n_xref_bad",
-        "stream_bytes", "n_bytes")
-      .orderBy("doc_id")
-  }
+  def m50_pdf_books(s: SparkSession, dir: String): DataFrame =
+    features(ids(s, dir), "doc_id", "version_minor", "n_objects",
+        "n_xref_bad", "stream_bytes", "n_bytes") { id =>
+      val b = Pdf.parse(Pdf.encode(4 + (id % 3).toInt, 2 + (id % 4).toInt,
+        20 + (id % 150).toInt, id, breakEntry2 = id % 23 == 0))
+      (id, b.versionMinor, b.nObjects, b.nXrefBad, b.streamBytes, b.nBytes)
+    }
 
+  /** m42 — AIFF / AIFF-C audio (the big-endian IFF sibling of WAV that
+    * scientific and broadcast archives ship): per document a
+    * deterministic 16-bit signal is containerized as plain AIFF
+    * (big-endian PCM, mono) or AIFF-C 'sowt' (little-endian PCM,
+    * stereo-interleaved) by doc_id, with the sample rate cycling
+    * 8000/22050/44100 so the COMM chunk's 80-bit EXTENDED-float rate
+    * field — the format's one exotic scalar — is decoded on every row
+    * and pinned by the oracle (a wrong exponent bias or mantissa shift
+    * shifts every rate). Decode runs the real chunk walk (FORM type,
+    * FVER skip, COMM, SSND offset) through [[MediaCodec.decodeAudio]]'s
+    * magic sniff; features are the m05 trio over the decoded samples.
+    *
+    * Scale shape: two scan-parallel mapPartitions stages, zero shuffle
+    * before the output sort (the m05/m38 audio idiom). */
   def m42_aiff_features(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          // the encode must see one byte per char: getBytes("US-ASCII")
-          // silently folds non-ASCII to '?' (63) and would diverge — fail
-          // loud instead of producing a wrong-but-plausible feature row
-          require(text.forall(_ < 128),
-            s"doc $id: non-ASCII char — sample bytes would diverge from code points")
-          val bytes = text.getBytes("US-ASCII")
-          val stereo = id % 2 == 1
-          val n = if (stereo) bytes.length - (bytes.length % 2)
-                  else bytes.length
-          val samples = Array.tabulate(n)(i =>
-            (((bytes(i) & 0xFF) - 100) * 96).toShort)
-          val rate = (id % 3) match {
-            case 0 => 8000
-            case 1 => 22050
-            case _ => 44100
-          }
-          if (stereo)
-            MediaRow(id, Aiff.encode(rate, 2, samples, sowt = true),
-              "aifc-sowt")
-          else MediaRow(id, Aiff.encode(rate, 1, samples), "aiff")
-        }
+    val media = encode(docs(s, dir)) { (id, bytes) =>
+      val stereo = id % 2 == 1
+      val n = if (stereo) bytes.length - (bytes.length % 2)
+              else bytes.length
+      val samples = Array.tabulate(n)(i =>
+        (((bytes(i) & 0xFF) - 100) * 96).toShort)
+      val rate = (id % 3) match {
+        case 0 => 8000
+        case 1 => 22050
+        case _ => 44100
       }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val audio = MediaCodec.decodeAudio(r.payload) // sniffed, not trusted
-        val a = audio.samples
-        var zcr = 0L; var energy = 0L; var peak = 0L
-        var i = 0
-        while (i < a.length) {
-          val v = a(i).toLong
-          energy += v * v
-          if (math.abs(v) > peak) peak = math.abs(v)
-          if (i > 0 && ((a(i - 1) < 0) != (v < 0))) zcr += 1
-          i += 1
-        }
-        AiffStats(r.doc_id, r.format, audio.sampleRate.toLong,
-          a.length.toLong, zcr, energy, peak)
-      }
-    }.toDF()
-      .orderBy("doc_id")
+      if (stereo)
+        MediaRow(id, Aiff.encode(rate, 2, samples, sowt = true),
+          "aifc-sowt")
+      else MediaRow(id, Aiff.encode(rate, 1, samples), "aiff")
+    }
+    features(media) { r =>
+      val audio = MediaCodec.decodeAudio(r.payload) // sniffed, not trusted
+      val (zcr, energy, peak) = audioStats(audio.samples)
+      AiffStats(r.doc_id, r.format, audio.sampleRate.toLong,
+        audio.samples.length.toLong, zcr, energy, peak)
+    }
   }
 
   final case class JpegAcRow(doc_id: Long, width: Int, height: Int,
@@ -2104,50 +1432,36 @@ object MultimodalQueries {
 
   private def jpegTexture(s: SparkSession, dir: String,
                           progressive: Boolean): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          require(text.forall(_ < 128),
-            s"doc $id: non-ASCII char — pixel bytes would diverge from code points")
-          val bytes = text.getBytes("US-ASCII")
-          val len = bytes.length
-          val hb = (len / 32) % 16 + 1
-          val vals = Array.tabulate(4 * hb)(k =>
-            64 + (if (len == 0) 0 else (bytes(k % len) & 0xFF) % 128))
-          if (progressive)
-            MediaRow(id, Jpeg.encodeGrayTexturedProgressive(32, 8 * hb, vals),
-              "jpeg-prog")
-          else
-            MediaRow(id, Jpeg.encodeGrayTextured(32, 8 * hb, vals, dri = 2),
-              "jpeg-ac")
+    val media = encode(docs(s, dir)) { (id, b) =>
+      val hb = (b.length / 32) % 16 + 1
+      val vals = Array.tabulate(4 * hb)(k => 64 + tap(b, k) % 128)
+      if (progressive)
+        MediaRow(id, Jpeg.encodeGrayTexturedProgressive(32, 8 * hb, vals),
+          "jpeg-prog")
+      else
+        MediaRow(id, Jpeg.encodeGrayTextured(32, 8 * hb, vals, dri = 2),
+          "jpeg-ac")
+    }
+    features(media) { r =>
+      val img = MediaCodec.decodeImage(r.payload)
+      val (w, h) = (img.width, img.height)
+      var sum = 0L; var wsum = 0L
+      var mn = 255L; var mx = 0L
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val v = (img.pixels(y * w + x) & 0xFF).toLong
+          sum += v
+          wsum += v * ((y % 8) * 8 + (x % 8) + 1)
+          if (v < mn) mn = v
+          if (v > mx) mx = v
+          x += 1
         }
+        y += 1
       }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val img = MediaCodec.decodeImage(r.payload)
-        val (w, h) = (img.width, img.height)
-        var sum = 0L; var wsum = 0L
-        var mn = 255L; var mx = 0L
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val v = (img.pixels(y * w + x) & 0xFF).toLong
-            sum += v
-            wsum += v * ((y % 8) * 8 + (x % 8) + 1)
-            if (v < mn) mn = v
-            if (v > mx) mx = v
-            x += 1
-          }
-          y += 1
-        }
-        JpegAcRow(r.doc_id, w, h, (w / 8).toLong * (h / 8), sum, wsum, mn, mx)
-      }
-    }.toDF()
-      .orderBy("doc_id")
+      JpegAcRow(r.doc_id, w, h, (w / 8).toLong * (h / 8), sum, wsum, mn, mx)
+    }
   }
 
   final case class VadRow(doc_id: Long, n_frames: Long, n_voiced: Long,
@@ -2163,7 +1477,7 @@ object MultimodalQueries {
     * Per clip: frame/voiced counts, segment count, longest segment and
     * the voiced share at 1e-6 fixed point.
     *
-    * Payload rides m02's real RIFF/WAVE encode→decode; the island merge
+    * Payload rides m02's real encode→decode; the island merge
     * runs INSIDE the per-row decode loop (sequential state over ~len/32
     * frames), so unlike d21's cross-document islands no shuffle exists
     * at all — the DuckDB oracle replays the same islands relationally
@@ -2172,56 +1486,48 @@ object MultimodalQueries {
     * Scale shape: scan-parallel mapPartitions, one decoder + one O(n)
     * loop per row; 100 TB of audio runs at decode speed. */
   def m12_vad_segments(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val frameLen = 32
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val bytes = text.getBytes("US-ASCII")
-          val samples = Array.tabulate(bytes.length)(i =>
-            (((bytes(i) & 0xFF) - 96) * 128).toShort)
-          // odd ids ship FLAC, even ids WAV (the m08 mixed-corpus seam):
-          // lossless decode means identical PCM either way, so the VAD
-          // arithmetic and the oracle are container-blind
-          if (id % 2 == 1)
-            MediaRow(id, graft.sources.Flac.encode(8000, 1, samples), "flac")
-          else MediaRow(id, MediaCodec.encodeWav(8000, samples), "wav16")
+    features(encode(docs(s, dir))(wavOrFlac)) { r =>
+      val audio = MediaCodec.decodeAudio(r.payload)
+      val n = audio.samples.length
+      val nFrames = (n + frameLen - 1) / frameLen
+      var voiced = 0L
+      var segments = 0L
+      var longest = 0L
+      var run = 0L
+      var f = 0
+      while (f < nFrames) {
+        val until = math.min(f * frameLen + frameLen, n)
+        val cnt = until - f * frameLen
+        var sum = 0L
+        var i = f * frameLen
+        while (i < until) {
+          sum += math.abs(audio.samples(i).toLong)
+          i += 1
         }
+        if (sum >= 3072L * cnt) {
+          voiced += 1
+          if (run == 0) segments += 1
+          run += 1
+          if (run > longest) longest = run
+        } else run = 0
+        f += 1
       }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val audio = MediaCodec.decodeAudio(r.payload)
-        val n = audio.samples.length
-        val nFrames = (n + frameLen - 1) / frameLen
-        var voiced = 0L
-        var segments = 0L
-        var longest = 0L
-        var run = 0L
-        var f = 0
-        while (f < nFrames) {
-          val until = math.min(f * frameLen + frameLen, n)
-          val cnt = until - f * frameLen
-          var sum = 0L
-          var i = f * frameLen
-          while (i < until) {
-            sum += math.abs(audio.samples(i).toLong)
-            i += 1
-          }
-          if (sum >= 3072L * cnt) {
-            voiced += 1
-            if (run == 0) segments += 1
-            run += 1
-            if (run > longest) longest = run
-          } else run = 0
-          f += 1
-        }
-        VadRow(r.doc_id, nFrames.toLong, voiced, segments, longest,
-          if (nFrames == 0) 0L else voiced * 1000000L / nFrames)
-      }
-    }.toDF()
-      .orderBy("doc_id")
+      VadRow(r.doc_id, nFrames.toLong, voiced, segments, longest,
+        if (nFrames == 0) 0L else voiced * 1000000L / nFrames)
+    }
+  }
+
+  /** (total SAD, max SAD, cuts) of a clip under the adaptive-threshold
+    * rule of m13/m27: a transition is a CUT iff its SAD exceeds 1.5×
+    * the clip's mean transition SAD (integer cross-multiplied,
+    * sad·(n−1)·2 > 3·total, no division). */
+  private def shotCuts(frames: IndexedSeq[Array[Byte]]): (Long, Long, Long) = {
+    val n = frames.length
+    val ds = sads(frames)
+    val total = ds.sum
+    (total, if (ds.isEmpty) 0L else ds.max,
+      ds.count(sd => sd * (n - 1) * 2 > 3 * total).toLong)
   }
 
   final case class ShotFeature(doc_id: Long, n_frames: Long,
@@ -2243,46 +1549,13 @@ object MultimodalQueries {
     * DuckDB oracle replays pixels from the document bytes and never
     * sees the container, so frame framing/geometry errors fail the
     * hash. */
-  def m13_shot_boundary(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        val bytes = text.getBytes("US-ASCII")
-        val len = bytes.length
-        val f = len % 6 + 2
-        val payload = (0 until f).map { fr =>
-          // shot g = fr/3 jumps the byte base by 11; the +fr term adds
-          // within-shot jitter so the threshold does real work
-          val gray = Array.tabulate(16)(p =>
-            if (len == 0) 0.toByte
-            else bytes(((fr / 3) * 11 + 3 * p + fr) % len))
-          MediaCodec.encodePgm(4, 4, gray)
-        }.reduce(_ ++ _)
-        MediaRow(id, payload, "mpgm")
-      })
-    media.mapPartitions(_.map { r =>
-      val frames = MediaCodec.decodePgmFrames(r.payload)
-      val n = frames.length
-      val sads = Array.tabulate(n - 1) { t =>
-        val a = frames(t).pixels
-        val b = frames(t + 1).pixels
-        var sd = 0L
-        var p = 0
-        while (p < b.length) {
-          sd += math.abs((b(p) & 0xFF) - (a(p) & 0xFF))
-          p += 1
-        }
-        sd
-      }
-      val total = sads.sum
-      val cuts = sads.count(sd => sd * (n - 1) * 2 > 3 * total).toLong
-      ShotFeature(r.doc_id, n.toLong, total,
-        if (sads.isEmpty) 0L else sads.max, cuts, cuts + 1L)
-    }).toDF()
-      .orderBy("doc_id")
-  }
+  def m13_shot_boundary(s: SparkSession, dir: String): DataFrame =
+    features(encode(docs(s, dir))(pgmClip(_, _, shots = true))) { r =>
+      val frames = MediaCodec.decodePgmFrames(r.payload).map(_.pixels)
+      val (total, maxSad, cuts) = shotCuts(frames)
+      ShotFeature(r.doc_id, frames.length.toLong, total, maxSad, cuts,
+        cuts + 1L)
+    }
 
   final case class GifFeature(doc_id: Long, width: Int, height: Int,
                               n_px: Long, lum_sum: Long, pos_wsum: Long,
@@ -2305,43 +1578,27 @@ object MultimodalQueries {
     * mapPartitions stages, no shuffle before the output sort; at
     * 100 TB the codec cost rides the scan. */
   def m18_gif_features(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          require(text.forall(_ < 128),
-            s"doc $id: non-ASCII char — pixel bytes would diverge from code points")
-          val bytes = text.getBytes("US-ASCII")
-          val len = bytes.length
-          val w = len % 48 + 4
-          val h = (len / 48) % 32 + 4
-          val px =
-            if (len == 0) new Array[Byte](w * h)
-            else Array.tabulate(w * h)(p => bytes((7 * p) % len))
-          MediaRow(id, graft.sources.Gif.encodeGray(w, h, px), "gif")
-        }
+    val media = encode(docs(s, dir)) { (id, b) =>
+      val w = b.length % 48 + 4
+      val h = (b.length / 48) % 32 + 4
+      val px = Array.tabulate(w * h)(p => tap(b, 7 * p).toByte)
+      MediaRow(id, Gif.encodeGray(w, h, px), "gif")
+    }
+    features(media) { r =>
+      val img = MediaCodec.decodeImage(r.payload) // sniffed, not trusted
+      val n = img.width * img.height
+      var lum = 0L; var ws = 0L; var mn = 256L; var mx = -1L
+      var p = 0
+      while (p < n) {
+        val g = img.pixels(3 * p) & 0xFF
+        lum += luma601(img, p)
+        ws += g.toLong * (p + 1)
+        if (g < mn) mn = g
+        if (g > mx) mx = g
+        p += 1
       }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val img = MediaCodec.decodeImage(r.payload) // sniffed, not trusted
-        val n = img.width * img.height
-        var lum = 0L; var ws = 0L; var mn = 256L; var mx = -1L
-        var p = 0
-        while (p < n) {
-          val g = img.pixels(3 * p) & 0xFF
-          lum += 77L * g + 150L * (img.pixels(3 * p + 1) & 0xFF) +
-            29L * (img.pixels(3 * p + 2) & 0xFF)
-          ws += g.toLong * (p + 1)
-          if (g < mn) mn = g
-          if (g > mx) mx = g
-          p += 1
-        }
-        GifFeature(r.doc_id, img.width, img.height, n.toLong, lum, ws, mn, mx)
-      }
-    }.toDF()
-      .orderBy("doc_id")
+      GifFeature(r.doc_id, img.width, img.height, n.toLong, lum, ws, mn, mx)
+    }
   }
 
   final case class GifAnimFeature(doc_id: Long, n_frames: Long,
@@ -2361,60 +1618,40 @@ object MultimodalQueries {
     * Scale shape: scan-parallel mapPartitions ×2, no shuffle; at 100 TB
     * the per-row cost is frames × LZW, riding the scan like m18. */
   def m19_gif_frames(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          require(text.forall(_ < 128),
-            s"doc $id: non-ASCII char — pixel bytes would diverge from code points")
-          val bytes = text.getBytes("US-ASCII")
-          val len = bytes.length
-          val w = len % 24 + 4
-          val h = (len / 24) % 16 + 4
-          val n = len % 5 + 2
-          val frames = (0 until n).map { f =>
-            if (len == 0) new Array[Byte](w * h)
-            else Array.tabulate(w * h)(p => bytes((p + 11 * f) % len))
-          }
-          MediaRow(id, graft.sources.Gif.encodeGrayFrames(w, h, frames), "gif-anim")
-        }
+    val media = encode(docs(s, dir)) { (id, b) =>
+      val w = b.length % 24 + 4
+      val h = (b.length / 24) % 16 + 4
+      val frames = (0 until b.length % 5 + 2).map(f =>
+        Array.tabulate(w * h)(p => tap(b, p + 11 * f).toByte))
+      MediaRow(id, Gif.encodeGrayFrames(w, h, frames), "gif-anim")
+    }
+    features(media) { r =>
+      val frames = Gif.decodeFrames(r.payload)
+      def gray(img: MediaCodec.Image, p: Int): Int = img.pixels(3 * p) & 0xFF
+      val sampled = frames.indices.filter(_ % 2 == 0)
+      val n = frames.head.width * frames.head.height
+      var lum = 0L
+      sampled.foreach { f =>
+        var p = 0; while (p < n) { lum += gray(frames(f), p); p += 1 }
       }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val frames = graft.sources.Gif.decodeFrames(r.payload)
-        def gray(img: MediaCodec.Image, p: Int): Int = img.pixels(3 * p) & 0xFF
-        val sampled = frames.indices.filter(_ % 2 == 0)
-        val n = frames.head.width * frames.head.height
-        var lum = 0L
-        sampled.foreach { f =>
-          var p = 0; while (p < n) { lum += gray(frames(f), p); p += 1 }
-        }
-        var sad = 0L
-        sampled.sliding(2).foreach {
-          case Seq(a, b) =>
-            var p = 0
-            while (p < n) {
-              sad += math.abs(gray(frames(a), p) - gray(frames(b), p)); p += 1
-            }
-          case _ =>
-        }
-        var ws = 0L
-        var p = 0
-        while (p < n) { ws += gray(frames(0), p).toLong * (p + 1); p += 1 }
-        GifAnimFeature(r.doc_id, frames.length.toLong, sampled.length.toLong,
-          lum, sad, ws)
+      var motion = 0L
+      sampled.sliding(2).foreach {
+        case Seq(a, b) => motion += sad(frames(a).pixels, frames(b).pixels, 3)
+        case _ =>
       }
-    }.toDF()
-      .orderBy("doc_id")
+      var ws = 0L
+      var p = 0
+      while (p < n) { ws += gray(frames(0), p).toLong * (p + 1); p += 1 }
+      GifAnimFeature(r.doc_id, frames.length.toLong, sampled.length.toLong,
+        lum, motion, ws)
+    }
   }
 
   final case class WhtBands(doc_id: Long, n_windows: Long, band0: Long,
                             band1: Long, band2: Long, band3: Long)
 
   /** m20 — Walsh–Hadamard spectrogram: the exact-integer twin of an FFT
-    * spectrogram over the decoded PCM stream (m05's WAV path). The
+    * spectrogram over the decoded PCM stream (m05's clip). The
     * signal is framed into 16-sample windows (tail dropped), each window
     * goes through a 16-point fast WHT (natural Hadamard order,
     * `X_k = Σ_i s_i·(−1)^popcount(k AND i)` — butterfly, O(n log n),
@@ -2434,56 +1671,37 @@ object MultimodalQueries {
     * not global). Reference semantics: oph_dump/array FFT family
     * (reference primitives list), re-expressed with the integer-exact
     * transform. */
-  def m20_wht_spectrogram(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val bytes = text.getBytes("US-ASCII")
-          val samples = Array.tabulate(bytes.length)(i =>
-            (((bytes(i) & 0xFF) - 96) * 128).toShort)
-          // odd ids ship FLAC, even ids WAV — the m08 mixed-corpus seam
-          if (id % 2 == 1)
-            MediaRow(id, Flac.encode(8000, 1, samples), "flac")
-          else MediaRow(id, MediaCodec.encodeWav(8000, samples), "wav16")
-        }
-      }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val a = MediaCodec.decodeAudio(r.payload).samples
-        val nw = a.length / 16
-        val buf = new Array[Long](16)
-        val bands = new Array[Long](4)
-        var w = 0
-        while (w < nw) {
-          var i = 0
-          while (i < 16) { buf(i) = a(16 * w + i).toLong; i += 1 }
-          // in-place fast WHT butterfly → natural Hadamard order
-          var len = 1
-          while (len < 16) {
-            var base = 0
-            while (base < 16) {
-              var j = base
-              while (j < base + len) {
-                val x = buf(j); val y = buf(j + len)
-                buf(j) = x + y; buf(j + len) = x - y
-                j += 1
-              }
-              base += 2 * len
+  def m20_wht_spectrogram(s: SparkSession, dir: String): DataFrame =
+    features(encode(docs(s, dir))(wavOrFlac)) { r =>
+      val a = MediaCodec.decodeAudio(r.payload).samples
+      val nw = a.length / 16
+      val buf = new Array[Long](16)
+      val bands = new Array[Long](4)
+      var w = 0
+      while (w < nw) {
+        var i = 0
+        while (i < 16) { buf(i) = a(16 * w + i).toLong; i += 1 }
+        // in-place fast WHT butterfly → natural Hadamard order
+        var len = 1
+        while (len < 16) {
+          var base = 0
+          while (base < 16) {
+            var j = base
+            while (j < base + len) {
+              val x = buf(j); val y = buf(j + len)
+              buf(j) = x + y; buf(j + len) = x - y
+              j += 1
             }
-            len *= 2
+            base += 2 * len
           }
-          i = 0
-          while (i < 16) { bands(i / 4) += buf(i) * buf(i); i += 1 }
-          w += 1
+          len *= 2
         }
-        WhtBands(r.doc_id, nw.toLong, bands(0), bands(1), bands(2), bands(3))
+        i = 0
+        while (i < 16) { bands(i / 4) += buf(i) * buf(i); i += 1 }
+        w += 1
       }
-    }.toDF()
-      .orderBy("doc_id")
-  }
+      WhtBands(r.doc_id, nw.toLong, bands(0), bands(1), bands(2), bands(3))
+    }
 
   final case class FlacFeature(doc_id: Long, n_samples: Long,
                                n_frames: Long, ch_mode: Long, amp_l: Long,
@@ -2511,43 +1729,29 @@ object MultimodalQueries {
     * before the output sort — the m01–m08 posture; 100 TB of FLAC
     * decodes at scan speed. */
   def m26_flac_features(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val bytes = text.getBytes("US-ASCII")
-          val n = bytes.length
-          val inter = new Array[Short](2 * n)
-          var i = 0
-          while (i < n) {
-            inter(2 * i) = (((bytes(i) & 0xFF) - 96) * 128).toShort
-            inter(2 * i + 1) = (((bytes(n - 1 - i) & 0xFF) - 96) * 128).toShort
-            i += 1
-          }
-          MediaRow(id, Flac.encode(8000, 2, inter, mode = (id % 4).toInt,
-            wastedBits = if (id % 3 == 0) 7 else 0), "flac")
-        }
+    val media = encode(docs(s, dir)) { (id, b) =>
+      val l = pcm(b)
+      val n = l.length
+      val inter = Array.tabulate(2 * n)(j =>
+        if (j % 2 == 0) l(j / 2) else l(n - 1 - j / 2))
+      MediaRow(id, Flac.encode(8000, 2, inter, mode = (id % 4).toInt,
+        wastedBits = if (id % 3 == 0) 7 else 0), "flac")
+    }
+    features(media) { r =>
+      val a = MediaCodec.decodeAudio(r.payload).samples
+      val n = a.length / 2
+      var ampL = 0L; var ampR = 0L; var csL = 0L; var csR = 0L
+      var i = 0
+      while (i < n) {
+        val l = a(2 * i).toLong
+        val rr = a(2 * i + 1).toLong
+        ampL += math.abs(l); ampR += math.abs(rr)
+        csL += (i + 1) * l; csR += (i + 1) * rr
+        i += 1
       }
-    media.mapPartitions { it =>
-      it.map { r =>
-        val a = MediaCodec.decodeAudio(r.payload).samples
-        val n = a.length / 2
-        var ampL = 0L; var ampR = 0L; var csL = 0L; var csR = 0L
-        var i = 0
-        while (i < n) {
-          val l = a(2 * i).toLong
-          val rr = a(2 * i + 1).toLong
-          ampL += math.abs(l); ampR += math.abs(rr)
-          csL += (i + 1) * l; csR += (i + 1) * rr
-          i += 1
-        }
-        FlacFeature(r.doc_id, n.toLong, ((n + 255) / 256).toLong,
-          r.doc_id % 4, ampL, ampR, csL, csR)
-      }
-    }.toDF()
-      .orderBy("doc_id")
+      FlacFeature(r.doc_id, n.toLong, ((n + 255) / 256).toLong,
+        r.doc_id % 4, ampL, ampR, csL, csR)
+    }
   }
 
   final case class MjpegShot(doc_id: Long, n_frames: Long, width: Long,
@@ -2571,43 +1775,16 @@ object MultimodalQueries {
     * stages, one container+JPEG decode per row, O(frames·pixels) work,
     * no shuffle before the output sort. */
   def m27_mjpeg_shots(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        val bytes = text.getBytes("US-ASCII")
-        val len = bytes.length
-        val nf = len % 6 + 2
-        val frames = (0 until nf).map { fr =>
-          val vals = Array.tabulate(4)(k =>
-            if (len == 0) 0
-            else bytes(((fr / 3) * 11 + 3 * k + fr) % len) & 0xFF)
-          Jpeg.encodeGrayFlat(16, 16, vals)
-        }
-        MediaRow(id, Avi.encodeMjpeg(frames, 16, 16, 10), "avi")
-      })
-    media.mapPartitions(_.map { r =>
+    val media = encode(docs(s, dir)) { (id, b) =>
+      MediaRow(id, Avi.encodeMjpeg(jpegFrames(b, clipLen(b), shots = true),
+        16, 16, 10), "avi")
+    }
+    features(media) { r =>
       val v = Avi.decodeMjpeg(r.payload)
-      val n = v.frames.length
-      val sads = Array.tabulate(n - 1) { t =>
-        val a = v.frames(t).pixels
-        val bp = v.frames(t + 1).pixels
-        var sd = 0L
-        var p = 0
-        while (p < bp.length) {
-          sd += math.abs((bp(p) & 0xFF) - (a(p) & 0xFF))
-          p += 1
-        }
-        sd
-      }
-      val total = sads.sum
-      val cuts = sads.count(sd => sd * (n - 1) * 2 > 3 * total).toLong
-      MjpegShot(r.doc_id, n.toLong, v.width.toLong, v.height.toLong,
-        v.fps.toLong, total, if (sads.isEmpty) 0L else sads.max, cuts,
-        cuts + 1L)
-    }).toDF()
-      .orderBy("doc_id")
+      val (total, maxSad, cuts) = shotCuts(v.frames.map(_.pixels))
+      MjpegShot(r.doc_id, v.frames.length.toLong, v.width.toLong,
+        v.height.toLong, v.fps.toLong, total, maxSad, cuts, cuts + 1L)
+    }
   }
 
   final case class AvDemux(doc_id: Long, n_frames: Long, n_samples: Long,
@@ -2632,54 +1809,18 @@ object MultimodalQueries {
     * stages, one container walk + JPEG decodes per row, no shuffle
     * before the output sort. */
   def m28_avi_demux(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        val bytes = text.getBytes("US-ASCII")
-        val len = bytes.length
-        val nf = len % 6 + 2
-        val frames = (0 until nf).map { fr =>
-          val vals = Array.tabulate(4)(k =>
-            if (len == 0) 0 else bytes((fr + 3 * k) % len) & 0xFF)
-          Jpeg.encodeGrayFlat(16, 16, vals)
-        }
-        val samples = Array.tabulate(len)(i =>
-          (((bytes(i) & 0xFF) - 96) * 128).toShort)
-        MediaRow(id, Avi.encodeMjpegAv(frames, 16, 16, 10, 8000, samples),
-          "avi-av")
-      })
-    media.mapPartitions(_.map { r =>
+    val media = encode(docs(s, dir)) { (id, b) =>
+      MediaRow(id, Avi.encodeMjpegAv(jpegFrames(b, clipLen(b)), 16, 16, 10,
+        8000, pcm(b)), "avi-av")
+    }
+    features(media) { r =>
       val av = Avi.decodeAv(r.payload)
-      val v = av.video
-      var luma0 = 0L
-      v.frames.head.pixels.foreach(b => luma0 += (b & 0xFF))
-      var motion = 0L
-      var f = 1
-      while (f < v.frames.length) {
-        val a = v.frames(f - 1).pixels
-        val bp = v.frames(f).pixels
-        var p = 0
-        while (p < bp.length) {
-          motion += math.abs((bp(p) & 0xFF) - (a(p) & 0xFF))
-          p += 1
-        }
-        f += 1
-      }
+      val frames = av.video.frames.map(_.pixels)
       val au = av.audio.map(_.samples).getOrElse(Array.emptyShortArray)
-      var amp = 0L
-      var zcr = 0L
-      var i = 0
-      while (i < au.length) {
-        amp += math.abs(au(i).toLong)
-        if (i > 0 && ((au(i - 1) < 0) != (au(i) < 0))) zcr += 1
-        i += 1
-      }
-      AvDemux(r.doc_id, v.frames.length.toLong, au.length.toLong, luma0,
-        motion, amp, zcr)
-    }).toDF()
-      .orderBy("doc_id")
+      val (zcr, _, _) = audioStats(au)
+      AvDemux(r.doc_id, frames.length.toLong, au.length.toLong,
+        byteSum(frames.head), sads(frames).sum, sampleStats(au)._2, zcr)
+    }
   }
 
   /** m29 — cross-VIDEO near-duplicate detection, the m06/m08
@@ -2712,35 +1853,31 @@ object MultimodalQueries {
     * equi-join on (band, key), popcount filter; candidate volume is
     * governed by the 16-bit band space, never n². */
   def m29_video_neardup(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"))
-      .as[Long]
-      .mapPartitions(_.map { id =>
-        val cid = id / 3
-        val jit = (id % 3).toInt
-        val frames = (0 until 12).map { fr =>
-          val vals = Array.tabulate(4) { k =>
-            // square-of-mixed-Lehmer: any chain AFFINE in the element
-            // index keeps a constant mod-M difference between adjacent
-            // elements, which makes the transition bits near-identical
-            // across content ids (measured: 500 docs → 50 fingerprints);
-            // squaring makes the adjacent difference 62x+961, i.e.
-            // content-dependent
-            val x = (cid % 2147483647L) * 2654435761L % 2147483647L +
-              31L * (fr * 4 + k) + 7L
-            (x * x % 2147483647L % 200L).toInt +
-              (if (fr % 2 == 1) jit else 0)
-          }
-          Jpeg.encodeGrayFlat(16, 16, vals)
+    val media = ids(s, dir).mapPartitions(_.map { id =>
+      val cid = id / 3
+      val jit = (id % 3).toInt
+      val frames = (0 until 12).map { fr =>
+        val vals = Array.tabulate(4) { k =>
+          // square-of-mixed-Lehmer: any chain AFFINE in the element
+          // index keeps a constant mod-M difference between adjacent
+          // elements, which makes the transition bits near-identical
+          // across content ids (measured: 500 docs → 50 fingerprints);
+          // squaring makes the adjacent difference 62x+961, i.e.
+          // content-dependent
+          val x = (cid % 2147483647L) * 2654435761L % 2147483647L +
+            31L * (fr * 4 + k) + 7L
+          (x * x % 2147483647L % 200L).toInt +
+            (if (fr % 2 == 1) jit else 0)
         }
-        MediaRow(id, Avi.encodeMjpeg(frames, 16, 16, 10 + 5 * jit), "avi")
-      })
-    // r18: fps (2 longs/doc) feeds BOTH sides of the band self-join —
-    // uncached, each side re-ran the full MJPEG encode + decode pipeline
-    // (plan audit: 2x SerializeFromObject branches, no reuse). Cached
-    // and released after the pair set materializes.
-    val fps = media.mapPartitions(_.map { r =>
+        Jpeg.encodeGrayFlat(16, 16, vals)
+      }
+      MediaRow(id, Avi.encodeMjpeg(frames, 16, 16, 10 + 5 * jit), "avi")
+    })(Encoders.product[MediaRow])
+    // fps (2 longs/doc) feeds BOTH sides of the band self-join: uncached,
+    // each side would re-run the full MJPEG encode + decode pipeline.
+    // Persisted, filled in one job before the join plans (a lazy fill
+    // would race the cache), released once the pair set materializes.
+    val fps = rows(media, "doc_id", "fp") { r =>
       val v = Avi.decodeMjpeg(r.payload)
       // flat 8×8 blocks in raster order: block k of frame fr is the
       // decoded pixel at (8·(k/2), 8·(k%2))
@@ -2753,23 +1890,9 @@ object MultimodalQueries {
       var b = 0
       while (b < 47) { if (seq(b + 1) > seq(b)) fp |= 1L << b; b += 1 }
       (r.doc_id, fp)
-    }).toDF("doc_id", "fp").cache()
-    fps.count() // eager fill: the band self-join below would race the
-                // cache and re-run the MJPEG decode on both sides (the
-                // d12/collapsed idiom; ADVICE r18 item 1)
-    val bands = fps.select(col("doc_id"), col("fp"), explode(
-        array((0 until 3).map(b => struct(lit(b).as("b"),
-          shiftright(col("fp"), 16 * b).bitwiseAND(65535L).as("key"))): _*))
-        .as("bk"))
-      .select(col("doc_id"), col("fp"), col("bk.b"), col("bk.key"))
-    val out = bands.as("x").join(bands.as("y"),
-        col("x.b") === col("y.b") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        bit_count(col("x.fp").bitwiseXOR(col("y.fp"))).cast("long")
-          .as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= 6)
+    }.persist()
+    Engine.materialize(fps)
+    val out = hammingPairs(fps, "fp", 3, 6)
       .localCheckpoint(true) // near-dup pairs: bounded by band collisions
     fps.unpersist()
     out.orderBy("doc_a", "doc_b")
@@ -2798,33 +1921,16 @@ object MultimodalQueries {
     * stages, one container walk + 4 JPEG decodes per row, no shuffle
     * before the output sort. */
   def m30_av_sync(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        val bytes = text.getBytes("US-ASCII")
-        val len = bytes.length
-        val d = (id % 3).toInt
-        val slices = Array.tabulate(4)(f => 50 + d * (f + 1))
-        val total = slices.sum
-        val samples = Array.tabulate(total)(i =>
-          (((if (len == 0) 0 else bytes(i % len) & 0xFF) - 96) * 128).toShort)
-        val frames = (0 until 4).map { fr =>
-          val vals = Array.tabulate(4)(k =>
-            if (len == 0) 0 else bytes((fr + 3 * k) % len) & 0xFF)
-          Jpeg.encodeGrayFlat(16, 16, vals)
-        }
-        MediaRow(id,
-          Avi.encodeMjpegAv(frames, 16, 16, 10, 500, samples, slices),
-          "avi-av")
-      })
-    media.mapPartitions(_.map { r =>
+    val media = encode(docs(s, dir)) { (id, b) =>
+      val slices = Array.tabulate(4)(f => 50 + (id % 3).toInt * (f + 1))
+      val samples = Array.tabulate(slices.sum)(i => sample(tap(b, i)))
+      MediaRow(id, Avi.encodeMjpegAv(jpegFrames(b, 4), 16, 16, 10, 500,
+        samples, slices), "avi-av")
+    }
+    features(media) { r =>
       val av = Avi.decodeAv(r.payload)
       val audio = av.audio.get
       val nominal = audio.sampleRate / av.video.fps
-      var amp = 0L
-      audio.samples.foreach(v => amp += math.abs(v.toLong))
       var cum = 0L
       var maxDrift = 0L
       av.audioSlices.zipWithIndex.foreach { case (n, f) =>
@@ -2834,10 +1940,9 @@ object MultimodalQueries {
       }
       val driftUs = maxDrift * 1000000L / audio.sampleRate
       AvSync(r.doc_id, av.video.frames.length.toLong,
-        audio.samples.length.toLong, amp, maxDrift, driftUs,
-        if (driftUs > 25000L) 1L else 0L)
-    }).toDF()
-      .orderBy("doc_id")
+        audio.samples.length.toLong, sampleStats(audio.samples)._2,
+        maxDrift, driftUs, if (driftUs > 25000L) 1L else 0L)
+    }
   }
 
   final case class MediaQuarantine(doc_id: Long, ok: Long,
@@ -2864,34 +1969,23 @@ object MultimodalQueries {
     * per-row so one bad payload costs one row, not a task retry storm.
     * No shuffle before the output sort. */
   def m31_media_quarantine(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        val bytes = text.getBytes("US-ASCII")
-        val len = bytes.length
-        val vals = Array.tabulate(4)(k =>
-          if (len == 0) 0 else bytes((5 * k + 1) % len) & 0xFF)
-        val good = Jpeg.encodeGrayFlat(16, 16, vals)
-        val payload =
-          if (id % 7 == 0) java.util.Arrays.copyOf(good, good.length / 2)
-          else if (id % 7 == 3) { val b = good.clone(); b(0) = 0; b }
-          else good
-        MediaRow(id, payload, "jpeg")
-      })
-    media.mapPartitions(_.map { r =>
+    val media = encode(docs(s, dir)) { (id, b) =>
+      val good = Jpeg.encodeGrayFlat(16, 16, Array.tabulate(4)(k => tap(b, 5 * k + 1)))
+      val payload =
+        if (id % 7 == 0) java.util.Arrays.copyOf(good, good.length / 2)
+        else if (id % 7 == 3) { val c = good.clone(); c(0) = 0; c }
+        else good
+      MediaRow(id, payload, "jpeg")
+    }
+    features(media) { r =>
       scala.util.Try(MediaCodec.decodeImage(r.payload)) match {
         case scala.util.Success(img) =>
-          var lum = 0L
-          img.pixels.foreach(p => lum += (p & 0xFF))
           MediaQuarantine(r.doc_id, 1L, "none", img.width.toLong,
-            img.height.toLong, lum)
+            img.height.toLong, byteSum(img.pixels))
         case scala.util.Failure(_) =>
           MediaQuarantine(r.doc_id, 0L, "undecodable", 0L, 0L, 0L)
       }
-    }).toDF()
-      .orderBy("doc_id")
+    }
   }
 
   final case class RleFeature(doc_id: Long, width: Long, height: Long,
@@ -2915,20 +2009,11 @@ object MultimodalQueries {
     * Scale shape: the m01–m08 posture — two scan-parallel mapPartitions
     * stages, no shuffle before the output sort. */
   def m32_bmp_rle(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        val bytes = text.getBytes("US-ASCII")
-        val len = bytes.length
-        val gray = Array.tabulate(256) { i =>
-          val (r, c) = (i / 16, i % 16)
-          (if (len == 0) 0 else bytes((2 * r + c / 8) % len) & 0xFF).toByte
-        }
-        MediaRow(id, MediaCodec.encodeBmpRle8(16, 16, gray), "bmp-rle8")
-      })
-    media.mapPartitions(_.map { r =>
+    val media = encode(docs(s, dir)) { (id, b) =>
+      val gray = Array.tabulate(256)(i => tap(b, 2 * (i / 16) + (i % 16) / 8).toByte)
+      MediaRow(id, MediaCodec.encodeBmpRle8(16, 16, gray), "bmp-rle8")
+    }
+    features(media) { r =>
       val img = MediaCodec.decodeImage(r.payload)
       val ch = img.channels
       var lum = 0L
@@ -2951,8 +2036,7 @@ object MultimodalQueries {
       val raw = 54L + 1024L + 16L * 16L
       RleFeature(r.doc_id, img.width.toLong, img.height.toLong, lum,
         runs, payload, raw * 1000000L / payload)
-    }).toDF()
-      .orderBy("doc_id")
+    }
   }
 
   /** m33 — STREAMING cross-container media dedup, the streaming ×
@@ -2977,7 +2061,6 @@ object MultimodalQueries {
     * groups (the d13 argument), and cross-batch arrivals resolve
     * through the keyed store. */
   def m33_stream_media_dedup(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
     def contentFp(id: Long): (Array[Byte], Long) = {
       val cid = id / 3
@@ -2994,17 +2077,15 @@ object MultimodalQueries {
       }
       (gray, fp)
     }
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id")).as[Long]
-      .mapPartitions(_.map { id =>
-        val (gray, fp) = contentFp(id)
-        val payload = (id % 3) match {
-          case 0 => MediaCodec.encodeBmp8(16, 16, gray)
-          case 1 => MediaCodec.encodeBmpRle8(16, 16, gray)
-          case _ => MediaCodec.encodePgm(16, 16, gray)
-        }
-        (id, payload, f"$fp%016x")
-      }).toDF("doc_id", "payload", "fphex")
+    val media = rows(ids(s, dir), "doc_id", "payload", "fphex") { id =>
+      val (gray, fp) = contentFp(id)
+      val payload = (id % 3) match {
+        case 0 => MediaCodec.encodeBmp8(16, 16, gray)
+        case 1 => MediaCodec.encodeBmpRle8(16, 16, gray)
+        case _ => MediaCodec.encodePgm(16, 16, gray)
+      }
+      (id, payload, f"$fp%016x")
+    }
     val hiRow = media.agg(max("doc_id")).head()
     val half = if (hiRow.isNullAt(0)) 0L else hiRow.getLong(0) / 2
     val schema = StructType(Seq(
@@ -3014,21 +2095,21 @@ object MultimodalQueries {
       .parquet(watch)
     // decode INSIDE the stream: payload → pixels → dHash hex, then the
     // shared first-seen state keyed on it
-    val fps = in.as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val img = MediaCodec.decodeImage(payload)
-        require(img.width == 16 && img.height == 16,
-          s"unexpected geometry ${img.width}x${img.height}")
-        var fp = 0L
-        var j = 0
-        while (j < 63) {
-          val a = img.pixels(j * img.channels) & 0xFF
-          val b = img.pixels((j + 1) * img.channels) & 0xFF
-          if (b > a) fp |= 1L << j
-          j += 1
-        }
-        (id, f"$fp%016x")
-      }).toDF("doc_id", "text")
+    val fps = rows(in.as(Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)),
+        "doc_id", "text") { case (id, payload) =>
+      val img = MediaCodec.decodeImage(payload)
+      require(img.width == 16 && img.height == 16,
+        s"unexpected geometry ${img.width}x${img.height}")
+      var fp = 0L
+      var j = 0
+      while (j < 63) {
+        val a = img.pixels(j * img.channels) & 0xFF
+        val b = img.pixels((j + 1) * img.channels) & 0xFF
+        if (b > a) fp |= 1L << j
+        j += 1
+      }
+      (id, f"$fp%016x")
+    }
     val out = graft.streaming.StreamingDedup.dedupExactStream(fps)
     // r19: drops staged + renamed in (see StreamQueries.stageDrop)
     // so the polling source sees each drop as ONE micro-batch

@@ -1,10 +1,7 @@
 package graft.engine
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.ListenerBusShims
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.storage.StorageLevel
 
 import graft.SparkSpec
@@ -15,31 +12,6 @@ import graft.sources.NetCDF3
   * Spark job per statement over a resident input, and the exact row
   * count, so fragment sizes are unchanged. */
 class MaterializeSpec extends SparkSpec {
-  private val tagKey = "graft.spec.jobTag"
-
-  /** The Spark jobs `f` starts from this thread (tagged through a local
-    * property, which every job of the thread's actions carries). */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID.toString
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(tagKey) == tag)
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setLocalProperty(tagKey, tag)
-    try {
-      f
-      ListenerBusShims.drain(sc)
-    } finally {
-      sc.setLocalProperty(tagKey, null)
-      sc.removeSparkListener(l)
-    }
-    n.get
-  }
-
   private def size(s: IoServer#Session, frag: String): Long =
     s.execute(s"operation=function;function_name=oph_size;function_args=$frag")
       .get.head().getLong(0)

@@ -1,9 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusShims
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -61,29 +57,6 @@ class VectorIndexSpec extends SparkSpec {
       .select("d").head.getDouble(0)
     assert(java.lang.Double.doubleToRawLongBits(kept) ==
       java.lang.Double.doubleToRawLongBits(-0.0))
-  }
-
-  /** The Spark jobs `f` starts from this thread. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tagKey = "graft.spec.jobTag"
-    val tag = java.util.UUID.randomUUID.toString
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(tagKey) == tag)
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setLocalProperty(tagKey, tag)
-    try {
-      f
-      ListenerBusShims.drain(sc)
-    } finally {
-      sc.setLocalProperty(tagKey, null)
-      sc.removeSparkListener(l)
-    }
-    n.get
   }
 
   test("over a built index, planning an s18 serve starts only the probed-cell collect") {
