@@ -227,16 +227,14 @@ final case class Cube(df: DataFrame, explicitDims: Seq[Dim], implicitDims: Seq[D
   /** OPH_EXPORTNC at the cube level: write the cube to a NetCDF classic
     * file with one dim per explicit+implicit dimension. Export to a
     * single .nc is inherently a gather, but driver MEMORY stays bounded:
-    * the id-sorted rows are pumped partition-by-partition
-    * (toLocalIterator) into the sequential CDF data section — the writer
-    * verifies the streamed element count against the dim product, so a
-    * sparse/overfull cube still fails loud. */
+    * the rows are pumped in id order by [[graft.sources.ExportScan.ordered]]
+    * into the sequential CDF data section — the writer verifies the
+    * streamed element count against the dim product, so a sparse/overfull
+    * cube still fails loud. */
   def exportNetCDF(path: String, varName: String = "measure"): Unit = {
-    import scala.jdk.CollectionConverters._
     val dims = (explicitDims ++ implicitDims).map(d => d.name -> d.size)
-    val batches = df.orderBy("id_dim").select("id_dim", "measure")
-      .toLocalIterator().asScala.map(_.getSeq[Double](1).toArray)
-    graft.sources.NetCDF3.writeDoubleVarStreamed(path, dims, varName, batches)
+    val (_, _, rows) = graft.sources.ExportScan.ordered(df, "id_dim", "measure")
+    graft.sources.NetCDF3.writeDoubleVarStreamed(path, dims, varName, rows)
   }
 
   /** DISTRIBUTED cube export to a Zarr store preserving the full

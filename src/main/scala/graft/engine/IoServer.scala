@@ -79,7 +79,13 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
       throw new IllegalArgumentException(s"no such fragment: $db.$name"))
     fragSizes.remove((db, name))
     fragZip -= ((db, name))
-    df.unpersist()
+    release(df)
+  }
+  /** Unpersist a frame that left the catalog, unless a live fragment's plan
+    * has the same result: cache entries are keyed by plan, so it shares one. */
+  private def release(df: DataFrame): Unit = synchronized {
+    val plan = df.queryExecution.analyzed
+    if (!frags.values.exists(_.queryExecution.analyzed.sameResult(plan))) df.unpersist()
   }
   /** Rows of a fragment (0 if absent). A fragment registered or swapped
     * in without a size (-1) is counted on first use by filling its cache,
@@ -124,9 +130,9 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
     * "Structured Streaming + in-memory caching"). */
   def updateFragment(db: String, name: String, df: DataFrame,
                      sizeHint: Long = -1L): Unit = synchronized {
-    frags.remove((db, name)).foreach(_.unpersist())
-    frags((db, name)) = df
+    val old = frags.put((db, name), df)
     fragSizes((db, name)) = sizeHint
+    old.foreach(release)
   }
 
   /** Persist the whole catalog to `dir` (parquet per fragment + a
@@ -707,8 +713,10 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
           execute(ctas)
         case "oph_export" =>
           val (db, nm) = splitName(args.head)
-          val r = server.getFrag(db, nm).orderBy("id_dim")
-          // optional second arg: write the fragment to a file (feeds
+          val frag = server.getFrag(db, nm)
+          // the result set is the fragment ordered by id_dim; the writers
+          // take it unsorted (ExportScan: one stats job, one write pass).
+          // Optional second arg: write the fragment to a file (feeds
           // OPH_EXPORTNC); optional third arg selects the container:
           // classic (CDF-1, default) | cdf5 | netcdf4 (HDF5) |
           // zarr (v2 store) | zarr3 (v3 store); optional fourth arg:
@@ -717,24 +725,28 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
           // chunks, the driver only the metadata (ZarrExport /
           // HDF5.writeDoubleVarDistributed); classic/cdf5/netcdf4 are
           // sequential single-file writes and stay driver-side
-          // (streamed, memory-bounded), matching the reference's own
-          // result-paging semantics.
+          // (streamed in id order by ExportScan.ordered, memory-bounded),
+          // matching the reference's own result-paging semantics.
+          val r = frag.orderBy("id_dim")
           args.lift(1).filter(_.nonEmpty).foreach { path =>
             val rowsPerChunk = args.lift(3).filter(_.nonEmpty)
               .map(_.toInt).getOrElse(0)
             val container = args.lift(2).filter(_.nonEmpty).getOrElse("classic")
+            // netcdf4-dist-<fa|bt2|ea>[-z]: the HDF5 chunk index it writes
+            def chunkIndex = container.split('-').lift(2).flatMap(Map(
+              "fa" -> "fixedarray", "bt2" -> "btree2", "ea" -> "extarray").get)
             container match {
               case "zarr" =>
-                graft.sources.ZarrExport.writeDistributed(r, "id_dim",
+                graft.sources.ZarrExport.writeDistributed(frag, "id_dim",
                   "measure", path, "measure", v3 = false, rowsPerChunk)
               case "zarr3" =>
-                graft.sources.ZarrExport.writeDistributed(r, "id_dim",
+                graft.sources.ZarrExport.writeDistributed(frag, "id_dim",
                   "measure", path, "measure", v3 = true, rowsPerChunk)
               case "zarr3-sharded" =>
                 // fifth arg = inner chunks per shard (object count /= it)
                 val chunksPerShard = args.lift(4).filter(_.nonEmpty)
                   .map(_.toInt).getOrElse(8)
-                graft.sources.ZarrExport.writeDistributedSharded(r, "id_dim",
+                graft.sources.ZarrExport.writeDistributedSharded(frag, "id_dim",
                   "measure", path, "measure",
                   if (rowsPerChunk > 0) rowsPerChunk else 512, chunksPerShard)
               case "netcdf4-dist" | "netcdf4-dist-fa" | "netcdf4-dist-bt2"
@@ -747,14 +759,9 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
                 // writes for bounded dims) — and executors write their
                 // chunks at disjoint ranges (needs a shared POSIX fs;
                 // object stores take the zarr paths above)
-                val idx = container match {
-                  case "netcdf4-dist-fa" => "fixedarray"
-                  case "netcdf4-dist-bt2" => "btree2"
-                  case "netcdf4-dist-ea" => "extarray"
-                  case _ => "implicit"
-                }
-                graft.sources.HDF5.writeDoubleVarDistributed(r, "id_dim",
-                  "measure", path, "measure", rowsPerChunk, idx)
+                graft.sources.HDF5.writeDoubleVarDistributed(frag, "id_dim",
+                  "measure", path, "measure", rowsPerChunk,
+                  chunkIndex.getOrElse("implicit"))
               case "netcdf4-dist-fa-z" | "netcdf4-dist-bt2-z"
                  | "netcdf4-dist-ea-z" =>
                 // FILTERED executor-parallel HDF5 (shuffle + deflate +
@@ -763,42 +770,24 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
                 // prefix-sums offsets into the filtered chunk index, and
                 // executors place blobs at their assigned ranges — the
                 // two-phase collective write
-                val idx = container match {
-                  case "netcdf4-dist-fa-z" => "fixedarray"
-                  case "netcdf4-dist-bt2-z" => "btree2"
-                  case _ => "extarray"
-                }
-                graft.sources.HDF5.writeDoubleVarDistributedFiltered(r,
-                  "id_dim", "measure", path, "measure", rowsPerChunk, idx)
+                graft.sources.HDF5.writeDoubleVarDistributedFiltered(frag,
+                  "id_dim", "measure", path, "measure", rowsPerChunk, chunkIndex.get)
               case fmt =>
-                // single-file container: bytes must pass through one
-                // writer, but driver MEMORY stays bounded — one stats
-                // pass for the header dims, then the sorted fragment is
-                // pumped partition-by-partition (toLocalIterator) into
-                // the sequential CDF/HDF5 data section
-                val src = r.select(col("id_dim"),
-                  col("measure").cast("array<double>").as("measure"))
-                val sz = when(col("measure").isNotNull, size(col("measure")))
-                val st = src.agg(count(lit(1)).as("n"),
-                  min(sz).as("mLo"), max(sz).as("mHi")).collect()(0)
-                val n = st.getLong(0).toInt
-                val m = if (n == 0 || st.isNullAt(1)) 0 else st.getInt(1)
-                require(n == 0 || (!st.isNullAt(1) && st.getInt(2) == m),
-                  s"ragged/null measure arrays — uniform width required")
+                // single-file container: bytes pass through one writer
+                // in id order, driver memory bounded by one fetch
+                val (n, m, rows) =
+                  graft.sources.ExportScan.ordered(frag, "id_dim", "measure")
                 val dims = Seq("id_dim" -> n, "elem" -> m)
-                import scala.jdk.CollectionConverters._
-                def batches = src.toLocalIterator().asScala
-                  .map(_.getSeq[Double](1).toArray)
                 fmt match {
                   case "classic" =>
                     graft.sources.NetCDF3.writeDoubleVarStreamed(path, dims,
-                      "measure", batches)
+                      "measure", rows)
                   case "cdf5" =>
                     graft.sources.NetCDF3.writeDoubleVarStreamed(path, dims,
-                      "measure", batches, version = 5)
+                      "measure", rows, version = 5)
                   case "netcdf4" =>
                     graft.sources.HDF5.writeDoubleVarStreamed(path, dims,
-                      "measure", batches)
+                      "measure", rows)
                   case o => throw new IllegalArgumentException(
                     s"unknown export format: $o")
                 }

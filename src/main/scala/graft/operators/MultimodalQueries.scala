@@ -2077,16 +2077,20 @@ object MultimodalQueries {
       }
       (gray, fp)
     }
-    val media = rows(ids(s, dir), "doc_id", "payload", "fphex") { id =>
-      val (gray, fp) = contentFp(id)
-      val payload = (id % 3) match {
-        case 0 => MediaCodec.encodeBmp8(16, 16, gray)
-        case 1 => MediaCodec.encodeBmpRle8(16, 16, gray)
-        case _ => MediaCodec.encodePgm(16, 16, gray)
+    // each drop encodes only its own ids: the cut comes from the ids and
+    // the id filter runs before the (typed, opaque) encode
+    val docIds = ids(s, dir)
+    def media(p: org.apache.spark.sql.Column) =
+      rows(docIds.filter(p), "doc_id", "payload", "fphex") { id =>
+        val (gray, fp) = contentFp(id)
+        val payload = (id % 3) match {
+          case 0 => MediaCodec.encodeBmp8(16, 16, gray)
+          case 1 => MediaCodec.encodeBmpRle8(16, 16, gray)
+          case _ => MediaCodec.encodePgm(16, 16, gray)
+        }
+        (id, payload, f"$fp%016x")
       }
-      (id, payload, f"$fp%016x")
-    }
-    val hiRow = media.agg(max("doc_id")).head()
+    val hiRow = docIds.agg(max("doc_id")).head()
     val half = if (hiRow.isNullAt(0)) 0L else hiRow.getLong(0) / 2
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("payload", BinaryType)))
@@ -2114,7 +2118,7 @@ object MultimodalQueries {
     // r19: drops staged + renamed in (see StreamQueries.stageDrop)
     // so the polling source sees each drop as ONE micro-batch
     def drop(p: org.apache.spark.sql.Column, tag: String): () => Unit =
-      StreamQueries.parquetDrop(watch, tag, media.filter(p)
+      StreamQueries.parquetDrop(watch, tag, media(p)
         .repartition(4, col("fphex")).select("doc_id", "payload"))
     StreamQueries.drain(s, "m33_stream_out", out,
       org.apache.spark.sql.streaming.OutputMode.Append,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.engine.IoServer
 import graft.functions.{ArrayPrimitives => AP}
-import graft.sources.NetCDF3
+import graft.sources.{ExportScan, NetCDF3}
 
 /** End-to-end NetCDF pipeline with a DuckDB oracle: export the
   * embeddings to a NetCDF-classic file with our writer, load it back
@@ -24,16 +24,11 @@ object NetCDFQueries {
   def qn01_netcdf_roundtrip(s: SparkSession, dir: String): DataFrame = {
     // export is a single-file write (the reference's oph_export path),
     // but driver memory stays bounded: vec_id is dense from 0, so the
-    // id-sorted stream IS the row-major layout — pump it partition-by-
-    // partition into the sequential CDF data section
-    import scala.jdk.CollectionConverters._
-    val src = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .orderBy("vec_id")
-    val n = src.count().toInt
+    // id-ordered stream IS the row-major layout — pump it (oph_export's
+    // ExportScan.ordered) into the sequential CDF data section
+    val (n, _, rows) = ExportScan.ordered(Tables.embeddings(s, dir), "vec_id", "embedding")
     val path = Files.createTempDirectory("graft_nc").resolve("emb.nc").toString
-    NetCDF3.writeDoubleVarStreamed(path, Seq("row" -> n, "x" -> 64), "measure",
-      src.toLocalIterator().asScala.map(_.getSeq[Double](1).take(64).toArray))
+    NetCDF3.writeDoubleVarStreamed(path, Seq("row" -> n, "x" -> 64), "measure", rows)
 
     val ses = new IoServer(s).newSession()
     ses.execute(
@@ -1253,15 +1248,9 @@ object NetCDFQueries {
     * resolve generalizes it the way NCO's ncrcat does, with the
     * file→offset map derived from headers, not trusted input. */
   def qn18_multifile_import(s: SparkSession, dir: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val src = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .orderBy("vec_id")
-    val n = src.count().toInt
+    val (n, _, it) = ExportScan.ordered(Tables.embeddings(s, dir), "vec_id", "embedding")
     val tmp = Files.createTempDirectory("graft_mfnc")
     val sizes = Seq(n / 4, n / 2, n - n / 4 - n / 2)
-    val it = src.toLocalIterator().asScala
-      .map(_.getSeq[Double](1).toArray)
     val paths = sizes.zipWithIndex.map { case (cnt, i) =>
       val p = tmp.resolve(s"part$i.nc").toString
       NetCDF3.writeDoubleVarStreamed(p, Seq("row" -> cnt, "x" -> 64),

@@ -1925,9 +1925,9 @@ object HDF5 {
   /** Single-variable contiguous-layout writer that STREAMS the values:
     * all metadata is laid out first (dims — and therefore the data size —
     * are known upfront), flushed, and the data section is appended
-    * row-batch by row-batch. Driver memory is bounded by one batch
-    * (one Spark partition via `toLocalIterator`) instead of the whole
-    * variable — the single-file counterpart of [[graft.sources.ZarrExport]]'s
+    * row-batch by row-batch. Driver memory is bounded by one fetch of
+    * [[ExportScan.ordered]] instead of the whole variable — the
+    * single-file counterpart of [[graft.sources.ZarrExport]]'s
     * fully-distributed chunk writes. Layout matches [[writeDoubleVar]]
     * with `chunkDims = None`: superblock v0, symbol-table root group,
     * layout v3 class-1 contiguous. */
@@ -2221,57 +2221,28 @@ object HDF5 {
     * Zarr export is the right sink (no single-file constraint).
     * Partial tail chunks occupy their full nominal slot, zero-padded,
     * exactly as the C library lays them out; readers clip by the
-    * dataspace dims. Returns (rows, chunkCount). */
+    * dataspace dims. `frag` is read unsorted: [[ExportScan.header]]'s
+    * stats job, then one write pass ([[ExportScan.chunks]]) that places
+    * rows by id — two jobs for contiguous ids, which only a gap in the
+    * ids turns into a sort. Returns (rows, chunkCount). */
   def writeDoubleVarDistributed(frag: org.apache.spark.sql.DataFrame,
       idCol: String, arrCol: String, path: String, varName: String,
       rowsPerChunk: Int = 0, index: String = "implicit"): (Long, Int) = {
-    import org.apache.spark.sql.functions.col
-    val src = frag.select(col(idCol).cast("long").as("id"),
-      col(arrCol).cast("array<double>").as("a"))
-    val (n, lo, hi, m) = ZarrExport.exportStats(src, idCol)
+    val src = ExportScan.source(frag, idCol, arrCol)
+    val (n, lo, hi, m) = ExportScan.header(src, idCol)
     if (n == 0L || m <= 0) { // degenerate: metadata-only file
       writeDoubleVar(path, Seq("id_dim" -> n.toInt, "elem" -> math.max(m, 0)),
         varName, Array.emptyDoubleArray, None)
       return (n, 0)
     }
-    val rpc =
-      if (rowsPerChunk > 0) rowsPerChunk
-      else math.max(1, (4 << 20) / (m * 8))
+    val rpc = ExportScan.chunkRows(rowsPerChunk, m)
     val chunkBytes = rpc.toLong * m * 8
-    require(chunkBytes <= Int.MaxValue,
-      s"rowsPerChunk $rpc x $m elements exceeds the 2 GiB chunk buffer limit")
     val nChunks = ((n + rpc - 1) / rpc).toInt
-    // two-pass head build: length is address-invariant, so probe first
-    val dims = Seq("id_dim" -> n.toInt, "elem" -> m)
-    val probeLen = buildDistributedHead(varName, dims, rpc, 0L, 0L, index).length
-    val dataAddr = (probeLen + 511L) / 512 * 512  // sector-align the data
-    val eof = dataAddr + nChunks.toLong * chunkBytes
-    val head = buildDistributedHead(varName, dims, rpc, dataAddr, eof, index)
-    require(head.length == probeLen, "head length changed between passes")
-    val raf = new java.io.RandomAccessFile(path, "rw")
-    try { raf.setLength(0); raf.write(head); raf.setLength(eof) }
-    finally raf.close()
-    // row index without a global sort when ids are contiguous (the
-    // fragment invariant); otherwise sort + zipWithIndex
-    val indexed: org.apache.spark.rdd.RDD[(Long, Array[Double])] =
-      if (hi - lo + 1 == n)
-        src.rdd.map(r => (r.getLong(0) - lo, r.getSeq[Double](1).toArray))
-      else
-        src.orderBy("id").rdd.zipWithIndex().map { case (r, i) =>
-          (i, r.getSeq[Double](1).toArray)
-        }
-    val sc = frag.sparkSession.sparkContext
-    indexed
-      .map { case (i, a) => (i / rpc, (i, a)) }
-      .groupByKey(math.max(1, math.min(nChunks, sc.defaultParallelism)))
-      .foreach { case (gid, rows) =>
-        val raw = new Array[Byte](chunkBytes.toInt) // tail chunk zero-padded
-        val bb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-        rows.foreach { case (i, a) =>
-          val off = ((i - gid * rpc) * m * 8).toInt
-          var j = 0
-          while (j < m) { bb.putDouble(off + j * 8, a(j)); j += 1 }
-        }
+    val dataAddr = writeDistributedHead(path, varName,
+      Seq("id_dim" -> n.toInt, "elem" -> m), rpc, index, nChunks.toLong * chunkBytes)
+    // each executor writes its chunks (the tail zero-padded) in place
+    ExportScan.chunks(ExportScan.rowIndex(src, n, lo, hi), rpc, m, nChunks)
+      .foreach { case (gid, raw) =>
         val f = new java.io.RandomAccessFile(path, "rw")
         try { f.seek(dataAddr + gid * chunkBytes); f.write(raw) }
         finally f.close()
@@ -2287,9 +2258,11 @@ object HDF5 {
     * chunk sizes are data-dependent, so offsets are NOT closed-form;
     * this is the classic two-phase collective write:
     *
-    *   1. executors assemble + filter (shuffle → deflate → fletcher32)
-    *      their chunks, spill each blob next to the target file, and
-    *      report (chunkIdx, compressedSize) — a few bytes per chunk;
+    *   1. executors assemble ([[ExportScan.chunks]], after the same
+    *      stats job on the unsorted fragment) + filter (shuffle →
+    *      deflate → fletcher32) their chunks, spill each blob next to
+    *      the target file, and report (chunkIdx, compressedSize) — a few
+    *      bytes per chunk;
     *   2. the driver prefix-sums the sizes into real offsets, builds
     *      the COMPLETE filtered FA/BT2/EA chunk index into the metadata
     *      head (two-pass: the head's length is address-invariant
@@ -2313,52 +2286,28 @@ object HDF5 {
       deflateLevel: Int = 6, shuffleF: Boolean = true,
       fletcher: Boolean = true,
       dontFilterPartial: Boolean = false): (Long, Int, Long) = {
-    import org.apache.spark.sql.functions.col
     require(index != "implicit",
       "implicit index cannot carry filters — use fixedarray/btree2/extarray")
-    val src = frag.select(col(idCol).cast("long").as("id"),
-      col(arrCol).cast("array<double>").as("a"))
-    val (n, lo, hi, m) = ZarrExport.exportStats(src, idCol)
+    val src = ExportScan.source(frag, idCol, arrCol)
+    val (n, lo, hi, m) = ExportScan.header(src, idCol)
     if (n == 0L || m <= 0) {
       writeDoubleVar(path, Seq("id_dim" -> n.toInt, "elem" -> math.max(m, 0)),
         varName, Array.emptyDoubleArray, None)
       return (n, 0, 0L)
     }
-    val rpc =
-      if (rowsPerChunk > 0) rowsPerChunk
-      else math.max(1, (4 << 20) / (m * 8))
-    val chunkBytes = rpc.toLong * m * 8
-    require(chunkBytes <= Int.MaxValue,
-      s"rowsPerChunk $rpc x $m elements exceeds the 2 GiB chunk buffer limit")
+    val rpc = ExportScan.chunkRows(rowsPerChunk, m)
     val nChunks = ((n + rpc - 1) / rpc).toInt
-    val indexed: org.apache.spark.rdd.RDD[(Long, Array[Double])] =
-      if (hi - lo + 1 == n)
-        src.rdd.map(r => (r.getLong(0) - lo, r.getSeq[Double](1).toArray))
-      else
-        src.orderBy("id").rdd.zipWithIndex().map { case (r, i) =>
-          (i, r.getSeq[Double](1).toArray)
-        }
     val sc = frag.sparkSession.sparkContext
     val spillDir = new java.io.File(path + ".chunks")
     spillDir.mkdirs()
     val spill = spillDir.getPath
-    val (cbI, rpcL, mL, lvl, shf, fl) =
-      (chunkBytes.toInt, rpc, m, deflateLevel, shuffleF, fletcher)
+    val (lvl, shf, fl) = (deflateLevel, shuffleF, fletcher)
     // the don't-filter-partial edge chunk (layout flag bit 0): the tail
     // is stored RAW at its full nominal slot, everything else filtered
     val rawTailGid = if (dontFilterPartial && n % rpc != 0) nChunks - 1 else -1
     // phase 1: filter + spill, report (chunkIdx, compressedSize)
-    val reported = indexed
-      .map { case (i, a) => (i / rpcL, (i, a)) }
-      .groupByKey(math.max(1, math.min(nChunks, sc.defaultParallelism)))
-      .map { case (gid, rows) =>
-        val raw = new Array[Byte](cbI) // tail chunk zero-padded
-        val bb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-        rows.foreach { case (i, a) =>
-          val off = ((i - gid * rpcL) * mL * 8).toInt
-          var j = 0
-          while (j < mL) { bb.putDouble(off + j * 8, a(j)); j += 1 }
-        }
+    val reported = ExportScan.chunks(ExportScan.rowIndex(src, n, lo, hi), rpc, m, nChunks)
+      .map { case (gid, raw) =>
         val blob =
           if (gid == rawTailGid) raw
           else filterChunkBytes(raw, shf, lvl, fl)
@@ -2378,20 +2327,11 @@ object HDF5 {
     // missing-file error on some executor.
     requireSharedSpill(spill, nChunks, path)
     // phase 2: driver head with the filtered index built from real sizes
-    val dims = Seq("id_dim" -> n.toInt, "elem" -> m)
     val df = DistFilter(sizes.toIndexedSeq, deflateLevel, shuffleF, fletcher,
       rawPartial = dontFilterPartial)
-    val probeLen = buildDistributedHead(varName, dims, rpc, 0L, 0L, index,
-      filter = Some(df)).length
-    val dataAddr = (probeLen + 511L) / 512 * 512
+    val dataAddr = writeDistributedHead(path, varName,
+      Seq("id_dim" -> n.toInt, "elem" -> m), rpc, index, sizes.sum, Some(df))
     val offsets = sizes.scanLeft(dataAddr)(_ + _)
-    val eof = offsets.last
-    val head = buildDistributedHead(varName, dims, rpc, dataAddr, eof, index,
-      filter = Some(df))
-    require(head.length == probeLen, "head length changed between passes")
-    val raf = new java.io.RandomAccessFile(path, "rw")
-    try { raf.setLength(0); raf.write(head); raf.setLength(eof) }
-    finally raf.close()
     // phase 3: executors place spilled blobs at assigned offsets
     val placements = (0 until nChunks).map(g => (g, offsets(g), sizes(g)))
     sc.parallelize(placements,
@@ -2406,7 +2346,27 @@ object HDF5 {
         java.nio.file.Files.delete(p)
       }
     spillDir.delete()
-    (n, nChunks, eof - dataAddr)
+    (n, nChunks, sizes.sum)
+  }
+
+  /** Write the distributed metadata head with the data at the first
+    * sector boundary after it, and pre-size the file to `dataLen` data
+    * bytes; returns the data address. The head's length does not depend
+    * on the addresses in it, so a probe build sizes it. */
+  private def writeDistributedHead(path: String, varName: String,
+      dims: Seq[(String, Int)], rpc: Int, index: String, dataLen: Long,
+      filter: Option[DistFilter] = None): Long = {
+    val probeLen = buildDistributedHead(varName, dims, rpc, 0L, 0L, index,
+      filter = filter).length
+    val dataAddr = (probeLen + 511L) / 512 * 512
+    val eof = dataAddr + dataLen
+    val head = buildDistributedHead(varName, dims, rpc, dataAddr, eof, index,
+      filter = filter)
+    require(head.length == probeLen, "head length changed between passes")
+    val raf = new java.io.RandomAccessFile(path, "rw")
+    try { raf.setLength(0); raf.write(head); raf.setLength(eof) }
+    finally raf.close()
+    dataAddr
   }
 
   /** Assert every phase-1 spill blob is visible from the caller (the

@@ -237,8 +237,8 @@ object NetCDF3 {
   /** As [[writeDoubleVar]] but STREAMING the values batch by batch: the
     * CDF header needs only the dim sizes upfront and the data section is
     * a sequential run of big-endian doubles, so driver memory is bounded
-    * by one batch (one Spark partition via `toLocalIterator`) instead of
-    * the whole variable. */
+    * by one fetch of [[ExportScan.ordered]] instead of the whole
+    * variable. */
   def writeDoubleVarStreamed(path: String, dims: Seq[(String, Int)],
                              varName: String, batches: Iterator[Array[Double]],
                              version: Int = 1,

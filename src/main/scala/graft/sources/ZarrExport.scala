@@ -2,8 +2,8 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, count, countDistinct, max, min, size, when}
 
 /** Distributed Zarr export: the scale-safe counterpart of the driver-side
   * `oph_export` single-file path. The DRIVER writes only the store
@@ -20,12 +20,10 @@ import org.apache.spark.sql.functions.{col, count, countDistinct, max, min, size
   * the byte movement.
   *
   * Layout: shape (n, m), chunks (rowsPerChunk, m) — row-aligned chunking
-  * means each output chunk's rows are exactly one shuffle group, so a
-  * chunk never needs rows from two tasks. Fragments carry contiguous
-  * id_dim (sequential_id), so the row index is id − min(id) and the
-  * export needs NO sort — one aggregate for the header stats, one
-  * hash shuffle on the chunk id, one write pass. A non-contiguous id
-  * column falls back to sort + zipWithIndex.
+  * means each output chunk's rows are exactly one shuffle group. An export
+  * is two jobs on the unsorted fragment ([[ExportScan]]): the stats job,
+  * then one write pass hash-shuffling rows, placed at id − min(id), on
+  * their chunk id. Only ids with gaps fall back to a sort.
   */
 object ZarrExport {
 
@@ -42,87 +40,11 @@ object ZarrExport {
       path: String, varName: String, v3: Boolean,
       rowDims: Seq[(String, Int)], colDims: Seq[(String, Int)],
       rowsPerChunk: Int = 0, level: Int = 6): (Long, Int) = {
-    val nExpected = rowDims.map(_._2.toLong).product
     val m = colDims.map(_._2).product
-    val rowsPerOuter = rowDims.drop(1).map(_._2.toLong).product
-    val rpcTarget =
-      if (rowsPerChunk > 0) rowsPerChunk.toLong
-      else math.max(1L, (4L << 20) / (m * 8))
-    // chunk along dim 0 only, whole outer slabs per chunk
-    val c0 = math.max(1L, rpcTarget / math.max(1L, rowsPerOuter)).toInt
-    val effRpc = c0 * rowsPerOuter
-    require(effRpc * m * 8 <= Int.MaxValue,
-      s"chunk ($c0 outer slabs x $rowsPerOuter rows x $m) exceeds 2 GiB")
-    val shape = (rowDims ++ colDims).map(_._2)
-    val chunks = c0 +: (rowDims.drop(1) ++ colDims).map(_._2)
-    val src = frag.select(col(idCol).cast("long").as("id"),
-      col(arrCol).cast("array<double>").as("a"))
-    val sz = when(col("a").isNotNull, size(col("a")))
-    val stats = src.agg(count(col("id")).as("n"), min(col("id")).as("lo"),
-      max(col("id")).as("hi"), countDistinct(col("id")).as("nd"),
-      min(sz).as("mLo"), max(sz).as("mHi")).collect()(0)
-    val n = stats.getLong(0)
-    require(n == nExpected, s"cube is sparse or overfull: $n rows for " +
-      s"shape product $nExpected — fill or subset before export")
-    if (n > 0) {
-      require(stats.getLong(3) == n,
-        s"cube id_dim contains duplicate values (${n - stats.getLong(3)} dups)")
-      require(!stats.isNullAt(4) && stats.getInt(4) == m && stats.getInt(5) == m,
-        s"ragged/null arrays: lengths ${stats.get(4)}..${stats.get(5)} " +
-          s"!= implicit-dim product $m")
-      require(stats.getLong(2) - stats.getLong(1) + 1 == n,
-        "cube id_dim must be contiguous")
-    }
-    Zarr.writeStoreMeta(path, varName, shape, chunks, v3, level)
-    if (n == 0L) return (0L, 0)
-    val lo = stats.getLong(1)
-    val nChunks = ((n + effRpc - 1) / effRpc).toInt
-    val arrayDir = new org.apache.hadoop.fs.Path(path, varName).toString
-    val rank = shape.size
-    val sc = frag.sparkSession.sparkContext
-    val bcConf = sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
-    src.rdd.map(r => (r.getLong(0) - lo, r.getSeq[Double](1).toArray))
-      .map { case (i, a) => (i / effRpc, (i, a)) }
-      .groupByKey(math.max(1, math.min(nChunks, sc.defaultParallelism)))
-      .foreach { case (gid, rows) =>
-        val raw = new Array[Byte]((effRpc * m * 8).toInt)
-        val bb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-        rows.foreach { case (i, a) =>
-          val off = ((i - gid * effRpc) * m * 8).toInt
-          var j = 0
-          while (j < m) { bb.putDouble(off + j * 8, a(j)); j += 1 }
-        }
-        val gidx = gid.toInt +: Seq.fill(rank - 1)(0)
-        Zarr.putObject(arrayDir, Zarr.chunkKey(gidx, v3),
-          Zarr.compressChunk(raw, v3, level), bcConf.value.value)
-      }
-    (n, nChunks)
-  }
-
-  /** Validated header stats for a (id, array) export source: returns
-    * (n, lo, hi, m) after failing loud on duplicate ids, ragged widths
-    * and partially-null arrays. m <= 0 means empty/null arrays. */
-  private[sources] def exportStats(src: DataFrame, idCol: String): (Long, Long, Long, Int) = {
-    val sz = when(col("a").isNotNull, size(col("a")))
-    val stats = src.agg(count(col("id")).as("n"), min(col("id")).as("lo"),
-      max(col("id")).as("hi"), countDistinct(col("id")).as("nd"),
-      min(sz).as("mLo"), max(sz).as("mHi"), count(col("a")).as("nArr"))
-      .collect()(0)
-    val n = stats.getLong(0)
-    if (n == 0L) return (0L, 0L, -1L, 0)
-    // duplicate ids make "which row is row i" ambiguous — neither the
-    // contiguity fast path nor the sort fallback can place them; fail loud
-    require(stats.getLong(3) == n, s"duplicate values in '$idCol' " +
-      s"(${n - stats.getLong(3)} dups) — export row placement is ambiguous")
-    val m = if (stats.isNullAt(4)) 0 else math.max(0, stats.getInt(4))
-    require(n <= Int.MaxValue, "Zarr shape dims are Int-sized")
-    if (m > 0) {
-      require(stats.getInt(5) == m, s"ragged arrays: lengths " +
-        s"${stats.getInt(4)}..${stats.getInt(5)} — uniform width required")
-      require(stats.getLong(6) == n,
-        s"null arrays on ${n - stats.getLong(6)} of $n rows")
-    }
-    (n, stats.getLong(1), stats.getLong(2), m)
+    val (src, n, lo, hi, chunk, rows) = cubeScan(frag, idCol, arrCol, rowDims,
+      colDims, if (rowsPerChunk > 0) rowsPerChunk.toLong else math.max(1L, (4L << 20) / (m * 8)))
+    putChunks(src, n, lo, hi, m, (rowDims ++ colDims).map(_._2), chunk, rows,
+      path, varName, v3, level)
   }
 
   /** Export `frag`'s (idCol, arrCol) as a float64 Zarr store; returns
@@ -132,55 +54,15 @@ object ZarrExport {
   def writeDistributed(frag: DataFrame, idCol: String, arrCol: String,
       path: String, varName: String, v3: Boolean,
       rowsPerChunk: Int = 0, level: Int = 6): (Long, Int) = {
-    val src = frag.select(col(idCol).cast("long").as("id"),
-      col(arrCol).cast("array<double>").as("a"))
-    val (n, lo, hi, m) = exportStats(src, idCol)
-    if (n == 0L) {
-      Zarr.writeStoreMeta(path, varName, Seq(0, 0), Seq(1, 1), v3, level)
-      return (0L, 0)
-    }
-    if (m <= 0) { // empty/null arrays: metadata-only store, no chunks
+    val src = ExportScan.source(frag, idCol, arrCol)
+    val (n, lo, hi, m) = ExportScan.header(src, idCol)
+    if (n == 0L || m <= 0) { // no rows, or empty/null arrays: metadata only
       Zarr.writeStoreMeta(path, varName, Seq(n.toInt, 0), Seq(1, 1), v3, level)
       return (n, 0)
     }
-    val rpc =
-      if (rowsPerChunk > 0) rowsPerChunk
-      else math.max(1, (4 << 20) / (m * 8))
-    require(rpc.toLong * m * 8 <= Int.MaxValue,
-      s"rowsPerChunk $rpc x $m elements exceeds the 2 GiB chunk buffer limit")
-    val nChunks = ((n + rpc - 1) / rpc).toInt
-    Zarr.writeStoreMeta(path, varName, Seq(n.toInt, m), Seq(rpc, m), v3, level)
-    val arrayDir = new org.apache.hadoop.fs.Path(path, varName).toString
-
-    // row index without a global sort when ids are contiguous (the
-    // fragment invariant); otherwise sort + zipWithIndex
-    val indexed: org.apache.spark.rdd.RDD[(Long, Array[Double])] =
-      if (hi - lo + 1 == n)
-        src.rdd.map(r => (r.getLong(0) - lo, r.getSeq[Double](1).toArray))
-      else
-        src.orderBy("id").rdd.zipWithIndex().map { case (r, i) =>
-          (i, r.getSeq[Double](1).toArray)
-        }
-
-    // one shuffle group per chunk; the group is bounded (rpc rows) and
-    // the executor that receives it writes the chunk object directly
-    val sc = frag.sparkSession.sparkContext
-    val bcConf = sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
-    indexed
-      .map { case (i, a) => (i / rpc, (i, a)) }
-      .groupByKey(math.max(1, math.min(nChunks, sc.defaultParallelism)))
-      .foreach { case (gid, rows) =>
-        val raw = new Array[Byte](rpc * m * 8) // edge chunks stay full-size
-        val bb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-        rows.foreach { case (i, a) =>
-          val off = ((i - gid * rpc) * m * 8).toInt
-          var j = 0
-          while (j < m) { bb.putDouble(off + j * 8, a(j)); j += 1 }
-        }
-        Zarr.putObject(arrayDir, Zarr.chunkKey(Seq(gid.toInt, 0), v3),
-          Zarr.compressChunk(raw, v3, level), bcConf.value.value)
-      }
-    (n, nChunks)
+    val rpc = ExportScan.chunkRows(rowsPerChunk, m)
+    putChunks(src, n, lo, hi, m, Seq(n.toInt, m), Seq(rpc, m), rpc, path,
+      varName, v3, level)
   }
 
   /** N-dimensional sharded export: [[writeDistributedNd]]'s layout
@@ -194,40 +76,105 @@ object ZarrExport {
       rowsPerChunk: Int, chunksPerShard: Int, level: Int = 6): (Long, Int) = {
     require(rowsPerChunk > 0 && chunksPerShard > 0,
       "sharded export needs explicit rowsPerChunk and chunksPerShard")
-    val nExpected = rowDims.map(_._2.toLong).product
     val m = colDims.map(_._2).product
-    val rowsPerOuter = rowDims.drop(1).map(_._2.toLong).product
     // inner chunk: whole outer slabs, as the unsharded n-D writer
-    val c0 = math.max(1L, rowsPerChunk.toLong / math.max(1L, rowsPerOuter)).toInt
-    val innerRows = c0 * rowsPerOuter
-    require(innerRows * m * 8 <= Int.MaxValue,
-      s"inner chunk ($c0 outer slabs x $rowsPerOuter rows x $m) exceeds 2 GiB")
-    val src = frag.select(col(idCol).cast("long").as("id"),
-      col(arrCol).cast("array<double>").as("a"))
-    val (n, lo, hi, mGot) = exportStats(src, idCol)
-    require(n == nExpected, s"cube is sparse or overfull: $n rows for " +
-      s"shape product $nExpected — fill or subset before export")
+    val (src, n, lo, hi, chunk, rows) =
+      cubeScan(frag, idCol, arrCol, rowDims, colDims, rowsPerChunk.toLong)
     if (n == 0L) {
       Zarr.writeStoreMeta(path, varName, Seq(0, 0), Seq(1, 1), v3 = true, level)
       return (0L, 0)
     }
-    require(mGot == m, s"array length $mGot != implicit-dim product $m")
-    require(hi - lo + 1 == n, "cube id_dim must be contiguous")
-    val shape = (rowDims ++ colDims).map(_._2)
-    val rank = shape.size
+    putShards(src, n, lo, hi, m, (rowDims ++ colDims).map(_._2), chunk, rows,
+      chunksPerShard, path, varName, level)
+  }
+
+  /** Sharded v3 export (`sharding_indexed`): same row-aligned
+    * distribution as [[writeDistributed]], but each OBJECT is a shard of
+    * `chunksPerShard` inner chunks, carrying its own CRC-32C-tailed
+    * (offset, nbytes) index at the object end. At 100 TB with ~4 MiB
+    * chunks a plain store is an object-count problem (listing, request
+    * rates, per-object overhead); sharding divides the object count by
+    * chunksPerShard while the index keeps reads chunk-granular — a
+    * reader fetches the index + one inner chunk range, not the shard.
+    * Returns (rows, shardCount). */
+  def writeDistributedSharded(frag: DataFrame, idCol: String, arrCol: String,
+      path: String, varName: String, rowsPerChunk: Int,
+      chunksPerShard: Int, level: Int = 6): (Long, Int) = {
+    require(rowsPerChunk > 0 && chunksPerShard > 0,
+      "sharded export needs explicit rowsPerChunk and chunksPerShard")
+    val src = ExportScan.source(frag, idCol, arrCol)
+    val (n, lo, hi, m) = ExportScan.header(src, idCol)
+    if (n == 0L || m <= 0) {
+      Zarr.writeStoreMeta(path, varName, Seq(n.toInt, 0), Seq(1, 1),
+        v3 = true, level)
+      return (n, 0)
+    }
+    val rpc = ExportScan.chunkRows(rowsPerChunk, m) // rowsPerChunk, size-checked
+    putShards(src, n, lo, hi, m, Seq(n.toInt, m), Seq(rpc, m), rpc,
+      chunksPerShard, path, varName, level)
+  }
+
+  /** The checked scan of a cube export: the fragment holds exactly the
+    * row-major cells of `rowDims` (contiguous ids), each an array of
+    * ∏`colDims`; chunks hold c0 whole outer slabs (~`rowsTarget` rows).
+    * Returns (source, n, lo, hi, chunk shape, rows per chunk). */
+  private def cubeScan(frag: DataFrame, idCol: String, arrCol: String,
+      rowDims: Seq[(String, Int)], colDims: Seq[(String, Int)],
+      rowsTarget: Long): (DataFrame, Long, Long, Long, Seq[Int], Long) = {
+    val nExpected = rowDims.map(_._2.toLong).product
+    val m = colDims.map(_._2).product
+    val rowsPerOuter = rowDims.drop(1).map(_._2.toLong).product
+    val c0 = math.max(1L, rowsTarget / math.max(1L, rowsPerOuter)).toInt
+    val rows = c0 * rowsPerOuter
+    require(rows * m * 8 <= Int.MaxValue,
+      s"chunk ($c0 outer slabs x $rowsPerOuter rows x $m) exceeds 2 GiB")
+    val src = ExportScan.source(frag, idCol, arrCol)
+    val (n, lo, hi, mGot) = ExportScan.header(src, idCol)
+    require(n == nExpected, s"cube is sparse or overfull: $n rows for " +
+      s"shape product $nExpected — fill or subset before export")
+    if (n > 0) {
+      require(mGot == m, s"array length $mGot != implicit-dim product $m")
+      require(hi - lo + 1 == n, "cube id_dim must be contiguous")
+    }
+    (src, n, lo, hi, c0 +: (rowDims.drop(1) ++ colDims).map(_._2), rows)
+  }
+
+  /** The store: metadata for `shape` in `chunk`s (`rows` fragment rows
+    * along dim 0), then one object per chunk of the write pass,
+    * compressed and put by the executor that assembled it. Returns
+    * (rows, chunkCount). */
+  private def putChunks(src: DataFrame, n: Long, lo: Long, hi: Long, m: Int,
+      shape: Seq[Int], chunk: Seq[Int], rows: Long, path: String,
+      varName: String, v3: Boolean, level: Int): (Long, Int) = {
+    Zarr.writeStoreMeta(path, varName, shape, chunk, v3, level)
+    if (n == 0L) return (0L, 0)
+    val nChunks = ((n + rows - 1) / rows).toInt
+    val (arrayDir, conf) = (new Path(path, varName).toString, hadoopConf(src))
+    ExportScan.chunks(ExportScan.rowIndex(src, n, lo, hi), rows, m, nChunks)
+      .foreach { case (gid, raw) =>
+        Zarr.putObject(arrayDir, Zarr.chunkKey(gid.toInt +: Seq.fill(shape.size - 1)(0), v3),
+          Zarr.compressChunk(raw, v3, level), conf.value.value)
+      }
+    (n, nChunks)
+  }
+
+  /** The sharded store: [[putChunks]]'s `chunk`s as the inner chunks of
+    * one `sharding_indexed` object per `chunksPerShard` of them along
+    * dim 0, each assembled by the executor that receives the shard's
+    * rows: inner chunks at full nominal size (edges zero-padded, as the
+    * unsharded writer), compressed, then the (offset, nbytes) index +
+    * CRC-32C; an absent chunk indexes as -1. Returns (rows, shardCount). */
+  private def putShards(src: DataFrame, n: Long, lo: Long, hi: Long, m: Int,
+      shape: Seq[Int], chunk: Seq[Int], innerRows: Long, chunksPerShard: Int,
+      path: String, varName: String, level: Int): (Long, Int) = {
     val shardRows = innerRows * chunksPerShard
-    val shardC0 = c0 * chunksPerShard
-    val innerChunks = c0 +: (rowDims.drop(1) ++ colDims).map(_._2)
-    val shardChunks = shardC0 +: (rowDims.drop(1) ++ colDims).map(_._2)
     val nShards = ((n + shardRows - 1) / shardRows).toInt
-    Zarr.writeStoreMeta(path, varName, shape, shardChunks, v3 = true, level,
-      shardInner = Some(innerChunks))
-    val arrayDir = new org.apache.hadoop.fs.Path(path, varName).toString
-    val sc = frag.sparkSession.sparkContext
-    val bcConf = sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
-    src.rdd.map(r => (r.getLong(0) - lo, r.getSeq[Double](1).toArray))
+    Zarr.writeStoreMeta(path, varName, shape, (chunk.head * chunksPerShard) +: chunk.tail,
+      v3 = true, level, shardInner = Some(chunk))
+    val (arrayDir, conf, rank) = (new Path(path, varName).toString, hadoopConf(src), shape.size)
+    ExportScan.rowIndex(src, n, lo, hi)
       .map { case (i, a) => (i / shardRows, (i, a)) }
-      .groupByKey(math.max(1, math.min(nShards, sc.defaultParallelism)))
+      .groupByKey(math.max(1, math.min(nShards, src.sparkSession.sparkContext.defaultParallelism)))
       .foreach { case (sid, rows) =>
         val inner = Array.fill(chunksPerShard)(null: Array[Byte])
         rows.foreach { case (i, a) =>
@@ -259,88 +206,14 @@ object ZarrExport {
         body.write(idx.array())
         val gidx = sid.toInt +: Seq.fill(rank - 1)(0)
         Zarr.putObject(arrayDir, Zarr.chunkKey(gidx, v3 = true),
-          body.toByteArray, bcConf.value.value)
+          body.toByteArray, conf.value.value)
       }
     (n, nShards)
   }
 
-  /** Sharded v3 export (`sharding_indexed`): same row-aligned
-    * distribution as [[writeDistributed]], but each OBJECT is a shard of
-    * `chunksPerShard` inner chunks, carrying its own CRC-32C-tailed
-    * (offset, nbytes) index at the object end. At 100 TB with ~4 MiB
-    * chunks a plain store is an object-count problem (listing, request
-    * rates, per-object overhead); sharding divides the object count by
-    * chunksPerShard while the index keeps reads chunk-granular — a
-    * reader fetches the index + one inner chunk range, not the shard.
-    * Returns (rows, shardCount). */
-  def writeDistributedSharded(frag: DataFrame, idCol: String, arrCol: String,
-      path: String, varName: String, rowsPerChunk: Int,
-      chunksPerShard: Int, level: Int = 6): (Long, Int) = {
-    require(rowsPerChunk > 0 && chunksPerShard > 0,
-      "sharded export needs explicit rowsPerChunk and chunksPerShard")
-    val src = frag.select(col(idCol).cast("long").as("id"),
-      col(arrCol).cast("array<double>").as("a"))
-    val (n, lo, hi, m) = exportStats(src, idCol)
-    if (n == 0L || m <= 0) {
-      Zarr.writeStoreMeta(path, varName, Seq(n.toInt, 0), Seq(1, 1),
-        v3 = true, level)
-      return (n, 0)
-    }
-    val rowsPerShard = rowsPerChunk.toLong * chunksPerShard
-    require(rowsPerChunk.toLong * m * 8 <= Int.MaxValue,
-      s"rowsPerChunk $rowsPerChunk x $m elements exceeds the 2 GiB limit")
-    val nShards = ((n + rowsPerShard - 1) / rowsPerShard).toInt
-    Zarr.writeStoreMeta(path, varName, Seq(n.toInt, m),
-      Seq(rowsPerShard.toInt, m), v3 = true, level,
-      shardInner = Some(Seq(rowsPerChunk, m)))
-    val arrayDir = new org.apache.hadoop.fs.Path(path, varName).toString
-    val sc = frag.sparkSession.sparkContext
-    val bcConf = sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
-    val indexed: org.apache.spark.rdd.RDD[(Long, Array[Double])] =
-      if (hi - lo + 1 == n)
-        src.rdd.map(r => (r.getLong(0) - lo, r.getSeq[Double](1).toArray))
-      else
-        src.orderBy("id").rdd.zipWithIndex().map { case (r, i) =>
-          (i, r.getSeq[Double](1).toArray)
-        }
-    indexed
-      .map { case (i, a) => (i / rowsPerShard, (i, a)) }
-      .groupByKey(math.max(1, math.min(nShards, sc.defaultParallelism)))
-      .foreach { case (sid, rows) =>
-        // assemble the shard's inner chunks (full nominal size, zero
-        // padded edges — matching the unsharded writer), compress each,
-        // then append the (offset, nbytes) index + CRC-32C
-        val inner = Array.fill(chunksPerShard)(
-          null: Array[Byte])
-        rows.foreach { case (i, a) =>
-          val within = i - sid * rowsPerShard
-          val c = (within / rowsPerChunk).toInt
-          if (inner(c) == null) inner(c) = new Array[Byte](rowsPerChunk * m * 8)
-          val bb = ByteBuffer.wrap(inner(c)).order(ByteOrder.LITTLE_ENDIAN)
-          val off = ((within % rowsPerChunk) * m * 8).toInt
-          var j = 0
-          while (j < m) { bb.putDouble(off + j * 8, a(j)); j += 1 }
-        }
-        val body = new java.io.ByteArrayOutputStream()
-        val idx = ByteBuffer.allocate(16 * chunksPerShard + 4)
-          .order(ByteOrder.LITTLE_ENDIAN)
-        var c = 0
-        while (c < chunksPerShard) {
-          if (inner(c) == null) { idx.putLong(-1L); idx.putLong(-1L) }
-          else {
-            val comp = Zarr.compressChunk(inner(c), v3 = true, level)
-            idx.putLong(body.size().toLong); idx.putLong(comp.length.toLong)
-            body.write(comp)
-          }
-          c += 1
-        }
-        val crc = new java.util.zip.CRC32C
-        crc.update(idx.array(), 0, 16 * chunksPerShard)
-        idx.putInt(crc.getValue.toInt)
-        body.write(idx.array())
-        Zarr.putObject(arrayDir, Zarr.chunkKey(Seq(sid.toInt, 0), v3 = true),
-          body.toByteArray, bcConf.value.value)
-      }
-    (n, nShards)
+  /** The session's Hadoop configuration, broadcast to the writing tasks. */
+  private def hadoopConf(src: DataFrame) = {
+    val sc = src.sparkSession.sparkContext
+    sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
   }
 }

@@ -52,6 +52,23 @@ class EngineSpec extends SparkSpec {
       Set("graft/core/SqlShims.scala"))
   }
 
+  test("exports scan through ExportScan and hand writers the unsorted fragment") {
+    // spelled in parts so this spec is not itself a match
+    Seq(Seq("countDistinct", "(").mkString, Seq("zipWithIndex", "(").mkString)
+      .foreach { w =>
+        assert(sites(w).filter(_.startsWith("graft/sources/")) ==
+          Set("graft/sources/ExportScan.scala"), w)
+      }
+    val io = Files.readString(root.resolve("graft/engine/IoServer.scala"))
+    val branch = io.substring(io.indexOf("case \"oph_export\" =>"),
+      io.indexOf("case \"oph_size\" =>"))
+    val writer = """(writeDistributed\w*|writeDoubleVarDistributed\w*|ExportScan\.\w+)\(\s*(\w+)""".r
+    val handed = writer.findAllMatchIn(branch).map(_.group(2)).toSet
+    assert(handed == Set("frag"), handed)
+    val sorted = """val (\w+) = .*orderBy""".r.findAllMatchIn(branch).map(_.group(1)).toSet
+    assert(sorted.nonEmpty && sorted.intersect(handed).isEmpty, sorted)
+  }
+
   test("an Engine session resolves graft_dot through spark.sql") {
     // the shared spec session is Engine.session(4)
     val d = spark.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))")

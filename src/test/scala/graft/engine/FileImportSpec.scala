@@ -2,6 +2,10 @@ package graft.engine
 
 import java.nio.file.Files
 
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.functions.{array, col}
+import org.apache.spark.storage.StorageLevel
+
 import graft.SparkSpec
 import graft.sources.NetCDF3
 
@@ -52,6 +56,29 @@ class FileImportSpec extends SparkSpec {
       s"operation=create_frag_select_file;frag_name=cf;from=@${f.getAbsolutePath};" +
         "measure=m;explicit=1;field=id_dim|measure;field_alias=id_dim|measure")
     assert(ses.execute("operation=select;field=id_dim;from=cf").get.count() == 4)
+  }
+
+  test("dropping one of two imports of a path keeps the survivor cached") {
+    val dir = Files.createTempDirectory("graft_twin").resolve("t.parquet").toString
+    spark.range(1, 5).select(col("id").as("id_dim"),
+      array(col("id").cast("double")).as("measure")).write.parquet(dir)
+    val srv = new IoServer(spark)
+    val ses = srv.newSession()
+    // a file relation's plan is keyed by its path, so one CacheManager
+    // entry holds both fragments
+    Seq("twin_a", "twin_b").foreach { nm =>
+      srv.registerFragment("default", nm, spark.read.parquet(dir))
+    }
+    assert(ses.execute("operation=function;function_name=oph_size;function_args=twin_b")
+      .get.head().getLong(0) == 4L)
+    ses.execute("operation=drop_frag;frag_name=twin_a")
+    assert(srv.storedFrag("default", "twin_b").storageLevel != StorageLevel.NONE)
+    FileUtils.deleteDirectory(new java.io.File(dir).getParentFile)
+    // the survivor answers from its cache, not from the deleted files
+    val out = ses.execute(
+      "operation=select;field=id_dim|measure;from=twin_b;order=id_dim").get.collect()
+    assert(out.map(_.getLong(0)).toSeq == (1L to 4L))
+    ses.execute("operation=drop_frag;frag_name=twin_b")
   }
 
   test("compressed=yes stores deflated cells; reads are transparent") {

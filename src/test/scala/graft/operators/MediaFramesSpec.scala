@@ -2,6 +2,8 @@ package graft.operators
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 
 /** The multimodal family reads its documents through one guarded source
@@ -50,6 +52,33 @@ class MediaFramesSpec extends SparkSpec {
     // checkpoint and the sorted collect. A `count()` fill runs three
     // jobs under AQE, so the eager fill used to cost two more (10).
     assert(jobs == 8, s"m29 ran $jobs jobs")
+  }
+
+  test("m33 encodes each document once, after its drop's id filter") {
+    import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    val dir = sf()
+    // the batch plans m33 runs on the caller's session (its stream runs
+    // on a child session): only the drops may encode, one each
+    val encodes = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.sparkSession eq spark)
+          encodes.add(f -> Plans.collect(qe.executedPlan) { case m: MapPartitionsExec => m }.size)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerBusShims.drain(spark.sparkContext) // earlier tests' events
+    spark.listenerManager.register(l)
+    val rows = try {
+      val r = MultimodalQueries.m33_stream_media_dedup(spark, dir).collect()
+      org.apache.spark.ListenerBusShims.drain(spark.sparkContext)
+      r
+    } finally spark.listenerManager.unregister(l)
+    assert(rows.nonEmpty)
+    // the max(doc_id) cut no longer encodes every document
+    assert(encodes.asScala.map(_._2).sum == 2, encodes.asScala.mkString(", "))
   }
 
   test("hammingPairs equals a brute-force banded Hamming join") {

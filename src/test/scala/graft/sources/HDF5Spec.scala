@@ -3,13 +3,15 @@ package graft.sources
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempRoot
+
 /** Byte-level coverage for the pure-JVM HDF5 subset (NetCDF-4 read):
   * golden superblock/datatype bytes from the public spec, contiguous and
   * chunked+deflate roundtrips, hyperslab reads, edge chunks, filters. */
-class HDF5Spec extends AnyFunSuite {
+class HDF5Spec extends AnyFunSuite with TempRoot {
 
   private def tmp(suffix: String): String =
-    Files.createTempFile("graft_h5", suffix).toString
+    tmpFile("h5", suffix).toString
 
   private def grid(rows: Int, cols: Int): Array[Double] =
     Array.tabulate(rows * cols)(i => (i / cols) * 0.5 + (i % cols) * 0.125)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempRoot}
 import org.apache.spark.sql.functions._
 
 /** Executor-parallel HDF5 export: the driver writes only the implicit-
@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * offsets. The file must read back value-exact through the from-spec
   * reader on both the contiguous-id fast path and the sort fallback,
   * with partial tail chunks zero-padded to their full slot. */
-class Hdf5DistExportSpec extends SparkSpec {
+class Hdf5DistExportSpec extends SparkSpec with TempRoot {
 
   private def grid(n: Int, m: Int): Seq[(Long, Seq[Double])] =
     (0 until n).map(i => (i.toLong, (0 until m).map(j => i * 0.5 + j * 0.125)))
@@ -22,7 +22,7 @@ class Hdf5DistExportSpec extends SparkSpec {
     import spark.implicits._
     val (n, m) = (60, 8)
     val df = grid(n, m).toDF("id", "a")
-    val p = java.nio.file.Files.createTempDirectory("h5dist")
+    val p = tmpDir("h5dist")
       .resolve("d.h5").toString
     val (rows, chunks) = HDF5.writeDoubleVarDistributed(df, "id", "a", p,
       "measure", rowsPerChunk = 16)
@@ -41,7 +41,7 @@ class Hdf5DistExportSpec extends SparkSpec {
     val rowsIn = (0 until n).map(i =>
       ((i * 2).toLong, (0 until m).map(j => i * 1.0 + j * 0.25)))
     val df = rowsIn.toDF("id", "a")
-    val p = java.nio.file.Files.createTempDirectory("h5dist")
+    val p = tmpDir("h5dist")
       .resolve("s.h5").toString
     val (rows, chunks) = HDF5.writeDoubleVarDistributed(df, "id", "a", p,
       "measure", rowsPerChunk = 7)
@@ -55,9 +55,9 @@ class Hdf5DistExportSpec extends SparkSpec {
     import spark.implicits._
     val (n, m) = (23, 3)
     val df = grid(n, m).toDF("id", "a")
-    val pd = java.nio.file.Files.createTempDirectory("h5dist")
+    val pd = tmpDir("h5dist")
       .resolve("par.h5").toString
-    val ps = java.nio.file.Files.createTempDirectory("h5dist")
+    val ps = tmpDir("h5dist")
       .resolve("seq.h5").toString
     HDF5.writeDoubleVarDistributed(df, "id", "a", pd, "measure",
       rowsPerChunk = 5)
@@ -72,7 +72,7 @@ class Hdf5DistExportSpec extends SparkSpec {
     for ((n, m, rpc) <- Seq((1, 8, 4), (16, 1, 4), (12, 3, 12), (5, 2, 9),
         (17, 4, 8))) {
       val df = grid(n, m).toDF("id", "a")
-      val p = java.nio.file.Files.createTempDirectory("h5dist")
+      val p = tmpDir("h5dist")
         .resolve(s"e_${n}_${m}_$rpc.h5").toString
       val (rows, chunks) = HDF5.writeDoubleVarDistributed(df, "id", "a", p,
         "measure", rowsPerChunk = rpc)
@@ -90,7 +90,7 @@ class Hdf5DistExportSpec extends SparkSpec {
     for ((idx, expected) <- Seq(
         "fixedarray" -> classOf[HDF5.IdxFixedArray],
         "btree2" -> classOf[HDF5.IdxBTreeV2])) {
-      val p = java.nio.file.Files.createTempDirectory("h5dist")
+      val p = tmpDir("h5dist")
         .resolve(s"$idx.h5").toString
       // 16-row chunks over 60 rows: 4 chunks written by >1 task
       val (rows, chunks) = HDF5.writeDoubleVarDistributed(df, "id", "a", p,
@@ -118,7 +118,7 @@ class Hdf5DistExportSpec extends SparkSpec {
     for ((n, m, rpc, nChunks) <- Seq((12, 3, 4, 3), (60, 8, 4, 15),
         (120, 2, 1, 120))) {
       val df = grid(n, m).toDF("id", "a")
-      val p = java.nio.file.Files.createTempDirectory("h5dist")
+      val p = tmpDir("h5dist")
         .resolve(s"ea$n.h5").toString
       val (rows, chunks) = HDF5.writeDoubleVarDistributed(df, "id", "a", p,
         "measure", rowsPerChunk = rpc, index = "extarray")
@@ -147,7 +147,7 @@ class Hdf5DistExportSpec extends SparkSpec {
     // UNPAGED branch at a chunk count well above the other tests
     val (n, m) = (40, 2)
     val df = grid(n, m).toDF("id", "a")
-    val p = java.nio.file.Files.createTempDirectory("h5dist")
+    val p = tmpDir("h5dist")
       .resolve("fa40.h5").toString
     val (rows, chunks) = HDF5.writeDoubleVarDistributed(df, "id", "a", p,
       "measure", rowsPerChunk = 1, index = "fixedarray")
@@ -158,7 +158,7 @@ class Hdf5DistExportSpec extends SparkSpec {
   test("duplicate ids fail loud instead of silently misplacing rows") {
     import spark.implicits._
     val df = Seq((1L, Seq(1.0)), (1L, Seq(2.0))).toDF("id", "a")
-    val p = java.nio.file.Files.createTempDirectory("h5dist")
+    val p = tmpDir("h5dist")
       .resolve("dup.h5").toString
     val e = intercept[Exception] {
       HDF5.writeDoubleVarDistributed(df, "id", "a", p, "measure", 4)
@@ -174,7 +174,7 @@ class Hdf5DistExportSpec extends SparkSpec {
     val df = grid(n, m).toDF("id", "a")
     val want = grid(n, m).flatMap(_._2)
     for (idx <- Seq("fixedarray", "btree2", "extarray")) {
-      val p = java.nio.file.Files.createTempDirectory("h5distz")
+      val p = tmpDir("h5distz")
         .resolve(s"z_$idx.h5").toString
       val (rows, chunks, zBytes) = HDF5.writeDoubleVarDistributedFiltered(
         df, "id", "a", p, "measure", rowsPerChunk = 16, index = idx)
@@ -192,9 +192,9 @@ class Hdf5DistExportSpec extends SparkSpec {
     import spark.implicits._
     val (n, m) = (23, 3)
     val df = grid(n, m).toDF("id", "a")
-    val pd = java.nio.file.Files.createTempDirectory("h5distz")
+    val pd = tmpDir("h5distz")
       .resolve("par.h5").toString
-    val ps = java.nio.file.Files.createTempDirectory("h5distz")
+    val ps = tmpDir("h5distz")
       .resolve("seq.h5").toString
     HDF5.writeDoubleVarDistributedFiltered(df, "id", "a", pd, "measure",
       rowsPerChunk = 5, index = "btree2")
@@ -209,7 +209,7 @@ class Hdf5DistExportSpec extends SparkSpec {
     import spark.implicits._
     val (n, m) = (20, 4)
     val df = grid(n, m).toDF("id", "a")
-    val p = java.nio.file.Files.createTempDirectory("h5distz")
+    val p = tmpDir("h5distz")
       .resolve("corrupt.h5").toString
     HDF5.writeDoubleVarDistributedFiltered(df, "id", "a", p, "measure",
       rowsPerChunk = 10, index = "fixedarray")
@@ -231,7 +231,7 @@ class Hdf5DistExportSpec extends SparkSpec {
     import spark.implicits._
     val (n, m) = (22, 4) // 3 chunks of 8: tail has 6 rows -> partial
     val df = grid(n, m).toDF("id", "a")
-    val p = java.nio.file.Files.createTempDirectory("h5distz")
+    val p = tmpDir("h5distz")
       .resolve("dfp.h5").toString
     val (rows, chunks, zBytes) = HDF5.writeDoubleVarDistributedFiltered(
       df, "id", "a", p, "measure", rowsPerChunk = 8, index = "fixedarray",
@@ -243,7 +243,7 @@ class Hdf5DistExportSpec extends SparkSpec {
     assert(readAll(p, n, m).toSeq == grid(n, m).flatMap(_._2),
       "raw tail must decode under layout flag bit 0 (filters skipped)")
     // same grid, full filtering: smaller payload (tail compresses too)
-    val p2 = java.nio.file.Files.createTempDirectory("h5distz")
+    val p2 = tmpDir("h5distz")
       .resolve("dfp2.h5").toString
     val (_, _, zBytes2) = HDF5.writeDoubleVarDistributedFiltered(
       df, "id", "a", p2, "measure", rowsPerChunk = 8, index = "fixedarray")
@@ -256,7 +256,7 @@ class Hdf5DistExportSpec extends SparkSpec {
     val rowsIn = (0 until n).map(i =>
       ((i * 3).toLong, (0 until m).map(j => i * 1.0 + j * 0.25)))
     val df = rowsIn.toDF("id", "a")
-    val p = java.nio.file.Files.createTempDirectory("h5distz")
+    val p = tmpDir("h5distz")
       .resolve("gap.h5").toString
     val (rows, chunks, _) = HDF5.writeDoubleVarDistributedFiltered(
       df, "id", "a", p, "measure", rowsPerChunk = 8, index = "extarray")
@@ -268,7 +268,7 @@ class Hdf5DistExportSpec extends SparkSpec {
     // the shared-filesystem contract check the writer runs between
     // phase 1 and the head write: blobs an executor spilled must be
     // visible from the driver, else fail with the descriptive message
-    val dir = java.nio.file.Files.createTempDirectory("h5spill").toString
+    val dir = tmpDir("h5spill").toString
     new java.io.FileOutputStream(s"$dir/c0").close() // c1, c2 "missing"
     val e = intercept[IllegalArgumentException] {
       HDF5.requireSharedSpill(dir, 3, "/data/out.h5")

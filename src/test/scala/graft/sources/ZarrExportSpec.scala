@@ -4,15 +4,15 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempRoot}
 
 /** Distributed Zarr export: executors write the chunks, the driver only
   * metadata. Readback goes through ZarrReader, so the store must be
   * spec-valid, not merely self-consistent. */
-class ZarrExportSpec extends SparkSpec {
+class ZarrExportSpec extends SparkSpec with TempRoot {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_zexp").resolve("store.zarr").toString
+    tmpDir("zexp").resolve("store.zarr").toString
 
   private def readBack(path: String, n: Int, m: Int): Seq[Double] = {
     val r = new Zarr.ZarrReader(path)

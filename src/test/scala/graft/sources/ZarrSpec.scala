@@ -3,13 +3,15 @@ package graft.sources
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempRoot
+
 /** Zarr v2 store coverage: metadata golden strings, zlib chunk
   * roundtrips incl. ragged edges, fill values for missing chunks,
   * uncompressed + big-endian stores written by hand from the spec. */
-class ZarrSpec extends AnyFunSuite {
+class ZarrSpec extends AnyFunSuite with TempRoot {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_zarr").resolve("store.zarr").toString
+    tmpDir("zarr").resolve("store.zarr").toString
 
   private def grid(rows: Int, cols: Int): Array[Double] =
     Array.tabulate(rows * cols)(i => (i / cols) * 0.5 + (i % cols) * 0.125)
@@ -54,7 +56,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("hand-written uncompressed big-endian store reads per spec") {
-    val dir = Files.createTempDirectory("graft_zarr_raw")
+    val dir = tmpDir("zarr_raw")
     val arr = dir.resolve("v"); Files.createDirectories(arr)
     Files.writeString(dir.resolve(".zgroup"), """{"zarr_format": 2}""")
     Files.writeString(arr.resolve(".zarray"),
@@ -87,7 +89,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("hand-written split-stream blosc chunk reads per the c-blosc layout") {
-    val dir = Files.createTempDirectory("graft_zarr_blosc")
+    val dir = tmpDir("zarr_blosc")
     val arr = dir.resolve("v"); Files.createDirectories(arr)
     Files.writeString(dir.resolve(".zgroup"), """{"zarr_format": 2}""")
     Files.writeString(arr.resolve(".zarray"),
@@ -139,7 +141,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("hand-written v3 store: v2 chunk-key encoding, big-endian bytes codec") {
-    val dir = Files.createTempDirectory("graft_zarr_v3raw")
+    val dir = tmpDir("zarr_v3raw")
     val arr = dir.resolve("v"); Files.createDirectories(arr)
     Files.writeString(dir.resolve("zarr.json"),
       """{"zarr_format": 3, "node_type": "group"}""")
@@ -163,7 +165,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("hand-written v3 store with a zstd codec chain decodes") {
-    val dir = Files.createTempDirectory("graft_zarr_v3zstd")
+    val dir = tmpDir("zarr_v3zstd")
     val arr = dir.resolve("v"); Files.createDirectories(arr)
     Files.writeString(dir.resolve("zarr.json"),
       """{"zarr_format": 3, "node_type": "group"}""")
@@ -239,7 +241,7 @@ class ZarrSpec extends AnyFunSuite {
     assert(viaPlain.shape("measure") == Seq(2, 2))
     viaPlain.close()
     // the same CDF file through a file:// URI exercises the Hadoop path
-    val nc = Files.createTempDirectory("graft_nc_uri").resolve("t.nc")
+    val nc = tmpDir("nc_uri").resolve("t.nc")
     NetCDF3.writeDoubleVar(nc.toString, Seq("x" -> 2), "m", Array(5.0, 6.0))
     val viaUri = NcReader.open("file://" + nc)
     assert(viaUri.shape("m") == Seq(2))
@@ -247,7 +249,7 @@ class ZarrSpec extends AnyFunSuite {
     viaUri.close()
   }
   test("v2 F-order store reads through the stride remap") {
-    val dir = Files.createTempDirectory("graft_zarr_forder")
+    val dir = tmpDir("zarr_forder")
     val arr = dir.resolve("v"); Files.createDirectories(arr)
     Files.writeString(dir.resolve(".zgroup"), """{"zarr_format": 2}""")
     Files.writeString(arr.resolve(".zarray"),
@@ -268,7 +270,7 @@ class ZarrSpec extends AnyFunSuite {
   }
 
   test("hand-written v3 store with a transpose codec decodes") {
-    val dir = Files.createTempDirectory("graft_zarr_v3tr")
+    val dir = tmpDir("zarr_v3tr")
     val arr = dir.resolve("v"); Files.createDirectories(arr)
     Files.writeString(dir.resolve("zarr.json"),
       """{"zarr_format": 3, "node_type": "group"}""")
