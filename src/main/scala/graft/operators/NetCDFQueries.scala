@@ -92,22 +92,23 @@ object NetCDFQueries {
     val zPath = tmp.resolve("twin.zarr").toString
     val zlzPath = tmp.resolve("twinlz.zarr").toString
     val zbitPath = tmp.resolve("twinbit.zarr").toString
+    val conf = s.sparkContext.hadoopConfiguration
     NetCDF3.writeDoubleVar(ncPath, Seq("row" -> nRows, "col" -> nCols),
       "measure", data)
-    graft.sources.Zarr.writeDoubleVar(zPath,
+    graft.sources.Zarr.writeDoubleVar(zPath, conf,
       Seq("row" -> nRows, "col" -> nCols), "measure", data,
       chunkDims = Some(Seq(16, 8)), // 60 % 16 != 0 → ragged edge chunk
       compressor = "blosc")
-    graft.sources.Zarr.writeDoubleVar(zlzPath,
+    graft.sources.Zarr.writeDoubleVar(zlzPath, conf,
       Seq("row" -> nRows, "col" -> nCols), "measure", data,
       chunkDims = Some(Seq(16, 8)), compressor = "blosc-blosclz")
-    graft.sources.Zarr.writeDoubleVar(zbitPath,
+    graft.sources.Zarr.writeDoubleVar(zbitPath, conf,
       Seq("row" -> nRows, "col" -> nCols), "measure", data,
       chunkDims = Some(Seq(16, 8)), compressor = "blosc-bitshuffle")
     // numcodecs-zstd store ({"id": "zstd"}): raw zstd frames per chunk,
     // decoded through the zstd library Spark itself ships
     val zzstdPath = tmp.resolve("twinzstd.zarr").toString
-    graft.sources.Zarr.writeDoubleVar(zzstdPath,
+    graft.sources.Zarr.writeDoubleVar(zzstdPath, conf,
       Seq("row" -> nRows, "col" -> nCols), "measure", data,
       chunkDims = Some(Seq(16, 8)), compressor = "zstd")
     val ses = new IoServer(s).newSession()
@@ -155,7 +156,7 @@ object NetCDFQueries {
     val zPath = tmp.resolve("twin.zarr").toString
     NetCDF3.writeDoubleVar(ncPath, Seq("row" -> nRows, "col" -> nCols),
       "measure", data)
-    graft.sources.Zarr.writeDoubleVarV3(zPath,
+    graft.sources.Zarr.writeDoubleVarV3(zPath, s.sparkContext.hadoopConfiguration,
       Seq("row" -> nRows, "col" -> nCols), "measure", data,
       chunkDims = Some(Seq(16, 8))) // 60 % 16 != 0 → ragged edge chunk
     val ses = new IoServer(s).newSession()
@@ -1219,7 +1220,7 @@ object NetCDFQueries {
       "operation=select;field=id_dim|measure;from=st;order=id_dim").get
       .select(col("id_dim"), AP.fx12(col("measure")).as("m"))
     val lblDf = {
-      val r = new graft.sources.HDF5.Hdf5Reader(path)
+      val r = new graft.sources.HDF5.Hdf5Reader(path, s.sparkContext.hadoopConfiguration)
       val ls = try r.readStringVar("station") finally r.close()
       import s.implicits._
       ls.zipWithIndex.map { case (l, i) => (i + 1L, l) }
@@ -1305,7 +1306,7 @@ object NetCDFQueries {
       .resolve("events.h5").toString
     HDF5.writeCompound1D(path, "events",
       Seq("event_id" -> 'l', "user_id" -> 'l', "value" -> 'd'), rows)
-    val rd = new HDF5.Hdf5Reader(path)
+    val rd = new HDF5.Hdf5Reader(path, s.sparkContext.hadoopConfiguration)
     val (ms, got) = try rd.readCompoundVar("events") finally rd.close()
     require(ms.map(_.name) == Seq("event_id", "user_id", "value"),
       s"member table mismatch: ${ms.map(_.name)}")

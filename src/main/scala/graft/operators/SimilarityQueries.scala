@@ -671,7 +671,7 @@ object SimilarityQueries {
     def arm(df: DataFrame, fromDelta: Long): DataFrame = df.filter(keep)
       .select(col("query_id"), col("vec_id"),
         l2(col("qa"), col("a")).as("d2"), lit(fromDelta).as("from_delta"))
-    arm(gather(idx, probe(qs, cs, 2), "cell"), 0L)
+    arm(gatherBucketed(idx, probe(qs, cs, 2), "cell"), 0L)
       .unionByName(arm(pairs(delta, qs), 1L))
   }
 
@@ -727,7 +727,7 @@ object SimilarityQueries {
     * over the persisted table `tbl` with its L2² `d2`. */
   private def indexServe(s: SparkSession, dir: String, tbl: String,
       cs: Cells): DataFrame =
-    gather(s.table(tbl), probe(asQueries(emb(s, dir), 50), cs, 2), "cell")
+    gatherBucketed(s.table(tbl), probe(asQueries(emb(s, dir), 50), cs, 2), "cell")
       .withColumn("d2", l2(col("qa"), col("a")))
 
   /** s20 — INDEX MERGE, the LSM compaction step s18 implies: s18
@@ -957,7 +957,8 @@ object SimilarityQueries {
     * bounded TopKPerKey heaps, no window over the candidate volume. */
   def s19_pq_persisted(s: SparkSession, dir: String): DataFrame = {
     val (tbl, cs, cb) = pqStore(s, dir)
-    refine(gather(s.table(tbl), pqProbe(asQueries(emb(s, dir), 50), cs, cb), "label"),
+    refine(gatherBucketed(s.table(tbl), pqProbe(asQueries(emb(s, dir), 50), cs, cb),
+        "label"),
       graft.plans.PQAdc(col("qlut"), col("codes")))
   }
 
@@ -1004,7 +1005,8 @@ object SimilarityQueries {
     * references, never a join. */
   def s24_sq8_persisted(s: SparkSession, dir: String): DataFrame = {
     val (tbl, cs, mins, scales) = sqStore(s, dir)
-    refine(gather(s.table(tbl), probe(asQueries(emb(s, dir), 50), cs, 2), "label"),
+    refine(gatherBucketed(s.table(tbl), probe(asQueries(emb(s, dir), 50), cs, 2),
+        "label"),
       graft.plans.Sq8Adc(col("qa"), col("sq"), mins, scales))
   }
 
@@ -1033,10 +1035,11 @@ object SimilarityQueries {
     val probes = pqProbe(qs, cs, cb)
     def top3(cand: DataFrame, d: Column): DataFrame =
       nearest(cand.withColumn("d", d), "d", 3).select("query_id", "vec_id")
-    val pqCand = gather(s.table(pqTbl), probes, "label")
+    val probed = probedCells(probes) // one collect for both stores
+    val pqCand = gatherBucketed(s.table(pqTbl), probes, "label", probed)
     val exact3 = top3(pqCand, l2(col("qa"), col("a")))
     val pq3 = top3(pqCand, graft.plans.PQAdc(col("qlut"), col("codes")))
-    val sq3 = top3(gather(s.table(sqTbl), probes.drop("qlut"), "label"),
+    val sq3 = top3(gatherBucketed(s.table(sqTbl), probes.drop("qlut"), "label", probed),
       graft.plans.Sq8Adc(col("qa"), col("sq"), mins, scales))
     val nq = qs.count()
     def row(approx: DataFrame, name: String, bytes: Long): DataFrame =

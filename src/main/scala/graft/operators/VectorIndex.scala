@@ -16,9 +16,9 @@ import graft.core.SessionMemo
   *  - ASSIGN / PROBE against literal centroids: [[assign]] is the narrow
   *    nearest-cell map, [[probe]] the nprobe nearest cells of each query
   *    — a codegen map, no centroid join, no window.
-  *  - GATHER: [[gather]] reads only the probed cells (on a bucketed
-  *    table the `isin` prunes bucket files at planning time) and joins
-  *    the broadcast probes, self-matches excluded.
+  *  - GATHER: [[gather]] joins the broadcast probes to the rows of the
+  *    probed cells, self-matches excluded; [[gatherBucketed]] first
+  *    prunes a bucketed table's files to the probed cells.
   *  - RANK: [[nearest]] (ascending distance) and [[best]] (descending
   *    score), both on the bounded [[graft.plans.TopKPerKey]] heap;
   *    [[candidates]] + [[rerank]] are the two-stage retrieval cascade.
@@ -108,17 +108,26 @@ object VectorIndex {
   // --------------------------------------------------------------- gather
 
   /** Rows of `table` in the probed cells, joined to their probes
-    * (broadcast), self-matches excluded. The probed-cell set is
-    * collected (bounded by the cell count) so the `isin` is a literal
-    * filter: on a table bucketed by `cellCol` it prunes bucket files at
-    * planning time, and the index side never shuffles. */
-  def gather(table: DataFrame, probes: DataFrame, cellCol: String): DataFrame = {
-    val probed = probes.select("probe_cell").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    table.filter(col(cellCol).isin(probed: _*))
-      .join(broadcast(probes), col(cellCol) === col("probe_cell"))
+    * (broadcast), self-matches excluded. Over a scan the join alone
+    * picks the cells: a probed-cell filter would prune nothing. */
+  def gather(table: DataFrame, probes: DataFrame, cellCol: String): DataFrame =
+    table.join(broadcast(probes), col(cellCol) === col("probe_cell"))
       .filter(col("vec_id") =!= col("query_id"))
-  }
+
+  /** The cells `probes` reach, collected (bounded by the cell count). */
+  def probedCells(probes: DataFrame): Seq[Int] =
+    probes.select("probe_cell").distinct().collect().map(_.getInt(0)).sorted.toSeq
+
+  /** [[gather]] over a catalog table bucketed by `cellCol`: the probed
+    * cells become a literal `isin` that prunes bucket files at planning
+    * time, so the index side never shuffles. Callers gathering several
+    * stores over one probe set pass its [[probedCells]] once. */
+  def gatherBucketed(table: DataFrame, probes: DataFrame, cellCol: String,
+      probed: Seq[Int]): DataFrame =
+    gather(table.filter(col(cellCol).isin(probed: _*)), probes, cellCol)
+
+  def gatherBucketed(table: DataFrame, probes: DataFrame, cellCol: String): DataFrame =
+    gatherBucketed(table, probes, cellCol, probedCells(probes))
 
   /** Every (row, query) pair but self-matches: `qs` broadcasts, `rows`
     * streams once. */

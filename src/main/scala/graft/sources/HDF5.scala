@@ -4,6 +4,8 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.{Deflater, Inflater}
 import scala.collection.mutable
 
+import org.apache.hadoop.conf.Configuration
+
 /** Pure-JVM reader/writer for the subset of the public HDF5 file format
   * that NetCDF-4 files use — the reference's NetCDF-4 ingest path
   * (src/server/oph_io_server_nc.c:1612 `_oph_ioserver_nc_read_v0_n4`,
@@ -46,14 +48,10 @@ object HDF5 {
 
   private val Undef = -1L // 0xFFFFFFFFFFFFFFFF
 
-  def isHdf5(path: String): Boolean = {
-    val src = RandomInput.open(path)
-    try {
-      val b = new Array[Byte](8)
-      if (src.length() < 8) return false
-      src.readFully(0, b)
-      b.sameElements(Signature)
-    } finally src.close()
+  /** Whether `src` starts with the HDF5 superblock signature. */
+  def isHdf5(src: RandomInput): Boolean = {
+    val b = new Array[Byte](8)
+    src.length() >= 8 && { src.readFully(0, b); b.sameElements(Signature) }
   }
 
   /** Element type: HDF5 class 0 (fixed) / 1 (float) / 6 (compound) /
@@ -179,8 +177,11 @@ object HDF5 {
 
   // ================================================================ READ
 
-  final class Hdf5Reader(path: String) extends AutoCloseable {
-    private val src = RandomInput.open(path) // local path or Hadoop URI
+  /** Reads the container at `path` through `src` (see [[RandomInput]]). */
+  final class Hdf5Reader(path: String, src: RandomInput) extends AutoCloseable {
+    /** Local path or Hadoop URI, resolved through `conf`. */
+    def this(path: String, conf: Configuration) =
+      this(path, RandomInput.open(path, conf))
     // scalar numeric attributes per dataset, filled during the walk
     // (COMPACT attribute messages only — netCDF-4 keeps CF attributes
     // compact at its default dense-storage threshold)

@@ -1,11 +1,16 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.SparkSession
+
 /** Format-sniffing facade over the container formats the reference
   * ingests (src/server/oph_io_server_nc.c:2716-3243 dispatches the same
   * way, URL paths included at :2769): NetCDF classic (CDF-1/2,
   * [[NetCDF3]]), NetCDF-4/HDF5 ([[HDF5]]) and Zarr v2 stores
-  * ([[Zarr]]). Paths may be Hadoop URIs (s3a://, hdfs://, file://).
-  * One hyperslab API so the DSv2 source is format-oblivious. */
+  * ([[Zarr]]). Paths may be Hadoop URIs (s3a://, hdfs://, file://),
+  * resolved through the Hadoop configuration the caller passes (see
+  * [[RandomInput]]). One hyperslab API so the DSv2 source is
+  * format-oblivious. */
 trait NcReader extends AutoCloseable {
   def shape(varName: String): Seq[Int]
   def readSlab(varName: String, origin: Seq[Int], shape: Seq[Int]): Array[Double]
@@ -18,6 +23,9 @@ trait NcReader extends AutoCloseable {
     * ("f8", "f4", "i4", …) — multi-file aggregation validates that all
     * files agree before mixing their decodes under one declared schema. */
   def elemKind(varName: String): String = "?"
+  /** (length, modification time) of a single-file container; None for a
+    * directory store, whose identity no one file carries. */
+  def stamp: Option[(Long, Long)] = None
 }
 
 object NcReader {
@@ -42,21 +50,26 @@ object NcReader {
       }
     } else path
 
-  def open(path0: String): NcReader = {
+  /** Opens `path0` with the active session's Hadoop configuration
+    * (driver side; tasks pass their broadcast copy to the two-argument
+    * form). */
+  def open(path0: String): NcReader =
+    open(path0, SparkSession.active.sparkContext.hadoopConfiguration)
+
+  /** Opens `path0`, resolving any FileSystem through `conf`. A single
+    * file is opened once: the sniff and the reader share the handle. */
+  def open(path0: String, conf: Configuration): NcReader = {
     val path = resolve(path0)
-    if (Zarr.isZarr(path)) new Zarr.ZarrReader(path) // directory store
-    else if (HDF5.isHdf5(path)) new H5Adapter(path)
-    else new CdfAdapter(path)
+    if (Zarr.isZarr(path, conf)) new Zarr.ZarrReader(path, conf) // directory store
+    else {
+      val src = RandomInput.open(path, conf)
+      try if (HDF5.isHdf5(src)) new H5Adapter(path, src) else new CdfAdapter(src)
+      catch { case e: Throwable => src.close(); throw e }
+    }
   }
 
-  /** Shape lookup with open/close in one call (planning-time use). */
-  def shapeOf(path: String, varName: String): Seq[Int] = {
-    val r = open(path)
-    try r.shape(varName) finally r.close()
-  }
-
-  private final class H5Adapter(path: String) extends NcReader {
-    private val r = new HDF5.Hdf5Reader(path)
+  private final class H5Adapter(path: String, src: RandomInput) extends NcReader {
+    private val r = new HDF5.Hdf5Reader(path, src)
     override def shape(varName: String): Seq[Int] = r.shape(varName)
     override def readSlab(varName: String, origin: Seq[Int],
         shape: Seq[Int]): Array[Double] = r.readSlab(varName, origin, shape)
@@ -72,11 +85,11 @@ object NcReader {
         case o => s"class$o"
       }
     }
+    override def stamp: Option[(Long, Long)] = Some((src.length(), src.modified()))
     override def close(): Unit = r.close()
   }
 
-  private final class CdfAdapter(path: String) extends NcReader {
-    private val src = RandomInput.open(path) // local path or Hadoop URI
+  private final class CdfAdapter(src: RandomInput) extends NcReader {
     private val hdr = NetCDF3.readHeader(src)
     override def shape(varName: String): Seq[Int] =
       hdr.shape(hdr.variable(varName))
@@ -102,6 +115,7 @@ object NcReader {
         case 10 => "i8"; case 11 => "u8"
         case t => s"nc$t"
       }
+    override def stamp: Option[(Long, Long)] = Some((src.length(), src.modified()))
     override def close(): Unit = src.close()
   }
 }

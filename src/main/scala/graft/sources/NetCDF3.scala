@@ -3,6 +3,8 @@ package graft.sources
 import java.io.{DataInputStream, DataOutputStream, FileOutputStream}
 import java.nio.ByteBuffer
 
+import org.apache.hadoop.conf.Configuration
+
 /** Pure-JVM reader/writer for the NetCDF classic format (CDF-1/2/5) —
   * the reference's primary ingest format (reader:
   * src/server/oph_io_server_nc.c:2716-3243). No netcdf-java in this
@@ -54,8 +56,8 @@ object NetCDF3 {
 
   // ------------------------------------------------------------------ read
 
-  def readHeader(path: String): Header = {
-    val src = RandomInput.open(path) // local path or Hadoop URI (s3a://…)
+  def readHeader(path: String, conf: Configuration): Header = {
+    val src = RandomInput.open(path, conf) // local path or Hadoop URI (s3a://…)
     try readHeader(src) finally src.close()
   }
 
@@ -138,9 +140,9 @@ object NetCDF3 {
   /** Read a hyperslab of `v` as doubles: `origin` (0-based) and `shape`
     * per dimension, row-major. Streams with one positioned read per
     * contiguous run (the innermost full-extent suffix). */
-  def readSlab(path: String, hdr: Header, v: Variable,
+  def readSlab(path: String, conf: Configuration, hdr: Header, v: Variable,
                origin: Seq[Int], shape: Seq[Int]): Array[Double] = {
-    val src = RandomInput.open(path)
+    val src = RandomInput.open(path, conf)
     try readSlab(src, hdr, v, origin, shape) finally src.close()
   }
 

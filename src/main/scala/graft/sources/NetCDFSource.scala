@@ -4,6 +4,10 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -33,6 +37,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * so a 1000-executor cluster reads 1000 disjoint byte ranges in
   * parallel, replacing the reference's fork+shm parallel read
   * (oph_io_server_nc.c:311-500).
+  *
+  * Every open uses the session's Hadoop configuration: the driver's
+  * header read takes it from the session, and each scan broadcasts it
+  * once ([[SerializableHadoopConf]]) to its partition readers.
   */
 class NetCDFSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -84,16 +92,26 @@ object NetCDFSource {
       (0 until explicit).map(k => extent(fileOfLogical(k)))
   }
 
-  def spec(opts: Map[String, String]): Spec = {
+  /** What one header open yields: the variable's shape and on-disk
+    * element type (the multi-file type-agreement check then needs no
+    * second open), and the file's [[NcReader.stamp]]. */
+  final case class Header(shape: Seq[Int], onDiskKind: String,
+                          stamp: Option[(Long, Long)])
+
+  /** The header of `opts`' `path`/`var`, read through `conf`. */
+  def header(opts: Map[String, String], conf: Configuration): Header = {
     val path = opts.getOrElse("path",
       throw new IllegalArgumentException("option 'path' required"))
     val varName = opts.getOrElse("var", "measure")
-    // one header open yields both shape and on-disk element type (the
-    // multi-file type-agreement check then needs no second open)
-    val (shape, onDiskKind) = {
-      val r = NcReader.open(path)
-      try (r.shape(varName), r.elemKind(varName)) finally r.close()
-    }
+    val r = NcReader.open(path, conf)
+    try Header(r.shape(varName), r.elemKind(varName), r.stamp) finally r.close()
+  }
+
+  /** The read plan of `opts` over the already-read header `hdr`. */
+  def spec(opts: Map[String, String], hdr: Header): Spec = {
+    val path = opts("path")
+    val varName = opts.getOrElse("var", "measure")
+    val shape = hdr.shape
     val explicit = opts.get("explicit").map(_.toInt)
       .getOrElse(math.max(shape.size - 1, 0))
     def parseList(key: String, default: Int => Int): Seq[Int] =
@@ -125,21 +143,50 @@ object NetCDFSource {
       opts.getOrElse("key_start", "1").toLong,
       opts.getOrElse("partitions", "8").toInt,
       elemType,
-      dimIndex, cfUnpack, onDiskKind)
+      dimIndex, cfUnpack, hdr.onDiskKind)
   }
 }
 
-final class NetCDFTable(opts: Map[String, String]) extends Table with SupportsRead {
+/** A single-file table equals another over the same options whose file
+  * has the same length and modification time, so two loads of one file
+  * are one `sameResult` plan and share one cache entry; a rewritten file
+  * gets a new identity. Directory stores and multi-file tables keep
+  * instance equality. */
+final class NetCDFTable(private val opts: Map[String, String]) extends Table with SupportsRead {
+  private val sc: SparkContext = SparkSession.active.sparkContext
+
+  /** The single file's header, read once on the driver for both the
+    * scan's spec and the table's identity; None for `paths` tables. */
+  private lazy val header: Option[NetCDFSource.Header] =
+    if (opts.contains("paths")) None
+    else Some(NetCDFSource.header(opts, sc.hadoopConfiguration))
+  private lazy val stamp: Option[(Long, Long)] = header.flatMap(_.stamp)
+
+  override def equals(o: Any): Boolean = o match {
+    case t: NetCDFTable =>
+      (this eq t) || (stamp.isDefined && stamp == t.stamp && opts == t.opts)
+    case _ => false
+  }
+  override def hashCode(): Int =
+    stamp.fold(System.identityHashCode(this))(st => (opts, st).##)
+
   override def name(): String = s"netcdf:${opts.getOrElse("path", "?")}"
   override def schema(): StructType =
     NetCDFSource.schemaFor(opts.getOrElse("element_type", "double"))
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new NetCDFScan(opts ++ o.asScala)
+  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder = {
+    val merged = opts ++ o.asScala
+    val sameFile = Seq("path", "var", "paths").forall(k => merged.get(k) == opts.get(k))
+    new NetCDFScan(merged, sc, if (sameFile) header else None)
+  }
 }
 
-final class NetCDFScan(opts: Map[String, String])
+/** One scan: the header read on the driver through `sc`'s Hadoop
+  * configuration (`hdr`, when the table already read it), and that
+  * configuration broadcast once to all of its partition readers. */
+final class NetCDFScan(opts: Map[String, String], sc: SparkContext,
+                       hdr: Option[NetCDFSource.Header])
     extends ScanBuilder with Scan with Batch
     with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
@@ -152,8 +199,12 @@ final class NetCDFScan(opts: Map[String, String])
   private val multiPaths: Seq[String] = opts.get("paths")
     .map(_.split('|').toSeq.map(_.trim).filter(_.nonEmpty))
     .getOrElse(Seq.empty)
-  private val sp = NetCDFSource.spec(
-    if (multiPaths.nonEmpty) opts + ("path" -> multiPaths.head) else opts)
+  private val sp = {
+    val o = if (multiPaths.nonEmpty) opts + ("path" -> multiPaths.head) else opts
+    NetCDFSource.spec(o, hdr.getOrElse(NetCDFSource.header(o, sc.hadoopConfiguration)))
+  }
+  /** The session's Hadoop configuration for this scan's readers. */
+  private lazy val conf = SerializableHadoopConf.broadcast(sc)
   private var required: StructType = NetCDFSource.schemaFor(sp.elemType)
   private var pushedIdRange: (Long, Long) = (Long.MinValue, Long.MaxValue)
   private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
@@ -205,8 +256,11 @@ final class NetCDFScan(opts: Map[String, String])
   private lazy val fileSpecs: Seq[NetCDFSource.Spec] =
     if (multiPaths.isEmpty) Seq(sp)
     else {
-      val specs = multiPaths.map(p =>
-        NetCDFSource.spec(opts - "paths" + ("path" -> p)))
+      // the head file's spec is `sp`: its header is read once
+      val specs = sp +: multiPaths.tail.map { p =>
+        val o = opts - "paths" + ("path" -> p)
+        NetCDFSource.spec(o, NetCDFSource.header(o, sc.hadoopConfiguration))
+      }
       val ref = specs.head
       // elemType/cfUnpack come from the shared options (uniform by
       // construction); the ON-DISK variable type is per-file and must
@@ -247,7 +301,7 @@ final class NetCDFScan(opts: Map[String, String])
     (0 until p).map { i =>
       val lo = rowMin + nRows * i / p
       val hi = rowMin + nRows * (i + 1) / p
-      NetCDFPartition(sp, lo, hi, needId, needMeasure): InputPartition
+      NetCDFPartition(sp, conf, lo, hi, needId, needMeasure): InputPartition
     }.toArray
   }
 
@@ -282,7 +336,7 @@ final class NetCDFScan(opts: Map[String, String])
         (0 until np).foreach { i =>
           val lo = (gLo - offsets(f)) + local * i / np
           val hi = (gLo - offsets(f)) + local * (i + 1) / np
-          out += NetCDFPartition(fsp, lo, hi, needId, needMeasure)
+          out += NetCDFPartition(fsp, conf, lo, hi, needId, needMeasure)
         }
       }
     }
@@ -296,7 +350,9 @@ final class NetCDFScan(opts: Map[String, String])
     }
 }
 
-final case class NetCDFPartition(spec: NetCDFSource.Spec, rowLo: Long, rowHi: Long,
+final case class NetCDFPartition(spec: NetCDFSource.Spec,
+                                 conf: Broadcast[SerializableHadoopConf],
+                                 rowLo: Long, rowHi: Long,
                                  needId: Boolean = true,
                                  needMeasure: Boolean = true)
     extends InputPartition
@@ -304,7 +360,8 @@ final case class NetCDFPartition(spec: NetCDFSource.Spec, rowLo: Long, rowHi: Lo
 final class NetCDFPartitionReader(p: NetCDFPartition)
     extends PartitionReader[InternalRow] {
   private val sp = p.spec
-  private val rdr = NcReader.open(sp.path) // CDF classic or NetCDF-4/HDF5
+  // CDF classic, NetCDF-4/HDF5 or Zarr, through the scan's broadcast conf
+  private val rdr = NcReader.open(sp.path, p.conf.value.value)
   private val shape = rdr.shape(sp.varName)
   private val rank = shape.size
   // dim_index support (reference transposition, oph_io_server_nc.c:755,

@@ -3,13 +3,17 @@ package graft.sources
 import java.io.{ObjectInputStream, ObjectOutputStream}
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 
 /** Java-serializable wrapper for a Hadoop [[Configuration]] (which is
   * `Writable` but not `Serializable`), so the driver's session config —
   * including `spark.hadoop.*` overrides like s3a credentials/endpoints —
-  * can be broadcast into executor-side FileSystem opens instead of each
-  * task reconstructing a bare `new Configuration()` that only sees
-  * core-site.xml. */
+  * reaches every executor-side FileSystem open: the source reads of
+  * [[NetCDFSource]] and the chunk writes of [[ZarrExport]]. The copy is
+  * rebuilt from the serialized properties alone (`loadDefaults = false`),
+  * so no task parses the configuration resources; this file is the only
+  * place under `graft.sources` that constructs a [[Configuration]]. */
 final class SerializableHadoopConf(@transient var value: Configuration)
     extends Serializable {
   private def writeObject(out: ObjectOutputStream): Unit = {
@@ -21,4 +25,12 @@ final class SerializableHadoopConf(@transient var value: Configuration)
     value = new Configuration(false)
     value.readFields(in)
   }
+}
+
+object SerializableHadoopConf {
+
+  /** `sc`'s Hadoop configuration, broadcast once to the tasks of one
+    * scan or write. */
+  def broadcast(sc: SparkContext): Broadcast[SerializableHadoopConf] =
+    sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
 }

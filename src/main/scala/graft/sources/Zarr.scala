@@ -33,7 +33,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * layout). All IO goes through the Hadoop FileSystem API, so
   * `s3a://bucket/store.zarr` works wherever the cluster has the cloud
   * connector — each Spark partition opens its own handles and reads
-  * only the chunks its rows intersect. */
+  * only the chunks its rows intersect. Every entry point that touches a
+  * store takes the caller's Hadoop `conf` (the session's on the driver,
+  * its [[SerializableHadoopConf]] broadcast in a task) and resolves the
+  * FileSystem through it; none builds a configuration of its own. */
 object Zarr {
 
   /** `keyPrefix` is "c" for the v3 default chunk-key encoding ("c/0/1"),
@@ -51,15 +54,17 @@ object Zarr {
                           shardIndexAtEnd: Boolean = true,
                           transposeOrder: Option[Seq[Int]] = None)
 
-  private def fsFor(path: String): (Path, FileSystem) = {
+  /** `path` and its FileSystem, resolved through `conf` (the session's
+    * Hadoop configuration, or its broadcast copy in a task). */
+  private def fsFor(path: String, conf: Configuration): (Path, FileSystem) = {
     val p = new Path(path)
-    (p, p.getFileSystem(new Configuration()))
+    (p, p.getFileSystem(conf))
   }
 
   /** A Zarr store is a directory with `.zarray`/`.zgroup` (v2) or
     * `zarr.json` (v3) at its root. */
-  def isZarr(path: String): Boolean = {
-    val (p, fs) = fsFor(path)
+  def isZarr(path: String, conf: Configuration): Boolean = {
+    val (p, fs) = fsFor(path, conf)
     try fs.isDirectory(p) &&
       (fs.exists(new Path(p, ".zarray")) || fs.exists(new Path(p, ".zgroup")) ||
         fs.exists(new Path(p, "zarr.json")) ||
@@ -67,8 +72,8 @@ object Zarr {
     catch { case _: Exception => false }
   }
 
-  final class ZarrReader(root: String) extends NcReader {
-    private val (rootPath, fs) = fsFor(root)
+  final class ZarrReader(root: String, conf: Configuration) extends NcReader {
+    private val (rootPath, fs) = fsFor(root, conf)
     private val mapper = new ObjectMapper()
 
     private def readAll(p: Path): Array[Byte] = {
@@ -501,10 +506,11 @@ object Zarr {
     * chunks from executors and calls this from the driver only). v2
     * carries a zlib/blosc compressor JSON; v3 a bytes-little + gzip
     * codec chain. Returns the array directory. */
-  private[sources] def writeStoreMeta(path: String, varName: String,
-      shape: Seq[Int], chunks: Seq[Int], v3: Boolean, level: Int,
-      compressor: String = "zlib", shardInner: Option[Seq[Int]] = None): Path = {
-    val (rootPath, fs) = fsFor(path)
+  private[sources] def writeStoreMeta(path: String, conf: Configuration,
+      varName: String, shape: Seq[Int], chunks: Seq[Int], v3: Boolean,
+      level: Int, compressor: String = "zlib",
+      shardInner: Option[Seq[Int]] = None): Path = {
+    val (rootPath, fs) = fsFor(path, conf)
     fs.mkdirs(rootPath)
     def put(p: Path, b: Array[Byte]): Unit = {
       val o = fs.create(p, true)
@@ -604,12 +610,12 @@ object Zarr {
 
   /** Write one object into the store, opening the FileSystem locally —
     * executors call this with their own handles (same discipline as
-    * [[RandomInput]] reads). Pass the session's Hadoop configuration
-    * (broadcast via [[SerializableHadoopConf]]) so `spark.hadoop.*`
-    * settings — s3a credentials, endpoints — reach executor-side writes;
-    * a bare `new Configuration()` only sees core-site.xml. */
+    * [[RandomInput]] reads). `conf` is the session's Hadoop
+    * configuration (in a task, its [[SerializableHadoopConf]] broadcast),
+    * so `spark.hadoop.*` settings — s3a credentials, endpoints — reach
+    * executor-side writes. */
   private[sources] def putObject(arrayDir: String, key: String,
-      bytes: Array[Byte], conf: Configuration = new Configuration()): Unit = {
+      bytes: Array[Byte], conf: Configuration): Unit = {
     val p = new Path(arrayDir, key)
     val fs = p.getFileSystem(conf)
     val o = fs.create(p, true)
@@ -621,14 +627,15 @@ object Zarr {
     * layout a netCDF-over-Zarr writer produces for one variable.
     * `compressor` is `"zlib"` or `"blosc"` (lz4 + byte shuffle, the
     * numcodecs default frame). */
-  def writeDoubleVar(path: String, dims: Seq[(String, Int)], varName: String,
-      data: Array[Double], chunkDims: Option[Seq[Int]] = None,
-      level: Int = 6, compressor: String = "zlib"): Unit = {
+  def writeDoubleVar(path: String, conf: Configuration,
+      dims: Seq[(String, Int)], varName: String, data: Array[Double],
+      chunkDims: Option[Seq[Int]] = None, level: Int = 6,
+      compressor: String = "zlib"): Unit = {
     val shape = dims.map(_._2)
     require(data.length == shape.product, "data size != dim product")
     val chunks = chunkDims.getOrElse(shape)
     val rank = shape.size
-    val dir = writeStoreMeta(path, varName, shape, chunks, v3 = false,
+    val dir = writeStoreMeta(path, conf, varName, shape, chunks, v3 = false,
       level, compressor)
     val grid = shape.zip(chunks).map { case (s, c) => (s + c - 1) / c }
     val strides = shape.scanRight(1)(_ * _).tail
@@ -658,7 +665,7 @@ object Zarr {
         case "zstd" => com.github.luben.zstd.Zstd.compress(raw, level)
         case _ => compressChunk(raw, v3 = false, level)
       }
-      putObject(dir.toString, chunkKey(gidx, v3 = false), comp)
+      putObject(dir.toString, chunkKey(gidx, v3 = false), comp, conf)
     }
     def rec(dim: Int, gidx: Array[Int]): Unit =
       if (dim == rank) writeChunk(gidx.toSeq)
@@ -670,14 +677,14 @@ object Zarr {
     * at the root, the array under `varName/` with its own v3 `zarr.json`
     * (bytes-little + gzip codec chain, default chunk-key encoding) and
     * C-order chunks under the `c/` prefix as nested directories. */
-  def writeDoubleVarV3(path: String, dims: Seq[(String, Int)], varName: String,
-      data: Array[Double], chunkDims: Option[Seq[Int]] = None,
-      level: Int = 6): Unit = {
+  def writeDoubleVarV3(path: String, conf: Configuration,
+      dims: Seq[(String, Int)], varName: String, data: Array[Double],
+      chunkDims: Option[Seq[Int]] = None, level: Int = 6): Unit = {
     val shape = dims.map(_._2)
     require(data.length == shape.product, "data size != dim product")
     val chunks = chunkDims.getOrElse(shape)
     val rank = shape.size
-    val dir = writeStoreMeta(path, varName, shape, chunks, v3 = true, level)
+    val dir = writeStoreMeta(path, conf, varName, shape, chunks, v3 = true, level)
     val grid = shape.zip(chunks).map { case (s, c) => (s + c - 1) / c }
     val strides = shape.scanRight(1)(_ * _).tail
     val chunkStrides = chunks.scanRight(1)(_ * _).tail
@@ -699,7 +706,7 @@ object Zarr {
       }
       fill(0, 0, 0)
       putObject(dir.toString, chunkKey(gidx, v3 = true),
-        compressChunk(raw, v3 = true, level))
+        compressChunk(raw, v3 = true, level), conf)
     }
     def rec(dim: Int, gidx: Array[Int]): Unit =
       if (dim == rank) writeChunk(gidx.toSeq)

@@ -57,7 +57,8 @@ object ZarrExport {
     val src = ExportScan.source(frag, idCol, arrCol)
     val (n, lo, hi, m) = ExportScan.header(src, idCol)
     if (n == 0L || m <= 0) { // no rows, or empty/null arrays: metadata only
-      Zarr.writeStoreMeta(path, varName, Seq(n.toInt, 0), Seq(1, 1), v3, level)
+      Zarr.writeStoreMeta(path, sessionConf(frag), varName, Seq(n.toInt, 0), Seq(1, 1),
+        v3, level)
       return (n, 0)
     }
     val rpc = ExportScan.chunkRows(rowsPerChunk, m)
@@ -81,7 +82,8 @@ object ZarrExport {
     val (src, n, lo, hi, chunk, rows) =
       cubeScan(frag, idCol, arrCol, rowDims, colDims, rowsPerChunk.toLong)
     if (n == 0L) {
-      Zarr.writeStoreMeta(path, varName, Seq(0, 0), Seq(1, 1), v3 = true, level)
+      Zarr.writeStoreMeta(path, sessionConf(frag), varName, Seq(0, 0), Seq(1, 1),
+        v3 = true, level)
       return (0L, 0)
     }
     putShards(src, n, lo, hi, m, (rowDims ++ colDims).map(_._2), chunk, rows,
@@ -105,8 +107,8 @@ object ZarrExport {
     val src = ExportScan.source(frag, idCol, arrCol)
     val (n, lo, hi, m) = ExportScan.header(src, idCol)
     if (n == 0L || m <= 0) {
-      Zarr.writeStoreMeta(path, varName, Seq(n.toInt, 0), Seq(1, 1),
-        v3 = true, level)
+      Zarr.writeStoreMeta(path, sessionConf(frag), varName, Seq(n.toInt, 0),
+        Seq(1, 1), v3 = true, level)
       return (n, 0)
     }
     val rpc = ExportScan.chunkRows(rowsPerChunk, m) // rowsPerChunk, size-checked
@@ -146,7 +148,7 @@ object ZarrExport {
   private def putChunks(src: DataFrame, n: Long, lo: Long, hi: Long, m: Int,
       shape: Seq[Int], chunk: Seq[Int], rows: Long, path: String,
       varName: String, v3: Boolean, level: Int): (Long, Int) = {
-    Zarr.writeStoreMeta(path, varName, shape, chunk, v3, level)
+    Zarr.writeStoreMeta(path, sessionConf(src), varName, shape, chunk, v3, level)
     if (n == 0L) return (0L, 0)
     val nChunks = ((n + rows - 1) / rows).toInt
     val (arrayDir, conf) = (new Path(path, varName).toString, hadoopConf(src))
@@ -169,8 +171,9 @@ object ZarrExport {
       path: String, varName: String, level: Int): (Long, Int) = {
     val shardRows = innerRows * chunksPerShard
     val nShards = ((n + shardRows - 1) / shardRows).toInt
-    Zarr.writeStoreMeta(path, varName, shape, (chunk.head * chunksPerShard) +: chunk.tail,
-      v3 = true, level, shardInner = Some(chunk))
+    Zarr.writeStoreMeta(path, sessionConf(src), varName, shape,
+      (chunk.head * chunksPerShard) +: chunk.tail, v3 = true, level,
+      shardInner = Some(chunk))
     val (arrayDir, conf, rank) = (new Path(path, varName).toString, hadoopConf(src), shape.size)
     ExportScan.rowIndex(src, n, lo, hi)
       .map { case (i, a) => (i / shardRows, (i, a)) }
@@ -211,9 +214,10 @@ object ZarrExport {
     (n, nShards)
   }
 
+  /** The session's Hadoop configuration, for the driver's metadata writes. */
+  private def sessionConf(df: DataFrame) = df.sparkSession.sparkContext.hadoopConfiguration
+
   /** The session's Hadoop configuration, broadcast to the writing tasks. */
-  private def hadoopConf(src: DataFrame) = {
-    val sc = src.sparkSession.sparkContext
-    sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
-  }
+  private def hadoopConf(src: DataFrame) =
+    SerializableHadoopConf.broadcast(src.sparkSession.sparkContext)
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.ListenerBusShims
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -12,6 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+  /** The session's Hadoop configuration, as the sources' readers take it. */
+  def hadoopConf: Configuration = spark.sparkContext.hadoopConfiguration
 
   /** The Spark jobs `f` starts from this thread (tagged through a local
     * property, which every job of the thread's actions carries). */

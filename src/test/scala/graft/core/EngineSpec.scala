@@ -69,6 +69,20 @@ class EngineSpec extends SparkSpec {
     assert(sorted.nonEmpty && sorted.intersect(handed).isEmpty, sorted)
   }
 
+  test("source readers take the session's Hadoop configuration, never a fresh one") {
+    // spelled in parts so this spec is not itself a match
+    val fresh = Seq("Configuration", "org.apache.hadoop.conf.Configuration")
+      .map(c => Seq("new ", c, "(").mkString)
+    val built = fresh.flatMap(sites).filter(_.startsWith("graft/sources/")).toSet
+    assert(built == Set("graft/sources/SerializableHadoopConf.scala"), built)
+    // the one there rebuilds a broadcast copy from its serialized
+    // properties, without parsing the default resources
+    val shc = Files.readString(root.resolve("graft/sources/SerializableHadoopConf.scala"))
+    val calls = fresh.flatMap(w => java.util.regex.Pattern.quote(w).r.findAllMatchIn(shc)
+      .map(m => shc.substring(m.end, shc.indexOf(')', m.end))))
+    assert(calls == Seq("false"), calls)
+  }
+
   test("an Engine session resolves graft_dot through spark.sql") {
     // the shared spec session is Engine.session(4)
     val d = spark.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))")

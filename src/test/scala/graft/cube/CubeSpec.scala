@@ -122,11 +122,11 @@ class CubeSpec extends SparkSpec {
     val f = java.nio.file.Files.createTempFile("graft-cube", ".nc").toFile
     f.deleteOnExit()
     fixture.exportNetCDF(f.getAbsolutePath)
-    val hdr = graft.sources.NetCDF3.readHeader(f.getAbsolutePath)
+    val hdr = graft.sources.NetCDF3.readHeader(f.getAbsolutePath, hadoopConf)
     assert(hdr.dims.map(d => (d.name, d.length)) ==
       Seq(("t", 3), ("y", 4), ("x", 5)))
     val v = hdr.variable("measure")
-    val data = graft.sources.NetCDF3.readSlab(f.getAbsolutePath, hdr, v,
+    val data = graft.sources.NetCDF3.readSlab(f.getAbsolutePath, hadoopConf, hdr, v,
       Seq(0, 0, 0), Seq(3, 4, 5))
     assert(data.toSeq == (0 until 60).map(_.toDouble))
   }

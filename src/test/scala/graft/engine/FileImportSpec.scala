@@ -1,19 +1,16 @@
 package graft.engine
 
-import java.nio.file.Files
-
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions.{array, col}
 import org.apache.spark.storage.StorageLevel
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempRoot}
 import graft.sources.NetCDF3
 
-class FileImportSpec extends SparkSpec {
+class FileImportSpec extends SparkSpec with TempRoot {
 
   test("create_frag_select with @file FROM loads NetCDF through DSv2") {
-    val f = Files.createTempFile("graft", ".nc").toFile
-    f.deleteOnExit()
+    val f = tmpFile("graft", ".nc").toFile
     NetCDF3.writeDoubleVar(f.getAbsolutePath,
       Seq("t" -> 4, "x" -> 3), "measure", Array.tabulate(12)(_.toDouble))
     val srv = new IoServer(spark)
@@ -32,8 +29,7 @@ class FileImportSpec extends SparkSpec {
 
   test("file_import / esdm_import bulk-load a path into a fragment; " +
       "create_frag_select_file name accepted") {
-    val f = Files.createTempFile("graft", ".nc").toFile
-    f.deleteOnExit()
+    val f = tmpFile("graft", ".nc").toFile
     NetCDF3.writeDoubleVar(f.getAbsolutePath,
       Seq("t" -> 4, "x" -> 4), "m", Array.tabulate(16)(_.toDouble))
     val srv = new IoServer(spark)
@@ -59,7 +55,7 @@ class FileImportSpec extends SparkSpec {
   }
 
   test("dropping one of two imports of a path keeps the survivor cached") {
-    val dir = Files.createTempDirectory("graft_twin").resolve("t.parquet").toString
+    val dir = tmpDir("twin").resolve("t.parquet").toString
     spark.range(1, 5).select(col("id").as("id_dim"),
       array(col("id").cast("double")).as("measure")).write.parquet(dir)
     val srv = new IoServer(spark)
@@ -81,9 +77,35 @@ class FileImportSpec extends SparkSpec {
     ses.execute("operation=drop_frag;frag_name=twin_b")
   }
 
+  test("two imports of one NetCDF path share one cache entry; a rewrite re-imports") {
+    val f = tmpFile("twin", ".nc").toFile
+    val srv = new IoServer(spark)
+    val ses = srv.newSession()
+    def write(scale: Double): Unit = NetCDF3.writeDoubleVar(f.getAbsolutePath,
+      Seq("t" -> 4, "x" -> 3), "m", Array.tabulate(12)(_ * scale))
+    def load(frag: String): Unit = ses.execute(s"operation=file_import;" +
+      s"frag_name=$frag;src_path=${f.getAbsolutePath};measure=m;explicit=1")
+    def rows(frag: String): Seq[Seq[Double]] = ses.execute(
+      s"operation=select;field=id_dim|measure;from=$frag;order=id_dim").get
+      .collect().map(_.getSeq[Double](1)).toSeq
+    write(1.0)
+    load("nc_a")
+    load("nc_b")
+    val (a, b) = (srv.storedFrag("default", "nc_a"), srv.storedFrag("default", "nc_b"))
+    assert(a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed))
+    val batches = Seq(a, b).map(org.apache.spark.sql.GraftSqlShims.cachedBatches(_).get)
+    assert(batches.head eq batches.last, "one cache entry holds both imports")
+    // a rewritten file (a later modification time) is a new table: its
+    // import reads the new values, the earlier imports keep their cache
+    write(2.0)
+    load("nc_c")
+    assert(rows("nc_c") == Seq.tabulate(4)(r => Seq.tabulate(3)(c => (r * 3 + c) * 2.0)))
+    assert(rows("nc_a") == Seq.tabulate(4)(r => Seq.tabulate(3)(c => (r * 3 + c) * 1.0)))
+    Seq("nc_a", "nc_b", "nc_c").foreach(n => ses.execute(s"operation=drop_frag;frag_name=$n"))
+  }
+
   test("compressed=yes stores deflated cells; reads are transparent") {
-    val f = Files.createTempFile("graft", ".nc").toFile
-    f.deleteOnExit()
+    val f = tmpFile("graft", ".nc").toFile
     NetCDF3.writeDoubleVar(f.getAbsolutePath,
       Seq("t" -> 4, "x" -> 4), "m", Array.tabulate(16)(_.toDouble))
     val srv = new IoServer(spark)
@@ -121,7 +143,7 @@ class FileImportSpec extends SparkSpec {
   }
 
   test("catalog save/load round-trips fragments and databases") {
-    val dir = Files.createTempDirectory("graft-catalog").toFile.getAbsolutePath
+    val dir = tmpDir("catalog").toFile.getAbsolutePath
     val srv = new IoServer(spark)
     val ses = srv.newSession()
     ses.execute("operation=create_database;db_name=mydb")
@@ -253,14 +275,13 @@ class FileImportSpec extends SparkSpec {
     val srv = new IoServer(spark)
     val ses = srv.newSession()
     ses.execute("operation=random_import;frag_name=ex;nrows=6;array_length=4")
-    val out = Files.createTempFile("graft-export", ".nc").toFile
-    out.deleteOnExit()
+    val out = tmpFile("graft_export", ".nc").toFile
     ses.execute("operation=function;function_name=oph_export;" +
       s"function_args=ex|${out.getAbsolutePath}")
-    val hdr = NetCDF3.readHeader(out.getAbsolutePath)
+    val hdr = NetCDF3.readHeader(out.getAbsolutePath, hadoopConf)
     assert(hdr.dims.map(_.length) == Seq(6, 4))
     val v = hdr.variable("measure")
-    val data = NetCDF3.readSlab(out.getAbsolutePath, hdr, v, Seq(0, 0), Seq(6, 4))
+    val data = NetCDF3.readSlab(out.getAbsolutePath, hadoopConf, hdr, v, Seq(0, 0), Seq(6, 4))
     val orig = ses.execute("operation=select;field=id_dim|measure;from=ex;order=id_dim")
       .get.collect().flatMap(_.getSeq[Double](1))
     assert(data.toSeq == orig.toSeq)
@@ -275,7 +296,7 @@ class FileImportSpec extends SparkSpec {
       .get.collect().flatMap(_.getSeq[Double](1)).toSeq
     Seq("cdf5" -> ".nc", "netcdf4" -> ".h5",
         "zarr" -> ".zarr", "zarr3" -> ".zarr").foreach { case (fmt, ext) =>
-      val dir = Files.createTempDirectory("graft-export-fmt")
+      val dir = tmpDir("export_fmt")
       val path = dir.resolve(s"out$ext").toString
       ses.execute("operation=function;function_name=oph_export;" +
         s"function_args=exf|$path|$fmt")
@@ -290,8 +311,7 @@ class FileImportSpec extends SparkSpec {
   }
 
   test("read-stream reduction (sub_operation) folds into the @file load") {
-    val f = Files.createTempFile("graft-sub", ".nc").toFile
-    f.deleteOnExit()
+    val f = tmpFile("graft_sub", ".nc").toFile
     NetCDF3.writeDoubleVar(f.getAbsolutePath,
       Seq("t" -> 3, "x" -> 4), "measure", Array.tabulate(12)(_.toDouble))
     val srv = new IoServer(spark)

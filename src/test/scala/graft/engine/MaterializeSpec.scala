@@ -1,17 +1,15 @@
 package graft.engine
 
-import java.nio.file.Files
-
 import org.apache.spark.storage.StorageLevel
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempRoot}
 import graft.core.Engine
 import graft.sources.NetCDF3
 
 /** Every stored wire result is filled through `Engine.materialize`: one
   * Spark job per statement over a resident input, and the exact row
   * count, so fragment sizes are unchanged. */
-class MaterializeSpec extends SparkSpec {
+class MaterializeSpec extends SparkSpec with TempRoot {
   private def size(s: IoServer#Session, frag: String): Long =
     s.execute(s"operation=function;function_name=oph_size;function_args=$frag")
       .get.head().getLong(0)
@@ -51,8 +49,7 @@ class MaterializeSpec extends SparkSpec {
       "field=id_dim|measure;value=3|3.5;final_statement=yes")) == 1)
     assert(size(s, "mi") == 3L)
 
-    val f = Files.createTempFile("graft-mat", ".nc").toFile
-    f.deleteOnExit()
+    val f = tmpFile("graft_mat", ".nc").toFile
     NetCDF3.writeDoubleVar(f.getAbsolutePath,
       Seq("t" -> 5, "x" -> 4), "m", Array.tabulate(20)(_.toDouble))
     assert(jobsOf(s.execute(s"operation=file_import;frag_name=fi;" +

@@ -9,7 +9,7 @@ import graft.core.Tables
 /** Pins [[VectorIndex]] against the derivations it replaced: the
   * literal-centroid probe against a centroid join ranked by a window,
   * the heap ranker against `row_number`, the s18 serve's job count over
-  * a built index, s12's data-scaled sub-cell split against an in-memory
+  * a built index and s02's over the raw scan, s12's data-scaled sub-cell split against an in-memory
   * replay, and the module boundary in the source. */
 class VectorIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -70,6 +70,16 @@ class VectorIndexSpec extends SparkSpec {
     val planning = jobsOf(SimilarityQueries.s18_ann_persisted(spark, dir))
     assert(planning <= probeCollect,
       s"serve planning started $planning jobs, the probe collect alone $probeCollect")
+  }
+
+  test("planning s02 over the raw scan starts only its cell training") {
+    val dir = sf()
+    // the gather joins the broadcast probes to the scan; no probed-cell
+    // collect rides along, since it would prune nothing there
+    val train = jobsOf(VectorIndex.cells(emb(dir), "label"))
+    val planning = jobsOf(SimilarityQueries.s02_ann_ivf(spark, dir))
+    assert(planning <= train,
+      s"s02 planning started $planning jobs, its cell training alone $train")
   }
 
   test("s12 splits a label above the cap into sub-cells, as an in-memory replay") {

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.nio.file.Files
+import org.apache.hadoop.conf.Configuration
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TempRoot
@@ -9,6 +10,13 @@ import graft.TempRoot
   * golden superblock/datatype bytes from the public spec, contiguous and
   * chunked+deflate roundtrips, hyperslab reads, edge chunks, filters. */
 class HDF5Spec extends AnyFunSuite with TempRoot {
+
+  private val conf = new Configuration()
+
+  private def isHdf5(p: String): Boolean = {
+    val src = RandomInput.open(p, conf)
+    try HDF5.isHdf5(src) finally src.close()
+  }
 
   private def tmp(suffix: String): String =
     tmpFile("h5", suffix).toString
@@ -47,7 +55,7 @@ class HDF5Spec extends AnyFunSuite with TempRoot {
     val p = tmp(".h5")
     val data = grid(6, 4)
     HDF5.writeDoubleVar(p, Seq("row" -> 6, "col" -> 4), "measure", data)
-    val r = new HDF5.Hdf5Reader(p)
+    val r = new HDF5.Hdf5Reader(p, conf)
     try {
       assert(r.varNames == Seq("measure"))
       assert(r.shape("measure") == Seq(6, 4))
@@ -66,7 +74,7 @@ class HDF5Spec extends AnyFunSuite with TempRoot {
     val data = grid(7, 5) // 7x5 with 3x2 chunks -> ragged edges both dims
     HDF5.writeDoubleVar(p, Seq("row" -> 7, "col" -> 5), "m", data,
       chunkDims = Some(Seq(3, 2)))
-    val r = new HDF5.Hdf5Reader(p)
+    val r = new HDF5.Hdf5Reader(p, conf)
     try {
       val d = r.dataset("m")
       assert(d.isChunked && d.chunkDims == Seq(3, 2))
@@ -88,7 +96,7 @@ class HDF5Spec extends AnyFunSuite with TempRoot {
     val raw = Files.size(java.nio.file.Paths.get(p1))
     val comp = Files.size(java.nio.file.Paths.get(p2))
     assert(comp < raw / 4, s"deflate file $comp not < $raw/4")
-    val r = new HDF5.Hdf5Reader(p2)
+    val r = new HDF5.Hdf5Reader(p2, conf)
     try assert(r.readSlab("m", Seq(0, 0), Seq(64, 64)).forall(_ == 1.5))
     finally r.close()
   }
@@ -96,7 +104,7 @@ class HDF5Spec extends AnyFunSuite with TempRoot {
   test("1-D and 3-D shapes") {
     val p1 = tmp(".h5")
     HDF5.writeDoubleVar(p1, Seq("t" -> 10), "v", Array.tabulate(10)(_ * 2.0))
-    val r1 = new HDF5.Hdf5Reader(p1)
+    val r1 = new HDF5.Hdf5Reader(p1, conf)
     try {
       assert(r1.shape("v") == Seq(10))
       assert(r1.readSlab("v", Seq(3), Seq(4)).toSeq == Seq(6.0, 8.0, 10.0, 12.0))
@@ -105,7 +113,7 @@ class HDF5Spec extends AnyFunSuite with TempRoot {
     val cube = Array.tabulate(2 * 3 * 4)(_.toDouble)
     HDF5.writeDoubleVar(p3, Seq("a" -> 2, "b" -> 3, "c" -> 4), "v", cube,
       chunkDims = Some(Seq(1, 2, 4)))
-    val r3 = new HDF5.Hdf5Reader(p3)
+    val r3 = new HDF5.Hdf5Reader(p3, conf)
     try {
       assert(r3.readSlab("v", Seq(0, 0, 0), Seq(2, 3, 4)).toSeq == cube.toSeq)
       assert(r3.readSlab("v", Seq(1, 1, 1), Seq(1, 2, 2)).toSeq ==
@@ -122,7 +130,7 @@ class HDF5Spec extends AnyFunSuite with TempRoot {
       HDF5.H5Var("measure", Seq("t" -> 5, "x" -> 3), grid(5, 3),
         chunkDims = Some(Seq(2, 3))),
       HDF5.H5Var("x", Seq("x" -> 3), Array(0.5, 1.5, 2.5))))
-    val r = new HDF5.Hdf5Reader(p)
+    val r = new HDF5.Hdf5Reader(p, conf)
     try {
       assert(r.varNames == Seq("measure", "time", "x"))
       assert(r.shape("measure") == Seq(5, 3))
@@ -146,7 +154,7 @@ class HDF5Spec extends AnyFunSuite with TempRoot {
     val p = tmp(".h5")
     // 12 vars — netCDF-4 switches to dense storage above 8 links
     HDF5.writeDoubleVarsDense(p, denseVars(12))
-    val r = new HDF5.Hdf5Reader(p)
+    val r = new HDF5.Hdf5Reader(p, conf)
     try {
       assert(r.varNames == (0 until 12).map(i => f"var$i%02d"))
       (0 until 12).foreach { i =>
@@ -161,7 +169,7 @@ class HDF5Spec extends AnyFunSuite with TempRoot {
     // node size 64 → (64-10)/11 = 4 records per leaf → 10 links force
     // a depth-1 tree with internal-node separators
     HDF5.writeDoubleVarsDense(p, denseVars(10), btreeNodeSize = 64)
-    val r = new HDF5.Hdf5Reader(p)
+    val r = new HDF5.Hdf5Reader(p, conf)
     try {
       assert(r.varNames == (0 until 10).map(i => f"var$i%02d"))
       assert(r.readSlab("var07", Seq(1), Seq(2)).toSeq == Seq(71.0, 72.0))
@@ -174,7 +182,7 @@ class HDF5Spec extends AnyFunSuite with TempRoot {
     HDF5.writeDoubleVarsDense(p, denseVars(9) :+
       HDF5.H5Var("measure", Seq("r" -> 7, "c" -> 5), data,
         chunkDims = Some(Seq(3, 2))))
-    val r = new HDF5.Hdf5Reader(p)
+    val r = new HDF5.Hdf5Reader(p, conf)
     try {
       assert(r.readSlab("measure", Seq(0, 0), Seq(7, 5)).toSeq == data.toSeq)
       assert(r.readSlab("var05", Seq(0), Seq(1)).toSeq == Seq(50.0))
@@ -217,7 +225,7 @@ class HDF5Spec extends AnyFunSuite with TempRoot {
       HDF5.H5Var("t", Seq("r" -> rows), Array.tabulate(rows)(_ * 2.0))),
       index, faPageBits = pageBits, dontFilterPartial = dontFilterPartial,
       eaPageBits = eaPageBits, eaDataBlkMin = eaDataBlkMin)
-    val r = new HDF5.Hdf5Reader(p)
+    val r = new HDF5.Hdf5Reader(p, conf)
     try {
       assert(r.varNames == Seq("m", "t"))
       assert(r.readSlab("m", Seq(0, 0), Seq(rows, cols)).toSeq == data.toSeq,
@@ -334,10 +342,10 @@ class HDF5Spec extends AnyFunSuite with TempRoot {
   test("isHdf5 distinguishes HDF5 from CDF classic") {
     val h5 = tmp(".h5")
     HDF5.writeDoubleVar(h5, Seq("x" -> 1), "m", Array(1.0))
-    assert(HDF5.isHdf5(h5))
+    assert(isHdf5(h5))
     val nc = tmp(".nc")
     NetCDF3.writeDoubleVar(nc, Seq("x" -> 1), "m", Array(1.0))
-    assert(!HDF5.isHdf5(nc))
+    assert(!isHdf5(nc))
   }
 
   test("scalar float64 attributes round-trip (CF attrs on a netCDF-4 twin)") {
@@ -346,7 +354,7 @@ class HDF5Spec extends AnyFunSuite with TempRoot {
       Array(1.0, 2.0, 3.0, 4.0, 5.0, 6.0),
       attrs = Seq("scale_factor" -> 0.25, "add_offset" -> -2.0,
         "_FillValue" -> -9999.0))))
-    val r = new HDF5.Hdf5Reader(f)
+    val r = new HDF5.Hdf5Reader(f, conf)
     assert(r.varAttrs("m") == Map("scale_factor" -> 0.25,
       "add_offset" -> -2.0, "_FillValue" -> -9999.0))
     // attribute messages must not disturb the data path
@@ -354,7 +362,7 @@ class HDF5Spec extends AnyFunSuite with TempRoot {
       Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0))
     r.close()
     // the sniffing facade exposes them too (cf_unpack reads from here)
-    val via = NcReader.open(f)
+    val via = NcReader.open(f, conf)
     assert(via.varAttrs("m")("scale_factor") == 0.25)
     via.close()
   }
@@ -381,7 +389,7 @@ class HDF5Spec extends AnyFunSuite with TempRoot {
     HDF5.writeLatestVars(p, Seq(HDF5.H5Var("m", Seq("r" -> 7, "c" -> 5),
       data, chunkDims = Some(Seq(3, 5)))), index = "fixedarray",
       fletcher = true)
-    val r = new HDF5.Hdf5Reader(p)
+    val r = new HDF5.Hdf5Reader(p, conf)
     try assert(r.readSlab("m", Seq(0, 0), Seq(7, 5)).toSeq == data.toSeq)
     finally r.close()
   }
@@ -401,7 +409,7 @@ class HDF5Spec extends AnyFunSuite with TempRoot {
       i + 1 < bytes.length && (bytes(i + 1) & 0xFF) == 0x9C).get
     bytes(at + 5) = (bytes(at + 5) ^ 0x40).toByte
     Files.write(java.nio.file.Paths.get(p), bytes)
-    val r = new HDF5.Hdf5Reader(p)
+    val r = new HDF5.Hdf5Reader(p, conf)
     try {
       val e = intercept[Exception](r.readSlab("m", Seq(0, 0), Seq(6, 4)))
       assert(e.getMessage.contains("fletcher32 mismatch"))
@@ -415,7 +423,7 @@ class HDF5Spec extends AnyFunSuite with TempRoot {
     HDF5.writeVarsWithStringLabels(p,
       Seq(HDF5.H5Var("m", Seq("r" -> 5), grid(5, 1))),
       "station", labels)
-    val r = new HDF5.Hdf5Reader(p)
+    val r = new HDF5.Hdf5Reader(p, conf)
     try {
       assert(r.readStringVar("station") === labels)
       // the numeric variable is untouched by the extra dataset
@@ -436,7 +444,7 @@ class HDF5Spec extends AnyFunSuite with TempRoot {
       && bytes(i + 2) == 'O' && bytes(i + 3) == 'L').get
     bytes(at) = 'X'.toByte
     Files.write(java.nio.file.Paths.get(p), bytes)
-    val r = new HDF5.Hdf5Reader(p)
+    val r = new HDF5.Hdf5Reader(p, conf)
     try {
       val e = intercept[IllegalArgumentException](r.readStringVar("station"))
       assert(e.getMessage.contains("GCOL"))
@@ -449,7 +457,7 @@ class HDF5Spec extends AnyFunSuite with TempRoot {
       Seq[Any](0L, -3.75, 0L))
     HDF5.writeCompound1D(p, "t",
       Seq("a" -> 'l', "b" -> 'd', "cc" -> 'l'), data)
-    val r = new HDF5.Hdf5Reader(p)
+    val r = new HDF5.Hdf5Reader(p, conf)
     try {
       val (ms, rows) = r.readCompoundVar("t")
       assert(ms.map(m => (m.name, m.offset, m.dtype.clazz)) ==

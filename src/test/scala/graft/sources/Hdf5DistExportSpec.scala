@@ -14,7 +14,7 @@ class Hdf5DistExportSpec extends SparkSpec with TempRoot {
     (0 until n).map(i => (i.toLong, (0 until m).map(j => i * 0.5 + j * 0.125)))
 
   private def readAll(p: String, n: Int, m: Int): Array[Double] = {
-    val r = new HDF5.Hdf5Reader(p)
+    val r = new HDF5.Hdf5Reader(p, hadoopConf)
     try r.readSlab("measure", Seq(0, 0), Seq(n, m)) finally r.close()
   }
 
@@ -98,7 +98,7 @@ class Hdf5DistExportSpec extends SparkSpec with TempRoot {
       assert(rows == n && chunks == 4, idx)
       // the file must really carry the requested index structure (a
       // silent fall-through to implicit would also read back fine)
-      val r = new HDF5.Hdf5Reader(p)
+      val r = new HDF5.Hdf5Reader(p, hadoopConf)
       try {
         assert(r.dataset("measure").chunkIndex.getClass == expected,
           s"$idx: wrong on-disk chunk index")
@@ -123,7 +123,7 @@ class Hdf5DistExportSpec extends SparkSpec with TempRoot {
       val (rows, chunks) = HDF5.writeDoubleVarDistributed(df, "id", "a", p,
         "measure", rowsPerChunk = rpc, index = "extarray")
       assert(rows == n && chunks == nChunks, s"n=$n")
-      val r = new HDF5.Hdf5Reader(p)
+      val r = new HDF5.Hdf5Reader(p, hadoopConf)
       try {
         val d = r.dataset("measure")
         assert(d.chunkIndex.getClass == classOf[HDF5.IdxExtArray],

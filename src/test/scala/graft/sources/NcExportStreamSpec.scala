@@ -59,11 +59,11 @@ class NcExportStreamSpec extends SparkSpec with TempRoot {
       assert(maxTask.get() <= budget, s"peak task result ${maxTask.get()} over $budget")
     } finally spark.sparkContext.removeSparkListener(listener)
     // readback: first and last rows landed sorted and intact
-    val hdr = NetCDF3.readHeader(p)
+    val hdr = NetCDF3.readHeader(p, hadoopConf)
     val v = hdr.variable("measure")
-    assert(NetCDF3.readSlab(p, hdr, v, Seq(0, 0), Seq(1, 3)).toSeq ==
+    assert(NetCDF3.readSlab(p, hadoopConf, hdr, v, Seq(0, 0), Seq(1, 3)).toSeq ==
       Seq(2.0, 3.0, 4.0)) // id_dim 1 + elem 1..3
-    assert(NetCDF3.readSlab(p, hdr, v, Seq(n - 1, 0), Seq(1, 2)).toSeq ==
+    assert(NetCDF3.readSlab(p, hadoopConf, hdr, v, Seq(n - 1, 0), Seq(1, 2)).toSeq ==
       Seq(n + 1.0, n + 2.0))
   }
 
@@ -92,10 +92,10 @@ class NcExportStreamSpec extends SparkSpec with TempRoot {
     val p = outFile("nc")
     NetCDF3.writeDoubleVarStreamed(p, Seq("id_dim" -> n, "elem" -> m),
       "measure", pump(df), version = 5)
-    val hdr = NetCDF3.readHeader(p)
+    val hdr = NetCDF3.readHeader(p, hadoopConf)
     assert(hdr.version == 5)
     val v = hdr.variable("measure")
-    val got = NetCDF3.readSlab(p, hdr, v, Seq(0, 0), Seq(n, m)).toSeq
+    val got = NetCDF3.readSlab(p, hadoopConf, hdr, v, Seq(0, 0), Seq(n, m)).toSeq
     val want = (1 to n).flatMap(i => (0 until m).map(j => i * 10.0 + j))
     assert(got == want)
   }
@@ -109,7 +109,7 @@ class NcExportStreamSpec extends SparkSpec with TempRoot {
     val p = outFile("h5")
     HDF5.writeDoubleVarStreamed(p, Seq("id_dim" -> n, "elem" -> m),
       "measure", pump(df))
-    val r = new HDF5.Hdf5Reader(p)
+    val r = new HDF5.Hdf5Reader(p, hadoopConf)
     try {
       val got = r.readSlab("measure", Seq(0, 0), Seq(n, m)).toSeq
       val want = (1 to n).flatMap(i => (0 until m).map(j => i * 2.0 - j * 0.5))

@@ -30,20 +30,20 @@ class NetCDFSpec extends SparkSpec {
   test("header parse + full slab roundtrip") {
     val data = Array.tabulate(24)(_.toDouble)
     val path = tmpNc(Seq("t" -> 2, "y" -> 3, "x" -> 4), data)
-    val hdr = NetCDF3.readHeader(path)
+    val hdr = NetCDF3.readHeader(path, hadoopConf)
     assert(hdr.dims.map(d => (d.name, d.length)) == Seq(("t", 2), ("y", 3), ("x", 4)))
     val v = hdr.variable("measure")
-    assert(NetCDF3.readSlab(path, hdr, v, Seq(0, 0, 0), Seq(2, 3, 4)).toSeq ==
+    assert(NetCDF3.readSlab(path, hadoopConf, hdr, v, Seq(0, 0, 0), Seq(2, 3, 4)).toSeq ==
       data.toSeq)
   }
 
   test("hyperslab: partial origins and shapes (row-major)") {
     val data = Array.tabulate(24)(_.toDouble) // t=2, y=3, x=4
     val path = tmpNc(Seq("t" -> 2, "y" -> 3, "x" -> 4), data)
-    val hdr = NetCDF3.readHeader(path)
+    val hdr = NetCDF3.readHeader(path, hadoopConf)
     val v = hdr.variable("measure")
     // slab t=1, y=1..2, x=2..3 → values 12*1 + 4*y + x
-    val slab = NetCDF3.readSlab(path, hdr, v, Seq(1, 1, 2), Seq(1, 2, 2))
+    val slab = NetCDF3.readSlab(path, hadoopConf, hdr, v, Seq(1, 1, 2), Seq(1, 2, 2))
     assert(slab.toSeq == Seq(18.0, 19.0, 22.0, 23.0))
   }
 
@@ -186,10 +186,10 @@ class NetCDFSpec extends SparkSpec {
     o.writeLong(84L) // 64-bit begin
     Seq(1.25, 2.5, 3.75).foreach(o.writeDouble)
     o.close()
-    val hdr = NetCDF3.readHeader(f.getAbsolutePath)
+    val hdr = NetCDF3.readHeader(f.getAbsolutePath, hadoopConf)
     assert(hdr.version == 2)
     val v = hdr.variable("v")
-    assert(NetCDF3.readSlab(f.getAbsolutePath, hdr, v, Seq(0), Seq(3)).toSeq ==
+    assert(NetCDF3.readSlab(f.getAbsolutePath, hadoopConf, hdr, v, Seq(0), Seq(3)).toSeq ==
       Seq(1.25, 2.5, 3.75))
   }
 
@@ -203,13 +203,13 @@ class NetCDFSpec extends SparkSpec {
     val b = Files.readAllBytes(f.toPath)
     assert(b(3) == 5)
     assert((4 until 12).forall(b(_) == 0))
-    val hdr = NetCDF3.readHeader(f.getAbsolutePath)
+    val hdr = NetCDF3.readHeader(f.getAbsolutePath, hadoopConf)
     assert(hdr.version == 5)
     val v = hdr.variable("measure")
     assert(hdr.shape(v) == Seq(6, 4))
-    assert(NetCDF3.readSlab(f.getAbsolutePath, hdr, v, Seq(0, 0), Seq(6, 4))
+    assert(NetCDF3.readSlab(f.getAbsolutePath, hadoopConf, hdr, v, Seq(0, 0), Seq(6, 4))
       .toSeq == data.toSeq)
-    assert(NetCDF3.readSlab(f.getAbsolutePath, hdr, v, Seq(2, 1), Seq(2, 2))
+    assert(NetCDF3.readSlab(f.getAbsolutePath, hadoopConf, hdr, v, Seq(2, 1), Seq(2, 2))
       .toSeq == Seq(data(9), data(10), data(13), data(14)))
   }
 
@@ -238,11 +238,11 @@ class NetCDFSpec extends SparkSpec {
     Seq(1, -1, Int.MinValue).foreach(o.writeInt) // u32: 1, 4294967295, 2^31
     Seq(5000000000L, -7L, 42L).foreach(o.writeLong)
     o.close()
-    val hdr = NetCDF3.readHeader(f.getAbsolutePath)
+    val hdr = NetCDF3.readHeader(f.getAbsolutePath, hadoopConf)
     assert(hdr.version == 5)
-    assert(NetCDF3.readSlab(f.getAbsolutePath, hdr, hdr.variable("u"),
+    assert(NetCDF3.readSlab(f.getAbsolutePath, hadoopConf, hdr, hdr.variable("u"),
       Seq(0), Seq(3)).toSeq == Seq(1.0, 4294967295.0, 2147483648.0))
-    assert(NetCDF3.readSlab(f.getAbsolutePath, hdr, hdr.variable("v"),
+    assert(NetCDF3.readSlab(f.getAbsolutePath, hadoopConf, hdr, hdr.variable("v"),
       Seq(0), Seq(3)).toSeq == Seq(5.0e9, -7.0, 42.0))
   }
 
@@ -269,14 +269,14 @@ class NetCDFSpec extends SparkSpec {
     // 3 records × 2 values
     Seq(0.0, 1.0, 10.0, 11.0, 20.0, 21.0).foreach(o.writeDouble)
     o.close()
-    val hdr = NetCDF3.readHeader(f.getAbsolutePath)
+    val hdr = NetCDF3.readHeader(f.getAbsolutePath, hadoopConf)
     assert(hdr.numRecs == 3 && hdr.dims.head.isRecord)
     val v = hdr.variable("m")
     assert(hdr.shape(v) == Seq(3, 2))
-    assert(NetCDF3.readSlab(f.getAbsolutePath, hdr, v, Seq(0, 0), Seq(3, 2)).toSeq ==
+    assert(NetCDF3.readSlab(f.getAbsolutePath, hadoopConf, hdr, v, Seq(0, 0), Seq(3, 2)).toSeq ==
       Seq(0.0, 1.0, 10.0, 11.0, 20.0, 21.0))
     // single middle record
-    assert(NetCDF3.readSlab(f.getAbsolutePath, hdr, v, Seq(1, 0), Seq(1, 2)).toSeq ==
+    assert(NetCDF3.readSlab(f.getAbsolutePath, hadoopConf, hdr, v, Seq(1, 0), Seq(1, 2)).toSeq ==
       Seq(10.0, 11.0))
   }
 

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
 import scala.util.Random
 
+import org.apache.hadoop.conf.Configuration
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,6 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ReaderFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val rnd = new Random(0xFEED5EED)
+  private val conf = new Configuration()
   private val pool = Executors.newCachedThreadPool()
   override def afterAll(): Unit = pool.shutdownNow()
 
@@ -50,7 +52,7 @@ class ReaderFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def openAndRead(path: String): Unit = {
-    val r = NcReader.open(path)
+    val r = NcReader.open(path, conf)
     try {
       // touch real work, not just the header
       val names = Seq("measure", "m", "var")

@@ -15,7 +15,7 @@ class ZarrExportSpec extends SparkSpec with TempRoot {
     tmpDir("zexp").resolve("store.zarr").toString
 
   private def readBack(path: String, n: Int, m: Int): Seq[Double] = {
-    val r = new Zarr.ZarrReader(path)
+    val r = new Zarr.ZarrReader(path, hadoopConf)
     try r.readSlab("measure", Seq(0, 0), Seq(n, m)).toSeq
     finally r.close()
   }
@@ -87,7 +87,7 @@ class ZarrExportSpec extends SparkSpec with TempRoot {
     assert(n == d0 * d1 && chunks == 3)
     assert(Files.exists(Paths.get(p, "measure", "c", "0", "0", "0")))
     assert(Files.exists(Paths.get(p, "measure", "c", "2", "0", "0")))
-    val r = new Zarr.ZarrReader(p)
+    val r = new Zarr.ZarrReader(p, hadoopConf)
     try {
       assert(r.shape("measure") == Seq(d0, d1, m))
       // full 3-D read in C order == the row-major construction
@@ -124,7 +124,7 @@ class ZarrExportSpec extends SparkSpec with TempRoot {
     val want = (0 until n).flatMap(i => (0 until m).map(j => i * 1.0 + j * 0.25))
     assert(got == want)
     // an interior slab crossing a shard boundary reads correctly
-    val r = new Zarr.ZarrReader(p)
+    val r = new Zarr.ZarrReader(p, hadoopConf)
     try {
       val slab = r.readSlab("measure", Seq(13, 2), Seq(4, 2)).toSeq
       val wantSlab = for (i <- 13 until 17; j <- 2 until 4)
@@ -138,7 +138,7 @@ class ZarrExportSpec extends SparkSpec with TempRoot {
     val bytes = Files.readAllBytes(obj)
     bytes(bytes.length - 10) = (bytes(bytes.length - 10) ^ 0x01).toByte
     Files.write(obj, bytes)
-    val r2 = new Zarr.ZarrReader(p)
+    val r2 = new Zarr.ZarrReader(p, hadoopConf)
     try {
       val e = intercept[IllegalArgumentException](
         r2.readSlab("measure", Seq(0, 0), Seq(1, 1)))
@@ -162,7 +162,7 @@ class ZarrExportSpec extends SparkSpec with TempRoot {
     assert(Files.exists(Paths.get(p, "measure", "c", "0", "0", "0")))
     assert(Files.exists(Paths.get(p, "measure", "c", "4", "0", "0")))
     assert(!Files.exists(Paths.get(p, "measure", "c", "5", "0", "0")))
-    val r = new Zarr.ZarrReader(p)
+    val r = new Zarr.ZarrReader(p, hadoopConf)
     try {
       assert(r.shape("measure") == Seq(d0, d1, m))
       val got = r.readSlab("measure", Seq(0, 0, 0), Seq(d0, d1, m)).toSeq

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.nio.file.Files
+import org.apache.hadoop.conf.Configuration
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TempRoot
@@ -10,6 +11,8 @@ import graft.TempRoot
   * uncompressed + big-endian stores written by hand from the spec. */
 class ZarrSpec extends AnyFunSuite with TempRoot {
 
+  private val conf = new Configuration()
+
   private def tmp(): String =
     tmpDir("zarr").resolve("store.zarr").toString
 
@@ -18,7 +21,7 @@ class ZarrSpec extends AnyFunSuite with TempRoot {
 
   test("writer emits spec-shaped .zgroup/.zarray and dotted chunk keys") {
     val p = tmp()
-    Zarr.writeDoubleVar(p, Seq("r" -> 7, "c" -> 5), "m", grid(7, 5),
+    Zarr.writeDoubleVar(p, conf, Seq("r" -> 7, "c" -> 5), "m", grid(7, 5),
       chunkDims = Some(Seq(3, 2)))
     assert(Files.readString(java.nio.file.Paths.get(p, ".zgroup"))
       .contains("\"zarr_format\": 2"))
@@ -34,9 +37,9 @@ class ZarrSpec extends AnyFunSuite with TempRoot {
   test("zlib roundtrip with ragged edge chunks and hyperslabs") {
     val p = tmp()
     val data = grid(7, 5)
-    Zarr.writeDoubleVar(p, Seq("r" -> 7, "c" -> 5), "m", data,
+    Zarr.writeDoubleVar(p, conf, Seq("r" -> 7, "c" -> 5), "m", data,
       chunkDims = Some(Seq(3, 2)))
-    val r = new Zarr.ZarrReader(p)
+    val r = new Zarr.ZarrReader(p, conf)
     assert(r.shape("m") == Seq(7, 5))
     assert(r.readSlab("m", Seq(0, 0), Seq(7, 5)).toSeq == data.toSeq)
     assert(r.readSlab("m", Seq(5, 3), Seq(2, 2)).toSeq ==
@@ -46,11 +49,11 @@ class ZarrSpec extends AnyFunSuite with TempRoot {
 
   test("missing chunk objects read as fill_value") {
     val p = tmp()
-    Zarr.writeDoubleVar(p, Seq("r" -> 4, "c" -> 2), "m",
+    Zarr.writeDoubleVar(p, conf, Seq("r" -> 4, "c" -> 2), "m",
       Array.tabulate(8)(_ + 1.0), chunkDims = Some(Seq(2, 2)))
     // delete the second chunk (rows 2-3)
     Files.delete(java.nio.file.Paths.get(p, "m", "1.0"))
-    val r = new Zarr.ZarrReader(p)
+    val r = new Zarr.ZarrReader(p, conf)
     assert(r.readSlab("m", Seq(0, 0), Seq(4, 2)).toSeq ==
       Seq(1.0, 2.0, 3.0, 4.0, 0.0, 0.0, 0.0, 0.0))
   }
@@ -66,7 +69,7 @@ class ZarrSpec extends AnyFunSuite with TempRoot {
     val bb = java.nio.ByteBuffer.allocate(16) // big-endian default
     Seq(10, 20, 30, 40).foreach(bb.putInt)
     Files.write(arr.resolve("0.0"), bb.array())
-    val r = new Zarr.ZarrReader(dir.toString)
+    val r = new Zarr.ZarrReader(dir.toString, conf)
     assert(r.shape("v") == Seq(2, 2))
     assert(r.readSlab("v", Seq(0, 0), Seq(2, 2)).toSeq ==
       Seq(10.0, 20.0, 30.0, 40.0))
@@ -75,14 +78,14 @@ class ZarrSpec extends AnyFunSuite with TempRoot {
   test("blosc store roundtrip (lz4 + byte shuffle, the numcodecs default)") {
     val p = tmp()
     val data = grid(7, 5)
-    Zarr.writeDoubleVar(p, Seq("r" -> 7, "c" -> 5), "m", data,
+    Zarr.writeDoubleVar(p, conf, Seq("r" -> 7, "c" -> 5), "m", data,
       chunkDims = Some(Seq(3, 2)), compressor = "blosc")
     val za = Files.readString(java.nio.file.Paths.get(p, "m", ".zarray"))
     assert(za.contains("\"id\": \"blosc\"") && za.contains("\"cname\": \"lz4\""))
     // chunk objects are real blosc frames (version 2, lz4, typesize 8)
     val chunk = Files.readAllBytes(java.nio.file.Paths.get(p, "m", "0.0"))
     assert(chunk(0) == 2 && chunk(3) == 8 && (chunk(2) >>> 5) == 1)
-    val r = new Zarr.ZarrReader(p)
+    val r = new Zarr.ZarrReader(p, conf)
     assert(r.readSlab("m", Seq(0, 0), Seq(7, 5)).toSeq == data.toSeq)
     assert(r.readSlab("m", Seq(5, 3), Seq(2, 2)).toSeq ==
       Seq(data(28), data(29), data(33), data(34)))
@@ -106,13 +109,13 @@ class ZarrSpec extends AnyFunSuite with TempRoot {
     Files.write(arr.resolve("0"),
       Blosc.compress(raw.array(), typesize = 8, codec = 1,
         doShuffle = true, split = true))
-    val r = new Zarr.ZarrReader(dir.toString)
+    val r = new Zarr.ZarrReader(dir.toString, conf)
     assert(r.readSlab("v", Seq(0), Seq(256)).toSeq == want.toSeq)
   }
 
   test("v3 writer emits zarr.json metadata and c/-prefixed nested chunk keys") {
     val p = tmp()
-    Zarr.writeDoubleVarV3(p, Seq("r" -> 7, "c" -> 5), "m", grid(7, 5),
+    Zarr.writeDoubleVarV3(p, conf, Seq("r" -> 7, "c" -> 5), "m", grid(7, 5),
       chunkDims = Some(Seq(3, 2)))
     assert(Files.readString(java.nio.file.Paths.get(p, "zarr.json"))
       .contains("\"node_type\": \"group\""))
@@ -128,9 +131,9 @@ class ZarrSpec extends AnyFunSuite with TempRoot {
   test("v3 gzip roundtrip with ragged edges, hyperslabs and fill values") {
     val p = tmp()
     val data = grid(7, 5)
-    Zarr.writeDoubleVarV3(p, Seq("r" -> 7, "c" -> 5), "m", data,
+    Zarr.writeDoubleVarV3(p, conf, Seq("r" -> 7, "c" -> 5), "m", data,
       chunkDims = Some(Seq(3, 2)))
-    val r = new Zarr.ZarrReader(p)
+    val r = new Zarr.ZarrReader(p, conf)
     assert(r.shape("m") == Seq(7, 5))
     assert(r.readSlab("m", Seq(0, 0), Seq(7, 5)).toSeq == data.toSeq)
     assert(r.readSlab("m", Seq(5, 3), Seq(2, 2)).toSeq ==
@@ -159,7 +162,7 @@ class ZarrSpec extends AnyFunSuite with TempRoot {
       .order(java.nio.ByteOrder.BIG_ENDIAN)
     b0.putInt(11); b0.putInt(22)
     Files.write(arr.resolve("0"), b0.array()) // v2 encoding: bare index key
-    val r = new Zarr.ZarrReader(dir.toString)
+    val r = new Zarr.ZarrReader(dir.toString, conf)
     // chunk 1 is absent -> fill_value -1
     assert(r.readSlab("v", Seq(0), Seq(4)).toSeq == Seq(11.0, 22.0, -1.0, -1.0))
   }
@@ -189,7 +192,7 @@ class ZarrSpec extends AnyFunSuite with TempRoot {
     val c = arr.resolve("c"); Files.createDirectories(c)
     Files.write(c.resolve("0"), chunk(1.5, 2.5, 3.5))
     Files.write(c.resolve("1"), chunk(4.5, 5.5, 6.5))
-    val r = new Zarr.ZarrReader(dir.toString)
+    val r = new Zarr.ZarrReader(dir.toString, conf)
     assert(r.readSlab("v", Seq(0), Seq(6)).toSeq ==
       Seq(1.5, 2.5, 3.5, 4.5, 5.5, 6.5))
     assert(r.readSlab("v", Seq(2), Seq(2)).toSeq == Seq(3.5, 4.5))
@@ -198,7 +201,7 @@ class ZarrSpec extends AnyFunSuite with TempRoot {
   test("consolidated .zmetadata serves array metadata without per-array files") {
     val p = tmp()
     val data = grid(7, 5)
-    Zarr.writeDoubleVar(p, Seq("r" -> 7, "c" -> 5), "m", data,
+    Zarr.writeDoubleVar(p, conf, Seq("r" -> 7, "c" -> 5), "m", data,
       chunkDims = Some(Seq(3, 2)))
     // consolidate: inline m/.zarray into .zmetadata, then DELETE the
     // per-array document — reads must go through the consolidated map
@@ -209,41 +212,41 @@ class ZarrSpec extends AnyFunSuite with TempRoot {
          |  "m/.zarray": $za}}""".stripMargin)
     Files.delete(java.nio.file.Paths.get(p, "m", ".zarray"))
     Files.delete(java.nio.file.Paths.get(p, ".zgroup"))
-    assert(Zarr.isZarr(p)) // .zmetadata alone marks the store
-    val r = new Zarr.ZarrReader(p)
+    assert(Zarr.isZarr(p, conf)) // .zmetadata alone marks the store
+    val r = new Zarr.ZarrReader(p, conf)
     assert(r.shape("m") == Seq(7, 5))
     assert(r.readSlab("m", Seq(0, 0), Seq(7, 5)).toSeq == data.toSeq)
   }
 
   test("varAttrs: v2 .zattrs and v3 attributes expose numeric values") {
     val p2 = tmp()
-    Zarr.writeDoubleVar(p2, Seq("x" -> 2), "m", Array(1.0, 2.0))
+    Zarr.writeDoubleVar(p2, conf, Seq("x" -> 2), "m", Array(1.0, 2.0))
     Files.writeString(java.nio.file.Paths.get(p2, "m", ".zattrs"),
       """{"scale_factor": 0.5, "add_offset": 3.0, "units": "K"}""")
-    val r2 = new Zarr.ZarrReader(p2)
+    val r2 = new Zarr.ZarrReader(p2, conf)
     assert(r2.varAttrs("m") == Map("scale_factor" -> 0.5, "add_offset" -> 3.0))
     val p3 = tmp()
-    Zarr.writeDoubleVarV3(p3, Seq("x" -> 2), "m", Array(1.0, 2.0))
+    Zarr.writeDoubleVarV3(p3, conf, Seq("x" -> 2), "m", Array(1.0, 2.0))
     val za = java.nio.file.Paths.get(p3, "m", "zarr.json")
     Files.writeString(za, Files.readString(za).stripSuffix("}")
       + """, "attributes": {"_FillValue": -9.0, "long_name": "t"}}""")
     // the nio edit bypassed Hadoop's local checksum file
     Files.deleteIfExists(java.nio.file.Paths.get(p3, "m", ".zarr.json.crc"))
-    val r3 = new Zarr.ZarrReader(p3)
+    val r3 = new Zarr.ZarrReader(p3, conf)
     assert(r3.varAttrs("m") == Map("_FillValue" -> -9.0))
   }
 
   test("NcReader dispatch: directory store -> Zarr; file:// URI works (Hadoop FS)") {
     val p = tmp()
-    Zarr.writeDoubleVar(p, Seq("r" -> 2, "c" -> 2), "measure",
+    Zarr.writeDoubleVar(p, conf, Seq("r" -> 2, "c" -> 2), "measure",
       Array(1.0, 2.0, 3.0, 4.0))
-    val viaPlain = NcReader.open(p)
+    val viaPlain = NcReader.open(p, conf)
     assert(viaPlain.shape("measure") == Seq(2, 2))
     viaPlain.close()
     // the same CDF file through a file:// URI exercises the Hadoop path
     val nc = tmpDir("nc_uri").resolve("t.nc")
     NetCDF3.writeDoubleVar(nc.toString, Seq("x" -> 2), "m", Array(5.0, 6.0))
-    val viaUri = NcReader.open("file://" + nc)
+    val viaUri = NcReader.open("file://" + nc, conf)
     assert(viaUri.shape("m") == Seq(2))
     assert(viaUri.readSlab("m", Seq(0), Seq(2)).toSeq == Seq(5.0, 6.0))
     viaUri.close()
@@ -262,7 +265,7 @@ class ZarrSpec extends AnyFunSuite with TempRoot {
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     Seq(1.0, 4.0, 2.0, 5.0, 3.0, 6.0).foreach(bb.putDouble)
     Files.write(arr.resolve("0.0"), bb.array())
-    val r = new Zarr.ZarrReader(dir.toString)
+    val r = new Zarr.ZarrReader(dir.toString, conf)
     assert(r.readSlab("v", Seq(0, 0), Seq(2, 3)).toSeq ==
       Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0))
     // hyperslab: middle column
@@ -297,7 +300,7 @@ class ZarrSpec extends AnyFunSuite with TempRoot {
     val c0 = arr.resolve("c").resolve("0"); Files.createDirectories(c0)
     Files.write(c0.resolve("0"), chunk(1.0, 3.0, 2.0, 4.0))
     Files.write(c0.resolve("1"), chunk(5.0, 7.0, 6.0, 8.0))
-    val r = new Zarr.ZarrReader(dir.toString)
+    val r = new Zarr.ZarrReader(dir.toString, conf)
     assert(r.readSlab("v", Seq(0, 0), Seq(2, 4)).toSeq ==
       Seq(1.0, 2.0, 5.0, 6.0, 3.0, 4.0, 7.0, 8.0))
     // hyperslab crossing the chunk boundary mid-row
