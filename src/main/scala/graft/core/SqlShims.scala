@@ -39,6 +39,15 @@ object GraftSqlShims {
       .map(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers)
   }
 
+  /** The frame over `rows`, a filled copy of `df`'s rows, with `df`'s
+    * output partitioning, ordering and statistics: how `localCheckpoint`
+    * wraps the rows it cuts (private[sql]). */
+  def fromRows(rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    ofRows(ds.sparkSession, execution.LogicalRDD.fromDataset(rows, ds, ds.isStreaming))
+  }
+
   /** Idempotently add a planner strategy to an EXISTING session. */
   def addStrategy(spark: SparkSession,
       st: org.apache.spark.sql.execution.SparkStrategy): Unit = {

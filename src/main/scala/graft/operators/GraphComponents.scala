@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.{AutoScale, Fixpoint}
 
 /** Distributed connected components over an edge list, by alternating
   * large-star / small-star rounds (Kiveris et al., "Connected Components
@@ -21,11 +22,9 @@ import org.apache.spark.sql.functions._
   *  - small-star: every node u links its smaller-or-equal neighbors and
   *    itself to m.
   * The fixpoint is a star forest: every node carries an edge to its
-  * component minimum. Convergence is detected by an (edge-count,
-  * hash-xor) signature of the canonicalized edge set — two cheap
-  * aggregates, no driver-side edge materialization. Lineage is truncated
-  * every round with localCheckpoint (on a cluster: checkpoint to a
-  * reliable store) so the iterated plan stays O(1) deep.
+  * component minimum. The rounds run on [[graft.core.Fixpoint.converge]],
+  * which stops when the canonical edge set repeats (no driver-side edge
+  * materialization) and cuts each round's lineage.
   *
   * Reference semantics: the io-server has no graph operator; this closes
   * the transitive step its pairwise dedup output needs (see
@@ -33,31 +32,23 @@ import org.apache.spark.sql.functions._
   */
 object GraphComponents {
 
-  /** (u, min(N(u) ∪ {u})) for every node u of the symmetric closure. */
-  private def neighborhoodMin(sym: DataFrame): DataFrame =
-    sym.groupBy("u").agg(min("v").as("mv"))
+  /** The symmetric closure of `e`, hash-partitioned on u at `width`. */
+  private def symmetric(e: DataFrame, width: Int): DataFrame =
+    e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
+      .repartition(width, col("u"))
+
+  /** One star over the symmetric `sym`: (mins, the edge (v, m) of every
+    * neighbor v of u that `keep` selects), mins = (u, m = min(N(u) ∪ {u})). */
+  private def star(sym: DataFrame, keep: Column): (DataFrame, DataFrame) = {
+    val mins = sym.groupBy("u").agg(min("v").as("mv"))
       .select(col("u"), least(col("mv"), col("u")).as("mn"))
-
-  /** One large-star round: (v, mn) for every neighbor v > u. */
-  private def largeStar(sym: DataFrame, mins: DataFrame): DataFrame =
-    sym.join(mins, "u")
-      .filter(col("v") > col("u"))
-      .select(col("v").as("u"), col("mn").as("v"))
-
-  /** One small-star round: (v, mn) for every neighbor v < u, plus
-    * (u, mn) — re-roots u and its smaller neighbors at the minimum. */
-  private def smallStar(sym: DataFrame, mins: DataFrame): DataFrame =
-    sym.join(mins, "u")
-      .filter(col("v") < col("u"))
-      .select(col("v").as("u"), col("mn").as("v"))
-      .unionByName(mins.select(col("u"), col("mn").as("v")))
+    (mins, sym.join(mins, "u").filter(keep).select(col("v").as("u"), col("mn").as("v")))
+  }
 
   /** Canonical (max, min) orientation, self-loops dropped, distinct.
     * With `parts` set, the distinct's exchange is pinned to that width
     * via an explicit repartition on the full key (HashPartitioning(u,v)
-    * satisfies the distinct's clustering, so EnsureRequirements adds no
-    * second exchange) — the r19 concurrency-safe replacement for
-    * mutating the session's shuffle-partition conf. */
+    * satisfies the distinct's clustering, so no second exchange). */
   private def canon(e: DataFrame, parts: Option[Int] = None): DataFrame = {
     val c = e.filter(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"),
@@ -77,65 +68,28 @@ object GraphComponents {
     * (a path graph of length L must converge in O(log L) rounds, not
     * O(L)).
     *
-    * Round shape (r18 optimization; results bit-identical):
-    *  - NO intermediate canon/distinct between the large-star and
-    *    small-star steps: both stars are per-edge emits over per-node
-    *    MIN aggregates, and min over a multiset equals min over its
-    *    set, so duplicate intermediate edges cannot change what the
-    *    round-end canon() produces — dropping the mid-round distinct
-    *    removes one Exchange + stage barrier per round (guide §2.4).
-    *  - SCALE-ADAPTIVE round partitioning: after the first canon pass
-    *    materializes, the edge count is known (it rides the same
-    *    aggregate as the convergence signature), and every subsequent
-    *    round plans its shuffles at ~2M edges/partition (≈32 MB blocks)
-    *    clamped to the session's configured parallelism — a 35k-edge
-    *    dedup graph iterates on 1 partition instead of paying
-    *    32 tasks × ~4 exchanges × rounds of scheduling overhead, while
-    *    a 100 TB crawl graph keeps the deployment's full width (guide
-    *    §2.2: size reduce partitions from data, don't inherit a
-    *    constant). Restored on every exit path; labels are
-    *    partitioning-invariant so consumers see identical rows. */
+    * Round shape:
+    *  - NO canon/distinct between the large-star and small-star steps:
+    *    min over a multiset equals min over its set, so duplicate
+    *    intermediate edges cannot change the round-end canon().
+    *  - Each round's shuffles run at [[graft.core.AutoScale.shuffleWidth]]
+    *    of the edge count the previous fill returned. The pre-partitioned
+    *    sym satisfies both the groupBy("u") and the star join, so no
+    *    exchange is added; labels are partitioning-invariant. */
   def labelsWithRounds(edges: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
-    val spark = edges.sparkSession
-    var e = canon(edges.toDF("u", "v")).localCheckpoint(true)
-    var signature = e.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v"))))
-      .head()
-    // r19 (VERDICT item 6): the adaptive width is threaded through
-    // explicit repartition(n, key) calls on each round's shuffling
-    // frames instead of mutating the session-global shuffle-partition
-    // conf — a concurrent query on the same session now plans at its own
-    // width. The pre-partitioned sym satisfies both the groupBy("u") and
-    // the star join's clustering, so the exchange count per round is
-    // unchanged (EnsureRequirements adds none on top).
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val adaptive = math.max(1L, math.min(sessionParts.toLong,
-      signature.getLong(0) / 2000000L + 1L)).toInt
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
-      val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
-        .repartition(adaptive, col("u"))
-      val afterLarge = largeStar(sym, neighborhoodMin(sym))
-      val sym2 = afterLarge.unionByName(
-          afterLarge.select(col("v").as("u"), col("u").as("v")))
-        .repartition(adaptive, col("u"))
-      val next = canon(smallStar(sym2, neighborhoodMin(sym2)), Some(adaptive))
-        .localCheckpoint(true)
-      val sig = next.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v"))))
-        .head()
-      converged = sig == signature
-      signature = sig
-      e = next
-      it += 1
+    var width = 1
+    val (e, rounds) = Fixpoint.converge(canon(edges.toDF("u", "v")), maxIter) {
+      (e, rows) =>
+        width = AutoScale.shuffleWidth(edges.sparkSession, rows)
+        val (_, large) = star(symmetric(e, width), col("v") > col("u"))
+        val (mins, small) = star(symmetric(large, width), col("v") < col("u"))
+        canon(small.unionByName(mins.select(col("u"), col("mn").as("v"))), Some(width))
     }
-    require(converged, s"connected components did not converge in $maxIter rounds")
-    // star forest: (u → comp) edges for non-roots; roots label themselves.
-    // One distinct only (r19): the former inner distinct on the roots arm
-    // was redundant — the outer distinct dedups the whole union — so its
-    // Exchange is dropped; the remaining exchange rides the adaptive width.
+    // star forest: (u → comp) edges for non-roots; roots label
+    // themselves. One distinct over the union, at the round width.
     (e.select(col("u").as("node"), col("v").as("comp"))
       .unionByName(e.select(col("v").as("node"), col("v").as("comp")))
-      .repartition(adaptive, col("node"), col("comp"))
-      .distinct(), it)
+      .repartition(width, col("node"), col("comp"))
+      .distinct(), rounds)
   }
 }

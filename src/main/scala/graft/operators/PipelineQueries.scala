@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{AutoScale, Engine, Fixpoint, Tables}
 import graft.functions.TextFunctions._
 
 /** Composite training-corpus preparation pipeline — the text-analysis
@@ -553,42 +553,10 @@ object PipelineQueries {
       .orderBy("doc_id", "chunk_idx")
   }
 
-  /** p17 — PageRank quality weighting: 6 damped power iterations over a
-    * deterministic link graph on the document set (the CommonCrawl-style
-    * "centrality as a quality prior" signal a pretraining pipeline
-    * attaches to each page before sampling). The graph is 3 pseudo-random
-    * out-links per doc (affine maps mod N) plus a ring edge, so every
-    * node has outdegree ≥ 1 and indegree ≥ 1 — no dangling mass, no
-    * uncovered node, and the DuckDB oracle can replay the identical
-    * iteration as a recursive CTE with a single recursive reference.
-    *
-    * Determinism: ranks are fixed-point longs (1e12 = total mass), every
-    * step integer division — the result is bit-identical at any
-    * parallelism and in any engine (the c03 integer-power-iteration
-    * trick). Scale shape: one iteration = join(ranks, edges) on src +
-    * groupBy dst — both sides hash-partitioned on the join key; at
-    * 100 TB the edge table is pre-bucketed by src so the per-iteration
-    * shuffle is ranks-only (the classic Pregel layout). localCheckpoint
-    * per round caps lineage exactly as [[GraphComponents]] does.
-    * Dangling-node handling (a broadcast 1-row mass aggregate added to
-    * the base term) is omitted only because the construction proves
-    * outdeg ≥ 1; a general corpus would add it. */
-  /** The deterministic doc link graph shared by p17/p18: 3 affine-map
-    * out-links plus a ring edge per node (self-loops deflected to the
-    * successor), so outdegree ≥ 1 and indegree ≥ 1 everywhere. Returns
-    * (nodes, edges, n). */
-  /** Scale-adaptive shuffle width for the iterative graph family
-    * (r19, VERDICT item 7 — the GraphComponents pattern): ~2M edges
-    * per partition (≈32 MB blocks), clamped to the session's
-    * configured parallelism, threaded through explicit
-    * repartition(n, key) calls so each round's shuffles are sized from
-    * the DATA instead of inheriting the session constant (guide §2.2).
-    * Concurrency-safe: no session conf is mutated. */
-  private def adaptiveParts(s: SparkSession, rows: Long): Int = {
-    val sessionParts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    math.max(1L, math.min(sessionParts.toLong, rows / 2000000L + 1L)).toInt
-  }
-
+  /** The deterministic doc link graph shared by p17/p18/p21/p25: 3
+    * affine-map out-links plus a ring edge per node (self-loops deflected
+    * to the successor), so outdegree ≥ 1 and indegree ≥ 1 everywhere.
+    * Returns (nodes, edges, n). */
   private def docLinkGraph(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, Long) = {
     val docs = Tables.documents(s, dir).select("doc_id")
@@ -604,29 +572,53 @@ object PipelineQueries {
     (docs, edges, n)
   }
 
+  /** The [[docLinkGraph]] as canonical undirected edges (a, b), a < b:
+    * self-loops dropped, one row per edge (p21, p25). */
+  private def undirected(s: SparkSession, dir: String): DataFrame = {
+    val (_, edges, _) = docLinkGraph(s, dir)
+    edges.filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
+      .distinct()
+  }
+
+  /** p17 — PageRank quality weighting: 6 damped power iterations over a
+    * deterministic link graph on the document set (the CommonCrawl-style
+    * "centrality as a quality prior" signal a pretraining pipeline
+    * attaches to each page before sampling). The graph is the
+    * [[docLinkGraph]], so every node has outdegree ≥ 1 and indegree ≥ 1 —
+    * no dangling mass, no uncovered node, and the DuckDB oracle can
+    * replay the identical iteration as a recursive CTE with a single
+    * recursive reference.
+    *
+    * Determinism: ranks are fixed-point longs (1e12 = total mass), every
+    * step integer division — the result is bit-identical at any
+    * parallelism and in any engine (the c03 integer-power-iteration
+    * trick). Scale shape: one iteration = join(ranks, edges) on src +
+    * groupBy dst — both sides hash-partitioned on the join key; at
+    * 100 TB the edge table is pre-bucketed by src so the per-iteration
+    * shuffle is ranks-only (the classic Pregel layout). The rounds run
+    * on [[graft.core.Fixpoint.iterate]], which cuts each round's lineage.
+    * Dangling-node handling (a broadcast 1-row mass aggregate added to
+    * the base term) is omitted only because the construction proves
+    * outdeg ≥ 1; a general corpus would add it. */
   def p17_pagerank(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.KeyAlgebra.ldiv
     val Scale = 1000000000000L
     val (docs, edges, n) = docLinkGraph(s, dir)
     val base = 15L * Scale / (100L * n)
-    val a = adaptiveParts(s, 4L * n) // ≤4 out-edges per node
-    val ed = edges.join(edges.groupBy("src")
-        .agg(count(lit(1)).as("outdeg")), "src")
-      .cache()
-    ed.count() // eager fill: reused 6×
-    var ranks = docs.select(col("doc_id").as("node"),
-      lit(Scale / n).as("rank"))
-    for (_ <- 1 to 6) {
-      ranks = ranks.join(ed, col("node") === col("src"))
+    val width = AutoScale.shuffleWidth(s, 4L * n) // ≤4 out-edges per node
+    val ed = edges.join(edges.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
+    Engine.materialize(ed.persist()) // reused 6×
+    def power(ranks: DataFrame): DataFrame =
+      ranks.join(ed, col("node") === col("src"))
         .select(col("dst"), ldiv(col("rank"), col("outdeg")).as("c"))
-        // r19: the per-round aggregation exchange is sized from the
-        // edge count, not the session constant (adaptiveParts)
-        .repartition(a, col("dst"))
+        .repartition(width, col("dst"))
         .groupBy("dst")
         .agg((lit(base) + ldiv(lit(85L) * sum("c"), lit(100L))).as("rank"))
         .withColumnRenamed("dst", "node")
-        .localCheckpoint()
-    }
+    val ranks = Fixpoint.iterate(
+      power(docs.select(col("doc_id").as("node"), lit(Scale / n).as("rank"))), 5)(power) // 1 + 5
+    ed.unpersist()
     ranks.select(col("node").as("doc_id"), col("rank").as("rank_fp"))
       .orderBy("doc_id")
   }
@@ -639,27 +631,24 @@ object PipelineQueries {
     * Scale shape: textbook distributed BFS relaxation — each round is
     * join(frontier, edges) on src + groupBy node with min(dist), both
     * hash-partitioned on the same key; rounds = the hop cap (8), so the
-    * total work is O(k · |E|) regardless of corpus size, and
-    * localCheckpoint caps lineage per round exactly as p17 and
-    * [[GraphComponents]] do. The DuckDB oracle replays it as a bounded
-    * recursive CTE; both sides cap at 8 hops so the outputs agree even
-    * for nodes whose true distance exceeds the cap (absent both sides). */
+    * total work is O(k · |E|) regardless of corpus size, and the rounds
+    * run on [[graft.core.Fixpoint.iterate]] like p17's. The DuckDB oracle
+    * replays it as a bounded recursive CTE; both sides cap at 8 hops so
+    * the outputs agree even for nodes whose true distance exceeds the cap
+    * (absent both sides). */
   def p18_bfs_hops(s: SparkSession, dir: String): DataFrame = {
-    val (docs, edges0, n) = docLinkGraph(s, dir)
-    val a = adaptiveParts(s, 4L * n)
-    val edges = edges0.cache()
-    edges.count() // eager fill: reused 8×
-    var dist = docs.filter(col("doc_id") % 97L === 0L)
-      .select(col("doc_id").as("node"), lit(0L).as("dist"))
-    for (_ <- 1 to 8) {
-      dist = dist.join(edges, col("node") === col("src"))
+    val (docs, edges, n) = docLinkGraph(s, dir)
+    val width = AutoScale.shuffleWidth(s, 4L * n)
+    Engine.materialize(edges.persist()) // reused 8×
+    def relax(dist: DataFrame): DataFrame =
+      dist.join(edges, col("node") === col("src"))
         .select(col("dst").as("node"), (col("dist") + 1L).as("dist"))
         .unionByName(dist)
-        // r19: per-round min-relaxation exchange sized from the data
-        .repartition(a, col("node"))
+        .repartition(width, col("node"))
         .groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint()
-    }
+    val dist = Fixpoint.iterate(relax(docs.filter(col("doc_id") % 97L === 0L)
+      .select(col("doc_id").as("node"), lit(0L).as("dist"))), 7)(relax) // 1 + 7 hops
+    edges.unpersist()
     dist.orderBy("node")
   }
 
@@ -681,12 +670,7 @@ object PipelineQueries {
     * The DuckDB oracle replays the identical orientation and joins. */
   def p21_triangle_count(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.KeyAlgebra.ldiv
-    val (_, edges0, _) = docLinkGraph(s, dir)
-    // canonical undirected edge set: a < b, one row per edge
-    val und = edges0.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct().cache()
+    val und = undirected(s, dir).cache()
     // r19 measured negative: eager und.count()/oriented.count() fills
     // ADDED ~0.15 s (3.11 -> 3.26 s) — in local mode the BlockManager's
     // per-block getOrElseUpdate already serializes racing fills, so the
@@ -847,51 +831,31 @@ object PipelineQueries {
     * into the carried minimum, so total work is one dot per point per
     * round — the standard distributed farthest-point sweep. */
   def p23_kcenter_coreset(s: SparkSession, dir: String): DataFrame = {
-    val k = 8
     val base = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("a"))
     def dist(c: Array[Double]): Column =
       aggregate(zip_with(col("a"), lit(c), (x, y) => (x - y) * (x - y)),
         lit(0.0), (acc, x) => acc + x)
-    val first = base.orderBy("vec_id").select("vec_id", "a").head()
-    var centers = Vector[(Long, Array[Double], Double)](
-      (first.getLong(0), first.getSeq[Double](1).toArray, 0.0))
-    // running min-dist: fold each new center into the carried minimum.
-    // localCheckpoint per round (the p25 Pregel pattern) keeps lineage
-    // flat — without it the chained withColumn("mind", least(...)) plan
-    // regrows linearly in k, fine at k = 8 but not if k is ever
-    // parameterized; the eager checkpoint also means the next round's
-    // TakeOrdered(1) reads cached blocks instead of recomputing the
-    // whole least(...) chain
-    var scored = base.withColumn("mind", dist(centers.head._2))
-      .localCheckpoint()
-    for (_ <- 2 to k) {
-      val pick = scored
-        .filter(!col("vec_id").isInCollection(centers.map(_._1)))
-        .orderBy(col("mind").desc, col("vec_id"))
-        .select("vec_id", "a", "mind").head()
-      centers :+= ((pick.getLong(0), pick.getSeq[Double](1).toArray,
-        pick.getDouble(2)))
-      scored = scored.withColumn("mind",
-        least(col("mind"), dist(centers.last._2)))
-        .localCheckpoint()
+    def center(r: Row, mind: Double) = (r.getLong(0), r.getSeq[Double](1).toArray, mind)
+    var centers = Vector(center(base.orderBy("vec_id").select("vec_id", "a").head(), 0.0))
+    // k = 8: the seed, then 7 rounds that each pick the farthest point on
+    // the filled frame (no recomputed least(...) chain) and fold only the
+    // distance to that newest center into the carried minimum
+    Fixpoint.iterate(base.withColumn("mind", dist(centers.head._2)), 7) { scored =>
+      val pick = scored.filter(!col("vec_id").isInCollection(centers.map(_._1)))
+        .orderBy(col("mind").desc, col("vec_id")).select("vec_id", "a", "mind").head()
+      centers :+= center(pick, pick.getDouble(2))
+      scored.withColumn("mind", least(col("mind"), dist(centers.last._2)))
     }
-    // assignment pass: nearest center, tie -> earliest round
-    val dcols = centers.zipWithIndex.map { case ((_, c, _), i) =>
-      dist(c).as(s"d$i")
-    }
-    val withD = base.select(col("vec_id") +: dcols: _*)
-    val mindAll = least(centers.indices.map(i => col(s"d$i")): _*)
-    val assigned = withD.withColumn("best",
-      centers.indices.reverse.foldLeft(lit(-1L)) { (acc, i) =>
-        when(col(s"d$i") === mindAll, lit(i.toLong)).otherwise(acc)
-      })
-    val counts = assigned.groupBy("best").agg(count(lit(1)).as("n_assigned"))
+    // assignment pass: nearest center (the least (distance, round)
+    // struct), tie -> earliest round
+    val counts = base.groupBy(least(centers.indices.map(i =>
+        struct(dist(centers(i)._2).as("d"), lit(i.toLong).as("i"))): _*)("i").as("best"))
+      .agg(count(lit(1)).as("n_assigned"))
     import s.implicits._
     val sel = centers.zipWithIndex.map { case ((id, _, mind), i) =>
-      (i.toLong + 1L, id, math.floor(mind * 1e6).toLong)
-    }.toDF("round", "vec_id", "mind_fp")
-      .withColumn("best", col("round") - 1L)
+      (i.toLong, i.toLong + 1L, id, math.floor(mind * 1e6).toLong)
+    }.toDF("best", "round", "vec_id", "mind_fp")
     sel.join(counts, Seq("best"), "left")
       .select(col("round"), col("vec_id"), col("mind_fp"),
         coalesce(col("n_assigned"), lit(0L)).as("n_assigned"))
@@ -979,46 +943,39 @@ object PipelineQueries {
     * Scale shape: each round is one hash join of the label table onto
     * the symmetrized edge list, a per-(node, label) partial count, and
     * a per-node integer argmin — all exchanges on 8-byte node keys;
-    * state is one row per node, votes are bounded by degree. The
-    * [[org.apache.spark.sql.Dataset.localCheckpoint]] per round cuts
-    * the lineage exactly like p17/p18. */
+    * state is one row per node, votes are bounded by degree. The rounds
+    * run on [[graft.core.Fixpoint.iterate]] like p17/p18's. */
   def p25_label_propagation(s: SparkSession, dir: String): DataFrame = {
-    val (_, edges0, _) = docLinkGraph(s, dir)
-    val und = edges0.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    val sym = und.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(und.select(col("b").as("src"), col("a").as("dst")))
-      .cache()
-    val nSym = sym.count() // eager fill: reused 4×
-    val a = adaptiveParts(s, nSym)
-    var lab = sym.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-    for (_ <- 1 to 4) {
-      lab = lab.join(sym, col("node") === col("src"))
-        // r19 (guide §2.4): ONE exchange per round instead of two —
-        // HashPartitioning(dst) satisfies the clustering of BOTH the
-        // (dst, label) vote count AND the per-node argmin, so
-        // pre-partitioning by dst alone (at the data-derived width)
-        // lets the second groupBy reuse the first's partitioning
-        .repartition(a, col("dst"))
-        .groupBy(col("dst"), col("label"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy(col("dst").as("node"))
-        .agg(min(struct((-col("c")).as("nc"), col("label").as("l")))
-          .as("m"))
-        .select(col("node"), col("m.l").as("label"))
-        .localCheckpoint()
-    }
-    // r18: the final round is already eagerly checkpointed, so the
-    // symmetrized edge cache can be released instead of leaking across
-    // a sweep (the t38/d12 hygiene pattern)
-    sym.unpersist()
+    val sym = lpaEdges(s, dir).persist()
+    val vote = lpaRound(sym, AutoScale.shuffleWidth(s, Engine.materialize(sym))) _
+    val lab = Fixpoint.iterate(vote(sym.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label"))), 3)(vote) // 1 + 3 rounds
+    sym.unpersist() // the final round is filled
     lab.groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_members"), sum("node").as("id_sum"))
       .orderBy("community")
   }
+
+  /** p25's symmetrized edge list (src, dst) of the [[docLinkGraph]]:
+    * self-loops dropped, one row per direction of each undirected edge. */
+  private[operators] def lpaEdges(s: SparkSession, dir: String): DataFrame = {
+    val und = undirected(s, dir)
+    und.select(col("a").as("src"), col("b").as("dst"))
+      .unionAll(und.select(col("b").as("src"), col("a").as("dst")))
+  }
+
+  /** One p25 round: every node of `lab` (node, label) takes the most
+    * frequent label among its `sym` neighbors, ties to the smallest. ONE
+    * exchange: HashPartitioning(dst) satisfies both the (dst, label) vote
+    * count and the per-node argmin. */
+  private[operators] def lpaRound(sym: DataFrame, width: Int)(lab: DataFrame): DataFrame =
+    lab.join(sym, col("node") === col("src"))
+      .repartition(width, col("dst"))
+      .groupBy(col("dst"), col("label"))
+      .agg(count(lit(1)).as("c"))
+      .groupBy(col("dst").as("node"))
+      .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("m"))
+      .select(col("node"), col("m.l").as("label"))
 
   /** p26 — selection tradeoff curve: the report a data-selection owner
     * reads before fixing a keep-fraction — rank the corpus by the p15

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Fixpoint, Tables}
 import graft.functions.TextFunctions._
 
 /** Text-analysis operators for the large-scale training-data pipeline:
@@ -832,9 +832,9 @@ object TextQueries {
     * is why production BPE trainers all start with a word-count pass).
     * Each round is a scan-parallel pair explode + map-combined
     * groupBy(pair) + a 1-row argmax to the driver (the merge decision
-    * is inherently sequential) + one scan-parallel replace, with
-    * localCheckpoint pinning each generation like p17's fixed-point
-    * rounds. */
+    * is inherently sequential) + one scan-parallel replace, each
+    * generation filled and cut by [[graft.core.Fixpoint.iterate]] like
+    * p17's fixed-point rounds. */
   def t22_bpe_train(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (_, merges) = bpeTrain(s, dir)
@@ -848,14 +848,13 @@ object TextQueries {
     * column alongside the learned merges. */
   private def bpeTrain(s: SparkSession, dir: String)
       : (DataFrame, Seq[(Long, String, String, String, Long)]) = {
-    var words = Tables.documents(s, dir)
+    val vocab = Tables.documents(s, dir)
       .select(explode(tokens(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .withColumn("seg", concat(lit(" "),
         array_join(split(col("w"), ""), " "), lit(" ")))
-      .localCheckpoint()
-    val merges = Seq.newBuilder[(Long, String, String, String, Long)]
-    for (round <- 1 to 4) {
+    var merges = Vector.empty[(Long, String, String, String, Long)]
+    val words = Fixpoint.iterate(vocab, 4) { words =>
       val syms = split(trim(col("seg")), " ")
       val best = words
         .select(col("cnt"), explode(zip_with(
@@ -864,16 +863,13 @@ object TextQueries {
           (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
         .groupBy(col("p.l").as("l"), col("p.r").as("r"))
         .agg(sum("cnt").as("pc"))
-        .orderBy(col("pc").desc, col("l"), col("r"))
-        .limit(1).collect()(0)
+        .orderBy(col("pc").desc, col("l"), col("r")).head()
       val (l, r, pc) = (best.getString(0), best.getString(1), best.getLong(2))
-      merges += ((round.toLong, l, r, l + r, pc))
-      words = words
-        .withColumn("seg", org.apache.spark.sql.functions.replace(
-          col("seg"), lit(s" $l $r "), lit(s" $l$r ")))
-        .localCheckpoint()
+      merges :+= ((merges.size + 1L, l, r, l + r, pc))
+      words.withColumn("seg", org.apache.spark.sql.functions.replace(
+        col("seg"), lit(s" $l $r "), lit(s" $l$r ")))
     }
-    (words, merges.result())
+    (words, merges)
   }
 
   /** t30 — BPE ENCODE: apply the t22-trained segmentation to every

@@ -83,6 +83,35 @@ class EngineSpec extends SparkSpec {
     assert(calls == Seq("false"), calls)
   }
 
+  test("iterative loops run on Fixpoint and size shuffles through AutoScale") {
+    // spelled in parts so this spec is not itself a match
+    val parts = Seq("spark.sql.shuffle", "partitions").mkString(".")
+    assert(sites(parts).forall(_.startsWith("graft/core/")), sites(parts))
+    /** The whole file for "", else `decl` up to its closing brace. */
+    def body(file: String, decl: String): String = {
+      val src = Files.readString(root.resolve(s"graft/operators/$file"))
+      val at = src.indexOf(decl)
+      assert(at >= 0, s"$decl not found in $file")
+      if (decl.isEmpty) src else src.substring(at, src.indexOf("\n  }\n", at))
+    }
+    val loops = Seq(
+      "GraphComponents.scala" -> "",
+      "PipelineQueries.scala" -> "def p17_pagerank",
+      "PipelineQueries.scala" -> "def p18_bfs_hops",
+      "PipelineQueries.scala" -> "def p23_kcenter_coreset",
+      "PipelineQueries.scala" -> "def p25_label_propagation",
+      "TextQueries.scala" -> "def bpeTrain")
+    val checkpoint = Seq("localCheckpoint", "(").mkString
+    val cacheThenCount = Seq("""\.cache\(\)""", """\.count\(\)""").mkString("(?s).*")
+    loops.foreach { case (file, decl) =>
+      val b = body(file, decl)
+      val loop = s"$file $decl"
+      assert(b.contains("Fixpoint."), loop)
+      assert(!b.contains(checkpoint), loop)
+      assert(cacheThenCount.r.findFirstIn(b).isEmpty, loop)
+    }
+  }
+
   test("an Engine session resolves graft_dot through spark.sql") {
     // the shared spec session is Engine.session(4)
     val d = spark.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))")

@@ -1,9 +1,9 @@
 package graft.cube
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempRoot}
 import org.apache.spark.sql.functions._
 
-class CubeSpec extends SparkSpec {
+class CubeSpec extends SparkSpec with TempRoot {
 
   // cube: explicit (t=3, y=4), implicit (x=5); value(t,y,x) = flat index
   private def fixture: Cube = {
@@ -119,8 +119,7 @@ class CubeSpec extends SparkSpec {
   }
 
   test("exportNetCDF writes a file our reader round-trips with all dims") {
-    val f = java.nio.file.Files.createTempFile("graft-cube", ".nc").toFile
-    f.deleteOnExit()
+    val f = tmpFile("cube", ".nc").toFile
     fixture.exportNetCDF(f.getAbsolutePath)
     val hdr = graft.sources.NetCDF3.readHeader(f.getAbsolutePath, hadoopConf)
     assert(hdr.dims.map(d => (d.name, d.length)) ==

@@ -2,13 +2,12 @@ package graft.sources
 
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempRoot}
 
-class NetCDFSpec extends SparkSpec {
+class NetCDFSpec extends SparkSpec with TempRoot {
 
   private def tmpNc(dims: Seq[(String, Int)], data: Array[Double]): String = {
-    val f = Files.createTempFile("graft", ".nc").toFile
-    f.deleteOnExit()
+    val f = tmpFile("nc", ".nc").toFile
     NetCDF3.writeDoubleVar(f.getAbsolutePath, dims, "measure", data)
     f.getAbsolutePath
   }
@@ -166,8 +165,7 @@ class NetCDFSpec extends SparkSpec {
 
   test("CDF-2 (64-bit offset) header parses and reads") {
     // hand-built per the classic-format spec: version byte 2 + long begin
-    val f = Files.createTempFile("graft", ".nc").toFile
-    f.deleteOnExit()
+    val f = tmpFile("nc", ".nc").toFile
     val o = new java.io.DataOutputStream(new java.io.FileOutputStream(f))
     o.write("CDF".getBytes); o.writeByte(2)
     o.writeInt(0) // numrecs
@@ -194,8 +192,7 @@ class NetCDFSpec extends SparkSpec {
   }
 
   test("CDF-5 writer/reader roundtrip (64-bit NON_NEG fields)") {
-    val f = Files.createTempFile("graft", ".nc").toFile
-    f.deleteOnExit()
+    val f = tmpFile("nc", ".nc").toFile
     val data = Array.tabulate(6 * 4)(i => i * 0.5)
     NetCDF3.writeDoubleVar(f.getAbsolutePath,
       Seq("row" -> 6, "col" -> 4), "measure", data, version = 5)
@@ -214,8 +211,7 @@ class NetCDFSpec extends SparkSpec {
   }
 
   test("CDF-5 unsigned/int64 element types decode (hand-built golden file)") {
-    val f = Files.createTempFile("graft", ".nc").toFile
-    f.deleteOnExit()
+    val f = tmpFile("nc", ".nc").toFile
     val o = new java.io.DataOutputStream(new java.io.FileOutputStream(f))
     o.write("CDF".getBytes); o.writeByte(5)
     o.writeLong(0L) // numrecs
@@ -247,8 +243,7 @@ class NetCDFSpec extends SparkSpec {
   }
 
   test("record (unlimited) dimension: per-record slabs at begin + rec*recSize") {
-    val f = Files.createTempFile("graft", ".nc").toFile
-    f.deleteOnExit()
+    val f = tmpFile("nc", ".nc").toFile
     val o = new java.io.DataOutputStream(new java.io.FileOutputStream(f))
     o.write("CDF".getBytes); o.writeByte(1)
     o.writeInt(3) // numrecs
@@ -329,7 +324,7 @@ class NetCDFSpec extends SparkSpec {
     // file stores dims (a=2, b=3, c=4); the logical order is (b, c, a):
     // dim_index maps file dim -> logical position = 2,0,1; b keys rows
     // (explicit=1), the in-row array is (c, a) row-major
-    val dir = java.nio.file.Files.createTempDirectory("graft_nc_perm")
+    val dir = tmpDir("nc_perm")
     val unordered = dir.resolve("u.nc").toString
     val data = Array.tabulate(2 * 3 * 4)(_.toDouble) // file order (a,b,c)
     NetCDF3.writeDoubleVar(unordered, Seq("a" -> 2, "b" -> 3, "c" -> 4),
@@ -358,7 +353,7 @@ class NetCDFSpec extends SparkSpec {
   }
 
   test("NetCDF-4/HDF5 file reads through the same DSv2 source, partitioned") {
-    val f = java.nio.file.Files.createTempDirectory("graft_h5_dsv2")
+    val f = tmpDir("h5_dsv2")
       .resolve("t.h5").toFile
     val data = Array.tabulate(12 * 4)(k => (k / 4) * 10.0 + (k % 4))
     HDF5.writeDoubleVar(f.getAbsolutePath, Seq("row" -> 12, "x" -> 4), "m",
@@ -377,7 +372,7 @@ class NetCDFSpec extends SparkSpec {
 
   test("element_type reads typed measure arrays through the DSv2 source") {
     import org.apache.spark.sql.types._
-    val f = java.nio.file.Files.createTempDirectory("graft_nc_typed")
+    val f = tmpDir("nc_typed")
       .resolve("t.nc").toFile
     NetCDF3.writeDoubleVar(f.getAbsolutePath,
       Seq("row" -> 3, "x" -> 2), "m", Array(1.9, -2.9, 0.0, 3.0, 4.5, -0.5))
@@ -399,8 +394,7 @@ class NetCDFSpec extends SparkSpec {
   }
 
   test("cf_unpack: scale_factor/add_offset applied, _FillValue becomes NaN") {
-    val f = Files.createTempFile("graft_cf", ".nc").toFile
-    f.deleteOnExit()
+    val f = tmpFile("cf", ".nc").toFile
     NetCDF3.writeDoubleVar(f.getAbsolutePath, Seq("r" -> 2, "c" -> 4), "m",
       Array(1.0, 2.0, -999.0, 4.0, 5.0, -999.0, 7.0, 8.0),
       attrs = Seq("scale_factor" -> 0.5, "add_offset" -> 10.0,

@@ -5,8 +5,9 @@ import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
 import scala.util.Random
 
 import org.apache.hadoop.conf.Configuration
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TempRoot
 
 /** Garbage-input contract for the container readers: the import path
   * parses UNTRUSTED files at scale, so a malformed header must fail
@@ -14,15 +15,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * Each attempt runs under a hard timeout on a worker thread; corrupted
   * variants of REAL files (bit flips, truncation) are included because
   * they exercise deeper parser states than pure noise. Fixed seed. */
-class ReaderFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ReaderFuzzSpec extends AnyFunSuite with TempRoot {
 
   private val rnd = new Random(0xFEED5EED)
   private val conf = new Configuration()
   private val pool = Executors.newCachedThreadPool()
-  override def afterAll(): Unit = pool.shutdownNow()
+  override def afterAll(): Unit =
+    try pool.shutdownNow()
+    finally super.afterAll()
 
-  private def tmpFile(bytes: Array[Byte]): String = {
-    val p = Files.createTempFile("graft_fuzz", ".bin")
+  private def junkFile(bytes: Array[Byte]): String = {
+    val p = tmpFile("fuzz", ".bin")
     Files.write(p, bytes)
     p.toString
   }
@@ -79,14 +82,14 @@ class ReaderFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         case 2 => HDF5.Signature.copyToArray(junk, 0)
         case _ => // raw noise: lands in the CDF parser by default
       }
-      val p = tmpFile(junk)
+      val p = junkFile(junk)
       attempt(s"noise#$i")(openAndRead(p))
       Files.deleteIfExists(Path.of(p))
     }
   }
 
   test("bit-flipped and truncated REAL files fail controlled") {
-    val base = Files.createTempDirectory("graft_fuzz_real")
+    val base = tmpDir("fuzz_real")
     val grid = Array.tabulate(60 * 8)(k => (k / 8) * 0.5 + (k % 8) * 0.125)
     val ncPath = base.resolve("a.nc").toString
     val h5Path = base.resolve("a.h5").toString
@@ -98,7 +101,7 @@ class ReaderFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       val mut = orig.clone()
       if (i % 3 == 0) { // truncate somewhere
         val cut = rnd.nextInt(mut.length - 8) + 8
-        val p = tmpFile(java.util.Arrays.copyOf(mut, cut))
+        val p = junkFile(java.util.Arrays.copyOf(mut, cut))
         attempt(s"trunc $src#$i")(openAndRead(p))
         Files.deleteIfExists(Path.of(p))
       } else { // flip a few bytes, preserving the magic
@@ -106,7 +109,7 @@ class ReaderFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
           val at = rnd.nextInt(mut.length - 8) + 8
           mut(at) = (mut(at) ^ (1 << rnd.nextInt(8))).toByte
         }
-        val p = tmpFile(mut)
+        val p = junkFile(mut)
         attempt(s"flip $src#$i")(openAndRead(p))
         Files.deleteIfExists(Path.of(p))
       }
