@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Engine, Tables}
 import graft.functions.TextFunctions._
 
 /** Deduplication operators for the training-data pipeline: exact,
@@ -10,8 +10,8 @@ import graft.functions.TextFunctions._
   *
   * Scale posture: every variant is built so the quadratic step only ever
   * happens INSIDE an LSH bucket / hash group, never across the corpus:
-  *  - exact/canonical dedup: one hash-partition groupBy on the digest —
-  *    the classic 100 TB exact-dedup shape;
+  *  - exact/canonical dedup: one hash partitioning on the digest — the
+  *    classic 100 TB exact-dedup shape;
   *  - MinHash: signatures are per-row (scan-parallel); the band join is
   *    an equi-join on (band index, band signature), so Spark hash-joins
   *    buckets and only bucket-mates are compared;
@@ -19,26 +19,24 @@ import graft.functions.TextFunctions._
   *    candidate pairs stay near-linear; the full cross-join fallback is
   *    what we do NOT do;
   *  - hot buckets are BOUNDED, losslessly: exact duplicates collapse to
-  *    one representative before sketching ([[collapsed]]/[[expandPairs]]),
-  *    and any residual band bucket over [[BucketCap]] rows is
-  *    triangle-split into pair-groups ([[triangleSplit]]) that preserve
-  *    every candidate pair exactly once — no single quadratic straggler
-  *    task at 100 TB, and no recall loss either.
+  *    one representative before sketching, and any residual hot bucket is
+  *    triangle-split into pair-groups that preserve every candidate pair
+  *    exactly once — no single quadratic straggler task at 100 TB, and no
+  *    recall loss either.
+  *
+  * The sketch, band, candidate-join, verify, collapse and fill stages are
+  * [[NearDup]]'s; each near-dup query here is a composition of them.
   */
 object DedupQueries {
 
   /** d01 — exact dedup by content digest: every row keeps its group
-    * representative (min doc_id with identical text). */
-  def d01_dedup_exact(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(s, dir)
-      .select(col("doc_id"), md5(col("text").cast("binary")).as("digest"))
-    val reps = d.groupBy("digest")
-      .agg(min("doc_id").as("rep_id"), count(lit(1)).as("group_size"))
-    d.join(reps, "digest")
-      .select(col("doc_id"), col("rep_id"), col("group_size"),
+    * representative (min doc_id with identical text) — the memoized
+    * [[NearDup.collapse]] membership the near-dup queries sketch from. */
+  def d01_dedup_exact(s: SparkSession, dir: String): DataFrame =
+    NearDup.collapse(s, dir)._2
+      .select(col("doc_id"), col("rep_id"), col("gsz").as("group_size"),
         (col("doc_id") =!= col("rep_id")).as("is_dup"))
       .orderBy("doc_id")
-  }
 
   /** d02 — canonicalized dedup: normalize to the sorted distinct-token
     * set, so token-order shuffles & repetition count as duplicates. */
@@ -75,190 +73,6 @@ object DedupQueries {
       .orderBy("n_sources")
   }
 
-  /** Rows per LSH band bucket before the LOSSLESS triangle split kicks
-    * in. The split changes no result (every candidate pair survives,
-    * exactly once), so the trigger is tuned for task granularity, not
-    * correctness: a bucket of n rows becomes S(S+1)/2 tasks of roughly
-    * (2·cap)² candidate comparisons each instead of one C(n,2)
-    * straggler. */
-  private[operators] val BucketCap = 1024
-
-  /** Replication bound for the triangle split: a hot-bucket row is
-    * copied into at most MaxSplit pair-groups, so shuffle amplification
-    * is bounded even for a degenerate mega-bucket. Beyond
-    * cap·MaxSplit rows per bucket, per-task work grows again — but a
-    * bucket that large has a quadratic PAIR OUTPUT, which no plan can
-    * bound without losing pairs; the exact-dup pre-collapse
-    * ([[collapsed]]) is what keeps real crawl corpora below this, and
-    * collapsing near-identical clusters to representatives (d07's
-    * output) is the documented mitigation beyond it. */
-  private[operators] val MaxSplit = 64
-
-  private val SubEnc = 1L << 20 // encodes a (i,j) pair-group as i·SubEnc+j
-
-  /** LOSSLESS skew split of the quadratic band-bucket self-join
-    * (replaces the round-5 salted CAP, which dropped cross-sub-bucket
-    * pairs with a logged bound — this drops nothing): rows in buckets
-    * over `cap` get salt s = hash(id) mod S, S = ⌈n/cap⌉ clamped to
-    * [[MaxSplit]], and are replicated to the S pair-groups {(min(k,s),
-    * max(k,s)) : k < S}; `tgrp` (the encoded group) joins as part of
-    * the bucket key and [[triangleCond]] keeps a pair only in the one
-    * group matching its own salt pair, so every in-bucket pair is
-    * produced exactly once while the biggest task shrinks from C(n,2)
-    * to ~(2·cap)² — the classic triangle-partitioned all-pairs join.
-    * The histogram is CACHED: it is joined against both sides of the
-    * self-join, and recomputing that full groupBy was the round-5
-    * d03/d04 regression. Cold buckets take the identity path (S=1,
-    * one group, zero replication). */
-  private[operators] def triangleSplit(bands: DataFrame, idCol: String,
-      cap: Int, keyCols: String*): DataFrame = {
-    val counts = bands.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("bucket_n"))
-      .cache()
-    val joined = bands.join(counts, keyCols)
-    // branch so the Generate (explode) touches ONLY hot-bucket rows —
-    // the cold 99% stay in one whole-stage-codegen pass with constant
-    // salt/group and zero replication
-    val cold = joined.filter(col("bucket_n") <= cap)
-      .withColumn("bsalt", lit(0L)).withColumn("tgrp", lit(0L))
-      .drop("bucket_n")
-    val hot = joined.filter(col("bucket_n") > cap)
-      .withColumn("nsub",
-        least(ceil(col("bucket_n") / lit(cap.toDouble)), lit(MaxSplit.toLong))
-          .cast("long"))
-      .withColumn("bsalt", pmod(xxhash64(col(idCol)), col("nsub")))
-      .withColumn("tgrp",
-        explode(transform(sequence(lit(0L), col("nsub") - 1), k =>
-          when(k <= col("bsalt"), k * SubEnc + col("bsalt"))
-            .otherwise(col("bsalt") * SubEnc + k))))
-      .drop("bucket_n", "nsub")
-    cold.unionByName(hot)
-  }
-
-  /** Join condition for a [[triangleSplit]] self-join under aliases
-    * x/y: bucket keys equal, same pair-group, the pair canonical in
-    * that group (its salt pair IS the group — drops the duplicates a
-    * row's other group memberships would produce), ordered ids. */
-  private[operators] def triangleCond(idCol: String, keyCols: String*): Column = {
-    val keys = keyCols.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _)
-    val canonical = least(col("x.bsalt"), col("y.bsalt")) * SubEnc +
-      greatest(col("x.bsalt"), col("y.bsalt")) === col("x.tgrp")
-    keys && col("x.tgrp") === col("y.tgrp") && canonical &&
-      col(s"x.$idCol") < col(s"y.$idCol")
-  }
-
-  /** Exact-duplicate pre-collapse: sketching and the band join run on ONE
-    * representative per content digest; doc-level pairs are re-expanded by
-    * [[expandPairs]] afterwards. On a crawl-scale corpus exact duplicates
-    * are the dominant duplicate class, so this shrinks the quadratic
-    * stage's input before any signature is computed — and it is lossless:
-    * exact copies have identical signatures, so collapse + expansion
-    * reproduces the uncollapsed pair set bit-for-bit.
-    * Returns (reps(doc_id, text), members(doc_id, rep_id, gsz)); members
-    * is cached (it is self-joined and join-expanded downstream).
-    *
-    * MEMOIZED per (session, dir): d03/d04/d05/d07 all collapse the same
-    * `documents` input, so the digest groupBy + cache fill runs once per
-    * session instead of once per query (the round-5 d04 regression was
-    * largely this duplicated pass). */
-  private def collapsed(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    memoize(s, dir, "collapsed") { collapsed0(s, dir) }
-
-  private def collapsed0(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val base = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"),
-        md5(col("text").cast("binary")).as("digest"))
-    val groups = base.groupBy("digest")
-      .agg(min("doc_id").as("rep_id"), count(lit(1)).as("gsz"))
-    val members = base.join(groups, "digest")
-      .select("doc_id", "rep_id", "gsz").cache()
-    members.count() // eager fill: the self-join below would race the cache
-    // reps re-derived from the CACHED membership via a semi-join on
-    // doc_id — re-filtering base.join(groups) here would re-run the md5
-    // digest + groupBy shuffle a second time at every sketch-cache fill
-    val reps = Tables.documents(s, dir).select("doc_id", "text")
-      .join(members.filter(col("doc_id") === col("rep_id"))
-        .select("doc_id"), Seq("doc_id"), "left_semi")
-    (reps, members)
-  }
-
-  /** Expand rep-level verified pairs back to doc level: every member of a
-    * duplicate group inherits its representative's pairs, and the group's
-    * own members pair up at the exact-match score (identical docs always
-    * collide in every band and pass every verify threshold). */
-  private def expandPairs(members: DataFrame, repPairs: DataFrame,
-      scoreCol: String, exactScore: Column): DataFrame = {
-    val m = members.select(col("doc_id"), col("rep_id"))
-    val cross = repPairs
-      .join(m.select(col("rep_id").as("doc_a"), col("doc_id").as("ma")), "doc_a")
-      .join(m.select(col("rep_id").as("doc_b"), col("doc_id").as("mb")), "doc_b")
-      .select(least(col("ma"), col("mb")).as("doc_a"),
-        greatest(col("ma"), col("mb")).as("doc_b"), col(scoreCol))
-    val dups = members.filter(col("gsz") > 1)
-    val within = dups.as("x").join(dups.as("y"),
-        col("x.rep_id") === col("y.rep_id") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        exactScore.as(scoreCol))
-    cross.unionByName(within)
-  }
-
-  /** MinHash-LSH verified pairs, whole cascade INLINE in the band join.
-    *
-    * `docs` carries (doc_id, sig, `payload`): the 16-hash signature and
-    * the sorted duplicate-free long array the exact Jaccard is measured
-    * over. Both ride the band-bucket rows through the ONE shuffle
-    * (2 bands × |docs| rows), and the entire cascade — minhash-estimate
-    * ≥ 14/16 ([[graft.plans.EqCount]]), lossless size-ratio gate, exact
-    * Jaccard via the [[graft.plans.SortedIntersectSize]] merge loop —
-    * runs as codegen'd filters on the join output, so no pair-level row
-    * ever hits a shuffle until only verified pairs (~2% here) remain;
-    * `distinct` then dedups the ≤ #bands copies of those survivors.
-    *
-    * Why inline beats the slim-join-then-re-join shape: bucket rows are
-    * #bands × |docs| regardless of clustering, while candidate pairs are
-    * quadratic in bucket occupancy — on a near-dup-clustered corpus
-    * (the interesting case for a dedup pass) pairs ≫ docs, and the old
-    * shape shuffled every candidate pair three times (distinct + two
-    * payload joins). Payload-on-bucket-row costs ≤ that whenever each
-    * doc averages ≥ 1 candidate, and the per-pair kernels are
-    * allocation-free codegen loops, so even a capped hot bucket's
-    * C(2048,2) pairs cost only ~50 compares each in one task.
-    * [[saltHotBuckets]] still bounds the per-bucket blow-up. */
-  private def lshVerifiedPairs(docs: DataFrame, tag: String, payload: String,
-      scoreName: String, thrNum: Int, thrDen: Int, r: Int,
-      estSlack: Int = 2): DataFrame = {
-    val bands0 = docs.select(col("doc_id"), col("sig"), col(payload), explode(
-      transform(sequence(lit(0), lit(1)), b =>
-        struct(b.as("band"),
-          concat_ws("_", slice(col("sig"), b * r + 1, lit(r))).as("key"))))
-      .as("bk"))
-      .select(col("doc_id"), col("sig"), col(payload),
-        col("bk.band"), col("bk.key"))
-    val bands = triangleSplit(bands0, "doc_id", BucketCap, "band", "key")
-    val (pa, pb) = (col(s"x.$payload"), col(s"y.$payload"))
-    bands.as("x").join(bands.as("y"), triangleCond("doc_id", "band", "key"))
-      // estimate prefilter: allow `estSlack` mismatching hashes of the
-      // 2r (the default 2 is tuned for the 0.99 family; d26's sweep
-      // passes 2r to disable it — a 0.7-threshold sweep with a
-      // 0.99-tuned prefilter would silently undercount the low bins)
-      .filter(graft.plans.EqCount(col("x.sig"), col("y.sig")) >=
-        2 * r - estSlack)
-      // lossless size-ratio gate: J ≤ min/max of the set sizes, so any
-      // pair whose sizes are off by more than the threshold allows can
-      // be skipped before the merge loop (no oracle change: the bound
-      // is implied by the threshold itself)
-      .filter(least(size(pa), size(pb)) * thrDen >=
-        greatest(size(pa), size(pb)) * thrNum)
-      .withColumn("inter",
-        graft.plans.SortedIntersectSize(pa, pb).cast("double"))
-      .withColumn(scoreName, col("inter") /
-        (size(pa) + size(pb) - col("inter")).cast("double"))
-      .filter(col(scoreName) >= lit(thrNum.toDouble / thrDen))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col(scoreName))
-      .distinct()
-  }
-
   /** Plan memo: one entry per (session, dir, key). Values are cached
     * DataFrames (small: collapse membership, verified pair sets), so
     * holding them for the session is the point — every dedup query in a
@@ -292,28 +106,24 @@ object DedupQueries {
     memoize(s, dir, "verifiedPairs") { verifiedPairs0(s, dir) }
 
   private def verifiedPairs0(s: SparkSession, dir: String): DataFrame = {
-    val (reps, members) = collapsed(s, dir)
+    val (reps, members) = NearDup.collapse(s, dir)
     val r = minhashR(s, dir)
-    // token sets carried as SORTED hash arrays: the verify stage then
-    // runs an allocation-free codegen merge loop per pair instead of
-    // array_intersect's per-pair hash set (|A∪B| = |A|+|B|−|A∩B|)
-    val docs = reps
-      // one native pass: md5 per distinct token, pre-sorted (same values
-      // as the transform + array_sort formulation - TextHashKernels)
-      .withColumn("hs", graft.plans.TokenHashesSorted(col("text")))
-      .select(col("doc_id"),
-        minhashFromHashes(col("hs"), 2 * r).as("sig"),
-        col("hs").as("tk"))
-      .cache()
-    docs.count() // eager fill: the self-join would race the cache
-    val repPairs = lshVerifiedPairs(docs, "d03", "tk", "jaccard", 99, 100, r)
+    // token sets as SORTED hash arrays (one native pass: md5 per distinct
+    // token, pre-sorted): the verify runs a codegen merge loop per pair
+    val docs = NearDup.fill(NearDup.sketch(reps, tokenHashes, r))
+    val repPairs = NearDup.lshVerifiedPairs(docs, r, 99, 100, 2 * r - 2, "jaccard")
     // cached (and the enclosing method memoized): d03 and d07 share the
     // computed pair set
-    expandPairs(members, repPairs, "jaccard", lit(1.0)).cache()
+    NearDup.expandPairs(members, repPairs, "jaccard", lit(1.0)).cache()
   }
 
-  /** d03 — MinHash + LSH near-dup detection: 16-hash signature, 2 bands
-    * × 8 rows, candidates = band-bucket join + estimate prefilter,
+  /** The sorted distinct-token hash set of `text` that the d03 family
+    * sketches and verifies over. */
+  private def tokenHashes: Column = graft.plans.TokenHashesSorted(col("text"))
+
+  /** d03 — MinHash + LSH near-dup detection: 2r-hash signature, 2 bands
+    * × r rows (r = [[minhashR]], data-derived), candidates = band-bucket
+    * join + estimate prefilter (at most 2 of the 2r hashes differ),
     * verified by exact Jaccard over distinct-token sets, threshold 0.99. */
   def d03_minhash_lsh(s: SparkSession, dir: String): DataFrame =
     verifiedPairs(s, dir).orderBy("doc_a", "doc_b")
@@ -343,13 +153,15 @@ object DedupQueries {
     * row per clustered doc with its component id (= min doc_id of the
     * cluster) and the cluster size — the canonical "duplicate cluster
     * manifest" a 100 TB dedup pass hands to the keep/drop stage. */
-  def d14_dedup_components(s: SparkSession, dir: String): DataFrame = {
-    val lbl = componentLabels(s, dir)
-    val sizes = lbl.groupBy("comp").agg(count(lit(1)).as("n_members"))
-    lbl.join(sizes, "comp")
-      .select(col("node").as("doc_id"), col("comp"), col("n_members"))
+  def d14_dedup_components(s: SparkSession, dir: String): DataFrame =
+    componentLabels(s, dir).join(componentSizes(s, dir), "comp")
+      .select(col("node").as("doc_id"), col("comp"), col("n").as("n_members"))
       .orderBy("doc_id")
-  }
+
+  /** `(comp, n)`: the member count of each [[componentLabels]] cluster
+    * (d14's manifest, p13's weights, d24's histogram). */
+  private def componentSizes(s: SparkSession, dir: String): DataFrame =
+    componentLabels(s, dir).groupBy("comp").agg(count(lit(1)).as("n"))
 
   /** Connected-component labels over the verified near-dup pair graph,
     * memoized per (session, dir) like [[verifiedPairs]]: d14 (the
@@ -424,31 +236,12 @@ object DedupQueries {
     * sorted-merge intersect) is d03's, inline on the probe join. */
   def d17_incremental_minhash(s: SparkSession, dir: String): DataFrame = {
     val r = minhashR(s, dir)
-    val docs = Tables.documents(s, dir)
-      .withColumn("hs", graft.plans.TokenHashesSorted(col("text")))
-      .select(col("doc_id"),
-        minhashFromHashes(col("hs"), 2 * r).as("sig"), col("hs").as("tk"))
-    def bands(df: DataFrame): DataFrame = df.select(
-        col("doc_id"), col("sig"), col("tk"), explode(
-          transform(sequence(lit(0), lit(1)), b =>
-            struct(b.as("band"),
-              concat_ws("_", slice(col("sig"), b * r + 1, lit(r))).as("key"))))
-          .as("bk"))
-      .select(col("doc_id"), col("sig"), col("tk"),
-        col("bk.band"), col("bk.key"))
-    val idx = bands(docs.filter(col("doc_id") % 10 =!= 0)).as("c")
-    val probe = bands(docs.filter(col("doc_id") % 10 === 0)).as("n")
-    probe.join(idx,
-        col("n.band") === col("c.band") && col("n.key") === col("c.key"))
-      // estimate prefilter: allow 3 mismatching hashes of the 2r
-      .filter(graft.plans.EqCount(col("n.sig"), col("c.sig")) >= 2 * r - 3)
-      .filter(least(size(col("n.tk")), size(col("c.tk"))) * 20 >=
-        greatest(size(col("n.tk")), size(col("c.tk"))) * 19)
-      .withColumn("inter",
-        graft.plans.SortedIntersectSize(col("n.tk"), col("c.tk")).cast("double"))
-      .withColumn("jaccard", col("inter") /
-        (size(col("n.tk")) + size(col("c.tk")) - col("inter")).cast("double"))
-      .filter(col("jaccard") >= 0.95)
+    val docs = NearDup.sketch(Tables.documents(s, dir), tokenHashes, r)
+    def bands(in: Column) = NearDup.bands(docs.filter(in), r, "doc_id", "sig", "tk")
+    val delta = col("doc_id") % 10 === 0
+    // estimate prefilter: allow 3 mismatching hashes of the 2r
+    NearDup.jaccard(NearDup.probe(bands(delta), bands(!delta)),
+        "n.", "c.", 19, 20, Some(2 * r - 3), "jaccard")
       .select(col("n.doc_id").as("doc_new"), col("c.doc_id").as("doc_idx"),
         col("jaccard"))
       .distinct()
@@ -476,9 +269,7 @@ object DedupQueries {
     import graft.functions.KeyAlgebra.ldiv
     import org.apache.spark.sql.expressions.Window
     val k = 128L
-    val lbl = componentLabels(s, dir)
-    val sizes = lbl.groupBy("comp").agg(count(lit(1)).as("n"))
-    val csize = lbl.join(sizes, "comp")
+    val csize = componentLabels(s, dir).join(componentSizes(s, dir), "comp")
       .select(col("node").as("doc_id"), col("n"))
     val w = Tables.documents(s, dir).select(col("doc_id"))
       .join(csize, Seq("doc_id"), "left")
@@ -559,12 +350,10 @@ object DedupQueries {
     * heavily-duplicated content (already caught by d01/d03) for a hard
     * per-gram work bound. */
   def d16_containment(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
+    val docs = NearDup.fill(Tables.documents(s, dir)
       .select(col("doc_id"),
         array_sort(graft.plans.Gram5TokenHashSet(col("text"))).as("g"))
-      .filter(size(col("g")) > 0)
-      .cache()
-    docs.count() // eager fill: the self-join would race the cache
+      .filter(size(col("g")) > 0))
     val gx = docs.select(col("doc_id"), explode(col("g")).as("gram"))
     val rare = gx.groupBy("gram").agg(count(lit(1)).as("df"))
       .filter(col("df") <= 8)
@@ -623,22 +412,16 @@ object DedupQueries {
     * high-30-bit band (equi-join, not cross join), kept if Hamming
     * distance ≤ 2. */
   def d04_simhash(s: SparkSession, dir: String): DataFrame = {
-    val (reps, members) = collapsed(s, dir)
-    val d = reps
-      // native token-hash kernel; simhash is order-invariant so the
-      // pre-sorted array changes nothing
-      .withColumn("hs", graft.plans.TokenHashesSorted(col("text")))
-      .select(col("doc_id"), simhashFromHashes(col("hs")).as("sh"))
-      .withColumn("band", graft.functions.KeyAlgebra.ldiv(col("sh"), lit(1L << 30)))
-      .cache()
-    d.count() // eager fill: the self-join would race the cache
-    val banded = triangleSplit(d, "doc_id", BucketCap, "band")
-    val repPairs = banded.as("x").join(banded.as("y"),
-        triangleCond("doc_id", "band"))
+    val (reps, members) = NearDup.collapse(s, dir)
+    // simhash is order-invariant, so the pre-sorted hash set changes nothing
+    val d = NearDup.fill(reps
+      .select(col("doc_id"), simhashFromHashes(tokenHashes).as("sh"))
+      .withColumn("band", graft.functions.KeyAlgebra.ldiv(col("sh"), lit(1L << 30))))
+    val repPairs = NearDup.selfJoin(d, "doc_id", Seq("band"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
         bit_count(col("x.sh").bitwiseXOR(col("y.sh"))).cast("long").as("hamming"))
       .filter(col("hamming") <= 2)
-    expandPairs(members, repPairs, "hamming", lit(0L))
+    NearDup.expandPairs(members, repPairs, "hamming", lit(0L))
       .orderBy("doc_a", "doc_b")
   }
 
@@ -647,23 +430,15 @@ object DedupQueries {
     * measures — a token-based sketch keeps ~96% of candidates here),
     * then exact gram-Jaccard ≥ 0.9 on the survivors. */
   def d05_ngram_jaccard(s: SparkSession, dir: String): DataFrame = {
-    val (reps, members) = collapsed(s, dir)
-    // grams hashed to longs (portable md5-60): sorted for the merge-loop
-    // verify; minhash is order-independent so the same array feeds both
-    val docs = reps
-      // one native pass per row: distinct 4-grams, md5Long60, distinct
-      // values, sorted - identical to the transform/array_distinct chain
-      // it replaces, at ~1 call/row instead of one md5 expression chain
-      // per gram (the sketch fill was 5.6 s of d05's ~6 s at sf0.1)
-      .withColumn("g4", graft.plans.Gram4HashSet(col("text")))
-      .select(col("doc_id"),
-        minhashFromHashes(col("g4"), 2 * minhashR(s, dir)).as("sig"),
-        col("g4").as("grams"))
-      .cache()
-    docs.count() // eager fill: the self-join would race the cache
-    val repPairs = lshVerifiedPairs(docs, "d05", "grams", "jaccard4", 9, 10,
-      minhashR(s, dir))
-    expandPairs(members, repPairs, "jaccard4", lit(1.0))
+    val (reps, members) = NearDup.collapse(s, dir)
+    val r = minhashR(s, dir)
+    // grams hashed to longs (portable md5-60) in one native pass per row:
+    // distinct 4-grams, distinct values, sorted for the merge-loop verify;
+    // minhash is order-independent so the same array feeds both
+    val docs = NearDup.fill(
+      NearDup.sketch(reps, graft.plans.Gram4HashSet(col("text")), r))
+    val repPairs = NearDup.lshVerifiedPairs(docs, r, 9, 10, 2 * r - 2, "jaccard4")
+    NearDup.expandPairs(members, repPairs, "jaccard4", lit(1.0))
       .orderBy("doc_a", "doc_b")
   }
 
@@ -672,19 +447,10 @@ object DedupQueries {
     * codegen dot product, threshold 0.4. At 100 TB the bucket is the
     * partition key, so the quadratic step never crosses buckets. */
   def d06_dedup_embcos(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-      .withColumn("a", col("embedding").cast("array<double>"))
-      .withColumn("nrm",
-        sqrt(graft.plans.DotProduct(col("a"), col("a"))))
-      .select("vec_id", "label", "a", "nrm")
-      .cache()
-    e.count() // eager fill: the self-join would race the cache
-    e.as("x").join(e.as("y"),
-        col("x.label") === col("y.label") && col("x.vec_id") < col("y.vec_id"))
-      .withColumn("cos",
-        graft.plans.DotProduct(col("x.a"), col("y.a")) /
-          (col("x.nrm") * col("y.nrm")))
-      .filter(col("cos") >= 0.4)
+    val e = NearDup.fill(NearDup.vectors(Tables.embeddings(s, dir))
+      .select("vec_id", "label", "a", "nrm"))
+    NearDup.cosine(e.as("x").join(e.as("y"),
+        col("x.label") === col("y.label") && col("x.vec_id") < col("y.vec_id")), 0.4)
       .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"), col("cos"))
       .orderBy("id_a", "id_b")
   }
@@ -739,14 +505,10 @@ object DedupQueries {
       when(aggregate(zip_with(col("ac"), plane, (x, h) => x * h),
         lit(0.0), (acc, x) => acc + x) > 0, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
-    val e = Tables.embeddings(s, dir)
-      .withColumn("a", col("embedding").cast("array<double>"))
+    val e = NearDup.fill(NearDup.vectors(Tables.embeddings(s, dir))
       .withColumn("ac", zip_with(col("a"), lit(m), (x, mm) => x - mm))
-      .withColumn("nrm", sqrt(graft.plans.DotProduct(col("a"), col("a"))))
       .withColumn("sig", sigCol)
-      .select("vec_id", "a", "nrm", "sig")
-      .cache()
-    e.count() // eager fill: the self-join would race the cache
+      .select("vec_id", "a", "nrm", "sig"))
     // vectors RIDE the band rows (the d03 inline-cascade lesson): the
     // exact-cosine verify runs as a codegen filter ON the band join's
     // output, so no candidate pair ever hits a shuffle — the old
@@ -763,13 +525,7 @@ object DedupQueries {
         .as("bb"))
       .select(col("vec_id"), col("a"), col("nrm"),
         col("bb.b").as("b"), col("bb.bkey").as("bkey"))
-    val banded = triangleSplit(banded0, "vec_id", BucketCap, "b", "bkey")
-    banded.as("x").join(banded.as("y"),
-        triangleCond("vec_id", "b", "bkey"))
-      .withColumn("cos",
-        graft.plans.DotProduct(col("x.a"), col("y.a")) /
-          (col("x.nrm") * col("y.nrm")))
-      .filter(col("cos") >= 0.4)
+    NearDup.cosine(NearDup.selfJoin(banded0, "vec_id", Seq("b", "bkey")), 0.4)
       .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"),
         col("cos"))
       .distinct() // ≤ #bands copies of each SURVIVOR
@@ -882,17 +638,11 @@ object DedupQueries {
     * bounded. */
   def d12_semantic_dedup(s: SparkSession, dir: String): DataFrame = {
     val asg = ClusterQueries.lloydAssignments(s, dir).select("vec_id", "cid")
-    val e = Tables.embeddings(s, dir)
-      .withColumn("a", col("embedding").cast("array<double>"))
-      .withColumn("nrm", sqrt(graft.plans.DotProduct(col("a"), col("a"))))
+    val e = NearDup.fill(NearDup.vectors(Tables.embeddings(s, dir))
       .join(asg, "vec_id")
-      .select("vec_id", "cid", "a", "nrm")
-      .cache()
-    e.count() // eager fill: the self-join would race the cache
-    val dups = e.as("x").join(e.as("y"),
-        col("x.cid") === col("y.cid") && col("x.vec_id") > col("y.vec_id"))
-      .filter(graft.plans.DotProduct(col("x.a"), col("y.a")) /
-        (col("x.nrm") * col("y.nrm")) >= 0.4)
+      .select("vec_id", "cid", "a", "nrm"))
+    val dups = NearDup.cosine(e.as("x").join(e.as("y"),
+        col("x.cid") === col("y.cid") && col("x.vec_id") > col("y.vec_id")), 0.4)
       .select(col("x.vec_id").as("vec_id")).distinct()
       .withColumn("dup", lit(true))
     // r18: materialize eagerly so the cache can be released instead of
@@ -1070,13 +820,9 @@ object DedupQueries {
   def d23_lsh_recall_eval(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.KeyAlgebra.ldiv
     val r = minhashR(s, dir)
-    val docs = Tables.documents(s, dir)
-      .withColumn("hs", graft.plans.TokenHashesSorted(col("text")))
-      .select(col("doc_id"),
-        minhashFromHashes(col("hs"), 2 * r).as("sig"),
-        col("hs").as("tk"))
-      .cache()
-    val n = docs.count() // eager fill: reused by truth, bands, counts
+    // filled once for truth, bands and counts; the fill's row count is n
+    val docs = NearDup.sketch(Tables.documents(s, dir), tokenHashes, r).persist()
+    val n = Engine.materialize(docs)
     // size-derived sample modulus (the s13 idiom): ~100 queries at any
     // scale, so the exhaustive truth pass stays LINEAR in the corpus
     // (sample x n), never quadratic
@@ -1084,27 +830,14 @@ object DedupQueries {
     val qs = docs.filter(col("doc_id") % m === 0)
       .select(col("doc_id").as("q_id"), col("sig").as("q_sig"),
         col("tk").as("q_tk"))
-    val truth = docs.crossJoin(broadcast(qs))
-      .filter(col("doc_id") =!= col("q_id"))
-      // lossless size-ratio gate implied by J >= 9/10
-      .filter(least(size(col("tk")), size(col("q_tk"))) * 10L >=
-        greatest(size(col("tk")), size(col("q_tk"))) * 9L)
-      .withColumn("inter",
-        graft.plans.SortedIntersectSize(col("tk"), col("q_tk")).cast("double"))
-      .withColumn("j", col("inter") /
-        (size(col("tk")) + size(col("q_tk")) - col("inter")).cast("double"))
-      .filter(col("j") >= 0.9)
+    // exhaustive, no estimate prefilter: the truth the sketch is judged by
+    val truth = NearDup.jaccard(
+        docs.crossJoin(broadcast(qs)).filter(col("doc_id") =!= col("q_id")),
+        "", "q_", 9, 10, None, "j")
       .select("q_id", "doc_id")
-    def toBands(df: DataFrame, idc: String): DataFrame = df
-      .select(col(idc), explode(transform(sequence(lit(0), lit(1)), b =>
-        struct(b.as("band"),
-          concat_ws("_", slice(col("sig"), b * r + 1, lit(r))).as("key"))))
-        .as("bk"))
-      .select(col(idc), col("bk.band"), col("bk.key"))
-    val cand = toBands(docs, "doc_id")
-      .join(broadcast(toBands(
-        qs.select(col("q_id"), col("q_sig").as("sig")), "q_id")),
-        Seq("band", "key"))
+    val cand = NearDup.probe(
+        broadcast(NearDup.bands(qs.select(col("q_id"), col("q_sig").as("sig")), r, "q_id")),
+        NearDup.bands(docs, r, "doc_id"))
       .filter(col("doc_id") =!= col("q_id"))
       .select("q_id", "doc_id").distinct()
     val hit = cand.join(truth, Seq("q_id", "doc_id"), "left_semi")
@@ -1127,28 +860,26 @@ object DedupQueries {
     * cluster per bucket. The fourth consumer of the memoized component
     * labels (after d14's manifest, p13's sampling weights and d22's
     * keep-best cut); singletons are derived from count(*) minus the
-    * clustered docs — never materialized. The 9+ bucket's max_size is
+    * clustered docs, in the plan — never materialized, and no driver
+    * count. The 9+ bucket's max_size is
     * the number a corpus owner reads first: a single giant cluster
     * usually means boilerplate, not duplication.
     *
     * Scale shape: one ≤|clusters|-row aggregate over the shared labels
     * plus integer bucket CASEs — nothing new touches the corpus. */
   def d24_cluster_histogram(s: SparkSession, dir: String): DataFrame = {
-    val lbl = componentLabels(s, dir)
-    val sizes = lbl.groupBy("comp").agg(count(lit(1)).as("sz"))
-    val nTot = Tables.documents(s, dir).count()
-    val nClustered = lbl.count()
     val labels = lit(Array("1", "2", "3-4", "5-8", "9+"))
-    val clustered = sizes
-      .withColumn("b", when(col("sz") === 2L, 1L)
-        .when(col("sz") <= 4L, 2L).when(col("sz") <= 8L, 3L).otherwise(4L))
+    val clustered = componentSizes(s, dir)
+      .withColumn("b", when(col("n") === 2L, 1L)
+        .when(col("n") <= 4L, 2L).when(col("n") <= 8L, 3L).otherwise(4L))
       .groupBy("b")
-      .agg(count(lit(1)).as("n_clusters"), sum("sz").as("n_docs"),
-        max("sz").as("max_size"))
-    val nSingle = nTot - nClustered
-    val singletons = s.range(1).select(lit(0L).as("b"),
-      lit(nSingle).as("n_clusters"), lit(nSingle).as("n_docs"),
-      lit(if (nSingle > 0) 1L else 0L).as("max_size"))
+      .agg(count(lit(1)).as("n_clusters"), sum("n").as("n_docs"),
+        max("n").as("max_size"))
+    val nSingle = col("n_tot") - col("n_clustered")
+    val singletons = Tables.documents(s, dir).agg(count(lit(1)).as("n_tot"))
+      .crossJoin(componentLabels(s, dir).agg(count(lit(1)).as("n_clustered")))
+      .select(lit(0L).as("b"), nSingle.as("n_clusters"), nSingle.as("n_docs"),
+        when(nSingle > 0L, 1L).otherwise(0L).as("max_size"))
     singletons.unionByName(clustered)
       .withColumn("bucket", element_at(labels, col("b").cast("int") + 1))
       .select("b", "bucket", "n_clusters", "n_docs", "max_size")
@@ -1221,13 +952,9 @@ object DedupQueries {
   def d26_threshold_sweep(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val r = minhashR(s, dir)
-    val docs = Tables.documents(s, dir)
-      .withColumn("hs", graft.plans.TokenHashesSorted(col("text")))
-      .select(col("doc_id"),
-        minhashFromHashes(col("hs"), 2 * r).as("sig"),
-        col("hs").as("tk"))
-    val pairs = lshVerifiedPairs(docs, "d26", "tk", "jaccard", 70, 100, r,
-      estSlack = 2 * r)
+    val docs = NearDup.sketch(Tables.documents(s, dir), tokenHashes, r)
+    // minEq 0: the estimate prefilter passes every candidate
+    val pairs = NearDup.lshVerifiedPairs(docs, r, 70, 100, 0, "jaccard")
     val thr = Seq(700000L, 800000L, 900000L, 990000L)
     val tagged = pairs
       .withColumn("thr_ppm", explode(array(thr.map(lit): _*)))
@@ -1270,6 +997,8 @@ object DedupQueries {
     * ONLY the bloom-positive rows; at 100 TB the exact join's probe
     * side shrinks from |delta| to |dups| + FPR·|delta|, which is the
     * cost model that makes bloom prefilters standard in ingest dedup.
+    * One driver count (|corpus|, for m); every other figure comes out of
+    * one aggregate in the returned plan.
     * No reference counterpart — the brief's deduplication lane. */
   def d27_bloom_prefilter(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.KeyAlgebra.ldiv
@@ -1284,28 +1013,33 @@ object DedupQueries {
       .select(col("doc_id"), col("key"),
         bucket(0, col("key")).as("q0"), bucket(1, col("key")).as("q1"),
         bucket(2, col("key")).as("q2"))
+    // buckets are ≥ 0, so -1 stands for a null key: one distinct value in
+    // the occupancy count, matching no delta bucket, as null does. A
+    // non-null set is one plan for the count and the semi-join, which
+    // would otherwise add a not-null filter and shuffle the set again
     val sets = (0 to 2).map(j =>
-      corpus.select(bucket(j, col("key")).as(s"b$j")).distinct())
-    val occ = sets.map(_.count())
+      corpus.select(coalesce(bucket(j, col("key")), lit(-1L)).as(s"b$j")).distinct())
     val pass = delta
       .join(broadcast(sets(0)), col("q0") === col("b0"), "left_semi")
       .join(broadcast(sets(1)), col("q1") === col("b1"), "left_semi")
       .join(broadcast(sets(2)), col("q2") === col("b2"), "left_semi")
-    val nDelta = delta.count()
-    val nPass = pass.count()
     // exact verify over ONLY the bloom-positive rows
-    val nDup = pass.join(corpus.select("key").distinct(),
-      Seq("key"), "left_semi").count()
-    val nFp = nPass - nDup
-    import s.implicits._
-    Seq((nCorpus, nDelta, m, occ(0), occ(1), occ(2), nPass, nDup, nFp,
-      math.max(1L, nDelta - nDup)))
-      .toDF("n_corpus", "n_delta", "m", "b0_occ", "b1_occ", "b2_occ",
-        "n_bloom_pass", "n_dup", "n_false_pos", "den")
-      .select(col("n_corpus"), col("n_delta"), col("m"),
+    val dup = pass.join(corpus.select("key").distinct(), Seq("key"), "left_semi")
+    // every other figure in ONE aggregate over the union of the counted
+    // rows, each tagged with its figure: the distinct sets are shared with
+    // the semi-joins instead of recomputed per driver count
+    val figures = Seq("b0_occ" -> sets(0), "b1_occ" -> sets(1),
+      "b2_occ" -> sets(2), "n_delta" -> delta, "n_bloom_pass" -> pass, "n_dup" -> dup)
+      .zipWithIndex
+    val counts = figures.map { case ((name, _), i) => count(when(col("f") === i, 1)).as(name) }
+    figures.map { case ((_, df), i) => df.select(lit(i).as("f")) }.reduce(_ union _)
+      .agg(counts.head, counts.tail: _*)
+      .select(lit(nCorpus).as("n_corpus"), col("n_delta"), lit(m).as("m"),
         col("b0_occ"), col("b1_occ"), col("b2_occ"),
-        col("n_bloom_pass"), col("n_dup"), col("n_false_pos"),
-        ldiv(col("n_false_pos") * 1000000L, col("den")).as("fpr_fp"))
+        col("n_bloom_pass"), col("n_dup"),
+        (col("n_bloom_pass") - col("n_dup")).as("n_false_pos"),
+        ldiv((col("n_bloom_pass") - col("n_dup")) * 1000000L,
+          greatest(lit(1L), col("n_delta") - col("n_dup"))).as("fpr_fp"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

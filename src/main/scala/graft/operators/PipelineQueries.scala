@@ -838,15 +838,19 @@ object PipelineQueries {
         lit(0.0), (acc, x) => acc + x)
     def center(r: Row, mind: Double) = (r.getLong(0), r.getSeq[Double](1).toArray, mind)
     var centers = Vector(center(base.orderBy("vec_id").select("vec_id", "a").head(), 0.0))
-    // k = 8: the seed, then 7 rounds that each pick the farthest point on
-    // the filled frame (no recomputed least(...) chain) and fold only the
-    // distance to that newest center into the carried minimum
-    Fixpoint.iterate(base.withColumn("mind", dist(centers.head._2)), 7) { scored =>
-      val pick = scored.filter(!col("vec_id").isInCollection(centers.map(_._1)))
+    // the farthest point on a filled frame (no recomputed least(...) chain)
+    def pick(scored: DataFrame): Unit = {
+      val p = scored.filter(!col("vec_id").isInCollection(centers.map(_._1)))
         .orderBy(col("mind").desc, col("vec_id")).select("vec_id", "a", "mind").head()
-      centers :+= center(pick, pick.getDouble(2))
-      scored.withColumn("mind", least(col("mind"), dist(centers.last._2)))
+      centers :+= center(p, p.getDouble(2))
     }
+    // k = 8: the seed, then 6 rounds that each pick a center and fold only
+    // the distance to it into the carried minimum, then the 8th pick on
+    // the last frame (nothing reads a fold of its distance)
+    pick(Fixpoint.iterate(base.withColumn("mind", dist(centers.head._2)), 6) { scored =>
+      pick(scored)
+      scored.withColumn("mind", least(col("mind"), dist(centers.last._2)))
+    })
     // assignment pass: nearest center (the least (distance, round)
     // struct), tie -> earliest round
     val counts = base.groupBy(least(centers.indices.map(i =>

@@ -845,8 +845,13 @@ object TextQueries {
   /** The 4-round merge-learning loop shared by t22 (which ships the
     * merge table) and t30 (which applies the trained segmentation):
     * returns the word-vocabulary frame with its post-merge `seg`
-    * column alongside the learned merges. */
+    * column alongside the learned merges. Memoized per (session, dir),
+    * so a sweep that runs both trains once. */
   private def bpeTrain(s: SparkSession, dir: String)
+      : (DataFrame, Seq[(Long, String, String, String, Long)]) =
+    graft.core.SessionMemo.memoize(s, "text:" + dir + ":bpeTrain") { bpeTrain0(s, dir) }
+
+  private def bpeTrain0(s: SparkSession, dir: String)
       : (DataFrame, Seq[(Long, String, String, String, Long)]) = {
     val vocab = Tables.documents(s, dir)
       .select(explode(tokens(col("text"))).as("w"))

@@ -100,7 +100,7 @@ class EngineSpec extends SparkSpec {
       "PipelineQueries.scala" -> "def p18_bfs_hops",
       "PipelineQueries.scala" -> "def p23_kcenter_coreset",
       "PipelineQueries.scala" -> "def p25_label_propagation",
-      "TextQueries.scala" -> "def bpeTrain")
+      "TextQueries.scala" -> "def bpeTrain0")
     val checkpoint = Seq("localCheckpoint", "(").mkString
     val cacheThenCount = Seq("""\.cache\(\)""", """\.count\(\)""").mkString("(?s).*")
     loops.foreach { case (file, decl) =>
@@ -109,6 +109,21 @@ class EngineSpec extends SparkSpec {
       assert(b.contains("Fixpoint."), loop)
       assert(!b.contains(checkpoint), loop)
       assert(cacheThenCount.r.findFirstIn(b).isEmpty, loop)
+    }
+  }
+
+  test("the dedup family fills through Engine.materialize and owns no triangle split") {
+    // spelled in parts so this spec is not itself a match
+    val cacheThenCount = Seq("""\.cache\(\)""", """\.count\(\)""").mkString("(?s).*")
+    // no method of either file caches a frame and then counts it
+    Seq("DedupQueries.scala", "NearDup.scala").foreach { f =>
+      val src = Files.readString(root.resolve(s"graft/operators/$f"))
+      "\n  (private(\\[\\w+\\])? )?def ".r.split(src).foreach { d =>
+        assert(cacheThenCount.r.findFirstIn(d).isEmpty, s"$f: ${d.take(80)}")
+      }
+    }
+    Seq("triangleSplit", "triangleCond", "SubEnc").foreach { w =>
+      assert(sites(w) == Set("graft/operators/NearDup.scala"), w)
     }
   }
 

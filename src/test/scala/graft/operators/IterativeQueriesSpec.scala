@@ -7,11 +7,16 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleEx
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
-import graft.core.Engine
+import graft.core.{Engine, SessionMemo}
 
 /** The graph-loop queries on the round driver: each releases the
-  * loop-invariant cache it fills, and a p25 round shuffles once. */
+  * loop-invariant cache it fills, a p25 round shuffles once, p23 fills no
+  * round it does not read, and BPE trains once per session. */
 class IterativeQueriesSpec extends SparkSpec {
+
+  /** p23's jobs at sf0.001. A 7th round, folding the 8th center's distance
+    * into a frame nothing reads, filled one more (22). */
+  private val P23Jobs = 21
 
   private def cacheEntries: Int = org.apache.spark.sql.CacheShims.entries(spark)
 
@@ -24,6 +29,20 @@ class IterativeQueriesSpec extends SparkSpec {
       q(spark, sf()).collect()
       assert(cacheEntries == before, s"$name left ${cacheEntries - before} cache entries")
     }
+  }
+
+  test("p23 fills one frame per center it folds: the 8th center is picked, not folded") {
+    val jobs = jobsOf(PipelineQueries.p23_kcenter_coreset(spark, sf()).collect())
+    assert(jobs <= P23Jobs, jobs)
+  }
+
+  test("t30 after t22 on one session reuses the trained BPE vocabulary") {
+    SessionMemo.clear(spark)
+    val train = jobsOf(TextQueries.t22_bpe_train(spark, sf()).collect())
+    val encode = jobsOf(TextQueries.t30_bpe_encode(spark, sf()).collect())
+    // training alone fills the vocabulary and 4 rounds and collects 4 argmaxes
+    assert(train >= 9, train)
+    assert(encode < 9, s"t30 retrained: $encode jobs (t22: $train)")
   }
 
   test("a p25 round is one shuffle Exchange plus the broadcast of the edge cache") {
